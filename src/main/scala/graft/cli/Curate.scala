@@ -16,9 +16,11 @@ import org.apache.spark.sql.functions._
   *     training-sequence id (seq_id) from budget-token packing
   *   runMain graft.cli.Curate add <batchDir> <outDir> [minChars]
   *     fold <batchDir>'s documents into the corpus at <outDir> —
-  *     signatures are read from the stored state, edges are computed
-  *     batch x (batch ∪ state) only, output matches a from-scratch
-  *     rebuild (IncrementalCurationSuite).
+  *     signatures are read from the stored state, labels come from
+  *     IncrementalCuration.foldLabels (edges batch x (batch ∪ state)
+  *     only), and the corpus, the components mapping and the state stores
+  *     take file-scoped deltas; output matches a from-scratch rebuild
+  *     (CurateCliSuite).
   *
   * Output layout:
   *   outDir/docs/split=train|val|test/  parquet files with (doc_id,
@@ -29,15 +31,12 @@ import org.apache.spark.sql.functions._
   */
 object Curate {
 
-  /** Full-build run; separated from main() so tests drive it with a
-    * shared session.
-    */
   /** Below this corpus size the full build skips the postings store:
     * the store cannot prune (it is 1-2 files) while every fold still
     * pays its append's ~2 jobs of fixed latency — the sf0.1 decay
     * protocol's micro-folds regressed ~20% with a store that could
-    * never pay for itself. A postings-less state folds through the
-    * derive-per-fold path forever; rebuild to re-evaluate.
+    * never pay for itself. A postings-less state derives its corpus band
+    * rows from the doc store every fold; rebuild to re-evaluate.
     */
   val PostingsMinDocs: Long = 100000L
 
@@ -77,6 +76,10 @@ object Curate {
     }
   }
 
+  /** Full-build run; separated from main() so tests drive it with a
+    * shared session. `forcePostings` writes the postings store below
+    * [[PostingsMinDocs]] (tests).
+    */
   def run(spark: SparkSession, sfDir: String, outDir: String,
       minChars: Long, packBudget: Option[Long] = None,
       forcePostings: Boolean = false): Seq[String] = {
@@ -194,10 +197,12 @@ object Curate {
     * batch docs that head their own new cluster — appended as new
     * files. A packed corpus (seq_id) still rewrites fully: removing a
     * doc shifts every later sequence id in its split by construction.
-    */
-  /** `failAfterCorpusDelta` is a TEST hook: throw right after the corpus
-    * delta (marker written, state not yet mutated) — the crash window
-    * the pending-marker retry protocol exists for (CurateCliSuite).
+    * Labels come from IncrementalCuration.foldLabels alone.
+    *
+    * `failAfterCorpusDelta` and `failAfterPostingsAppend` are TEST hooks:
+    * throw right after the corpus delta (marker written, state not yet
+    * mutated) or after the postings append — the crash windows the
+    * pending-marker retry protocol exists for (CurateCliSuite).
     */
   def runAdd(spark: SparkSession, batchDir: String, outDir: String,
       minChars: Long, failAfterCorpusDelta: Boolean = false,
@@ -216,10 +221,9 @@ object Curate {
     // AQE provides: its big joins are explicitly broadcast (flagged
     // band rows) or driven by runner-CACHED frames whose
     // InMemoryRelation stats give the static planner exact sizes, and
-    // batch-scale shuffles cannot skew. Overridable for A/B.
+    // batch-scale shuffles cannot skew.
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    if (!sys.env.contains("SPARK_GRAFT_FOLD_AQE"))
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     // bounded LIMIT collects in ONE job (round-12 VERDICT "Next #1"):
     // the default incremental limit execution (1 partition, then 4x
     // scale-up) turns each of the fold's guarded driver collects into
@@ -331,24 +335,12 @@ object Curate {
         graft.layout.ZoneMap.exists(docsDir)
       val corpusSchema = readSchema(outDir, "corpus_schema.json")
       // labels as a DELTA against the stored mapping (round-12 VERDICT
-      // "Next #1"), driver-local when every bound fits (the micro/small
-      // batch regime: pair generation, hamming verify and CC over two
-      // bounded collects — no census job, no band-join broadcast
-      // builds); the distributed subgraph path is the guarded fallback
-      val deltaRes = graft.queries.IncrementalCuration
-        .componentsDeltaFast(spark, stateDocs, stateComps, prep,
-          if (usePostings) Some(postingsDir) else None,
-          docsDir = if (docsZoned) Some(stateDocsDir) else None)
-        .getOrElse {
-          val edges =
-            if (usePostings)
-              graft.queries.IncrementalCuration.edgesFromPostings(
-                spark, stateDocs, prep, postingsDir,
-                docsDir = if (docsZoned) Some(stateDocsDir) else None)
-            else
-              graft.queries.IncrementalCuration.edgesDerived(stateDocs, prep)
-          graft.queries.IncrementalCuration.componentsDelta(stateComps, prep, edges)
-        }
+      // "Next #1"): driver-local pairs and CC when every bound fits, the
+      // distributed band join and star rounds beyond
+      val deltaRes = graft.queries.IncrementalCuration.foldLabels(
+        stateDocs, stateComps, prep,
+        postingsDir = if (usePostings) Some(postingsDir) else None,
+        docsDir = if (docsZoned) Some(stateDocsDir) else None)
       lap("components")
       // retry-only (round-10 ADVICE): batch rows a crashed fold already
       // appended to the components/postings stores must be dropped

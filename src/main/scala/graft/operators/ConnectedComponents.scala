@@ -26,6 +26,20 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
+  /** Edge sets at or under this size run as a SINGLE-TASK union-find
+    * (one executor task, one job) instead of the iterative star rounds:
+    * a banded near-dup pair graph is |near-dup|-sized — orders smaller
+    * than the corpus — and the Kiveris loop's per-round cost at that
+    * size is pure fixed latency (measured ~0.7–1.3 s/round for a
+    * few-thousand-edge graph even with AQE off and 1-partition shuffles;
+    * 4 rounds ≈ 3.5 s where union-find in one task is milliseconds).
+    * 4M edges ≈ 64 MB / ~8M hash-map entries in one task: safe. Larger
+    * graphs keep the full shuffle-parallel star rounds. This is the one
+    * small-graph bound: PageRank's single-task path and the incremental
+    * fold's driver-side collects read it too.
+    */
+  val SmallGraphEdges: Long = 4L << 20
+
   /** Connected components of the undirected graph given by `edges`
     * (first two columns = endpoints, any integral type; direction,
     * duplicates, and self-loops are normalized away).
@@ -35,18 +49,6 @@ object ConnectedComponents {
     * labels — safe for hash-compared gates). Isolated nodes never
     * appear in an edge list; callers union them back if needed.
     */
-  /** Edge sets at or under this size run as a SINGLE-TASK union-find
-    * (one executor task, one job) instead of the iterative star rounds:
-    * a banded near-dup pair graph is |near-dup|-sized — orders smaller
-    * than the corpus — and the Kiveris loop's per-round cost at that
-    * size is pure fixed latency (measured ~0.7–1.3 s/round for a
-    * few-thousand-edge graph even with AQE off and 1-partition shuffles;
-    * 4 rounds ≈ 3.5 s where union-find in one task is milliseconds).
-    * 4M edges ≈ 64 MB / ~8M hash-map entries in one task: safe. Larger
-    * graphs keep the full shuffle-parallel star rounds.
-    */
-  val SmallGraphEdges: Long = 4L << 20
-
   def run(edges: DataFrame, maxIter: Int = 50,
           smallGraphThreshold: Long = SmallGraphEdges): DataFrame = {
     require(edges.columns.length >= 2,

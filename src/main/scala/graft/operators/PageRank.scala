@@ -19,16 +19,14 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
-  /** Below this many edges the K iterative rounds cost more in fixed
-    * per-job scheduling than one task computing the whole thing (the
-    * same boundary argument as ConnectedComponents.SmallGraphEdges:
-    * a ≤4M-edge set is ≤64 MB of longs — single-task memory, and the
+  /** Fixed-iteration PageRank; at or under `smallGraphThreshold` edges
+    * the K rounds run in one task — K iterative rounds cost more in fixed
+    * per-job scheduling than one task computing the whole thing (a
+    * ≤4M-edge set is ≤64 MB of longs — single-task memory, and the
     * measured sf0.1 near-dup graph spent ~0.9s/round on scheduling).
     */
-  val SmallGraphEdges: Long = 4L * 1024 * 1024
-
   def run(edges: DataFrame, iterations: Int, damping: Double = 0.85,
-      smallGraphThreshold: Long = SmallGraphEdges): DataFrame = {
+      smallGraphThreshold: Long = ConnectedComponents.SmallGraphEdges): DataFrame = {
     require(edges.columns.length >= 2,
       s"edge frame needs two endpoint columns, got ${edges.columns.mkString(",")}")
     val ec = edges.columns

@@ -48,10 +48,10 @@ object CurationQueries {
     // WITH the token array: the regex tokenizer runs once here and the
     // near-dup signals plus the final n_tok projection all read the
     // stored column (r20, guide §1.2 — the old pipeline re-tokenized
-    // the survivors after nearDupEdges had already tokenized them).
+    // the survivors after the edge builder had already tokenized them).
     // trackLazy: deterministic (join of deterministic frames on a unique
-    // key), and the ONE first action over it is nearDupEdges' fused band
-    // census, which scans every partition through the token projection —
+    // key), and the ONE first action over it is the edge builder's fused
+    // band census, which scans every partition through the token projection —
     // the eager count() was a redundant full corpus pass (r20)
     val kept = graft.runner.Materialize.trackLazy(
       base.join(keepIds, Seq("doc_id")).withColumn("__ws", words(col("text"))))
@@ -59,7 +59,7 @@ object CurationQueries {
     //    component's min (== the component label itself)
     val dropIds = graft.operators.ConnectedComponents.run(
         DedupQueries.nearDupEdgesFromTokens(
-          kept.select(col("doc_id"), col("__ws").as("ws"))))
+          kept.select(col("doc_id"), col("__ws").as("ws"))).edges)
       .filter(col("id") =!= col("component"))
       .select(col("id").as("doc_id"))
     // no broadcast hint: on a dup-heavy corpus the drop set is

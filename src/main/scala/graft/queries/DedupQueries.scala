@@ -15,6 +15,13 @@ import graft.text.TextFunctions._
   * join. The SimHash band join is EXACT for hamming <= 3 (4 bands x 15
   * bits, pigeonhole), so the scalable plan returns the same rows a
   * brute-force scan would — which is what the DuckDB oracle does.
+  *
+  * Every pipeline takes the (doc_id, ws) token frame of [[tokens]] as
+  * input; raw-text callers tokenize first. One builder,
+  * [[nearDupEdgesFromTokens]], owns the near-dup edge set that q69, q93,
+  * `curate()` and the incremental state's full build all consume, and
+  * the incremental fold (IncrementalCuration) reuses its band-row,
+  * band-join and verification stages.
   */
 object DedupQueries {
 
@@ -45,31 +52,25 @@ object DedupQueries {
     */
   private val MaxDf = 100
 
-  /** doc_id + exploded distinct 3-gram shingles (one-pass codegen'd
-    * kernel; == explode(array_distinct(shingles(words(text), 3)))).
-    */
-  private def shingled(df: DataFrame): DataFrame =
-    shingledFrom(tokens(df))
-
   /** (doc_id, ws) — the tokenized corpus. Every text kernel in this file
-    * (shingles, simhash) is a function of the word array, so pipelines
-    * that need BOTH signals tokenize once via [[nearDupEdges]] instead of
-    * re-running the regex split per signal branch.
+    * (shingles, simhash) is a function of the word array, and every
+    * pipeline takes this frame as input: a raw-text caller tokenizes
+    * once and pipelines needing BOTH signals share the one token pass.
     */
   private[queries] def tokens(df: DataFrame): DataFrame =
     df.select(col("doc_id"), words(col("text")).as("ws"))
 
+  /** doc_id + exploded distinct 3-gram shingles (one-pass codegen'd
+    * kernel; == explode(array_distinct(shingles(ws, 3)))).
+    */
   private def shingledFrom(toks: DataFrame): DataFrame =
     toks.select(col("doc_id"),
       explode(shinglesDistinct(col("ws"), 3)).as("shingle"))
 
   /** (da, db, common, jaccard) pairs at jaccard >= 0.5 via the inverted
-    * shingle index (q30's pipeline; shared with q69's cluster graph).
+    * shingle index (q30's pipeline).
     */
-  private def jaccardPairs(s: SparkSession, d: String): DataFrame =
-    jaccardPairs(docs(s, d))
-
-  private[queries] def jaccardPairs(dd: DataFrame): DataFrame = {
+  private def jaccardPairs(toks: DataFrame): DataFrame = {
     // materialized pre-partitioned on the join key: BOTH self-join
     // sides consume co-partitioned cached partitions. The stop-shingle
     // cap (drop shingles with document frequency > MaxDf) folds into
@@ -78,7 +79,7 @@ object DedupQueries {
     // 100 TB any one group is bounded by MaxDf doc_ids, so the
     // collect_list is bounded too.
     val sh = graft.runner.Materialize.track(
-      shingled(dd)
+      shingledFrom(toks)
         .groupBy(col("shingle"))
         .agg(collect_list(col("doc_id")).as("ids"))
         .filter(size(col("ids")) <= MaxDf)
@@ -107,21 +108,6 @@ object DedupQueries {
       .select(col("da"), col("db"), col("common"), col("jaccard"))
   }
 
-  /** (da, db) near-dup pairs via the industrial MinHash-LSH shape:
-    * banded signature join proposes candidates, then exact Jaccard is
-    * verified on CANDIDATES ONLY (a few hundred pairs), never on the
-    * full inverted index — at 100 TB the verification join is
-    * |candidates|-sized, not corpus-sized. Assumes exact dedup (q28)
-    * ran first, as real pipelines do: identical docs share identical
-    * signatures, so unbounded duplicate groups would make one bucket
-    * quadratic (same hazard the q33b hot-bucket cap bounds).
-    */
-  private def minhashVerifiedPairs(s: SparkSession, d: String): DataFrame =
-    minhashVerifiedPairs(docs(s, d))
-
-  private[queries] def minhashVerifiedPairs(dd: DataFrame): DataFrame =
-    minhashVerifiedPairsFrom(tokens(dd))
-
   /** (doc_id, h1, h2) 60-bit shingle hashes — the Kirsch–Mitzenmacher
     * dual-hash base every MinHash consumer derives from.
     */
@@ -135,24 +121,24 @@ object DedupQueries {
     */
   private[queries] val SigCols: Seq[String] = (0 until K).map(i => s"mh$i")
 
-  /** (doc_id, mh0..mh7) MinHash signatures from the shingle hashes. */
-  private[queries] def minhashSigsOf(hashed: DataFrame): DataFrame = {
-    val mins = (0 until K).map(i =>
-      min(col("h1") + lit(i.toLong) * col("h2")).as(s"mh$i"))
-    hashed.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-  }
+  /** The K MinHash aggregates g_i = min(h1 + i*h2) (Kirsch–Mitzenmacher:
+    * h1, h2 < 2^60, so h1 + 7*h2 stays inside a signed 64-bit long).
+    */
+  private val minhashAggs: Seq[Column] = (0 until K).map(i =>
+    min(col("h1") + lit(i.toLong) * col("h2")).as(s"mh$i"))
 
-  /** (doc_id, mh0..mh7, hs) — [[minhashSigsOf]] and [[shingleSetsOf]]
-    * FUSED into one aggregation: the curation paths always need both,
-    * and computing them separately costs a second groupBy pipeline plus
-    * a doc_id join to glue the results back together (round-11 VERDICT
-    * "Next #4": the fold's fixed per-job latency floor — every saved
-    * exchange is a saved AQE stage-job).
+  /** (doc_id, mh0..mh7) MinHash signatures from the shingle hashes. */
+  private[queries] def minhashSigsOf(hashed: DataFrame): DataFrame =
+    hashed.groupBy(col("doc_id")).agg(minhashAggs.head, minhashAggs.tail: _*)
+
+  /** (doc_id, mh0..mh7, hs) — the signatures plus each doc's sorted
+    * shingle-hash set `hs` (the verification payload of
+    * [[verifiedBySets]]) in ONE aggregation: the near-dup edge builder
+    * and the incremental state need both, and a separate sets aggregate
+    * would cost a second groupBy pipeline plus a doc_id glue join.
     */
   private[queries] def sigAndSetsOf(hashed: DataFrame): DataFrame = {
-    val mins = (0 until K).map(i =>
-      min(col("h1") + lit(i.toLong) * col("h2")).as(s"mh$i"))
-    val aggs = mins :+ sort_array(collect_list(col("h1"))).as("hs")
+    val aggs = minhashAggs :+ sort_array(collect_list(col("h1"))).as("hs")
     hashed.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
   }
 
@@ -263,7 +249,7 @@ object DedupQueries {
     * lazily-persisted signature frames it doubles as the
     * cache-materializing action; the hot-key collect re-aggregates from
     * the (now cached) inputs. Callers that need both capped band joins
-    * (nearDupEdges, initState, incremental components) pay these two
+    * (the near-dup edge builder, the distributed fold route) pay these two
     * small jobs once, then pass the results down via
     * `knownMax`/`knownHot` — no per-join census, and the split branch
     * partitions its buckets with a codegen isInCollection filter
@@ -454,40 +440,17 @@ object DedupQueries {
     }
   }
 
-  /** Exact-Jaccard (>= 0.5) verification of candidate pairs. `hashed`
-    * must hold the FULL shingle-hash set of every doc appearing in a
-    * candidate pair (docs absent from candidates may be omitted — the
-    * incremental path computes state-doc hashes only for candidates).
-    * Verifying on h1 instead of the string keeps the engines aligned in
-    * practice: the oracle's verification joins on the raw shingle
-    * string, so a 60-bit h1 collision between distinct shingles would
-    * overcount `common` on the Spark side only — negligible (~2^-60 per
-    * shingle pair), not impossible.
+  /** Exact-Jaccard (>= 0.5) verification of (da, db) candidate pairs
+    * against `sets` (doc_id, hs): the sorted shingle-hash set of every
+    * doc appearing in a candidate pair (docs absent from candidates may
+    * be omitted — a fold reads the STORED sets of candidate docs only,
+    * never re-tokenizing the state). Verifying on h1 instead of the
+    * string keeps the engines aligned in practice: the oracle's
+    * verification joins on the raw shingle string, so a 60-bit h1
+    * collision between distinct shingles would overcount `common` on
+    * the Spark side only — negligible (~2^-60 per shingle pair), not
+    * impossible.
     */
-  private[queries] def verifiedByJaccard(cand: DataFrame, hashed: DataFrame): DataFrame = {
-    // Sets are aggregated ONLY for docs that appear in a candidate pair
-    // (exactly the documented contract above): the candidate id set is
-    // near-dup-sized, so the collect_list shuffle carries candidate-doc
-    // shingle hashes instead of the whole corpus's (guide §8: decide on
-    // small rows). cand persists LAZILY — it feeds the id semi-join AND
-    // the verification join inside the caller's one materializing
-    // action, it is deterministic (band join over cached signatures),
-    // and an eager count here would serialize the candidate pipeline in
-    // front of everything downstream.
-    verifiedBySets(cand, shingleSetsOf(hashed))
-  }
-
-  /** One sorted shingle-hash ARRAY per doc — the exact verification
-    * payload [[verifiedBySets]] consumes. Exposed so the incremental
-    * state can STORE it (column `hs`): a fold then verifies candidates
-    * straight from the stored arrays instead of re-tokenizing and
-    * re-shingling every state doc that appears in a pair (measured the
-    * single largest data-dependent cost of an incremental add).
-    */
-  private[queries] def shingleSetsOf(hashed: DataFrame): DataFrame =
-    hashed.groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("h1"))).as("hs"))
-
   private[queries] def verifiedBySets(cand: DataFrame, sets: DataFrame): DataFrame = {
     // The sorted array per doc joins to each candidate side; the common
     // count is a codegen'd two-pointer merge. The obvious formulation —
@@ -509,35 +472,6 @@ object DedupQueries {
         (size(col("ha")) + size(col("hb")) - col("common")), 6) >= 0.5)
       .select(col("da"), col("db"))
   }
-
-  private def minhashVerifiedPairsFrom(toks: DataFrame,
-      maxBucket: Int = Int.MaxValue): DataFrame = {
-    // one materialized pass holds the shingle hashes: signatures AND the
-    // verification join both read it, and the verification shuffles
-    // 8-byte longs instead of shingle strings (~4x less shuffle payload).
-    // Capped path: the bandedPairs census (an eager aggregate that scans
-    // every partition through sigs and hashed) doubles as the
-    // materializing action — trackLazy skips two count jobs AND the
-    // cached sigs frame saves the band join re-running the signature
-    // aggregation (round-10 VERDICT "What's wrong #2").
-    val capped = maxBucket != Int.MaxValue
-    val hashed =
-      if (capped) graft.runner.Materialize.trackLazy(shingleHashesFrom(toks))
-      else graft.runner.Materialize.track(shingleHashesFrom(toks))
-    val sigs =
-      if (capped) graft.runner.Materialize.trackLazy(minhashSigsOf(hashed))
-      else minhashSigsOf(hashed)
-    verifiedByJaccard(minhashCandidates(sigs, None, maxBucket), hashed)
-  }
-
-  /** (da, db, ham) pairs at hamming <= 3 via the exact 4-band SimHash
-    * join (q31's pipeline; shared with q31b/q69).
-    */
-  private def simhashPairs(s: SparkSession, d: String): DataFrame =
-    simhashPairs(docs(s, d))
-
-  private[queries] def simhashPairs(dd: DataFrame): DataFrame =
-    simhashPairsFrom(tokens(dd))
 
   /** (doc_id, sh) simhash values from tokens. */
   private[queries] def simhashOf(toks: DataFrame): DataFrame =
@@ -586,48 +520,38 @@ object DedupQueries {
         Seq(col("b.band").as("band"), col("b.bv").as("bucket"))): _*)
   }
 
-  private def simhashPairsFrom(toks: DataFrame, maxBucket: Int = Int.MaxValue): DataFrame = {
-    // capped: the bandedPairs census materializes the lazily-persisted
-    // simhash frame — no separate count job (see minhashVerifiedPairsFrom)
-    val sh =
-      if (maxBucket == Int.MaxValue) graft.runner.Materialize.track(simhashOf(toks))
-      else graft.runner.Materialize.trackLazy(simhashOf(toks))
-    simhashPairsOf(sh, None, maxBucket)
-  }
-
-  /** The union near-dup edge set both cluster-level consumers (q69,
-    * the curation pipeline) run CC over: SimHash hamming<=3 plus
-    * verified-MinHash Jaccard>=0.5. The corpus is tokenized ONCE — the
-    * materialized (doc_id, ws) frame feeds both signal branches, so the
-    * regex-split text kernel (the dominant per-row cost at corpus scale)
-    * runs one pass instead of one per signal. The token cache is
-    * ~corpus-sized; MEMORY_AND_DISK spills it rather than re-tokenizing,
-    * and the runner releases it after the query like every shared frame.
+  /** [[nearDupEdgesFromTokens]]'s result: the (da, db) edge frame plus
+    * the two lazily-cached per-doc frames it was built from — `sh`
+    * (doc_id, sh) and `sigSets` (doc_id, mh0..mh7, hs) — so the
+    * incremental state stores exactly the signatures its edges came
+    * from, with no second derivation.
     */
-  private[queries] def nearDupEdges(dd: DataFrame): DataFrame =
-    nearDupEdgesFromTokens(tokens(dd))
+  private[queries] case class NearDupEdges(
+      edges: DataFrame, sh: DataFrame, sigSets: DataFrame)
 
-  /** [[nearDupEdges]] over a pre-tokenized (doc_id, ws) frame — the
-    * curation pipeline passes a projection of its already-cached token
-    * column so the regex tokenizer runs once per corpus, not once per
-    * consumer (r20, guide §1.2).
+  /** THE near-dup edge builder — the union edge set every cluster-level
+    * consumer (q69, q93, `curate()`, the incremental state's full build)
+    * runs CC or PageRank over: SimHash hamming<=3 plus MinHash-LSH
+    * candidates verified at exact Jaccard>=0.5. Input is a (doc_id, ws)
+    * token frame: raw-text callers pass [[tokens]], the curation
+    * pipeline a projection of its already-cached token column, so the
+    * regex tokenizer (the dominant per-row cost at corpus scale) runs
+    * once per corpus and feeds both signal branches. MinHash follows the
+    * industrial shape: the banded signature join proposes candidates,
+    * and exact Jaccard runs on CANDIDATES ONLY — |candidates|-sized, not
+    * corpus-sized. Assumes exact dedup ran first, as real pipelines do:
+    * identical docs share identical signatures (the degenerate-bucket
+    * caps bound what remains). The token cache is ~corpus-sized;
+    * MEMORY_AND_DISK spills it rather than re-tokenizing, and the runner
+    * releases it after the query like every shared frame.
     */
-  private[queries] def nearDupEdgesFromTokens(toksIn: DataFrame): DataFrame = {
+  private[queries] def nearDupEdgesFromTokens(toksIn: DataFrame): NearDupEdges = {
     // all three shared frames persist LAZILY; the ONE fused bandCensus
     // job below scans every partition of sh and sigs through their
-    // whole upstream chains, materializing toks/sh/ss as by-products —
-    // one eager job where five counts + two censuses ran in round 10
-    // (VERDICT "What's wrong #2").
-    //
-    // Signatures and verification sets come from ONE fused aggregate
-    // (sigAndSetsOf — the shape the incremental fold already uses): the
-    // previous formulation aggregated the shingle-hash frame TWICE
-    // (min() pipeline for sigs, collect_list for sets), i.e. two
-    // corpus-shingle-wide scan+shuffle chains plus a cached `hashed`
-    // frame that existed only to feed them; fusing leaves one pass, one
-    // shuffle, one cache (r20, guide §1.2 remove passes / §2.3 shuffle
-    // fewer bytes — the min() columns are 64 bytes/doc on top of the
-    // collect_list payload the sets shuffle already carried).
+    // whole upstream chains, materializing toks/sh/ss as by-products.
+    // Signatures and verification sets come from ONE aggregate
+    // (sigAndSetsOf): one corpus-shingle-wide pass, one shuffle, one
+    // cache (DedupCapSuite pins it against the two-aggregate shape).
     val toks = graft.runner.Materialize.trackLazy(toksIn)
     val sh = graft.runner.Materialize.trackLazy(simhashOf(toks))
     val ss = graft.runner.Materialize.trackLazy(
@@ -637,20 +561,13 @@ object DedupQueries {
     // cluster consumers cap degenerate buckets (DegenerateBucketCap /
     // SimhashBandCap): the component graph needs connectivity, not
     // every pairwise edge
-    simhashPairsOf(sh, None, SimhashBandCap, Some(c.simMax), c.simHot)
+    val edges = simhashPairsOf(sh, None, SimhashBandCap, Some(c.simMax), c.simHot)
       .select(col("da"), col("db"))
       .unionAll(verifiedBySets(
         minhashCandidates(sigs, None, DegenerateBucketCap, Some(c.mhMax), c.mhHot),
         ss.select(col("doc_id"), col("hs"))))
+    NearDupEdges(edges, sh, ss)
   }
-
-  /** Dev-probe access to the pair pipelines (tools.CcProbe). */
-  def pairsForProbe(s: SparkSession, d: String, kind: String): DataFrame =
-    kind match {
-      case "simhash" => simhashPairs(s, d)
-      case "jaccard" => jaccardPairs(s, d)
-      case "minhash" => minhashVerifiedPairs(s, d)
-    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Exact dedup accounting by text hash, per language.
@@ -663,30 +580,12 @@ object DedupQueries {
     }),
 
     // MinHash signatures + LSH banding: per band, bucket count and the
-    // number of candidate pairs the band join would produce. Signature
-    // hashes use the Kirsch–Mitzenmacher construction g_i = h1 + i*h2
-    // (two md5s per shingle instead of K): h1,h2 < 2^60 so h1 + 7*h2
-    // stays inside a signed 64-bit long.
+    // number of candidate pairs the band join would produce — the same
+    // hash, signature and band derivations the near-dup edge builder uses.
     "q29_minhash_lsh" -> ((s, d) => {
-      // materialize h1/h2 once per shingle row — referencing the md5
-      // expressions inside each of the 8 aggregates would recompute them
-      // (no CSE across aggregate expressions)
-      val hashed = shingled(docs(s, d)).select(
-        col("doc_id"),
-        wordHash60(concat(lit("a|"), col("shingle"))).as("h1"),
-        wordHash60(concat(lit("b|"), col("shingle"))).as("h2"))
-      val mins = (0 until K).map(i =>
-        min(col("h1") + lit(i.toLong) * col("h2")).as(s"mh$i"))
-      val sigs = hashed
-        .groupBy(col("doc_id"))
-        .agg(mins.head, mins.tail: _*)
-      val bands = (0 until Bands).map { j =>
-        struct(lit(j).as("band"),
-          md5(concat_ws("|", col(s"mh${2 * j}"), col(s"mh${2 * j + 1}"))).as("bucket"))
-      }
-      sigs
-        .select(col("doc_id"), explode(array(bands: _*)).as("b"))
-        .groupBy(col("b.band").as("band"), col("b.bucket").as("bucket"))
+      val sigs = minhashSigsOf(shingleHashesFrom(tokens(docs(s, d))))
+      minhashBandRowsOf(sigs, None)
+        .groupBy(col("band"), col("bucket"))
         .agg(count(lit(1)).as("c"))
         .groupBy(col("band"))
         .agg(count(lit(1)).as("n_buckets"),
@@ -700,7 +599,7 @@ object DedupQueries {
     // runner-owned materialization (Materialize.track / releaseAll)
     // computes it once per run, leak-free (round-3 VERDICT #3).
     "q30_ngram_jaccard" -> ((s, d) =>
-      jaccardPairs(s, d)
+      jaccardPairs(tokens(docs(s, d)))
         .orderBy(col("jaccard").desc, col("da"), col("db"))),
 
     // Near-dup CLUSTERS: pairs are edges, the unit of dedup is the
@@ -711,7 +610,8 @@ object DedupQueries {
     // every member with the component min. Output: one row per cluster
     // with its size.
     "q69_dedup_clusters" -> ((s, d) => {
-      graft.operators.ConnectedComponents.run(nearDupEdges(docs(s, d)))
+      graft.operators.ConnectedComponents.run(
+          nearDupEdgesFromTokens(tokens(docs(s, d))).edges)
         .groupBy(col("component").as("cluster_id"))
         .agg(count(lit(1)).as("n_members"))
         .orderBy(col("cluster_id"))
@@ -725,7 +625,8 @@ object DedupQueries {
     "q93_pagerank" -> ((s, d) => {
       // tracked: the union references the edge pipeline twice — without
       // the persist both near-dup signal branches execute twice
-      val e = graft.runner.Materialize.track(nearDupEdges(docs(s, d)))
+      val e = graft.runner.Materialize.track(
+        nearDupEdgesFromTokens(tokens(docs(s, d))).edges)
       val sym = e.select(col("da").as("u"), col("db").as("v"))
         .unionAll(e.select(col("db").as("u"), col("da").as("v")))
         .distinct()
@@ -743,8 +644,7 @@ object DedupQueries {
     // broadcast anti-join (the drop set is near-dup-sized, tiny).
     "q31b_simhash_dedup" -> ((s, d) => {
       val dd = docs(s, d)
-      val h = graft.runner.Materialize.track(dd
-        .select(col("doc_id"), simhash60(words(col("text"))).as("sh")))
+      val h = graft.runner.Materialize.track(simhashOf(tokens(dd)))
       val dropped = simhashPairsOf(h)
         .select(col("db").as("doc_id"))
         .distinct()
@@ -758,7 +658,7 @@ object DedupQueries {
     // The (doc_id, sh) frame is tiny (16 bytes/doc) and feeds both join
     // sides — materialize once per run (runner-owned).
     "q31_simhash" -> ((s, d) =>
-      simhashPairs(s, d)
+      simhashPairsOf(graft.runner.Materialize.track(simhashOf(tokens(docs(s, d)))))
         .orderBy(col("ham"), col("da"), col("db"))),
 
     // Corpus-wide duplicated-SPAN removal (the C4/RefinedWeb line-dedup

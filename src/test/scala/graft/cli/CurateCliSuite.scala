@@ -238,11 +238,12 @@ class CurateCliSuite extends SparkTestBase {
   }
 
   test("every guarded fold path produces the rebuild corpus (forced fallback matrix)") {
-    // The round-13 fold has four label paths: driver-local fast path
-    // (default at this scale), the distributed subgraph path with local
-    // CC, the distributed path with distributed star-round CC, and the
+    // The fold has four label paths: driver-local pairs (default at
+    // this scale), the distributed band join with driver CC, the
+    // distributed band join with distributed star-round CC, and the
     // FullRelabel whole-store rewrite. Force each via its bound's
-    // system property and pin fold == rebuild through all of them.
+    // system property and pin fold == rebuild through all of them, over
+    // doc-store-derived band rows AND over a postings store.
     val sf = "/root/testdata/sf0.001"
     val docs = graft.Tables.load(spark, sf, "documents")
     val m = docs.agg(expr("percentile_approx(doc_id, 0.5)")).collect()(0).getLong(0)
@@ -265,13 +266,15 @@ class CurateCliSuite extends SparkTestBase {
         "graft.curate.localBatchRowLimit" -> "0",
         "graft.curate.changedLimit" -> "0"),
       "fullRelabel+local" -> Seq("graft.curate.changedLimit" -> "0"))
-    for ((name, props) <- paths) {
+    for ((name, props) <- paths; postings <- Seq(false, true)) {
       props.foreach { case (k, v) => sys.props(k) = v }
       try {
-        val outInc = tmpDir(s"curate_fm_$name")
-        Curate.run(spark, b1, outInc, 100L)
+        val outInc = tmpDir(s"curate_fm_${name}_$postings")
+        Curate.run(spark, b1, outInc, 100L, forcePostings = postings)
+        assert(graft.layout.ZoneMap.exists(s"$outInc/state/postings") == postings)
         Curate.runAdd(spark, b2, outInc, 100L)
-        assert(corpus(outInc) == want, s"fold != rebuild via path $name")
+        assert(corpus(outInc) == want,
+          s"fold != rebuild via path $name (postings=$postings)")
       } finally props.foreach { case (k, _) => sys.props.remove(k) }
     }
   }

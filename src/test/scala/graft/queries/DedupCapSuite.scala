@@ -12,6 +12,18 @@ class DedupCapSuite extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** Unfused reference (the pre-r20 shape the edge builder replaced):
+    * one sorted shingle-hash set per doc from its own aggregate, then
+    * the same verification join.
+    */
+  private def shingleSetsOf(hashed: org.apache.spark.sql.DataFrame) =
+    hashed.groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(col("h1"))).as("hs"))
+
+  private def verifiedByJaccard(cand: org.apache.spark.sql.DataFrame,
+      hashed: org.apache.spark.sql.DataFrame) =
+    DedupQueries.verifiedBySets(cand, shingleSetsOf(hashed))
+
   test("caps are dormant at gate scale: q69 edges identical capped vs uncapped") {
     val dd = graft.Tables.load(spark, sf, "documents")
     def edges(cap: Boolean): Set[(Long, Long)] = {
@@ -22,7 +34,7 @@ class DedupCapSuite extends SparkTestBase {
         if (cap) (DedupQueries.DegenerateBucketCap, DedupQueries.SimhashBandCap)
         else (Int.MaxValue, Int.MaxValue)
       val e = DedupQueries.simhashPairsOf(sh, None, sb).select(col("da"), col("db"))
-        .unionAll(DedupQueries.verifiedByJaccard(
+        .unionAll(verifiedByJaccard(
           DedupQueries.minhashCandidates(DedupQueries.minhashSigsOf(hashed), None, mb),
           hashed))
       val out = e.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -136,7 +148,7 @@ class DedupCapSuite extends SparkTestBase {
     def edgeBag(df: org.apache.spark.sql.DataFrame): Map[(Long, Long), Int] =
       df.collect().map(r => (r.getLong(0), r.getLong(1)))
         .groupBy(identity).view.mapValues(_.length).toMap
-    val fused = edgeBag(DedupQueries.nearDupEdgesFromTokens(DedupQueries.tokens(dd)))
+    val fused = edgeBag(DedupQueries.nearDupEdgesFromTokens(DedupQueries.tokens(dd)).edges)
     graft.runner.Materialize.releaseAll()
     // unfused reference: separate sigs and sets aggregates (pre-r20 shape)
     val toks = graft.runner.Materialize.track(DedupQueries.tokens(dd))
@@ -148,7 +160,7 @@ class DedupCapSuite extends SparkTestBase {
       DedupQueries.simhashPairsOf(sh, None,
           DedupQueries.SimhashBandCap, Some(c.simMax), c.simHot)
         .select(col("da"), col("db"))
-        .unionAll(DedupQueries.verifiedByJaccard(
+        .unionAll(verifiedByJaccard(
           DedupQueries.minhashCandidates(sigs, None,
             DedupQueries.DegenerateBucketCap, Some(c.mhMax), c.mhHot),
           hashed)))

@@ -75,14 +75,21 @@ class IncrementalCurationSuite extends SparkTestBase {
     val full = snapshot(CurationQueries.curate(
       corpus0.unionByName(batch), minChars = 10))
     graft.runner.Materialize.releaseAll()
-    val st = IncrementalCuration.addBatch(
-      IncrementalCuration.initState(corpus0, minChars = 10), batch, minChars = 10)
-    val inc = snapshot(IncrementalCuration.corpus(st))
-    graft.runner.Materialize.releaseAll()
-    assert(inc == full)
-    // the scenario must actually fire: the bridge merged both clusters,
-    // so ONLY the min-id representative survives (not a vacuous pass)
-    assert(inc.map(_.head) == Seq(1L), s"expected sole survivor 1, got $inc")
+    // the merge changes doc 2's label: with changedLimit 0 the fold
+    // answers with a FullRelabel mapping instead of a delta
+    for (fullRelabel <- Seq(false, true)) {
+      if (fullRelabel) sys.props("graft.curate.changedLimit") = "0"
+      try {
+        val st = IncrementalCuration.addBatch(
+          IncrementalCuration.initState(corpus0, minChars = 10), batch, minChars = 10)
+        val inc = snapshot(IncrementalCuration.corpus(st))
+        graft.runner.Materialize.releaseAll()
+        assert(inc == full, s"fullRelabel=$fullRelabel")
+        // the scenario must actually fire: the bridge merged both
+        // clusters, so ONLY the min-id representative survives
+        assert(inc.map(_.head) == Seq(1L), s"expected sole survivor 1, got $inc")
+      } finally sys.props.remove("graft.curate.changedLimit")
+    }
   }
 
   test("quality-passing docs with fewer than 3 tokens survive the state") {
