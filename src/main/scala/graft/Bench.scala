@@ -77,7 +77,7 @@ object Bench {
     // — one merged number misleads the regression-vs-environment triage.
     case class Run(sec: Double, spillMb: Long, taskGcMs: Long, driverGcMs: Long,
         cachedMb: Long, evictions: Int, jobs: Long, stages: Long, tasks: Long,
-        schedMs: Long, deserMs: Long)
+        schedMs: Long, deserMs: Long, codegenCompiles: Long)
     val results = names.map { name =>
       val fn = SparkEntry.queries(name)
       def once(): Run = {
@@ -88,7 +88,7 @@ object Bench {
         try { fn(spark, sfDir).count() } catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
-            return Run(-1.0, 0L, 0L, 0L, 0L, 0, 0L, 0L, 0L, 0L, 0L)
+            return Run(-1.0, 0L, 0L, 0L, 0L, 0, 0L, 0L, 0L, 0L, 0L, 0L)
         } finally {
           // leak-free AND honest: frames a builder registered via
           // Materialize.track are dropped after EVERY run, so each
@@ -111,7 +111,8 @@ object Bench {
           cachedMb = graft.runner.Materialize.peakTrackedBytes / 1048576L,
           evictions = graft.runner.Materialize.evictions,
           jobs = d.jobs, stages = d.stages, tasks = d.tasks,
-          schedMs = d.schedulerDelayMs, deserMs = d.deserializeMs)
+          schedMs = d.schedulerDelayMs, deserMs = d.deserializeMs,
+          codegenCompiles = d.codegenCompiles)
       }
       // Spark's ContextCleaner reclaims shuffle files / broadcast blocks
       // only when their driver-side references are GARBAGE-COLLECTED — a
@@ -195,7 +196,8 @@ object Bench {
         "\"stages\":[" + rs.map(_.stages).mkString(",") + "]," +
         "\"tasks\":[" + rs.map(_.tasks).mkString(",") + "]," +
         "\"sched_ms\":[" + rs.map(_.schedMs).mkString(",") + "]," +
-        "\"deser_ms\":[" + rs.map(_.deserMs).mkString(",") + "]}"
+        "\"deser_ms\":[" + rs.map(_.deserMs).mkString(",") + "]," +
+        "\"codegen_compiles\":[" + rs.map(_.codegenCompiles).mkString(",") + "]}"
     }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     // only a FULL sweep AT THE CANONICAL SF records the committed two-run

@@ -327,7 +327,8 @@ object Curate {
       val appendFiles: Option[Int] =
         prep.nHint.map(n => math.max(1, math.ceil(n / 2e6).toInt))
       val postingsAppendFiles: Option[Int] =
-        prep.nHint.map(n => math.max(1, math.ceil(n * 8.0 / 262144).toInt))
+        prep.nHint.map(n => math.max(1, math.ceil(
+          n * graft.queries.IncrementalCuration.BandRowsPerDoc / 262144.0).toInt))
       val postingsDir = s"$outDir/state/postings"
       val usePostings = graft.layout.ZoneMap.exists(postingsDir)
       val docsDir = s"$outDir/docs"

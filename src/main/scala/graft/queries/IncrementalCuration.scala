@@ -262,7 +262,9 @@ object IncrementalCuration {
     * distributed band join up front: a batch that size amortizes its
     * fixed costs anyway, and on a dup-dense corpus its touched head rows
     * would blow [[LocalRowLimit]] only after paying the window scan.
-    * Overridable via system property (suites).
+    * The fold checks it against a bound known before any job, the kept
+    * batch docs times [[BandRowsPerDoc]]. Overridable via system
+    * property (suites).
     */
   def LocalBatchRowLimit: Int =
     sys.props.get("graft.curate.localBatchRowLimit").map(_.toInt).getOrElse(65536)
@@ -295,21 +297,24 @@ object IncrementalCuration {
     *     stored labels.
     *
     * Crash-retry: the postings store may already hold this batch's rows
-    * (appended before the crash); the recomputation is idempotent (see
-    * [[localCandidates]] and [[labelTail]]).
+    * (appended before the crash); [[corpusBandRows]] drops them, and the
+    * label recomputation is idempotent (see [[labelTail]]).
     */
   def foldLabels(state: DataFrame, stateComps: DataFrame, prep: BatchPrep,
       postingsDir: Option[String] = None,
       docsDir: Option[String] = None): DeltaResult = {
     val lap = stepTimer()
     val batchBand = postingsAll(prep.rows)
-    val batchRows = batchBand.limit(LocalBatchRowLimit + 1).collect()
-    lap(s"batch_rows (${batchRows.length})")
-    val local = batchRows.length <= LocalBatchRowLimit
+    // the route comes from a bound, not a LIMIT collect: a limit pushed
+    // into the union's branches names its counter from a JVM-wide id, so
+    // its generated classes are new code on every fold
+    val local = prep.nHint.exists(_ * BandRowsPerDoc <= LocalBatchRowLimit)
+    val batchRows = if (local) batchBand.collect() else Array.empty[Row]
+    if (local) lap(s"batch_rows (${batchRows.length})")
     if (local && batchRows.isEmpty) return selfLabels(prep)
     // batch ids: band-row ids when collected (a batch doc without band
     // rows joins no edge), otherwise one batch-bounded collect
-    lazy val batchIds: Set[Long] =
+    val batchIds: Set[Long] =
       if (local) batchRows.map(_.getLong(1)).toSet
       else prep.rows.select(col("doc_id")).collect().map(_.getLong(0)).toSet
     // touched bucket keys (both families share the key space — a
@@ -324,10 +329,10 @@ object IncrementalCuration {
         if (keys.length > TouchedKeyLimit) None
         else Some(keys.map(_.getLong(0)).toSet)
       }
-    val (corpus, keptBound) = corpusBandRows(state, postingsDir, touched)
+    val (corpus, keptBound) = corpusBandRows(state, postingsDir, touched, batchIds)
     val localEdges =
       if (!local) None
-      else localCandidates(corpus, keptBound, batchRows, batchIds, lap)
+      else localCandidates(corpus, keptBound, batchRows, lap)
         .map { case (simPairs, mhPairs) =>
           // MinHash verification stays distributed: the hs arrays stay in
           // the store, only the candidate frame is local
@@ -372,10 +377,15 @@ object IncrementalCuration {
     * Candidate-set parity with an unrestricted read: the filter keeps
     * every row of every touched bucket (bh is a function of (band,
     * bucket)), and untouched buckets cannot emit a >=1-new pair.
+    *
+    * Crash-retry: rows carrying `batchIds` are this batch's half-appended
+    * postings. They are dropped here for both pair routes; the batch's
+    * own band rows re-add them. Counted as corpus rows they would shift
+    * an over-cap bucket's head/tail split and its census.
     */
   private def corpusBandRows(state: DataFrame, postingsDir: Option[String],
-      touched: Option[Set[Long]]): (DataFrame, Option[Long]) =
-    (postingsDir, touched) match {
+      touched: Option[Set[Long]], batchIds: Set[Long]): (DataFrame, Option[Long]) = {
+    val (rows, keptBound) = (postingsDir, touched) match {
       case (Some(dir), Some(keys)) =>
         val scan = graft.layout.PrunedScan.read(state.sparkSession, dir,
           Seq(graft.layout.NumIn("bh", keys.iterator.map(_.toDouble).toSeq)),
@@ -387,6 +397,8 @@ object IncrementalCuration {
         (postingsAll(state).filter(inSetLong(col("bh"), keys)), None)
       case (None, None) => (postingsAll(state), None)
     }
+    (rows.filter(!inSetLong(col("doc_id"), batchIds)), keptBound)
+  }
 
   /** Driver-side candidate generation: (SimHash pairs already hamming-
     * verified, MinHash candidates), or None when a bound is exceeded.
@@ -403,13 +415,9 @@ object IncrementalCuration {
     *    branch emits the same set either way for buckets at or under
     *    the cap (pure head), so computing head/tail uniformly here
     *    cannot diverge.
-    *
-    * Crash-retry: corpus rows carrying batch ids are this batch's
-    * half-appended postings — dropped here and re-added from the batch's
-    * own band rows (identical membership, idempotent result).
     */
   private def localCandidates(corpus: DataFrame, keptBound: Option[Long],
-      batchRows: Array[Row], batchIds: Set[Long], lap: String => Unit)
+      batchRows: Array[Row], lap: String => Unit)
       : Option[(Seq[(Long, Long)], Seq[(Long, Long)])] = {
     // free driver-only gate: the manifest's kept-file row counts
     // upper-bound the head collect BEFORE any job runs. On a dup-dense
@@ -444,7 +452,7 @@ object IncrementalCuration {
       byBucket.getOrElseUpdate(key, new mutable.ArrayBuffer[M]()) +=
         M(r.getLong(1), sh, isNew)
     }
-    headRows.foreach(r => if (!batchIds.contains(r.getLong(1))) add(r, isNew = false))
+    headRows.foreach(add(_, isNew = false))
     batchRows.foreach(add(_, isNew = true))
     val simPairs = new mutable.HashSet[(Long, Long)]()
     val mhPairs = new mutable.HashSet[(Long, Long)]()
@@ -586,7 +594,7 @@ object IncrementalCuration {
     * remainder).
     */
   private def labelTail(stateComps: DataFrame, prep: BatchPrep,
-      edges: Either[Seq[(Long, Long)], DataFrame], batchIds: => Set[Long],
+      edges: Either[Seq[(Long, Long)], DataFrame], batchIds: Set[Long],
       lap: String => Unit): DeltaResult = {
     val spark = stateComps.sparkSession
     val (localEdges, edgeFrame) = edges match {
@@ -734,6 +742,11 @@ object IncrementalCuration {
         lit(null).cast("long").as("sh"))
     sim.unionByName(mh).withColumn("bh", bucketKey)
   }
+
+  /** Upper bound on one doc's rows in [[postingsAll]]: 4 SimHash bands
+    * plus 4 MinHash bands (a shingle-less doc has only the SimHash 4).
+    */
+  val BandRowsPerDoc: Int = 8
 
   /** The postings store's schema — passed to the pruned read so a fold
     * never pays a footer-inference job.

@@ -15,7 +15,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * (task launch→finish time not spent running/deserializing/serializing
   * — queueing on a saturated scheduler or listener bus), and executor
   * deserialize time (closure + broadcast rehydration, the per-task cost
-  * multiplied by many small round-jobs).
+  * multiplied by many small round-jobs). `codegenCompiles` counts the
+  * classes Janino compiled on the driver: a JVM-wide codegen metric, not
+  * a listener event, so a delta also counts concurrent queries' compiles.
   */
 class DiagListener extends SparkListener {
 
@@ -59,7 +61,7 @@ class DiagListener extends SparkListener {
 
   case class Snapshot(memSpilled: Long, diskSpilled: Long, gcTimeMs: Long,
       jobs: Long, stages: Long, tasks: Long,
-      schedulerDelayMs: Long, deserializeMs: Long) {
+      schedulerDelayMs: Long, deserializeMs: Long, codegenCompiles: Long) {
     def -(prev: Snapshot): Snapshot = Snapshot(
       memSpilled - prev.memSpilled,
       diskSpilled - prev.diskSpilled,
@@ -68,11 +70,13 @@ class DiagListener extends SparkListener {
       stages - prev.stages,
       tasks - prev.tasks,
       schedulerDelayMs - prev.schedulerDelayMs,
-      deserializeMs - prev.deserializeMs)
+      deserializeMs - prev.deserializeMs,
+      codegenCompiles - prev.codegenCompiles)
   }
 
   def snapshot(): Snapshot =
     Snapshot(memSpilled.get(), diskSpilled.get(), gcTimeMs.get(),
       jobs.get(), stages.get(), tasks.get(),
-      schedulerDelayMs.get(), deserializeMs.get())
+      schedulerDelayMs.get(), deserializeMs.get(),
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
 }

@@ -15,6 +15,21 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
+  /** Entries of Spark's JVM-wide generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). One curation
+    * benchmark JVM (full build, four folds, q69 and q72, cycle after
+    * cycle) uses 340-390 distinct generated classes. Under the default
+    * the LRU evicted every class before its next use, so each cycle
+    * recompiled ~160 classes per fold, ~165 per full build and 80-90
+    * per gate query in Janino, on the driver. 1000 is 2.5-3x that
+    * working set, and the benchmark's peak RSS did not move with it. It
+    * is a constant, not an option: the conf is static and
+    * `CodeGenerator` reads it once, under the JVM's first session, so a
+    * per-caller value could not take effect. The test session
+    * (SparkTestBase) sets the same constant.
+    */
+  val CodegenCacheEntries: Int = 1000
+
   /** Shuffle width derived from input volume (round-11 VERDICT "What's
     * wrong #1"): `max(cpus, dirBytes / 32 MB)`, capped at 4096. A fixed
     * partitions=cpus pin stops fitting once one shuffle outgrows the
@@ -116,4 +131,5 @@ object Sessions {
         broadcastBudgetBytes.toString)
       .config("spark.graft.broadcastBudget", broadcastBudgetBytes.toString)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 }

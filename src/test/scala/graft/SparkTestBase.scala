@@ -24,6 +24,10 @@ object SparkTestBase {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // the engine's codegen cache size, not its whole profile: the other
+      // tuned confs would change the plan shapes suites assert on
+      .config("spark.sql.codegen.cache.maxEntries",
+        graft.runner.Sessions.CodegenCacheEntries.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -181,6 +181,62 @@ class CurateCliSuite extends SparkTestBase {
     assert(corpus(outInc) == corpus(outFull))
   }
 
+  test("a distributed-route retry does not count the crashed fold's postings as corpus rows") {
+    // A synthetic family of 40 state docs (ids 1-40) and 40 batch docs
+    // (ids 101-140). Every text starts with the same three words, whose
+    // shingle hashes undercut every other shingle of the family, so it
+    // is each doc's MinHash band-0 minimum: one bucket of 80 docs, over
+    // DegenerateBucketCap. Such a bucket keeps all pairs among its 64
+    // smallest ids and stars the rest from its root (id 1). Batch doc
+    // 120 shares 30 leading body words with state doc 10 (Jaccard 0.61,
+    // SimHash far, no other shared band), so their one candidate pair
+    // comes from the head. A retry that read the crashed fold's postings
+    // rows for the batch as corpus rows would count ids 101-112 twice,
+    // push 120 into the tail, pair it only with the root (Jaccard 0.01)
+    // and keep it as its own cluster.
+    val anchor = "near dup k1728264"
+    def body(d: Int): Seq[String] =
+      if (d == 120) (0 until 30).map(k => s"t10w$k") ++ (30 until 40).map(k => s"t120w$k")
+      else (0 until 40).map(k => s"t${d}w$k")
+    import spark.implicits._
+    def write(ids: Seq[Int]): String = {
+      val d = tmpDir("curate_lo")
+      ids.map { i =>
+        val text = (anchor +: body(i)).mkString(" ")
+        (i.toLong, text, "en", "syn", text.length.toLong)
+      }.toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.parquet(s"$d/documents.parquet")
+      d
+    }
+    val (state, batch) = (1 to 40, 101 to 140)
+    val b1 = write(state); val b2 = write(batch)
+    val outFull = tmpDir("curate_lofull")
+    Curate.run(spark, write(state ++ batch), outFull, 100L)
+    def corpus(dir: String) = spark.read.parquet(s"$dir/docs")
+      .select("doc_id", "lang", "split", "n_tok")
+      .collect().map(_.toSeq.toVector).sortBy(_.head.toString.toLong).toSeq
+    val want = corpus(outFull)
+    assert(!want.exists(_.head == 120L), "the rebuild must merge doc 120 into doc 10")
+
+    val outInc = tmpDir("curate_loinc")
+    Curate.run(spark, b1, outInc, 100L, forcePostings = true)
+    sys.props("graft.curate.localBatchRowLimit") = "0"
+    try {
+      intercept[IllegalStateException] {
+        Curate.runAdd(spark, b2, outInc, 100L, failAfterPostingsAppend = true)
+      }
+      graft.runner.Materialize.releaseAll()
+      val maxBucket = spark.read.parquet(s"$outInc/state/postings")
+        .filter(col("fam") === 1).groupBy(col("band"), col("bucket")).count()
+        .agg(max(col("count"))).head().getLong(0)
+      assert(maxBucket > graft.queries.DedupQueries.DegenerateBucketCap,
+        s"the crashed fold's store must hold an over-cap bucket (max $maxBucket)")
+      Curate.runAdd(spark, b2, outInc, 100L)
+      graft.runner.Materialize.releaseAll()
+    } finally sys.props.remove("graft.curate.localBatchRowLimit")
+    assert(corpus(outInc) == want)
+  }
+
   test("a fold that crashes after the corpus delta retries without duplicating") {
     // round-10 ADVICE (medium): a crash between the corpus delta and the
     // state writes used to leave the corpus ahead of the state, and a
