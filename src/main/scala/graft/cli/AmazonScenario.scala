@@ -1,9 +1,10 @@
 package graft.cli
 
 import org.apache.spark.sql.SparkSession
-import graft.layout._
+import graft.layout.{LayoutWriter, TableManifest}
 import graft.layout.LayoutWriter.LayoutSpec
 import graft.runner.{MetricsListener, QueryRunner}
+import graft.table.SfcTable
 import graft.tools.AmazonGen
 
 /** The reference's AMAZON RQ1 layout-effectiveness matrix — string
@@ -52,7 +53,7 @@ object AmazonScenario {
     Math.floorMod(scala.util.hashing.MurmurHash3
       .productHash((seed, i)), 1000000) / 1000000.0
 
-  case class Q(name: String, preds: Seq[ZonePredicate], where: String)
+  case class Q(name: String, where: String)
 
   /** The fixed query-instance set every (scenario, layout) cell runs —
     * parameters are pure seeded functions, so all layouts see identical
@@ -70,7 +71,6 @@ object AmazonScenario {
       val lo = AmazonGen.TsLo + frac(1000 + i, band.hashCode) * (span - w)
       val hi = lo + w
       Q(s"ts_${band}_$i",
-        Seq(NumBetween("record_timestamp", lo, hi)),
         f"record_timestamp BETWEEN timestamp_seconds(${lo}%.0f) AND timestamp_seconds(${hi}%.0f)")
     }
     val pointQs = for {
@@ -82,7 +82,6 @@ object AmazonScenario {
       val vs = AmazonGen.sampleCodes(spark, pool, fanout, salt, prefix, len,
         seed = 7000 + 13 * fanout + i)
       Q(s"${colName}_f${fanout}_$i",
-        Seq(StrIn(colName, vs)),
         s"$colName IN (${vs.map(sq).mkString(",")})")
     }
     val catTs = for (i <- 0 until math.max(1, nInst / 2)) yield {
@@ -90,8 +89,6 @@ object AmazonScenario {
       val w = 0.05 * span
       val lo = AmazonGen.TsLo + frac(3000, i) * (span - w)
       Q(s"cat_ts_S3_$i",
-        Seq(StrIn("category", cats),
-          NumBetween("record_timestamp", lo, lo + w)),
         s"category IN (${cats.map(sq).mkString(",")}) AND " +
           f"record_timestamp BETWEEN timestamp_seconds(${lo}%.0f) AND timestamp_seconds(${lo + w}%.0f)")
     }
@@ -99,8 +96,6 @@ object AmazonScenario {
       val w = 0.05 * span
       val lo = AmazonGen.TsLo + frac(4000, i) * (span - w)
       Q(s"ts_rating_S3_$i",
-        Seq(NumBetween("record_timestamp", lo, lo + w),
-          NumBetween("rating", 4.0, 5.0)),
         f"record_timestamp BETWEEN timestamp_seconds(${lo}%.0f) AND timestamp_seconds(${lo + w}%.0f)" +
           " AND rating BETWEEN 4 AND 5")
     }
@@ -125,19 +120,21 @@ object AmazonScenario {
       scenario: String, layout: String, dir: String,
       qs: Seq[Q]): Seq[Scenario.Cell] =
     qs.map { q =>
-      val scan = PrunedScan.read(spark, dir, q.preds)
-      scan.df.createOrReplaceTempView("amz_pruned")
-      val sql = s"SELECT count(*) AS cnt, sum(helpful_vote) AS hv " +
-        s"FROM amz_pruned WHERE ${q.where}"
+      SfcTable.open(spark, dir).createOrReplaceTempView("amz_pruned")
+      val sql = cellSql("amz_pruned", q)
       val m1 = QueryRunner.run(spark, spark.sql(sql),
         s"$scenario-${q.name}-$layout", listener = Some(listener), warmup = true)
       val m2 = QueryRunner.run(spark, spark.sql(sql),
         s"$scenario-${q.name}-$layout", listener = Some(listener), warmup = false)
       val m = if (m2.wallSec < m1.wallSec) m2 else m1
-      Scenario.Cell(scenario, q.name, layout, m.rows, m.wallSec,
-        scan.filesKept, scan.filesTotal, m.bytesScanned,
-        scan.bytesKept, scan.bytesTotal, m.recordsRead)
+      Scenario.keptCell(scenario, q.name, layout, m, spark.sql(sql))
     }
+
+  /** The SQL one matrix cell runs over `view`; its WHERE is the one the
+    * table's file index prunes from.
+    */
+  def cellSql(view: String, q: Q): String =
+    s"SELECT count(*) AS cnt, sum(helpful_vote) AS hv FROM $view WHERE ${q.where}"
 
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("results/rq1_amazon")
@@ -186,7 +183,7 @@ object AmazonScenario {
     val deepAsins = (0 until 3).map(i => AmazonGen.sampleCodes(
       spark, nAsins, 4, 20, "B0000000", 4, seed = 8100 + i))
     val deepQs = deepAsins.zipWithIndex.map { case (vs, i) =>
-      Q(s"deep_asin_f4_$i", Seq(StrIn("asin", vs)),
+      Q(s"deep_asin_f4_$i",
         s"asin IN (${vs.map(v => "'" + v + "'").mkString(",")})")
     } ++ (0 until 2).map { i =>
       // single-asin probes too (the raw pool's f1 family is the 48x/9.6x
@@ -198,7 +195,7 @@ object AmazonScenario {
       // records_read was 0 on every deep_asin_f1 probe)
       val vs = AmazonGen.sampleCodes(spark, nAsins, 1, 20, "B0000000", 4,
         seed = 8200 + i)
-      Q(s"deep_asin_f1_$i", Seq(StrIn("asin", vs)),
+      Q(s"deep_asin_f1_$i",
         s"asin IN (${vs.map(v => "'" + v + "'").mkString(",")})")
     }
     val deepCells = Scenario.Layouts.flatMap { layout =>

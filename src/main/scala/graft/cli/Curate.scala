@@ -603,9 +603,7 @@ object Curate {
       lit(1L).as("sgn"), col("n_tok").cast("long").as("t"))
     val removes =
       if (droppedKeys.isEmpty) adds.limit(0)
-      else graft.layout.PrunedScan.read(spark, docsDir,
-          Seq(graft.layout.NumIn("doc_id", droppedKeys.map(_.toDouble))),
-          corpusSchema).df
+      else graft.table.SfcTable.open(spark, docsDir, corpusSchema)
         .filter(org.apache.spark.sql.graftbridge.Bridge.inSetLong(
           col("doc_id"), droppedKeys))
         .select(col("split"), col("lang"),

@@ -6,7 +6,7 @@ import graft.Tables
 import graft.layout._
 import graft.layout.LayoutWriter.LayoutSpec
 import graft.runner.{MetricsListener, QueryRunner}
-import graft.table.{BatchBuilder, Upserter}
+import graft.table.{BatchBuilder, SfcTable, Upserter}
 
 /** RQ7-style incremental-maintenance scenario (reference:
   * scripts/run_RQ_7_matrix.sh + build_tpch_update_batches.py +
@@ -52,15 +52,12 @@ object Incremental {
         orders.filter(col("o_orderkey") > cut), batches, seed = 42, keyCol = "o_orderkey")
 
       def probe(tag: String): Step = {
-        val scan = PrunedScan.read(spark, dir, Seq(
-          NumBetween("o_orderdate",
-            daysSinceEpoch("1996-01-01"), daysSinceEpoch("1996-12-31"))))
-        val m = QueryRunner.run(spark,
-          scan.df.filter(col("o_orderdate").between(
+        val t = SfcTable.open(spark, dir)
+        def q = t.filter(col("o_orderdate").between(
             lit("1996-01-01").cast("timestamp"), lit("1996-12-31").cast("timestamp")))
-            .agg(count(lit(1)), sum("o_totalprice")),
-          tag, Some(listener), warmup = true)
-        Step(tag, scan.filesKept, scan.filesTotal, m.filesScanned,
+          .agg(count(lit(1)), sum("o_totalprice"))
+        val m = QueryRunner.run(spark, q, tag, Some(listener), warmup = true)
+        Step(tag, m.filesScanned, SfcTable.pruned(q).get.filesTotal, m.filesScanned,
           m.bytesScanned, m.recordsRead, m.rows, m.wallSec)
       }
 
@@ -116,7 +113,4 @@ object Incremental {
     println(s"[incremental] decay curve written to $outCsv")
     spark.stop()
   }
-
-  private def daysSinceEpoch(d: String): Double =
-    java.time.LocalDate.parse(d).toEpochDay.toDouble * 86400.0
 }

@@ -3,10 +3,11 @@ package graft.cli
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.layout._
+import graft.layout.LayoutWriter
 import graft.layout.LayoutWriter.LayoutSpec
 import graft.profile.Profiler
 import graft.runner.{MetricsListener, QueryRunner}
+import graft.table.SfcTable
 
 /** RQ5 — the SORT-ORDER matrix over partitioned + keyed tables: the
   * last reference runner without a repo artifact (r17 VERDICT "What's
@@ -69,16 +70,16 @@ object Rq5 {
   val Cols = Seq("l_shipdate", "l_discount", "l_suppkey", "l_orderkey",
     "l_extendedprice", "l_quantity")
 
-  case class Q(name: String, preds: Seq[ZonePredicate], where: String)
+  case class Q(name: String, where: String)
 
   private def frac(a: Int, b: Int): Double =
     (math.abs((a * 2654435761L + b * 40503L) % 1000003L)) / 1000003.0
 
   /** The fixed seeded workload. Ranges place a window of the band's
-    * width uniformly in the column's profiled [min,max]; timestamps use
-    * epoch-second doubles on the predicate side and
-    * `timestamp_seconds()` literals on the SQL side (the ZoneMap
-    * coding). Point queries IN-list real sampled values.
+    * width uniformly in the column's profiled [min,max]; timestamps are
+    * `timestamp_seconds()` literals. Point queries IN-list real sampled
+    * values. The WHERE text is the whole query: the table's file index
+    * prunes from it.
     */
   def queries(ranges: Map[String, (Double, Double)],
       samples: Map[String, Seq[Double]], nInst: Int): Seq[Q] = {
@@ -87,15 +88,17 @@ object Rq5 {
       if (isTs(c)) f"timestamp_seconds($v%.0f)"
       else if (c == "l_discount") f"$v%.4f"
       else f"$v%.2f"
+    // l_shipdate is TIMESTAMP_NTZ: Catalyst unwraps the column-side cast a
+    // BETWEEN over timestamp literals implies, but not an IN list's, and
+    // a cast column prunes nothing — so IN literals carry the column type
+    def inLit(c: String, v: Double): String =
+      if (isTs(c)) s"CAST(${sqlLit(c, v)} AS TIMESTAMP_NTZ)" else sqlLit(c, v)
     def window(c: String, sel: Double, seed: Int): (Double, Double) = {
       val (mn, mx) = ranges(c)
       val span = mx - mn
       val w = math.max(1e-9, sel * span)
       val lo = mn + frac(seed, c.hashCode) * (span - w)
-      // timestamp bounds land on WHOLE seconds: the SQL literal renders
-      // %.0f, so a fractional predicate bound would prune files the SQL
-      // still matches (a midnight row exactly at floor(lo)) — the two
-      // sides must use the identical value
+      // timestamp bounds land on WHOLE seconds (the literal renders %.0f)
       if (isTs(c)) (math.floor(lo), math.floor(lo + w))
       else (lo, lo + w)
     }
@@ -106,7 +109,6 @@ object Rq5 {
         c -> window(c, selDim, 7000 + 131 * i + 17 * j + band.hashCode)
       }
       Q(s"${tag}_${band}_$i",
-        ws.map { case (c, (lo, hi)) => NumBetween(c, lo, hi) },
         ws.map { case (c, (lo, hi)) =>
           s"$c BETWEEN ${sqlLit(c, lo)} AND ${sqlLit(c, hi)}"
         }.mkString(" AND "))
@@ -138,8 +140,7 @@ object Rq5 {
         pool((frac(9000 + 31 * i + j, c.hashCode) * pool.size).toInt
           .min(pool.size - 1))).distinct
       Q(s"pt_${c.stripPrefix("l_")}_f${fanout}_$i",
-        Seq(NumIn(c, vs)),
-        s"$c IN (${vs.map(v => sqlLit(c, v)).mkString(",")})")
+        s"$c IN (${vs.map(v => inLit(c, v)).mkString(",")})")
     }
     n1 ++ n2 ++ pts
   }
@@ -209,8 +210,7 @@ object Rq5 {
               case (q, b) if b.startsWith("S") => (q, b)
               case (q, _) => (q, "PT")
             }) {
-          val scan = PrunedScan.read(spark, dir, q.preds)
-          scan.df.createOrReplaceTempView("rq5_tbl")
+          SfcTable.open(spark, dir).createOrReplaceTempView("rq5_tbl")
           val sql = "SELECT count(*) AS cnt, sum(l_orderkey) AS sum_ok " +
             s"FROM rq5_tbl WHERE ${q.where}"
           val m1 = QueryRunner.run(spark, spark.sql(sql), s"$arm-${q.name}",
@@ -218,9 +218,7 @@ object Rq5 {
           val m2 = QueryRunner.run(spark, spark.sql(sql), s"$arm-${q.name}",
             listener = Some(listener), warmup = false)
           val m = if (m2.wallSec < m1.wallSec) m2 else m1
-          cells += Scenario.Cell(band, q.name, arm, m.rows, m.wallSec,
-            scan.filesKept, scan.filesTotal, m.bytesScanned,
-            scan.bytesKept, scan.bytesTotal, m.recordsRead)
+          cells += Scenario.keptCell(band, q.name, arm, m, spark.sql(sql))
         }
         // free the arm's files as we go — 17 laid-out copies otherwise
         if (arm != "baseline") Scenario.deleteRec(new java.io.File(dir))

@@ -6,6 +6,7 @@ import graft.layout._
 import graft.layout.LayoutWriter.LayoutSpec
 import graft.profile.Profiler
 import graft.runner.{MetricsListener, QueryRunner}
+import graft.table.SfcTable
 import graft.wlg.WorkloadGen
 import graft.wlg.WorkloadGen.{RangeParam, TemplateSpec}
 
@@ -38,6 +39,17 @@ object Scenario {
       rows: Long, wallSec: Double, filesKept: Long, filesTotal: Long,
       bytesScanned: Long, fileBytesKept: Long = 0L, fileBytesTotal: Long = 0L,
       recordsRead: Long = 0L)
+
+  /** A cell for a query over an [[SfcTable]]: files and bytes kept are
+    * what the scan read (`numFiles`/`filesSize`), totals come from the
+    * table's memoized prune.
+    */
+  def keptCell(band: String, query: String, layout: String,
+      m: QueryRunner.QueryMetrics, df: org.apache.spark.sql.DataFrame): Cell = {
+    val view = SfcTable.pruned(df).get
+    Cell(band, query, layout, m.rows, m.wallSec, m.filesScanned, view.filesTotal,
+      m.bytesScanned, m.filesSize, view.bytesTotal, m.recordsRead)
+  }
 
   case class BandLayout(band: String, layout: String,
       gmWallSpeedup: Double, gmFilesRatio: Double,
@@ -173,12 +185,7 @@ object Scenario {
 
       def measureCell(band: String, inst: graft.wlg.WorkloadGen.QueryInstance,
           qi: Int, layout: String, dir: String): Cell = {
-        val preds = cols.zipWithIndex.map { case (c, i) =>
-          NumBetween(c,
-            inst.params(s"p${i}_lo").toDouble, inst.params(s"p${i}_hi").toDouble)
-        }
-        val scan = PrunedScan.read(spark, dir, preds)
-        scan.df.createOrReplaceTempView("pruned_tbl")
+        SfcTable.open(spark, dir).createOrReplaceTempView("pruned_tbl")
         val sql = inst.sql.replace("{{tbl}}", "pruned_tbl")
         // min-of-2 measured runs (after QueryRunner's warmup): the box
         // carries 2-4x load transients and the pruned cells are
@@ -188,9 +195,7 @@ object Scenario {
         val m2 = QueryRunner.run(spark, spark.sql(sql), s"$band-q$qi-$layout",
           listener = Some(listener), warmup = false)
         val m = if (m2.wallSec < m1.wallSec) m2 else m1
-        Cell(band, s"q$qi", layout, m.rows, m.wallSec,
-          scan.filesKept, scan.filesTotal, m.bytesScanned,
-          scan.bytesKept, scan.bytesTotal, m.recordsRead)
+        keptCell(band, s"q$qi", layout, m, spark.sql(sql))
       }
 
       // Two arm schedules with identical cells, different peak DISK:

@@ -96,7 +96,10 @@ case class TableManifest(
     // table carries). In MEMORY `files` is always fully populated;
     // [[ZoneMap.read]] attaches the sidecar transparently. None on
     // small tables and pre-r18 manifests.
-    filesRef: Option[String] = None) {
+    filesRef: Option[String] = None,
+    // sidecar entries, stamped on sidecar-backed headers: a header read
+    // ([[ZoneMap.header]]) knows the table's size without the sidecar
+    fileCount: Option[Int] = None) {
 
   def hivePartitions: Seq[String] = partitionCols.getOrElse(Nil)
 
@@ -648,7 +651,7 @@ object ZoneMap {
       generation = Some(nextGen),
       files = m.files.map(f =>
         if (f.gen.isEmpty) f.copy(gen = Some(nextGen)) else f),
-      filesRef = None)
+      filesRef = None, fileCount = None)
     // gen + random suffix: two writers racing from the same base
     // generation (or a writer re-running after a crash between sidecar
     // and header move) must NEVER target the same sidecar name — a
@@ -678,7 +681,8 @@ object ZoneMap {
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     }
     val onDisk = sidecar match {
-      case Some(ref) => stamped.copy(files = Nil, filesRef = Some(ref))
+      case Some(ref) =>
+        stamped.copy(files = Nil, filesRef = Some(ref), fileCount = Some(stamped.files.length))
       case None => stamped
     }
     val json = Serialization.writePretty(onDisk)
@@ -915,33 +919,46 @@ object ZoneMap {
   }
 
   private def pruneReadOnce(dir: String, preds: Seq[ZonePredicate]): PrunedView = {
-    val hp = Paths.get(dir, ManifestName)
-    val attrs = Files.readAttributes(hp,
-      classOf[java.nio.file.attribute.BasicFileAttributes])
-    val cacheKey = canonical(dir)
-    val cached = cacheLookup(cacheKey, attrs)
     def fromFull(m: TableManifest): PrunedView =
       PrunedView(m, m.prune(preds), m.files.length, m.files.map(_.rows).sum,
         m.files.flatMap(_.bytes).sum)
-    if (cached != null) return fromFull(cached)
-    val json = new String(Files.readAllBytes(hp), StandardCharsets.UTF_8)
-    val m0 = Serialization.read[TableManifest](json)
+    val m0 = header(dir)
     m0.filesRef match {
-      case Some(ref) if Files.size(Paths.get(dir, ref)) > streamBytesThreshold =>
+      case Some(ref) if m0.files.isEmpty &&
+          Files.size(Paths.get(dir, ref)) > streamBytesThreshold =>
         // STREAM: parallel byte-range scan + filter, survivors only
         val here = canonical(dir)
         val from = m0.root.filter(_ != here)
         val (kept, total, rows, bytes) =
           streamPrune(Paths.get(dir, ref), preds, from, here)
-        val header = rebase(m0.copy(files = Nil), dir)
-        PrunedView(header, kept, total, rows, bytes)
-      case Some(_) =>
+        PrunedView(rebase(m0, dir), kept, total, rows, bytes)
+      case Some(_) if m0.files.isEmpty =>
         // small sidecar: materialize via readOnce (cache-friendly)
         fromFull(read(dir))
-      case None =>
-        val result = rebase(m0, dir)
-        cacheStore(cacheKey, attrs, result)
-        fromFull(result)
+      case _ => fromFull(m0)
+    }
+  }
+
+  /** The manifest at header cost — what a reader needs before it prunes
+    * (generation, partition columns, `fileCount`): the cached manifest,
+    * else the on-disk header. An inline manifest is rebased and cached
+    * whole; a sidecar-backed header comes back as written (empty `files`,
+    * root as stamped — the streaming prune rebases survivors from it).
+    */
+  def header(dir: String): TableManifest = {
+    val hp = Paths.get(dir, ManifestName)
+    val attrs = Files.readAttributes(hp,
+      classOf[java.nio.file.attribute.BasicFileAttributes])
+    val cacheKey = canonical(dir)
+    val cached = cacheLookup(cacheKey, attrs)
+    if (cached != null) return cached
+    val m0 = Serialization.read[TableManifest](
+      new String(Files.readAllBytes(hp), StandardCharsets.UTF_8))
+    if (m0.filesRef.isDefined) m0
+    else {
+      val result = rebase(m0, dir)
+      cacheStore(cacheKey, attrs, result)
+      result
     }
   }
 

@@ -60,7 +60,10 @@ object SearchIndex {
       textCol: String, dir: String, batchFiles: Int = 4): Unit = {
     val pdir = s"$dir/postings"
     val before = graft.layout.ZoneMap.read(pdir)
-    def norm(p: String) = new org.apache.hadoop.fs.Path(p).toUri.toString
+    // canonical on both sides: entry paths come from input_file_name()
+    // (file:///...), listings from the file system (file:/...); a raw
+    // compare re-appends every existing file as "fresh"
+    def norm(p: String) = graft.layout.ZoneMap.canonical(p)
     val known = before.files.map(f => norm(f.path)).toSet
     InvertedIndex.postings(batch, idCol, textCol)
       .repartitionByRange(batchFiles, col("term"))
@@ -70,7 +73,7 @@ object SearchIndex {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fresh = fs.listStatus(new org.apache.hadoop.fs.Path(pdir))
       .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-      .map(p => norm(p.toString)).filterNot(known)
+      .map(_.toString).filterNot(p => known(norm(p)))
     // an empty batch (or a writer emitting zero files for empty
     // partitions) appends nothing: reading zero parquet paths throws
     // UNABLE_TO_INFER_SCHEMA and would abort mid-add with the manifest

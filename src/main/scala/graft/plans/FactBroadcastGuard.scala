@@ -83,7 +83,7 @@ object FactBroadcastGuard extends SparkStrategy {
               // sorting a table must never make the planner treat it
               // as smaller than its row count.
               case g: graft.table.GraftFileIndex =>
-                bytes.max(BigInt(g.manifest.totalRows) * HashEntryBytes)
+                bytes.max(BigInt(g.totals.rowsTotal) * HashEntryBytes)
               case _ => bytes
             }
           case r => BigInt(r.sizeInBytes)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge.inSetLong
 import graft.operators.ConnectedComponents
 import graft.runner.Materialize
+import graft.table.SfcTable
 
 /** Incremental corpus curation — dedup a NEW document batch against an
   * existing curated corpus without recomputing the full near-dup graph.
@@ -387,10 +388,9 @@ object IncrementalCuration {
       touched: Option[Set[Long]], batchIds: Set[Long]): (DataFrame, Option[Long]) = {
     val (rows, keptBound) = (postingsDir, touched) match {
       case (Some(dir), Some(keys)) =>
-        val scan = graft.layout.PrunedScan.read(state.sparkSession, dir,
-          Seq(graft.layout.NumIn("bh", keys.iterator.map(_.toDouble).toSeq)),
-          schema = Some(PostingsSchema))
-        (scan.df.filter(inSetLong(col("bh"), keys)), Some(scan.rowsKeptBound))
+        val df = SfcTable.open(state.sparkSession, dir, Some(PostingsSchema))
+          .filter(inSetLong(col("bh"), keys))
+        (df, SfcTable.pruned(df).map(_.kept.map(_.rows).sum))
       case (Some(dir), None) =>
         (state.sparkSession.read.schema(PostingsSchema).parquet(dir), None)
       case (None, Some(keys)) =>
@@ -553,12 +553,11 @@ object IncrementalCuration {
       ids: Option[Set[Long]], docsDir: Option[String]): DataFrame = {
     val stateSets = (docsDir, ids) match {
       case (Some(d), Some(is)) =>
-        val scan = graft.layout.PrunedScan.read(state.sparkSession, d,
-          Seq(graft.layout.NumIn("doc_id", is.iterator.map(_.toDouble).toSeq)),
-          schema = Some(state.schema))
-        System.err.println(s"[curate.add]   fold/verify_docs_prune " +
-          s"${scan.filesKept}/${scan.filesTotal} files")
-        scan.df.select(col("doc_id"), col("hs"))
+        val df = SfcTable.open(state.sparkSession, d, Some(state.schema))
+          .filter(inSetLong(col("doc_id"), is))
+        SfcTable.pruned(df).foreach(v => System.err.println(
+          s"[curate.add]   fold/verify_docs_prune ${v.kept.length}/${v.filesTotal} files"))
+        df.select(col("doc_id"), col("hs"))
       case _ => state.select(col("doc_id"), col("hs"))
     }
     val sets = stateSets.unionByName(prep.rows.select(col("doc_id"), col("hs")))

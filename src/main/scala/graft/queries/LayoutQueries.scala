@@ -3,8 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.layout._
+import graft.layout.LayoutWriter
 import graft.layout.LayoutWriter.LayoutSpec
+import graft.table.SfcTable
 
 /** End-to-end layout pipeline as oracle-checked queries: write the table
   * under a physical layout (L1–L4), prune the scan with the zone-map
@@ -38,19 +39,12 @@ object LayoutQueries {
   // Shared predicate constants (also baked into the oracle SQL below).
   private val dLo = "1994-01-01 00:00:00"
   private val dHi = "1994-06-30 23:59:59"
-  private def epochSec(s: String): Long =
-    java.time.LocalDateTime
-      .parse(s.replace(' ', 'T'))
-      .toEpochSecond(java.time.ZoneOffset.UTC)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Z-order on (l_shipdate, l_quantity); 2-D box query via pruned scan.
     "q21_zorder_prune" -> ((s, d) => {
       val dir = layoutDir(s, d, "lineitem", "zorder", Seq("l_shipdate", "l_quantity"))
-      val scan = PrunedScan.read(s, dir, Seq(
-        NumBetween("l_shipdate", epochSec(dLo), epochSec(dHi)),
-        NumBetween("l_quantity", 10.0, 20.0)))
-      scan.df
+      SfcTable.open(s, dir)
         .filter(col("l_shipdate").between(lit(dLo).cast("timestamp"), lit(dHi).cast("timestamp"))
           && col("l_quantity").between(10.0, 20.0))
         .agg(count(lit(1)).as("cnt"),
@@ -61,21 +55,18 @@ object LayoutQueries {
     // Hilbert on (l_partkey, l_suppkey); box on both key dims + group-by.
     "q22_hilbert_prune" -> ((s, d) => {
       val dir = layoutDir(s, d, "lineitem", "hilbert", Seq("l_partkey", "l_suppkey"))
-      val scan = PrunedScan.read(s, dir, Seq(
-        NumBetween("l_partkey", 1, 200), NumBetween("l_suppkey", 1, 50)))
-      scan.df
+      SfcTable.open(s, dir)
         .filter(col("l_partkey").between(1, 200) && col("l_suppkey").between(1, 50))
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("cnt"), round(sum(col("l_quantity")), 2).as("sum_qty"))
         .orderBy(col("l_returnflag"))
     }),
 
-    // PrunedScan v2: SQL over SfcTable — file skipping happens inside
-    // Catalyst (custom FileIndex translates pushed data filters to zone
-    // predicates); no manual predicate plumbing.
+    // SQL over SfcTable — the same file skipping, driven by the SQL
+    // text's WHERE instead of a DataFrame filter.
     "q39_sfc_table_sql" -> ((s, d) => {
       val dir = layoutDir(s, d, "lineitem", "zorder", Seq("l_shipdate", "l_quantity"))
-      graft.table.SfcTable.open(s, dir).createOrReplaceTempView("sfc_lineitem")
+      SfcTable.open(s, dir).createOrReplaceTempView("sfc_lineitem")
       s.sql(
         s"""SELECT l_returnflag, count(*) AS cnt,
            |  round(sum(l_extendedprice), 2) AS sum_price
@@ -99,7 +90,7 @@ object LayoutQueries {
       val dim = Tables.load(s, d, "supplier")
         .filter(col("s_acctbal") > 5000)
         .select(col("s_suppkey"), col("s_nationkey"))
-      graft.table.SfcTable.joinPruned(s, dir, dim, "l_suppkey", "s_suppkey")
+      SfcTable.joinPruned(s, dir, dim, "l_suppkey", "s_suppkey")
         .groupBy(col("s_nationkey"))
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("l_extendedprice")), 2).as("sum_price"))
@@ -107,13 +98,13 @@ object LayoutQueries {
     }),
 
     // Hive-style partitioned write (S3 partitionBy + P8 partition-eq
-    // predicate, reference demo q1_filter shape): partition dirs prune
-    // in Catalyst (PartitionFilters) AND via the manifest string stats.
+    // predicate, reference demo q1_filter shape): the partition filter
+    // prunes via the manifest string stats and applies exactly to the
+    // partition values the index parses from the file paths.
     "q49_partitioned_eq" -> ((s, d) => {
       val dir = layoutDir(s, d, "lineitem", "linear",
         Seq("l_shipdate"), partitionBy = Seq("l_returnflag"))
-      val scan = PrunedScan.read(s, dir, Seq(StrBetween("l_returnflag", "R", "R")))
-      scan.df
+      SfcTable.open(s, dir)
         .filter(col("l_returnflag") === "R")
         .groupBy(col("l_linestatus"))
         .agg(count(lit(1)).as("cnt"),
@@ -125,8 +116,8 @@ object LayoutQueries {
     // layout columns are zero-padded ids under a constant 10-char
     // prefix — the exact pool shape that collapsed the pre-r17 4-byte
     // code to one coordinate. The zorder write strips the common prefix
-    // (manifest records strOffsets), the probe prunes via StrBetween on
-    // the RAW strings, and the DuckDB oracle computes the same derived
+    // (manifest records strOffsets), the probe prunes on the RAW
+    // strings, and the DuckDB oracle computes the same derived
     // keys over the original table — matching results prove the strip
     // changes clustering only, never content or pruning soundness.
     "q96_string_curve_prune" -> ((s, d) => {
@@ -144,8 +135,7 @@ object LayoutQueries {
       })
       val lo = "B0000000000001000"
       val hi = "B0000000000003000"
-      val scan = PrunedScan.read(s, dir, Seq(StrBetween("lkey", lo, hi)))
-      scan.df
+      SfcTable.open(s, dir)
         .filter(col("lkey").between(lo, hi))
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("l_extendedprice")), 2).as("sum_price"),
@@ -155,9 +145,7 @@ object LayoutQueries {
     // Linear layout on l_shipdate; 1-D range (reference demo q2 shape).
     "q23_linear_prune" -> ((s, d) => {
       val dir = layoutDir(s, d, "lineitem", "linear", Seq("l_shipdate"))
-      val scan = PrunedScan.read(s, dir, Seq(
-        NumBetween("l_shipdate", epochSec(dLo), epochSec(dHi))))
-      scan.df
+      SfcTable.open(s, dir)
         .filter(col("l_shipdate").between(lit(dLo).cast("timestamp"), lit(dHi).cast("timestamp")))
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("revenue"))

@@ -31,7 +31,9 @@ object QueryRunner {
       bytesScanned: Long,
       recordsRead: Long,
       executorRunTimeMs: Long,
-      executorCpuTimeNs: Long)
+      executorCpuTimeNs: Long,
+      // bytes of the files the scans kept (plan `filesSize`)
+      filesSize: Long = 0L)
 
   /** Actions the reference supports (run_queries.py:629-635).
     * `count` executes THIS dataframe's physical plan (toRdd.count) rather
@@ -105,7 +107,8 @@ object QueryRunner {
       bytesScanned = bytes,
       recordsRead = g.map(_.recordsRead).getOrElse(0L),
       executorRunTimeMs = g.map(_.executorRunTimeMs).getOrElse(0L),
-      executorCpuTimeNs = g.map(_.executorCpuTimeNs).getOrElse(0L))
+      executorCpuTimeNs = g.map(_.executorCpuTimeNs).getOrElse(0L),
+      filesSize = planBytes)
   }
 
   /** Table-level cache control (L11; reference: run_queries.py:551-566

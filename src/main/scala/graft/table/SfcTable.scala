@@ -1,22 +1,41 @@
 package graft.table
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{And => CAnd, _}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.datasources._
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.hadoop.fs.{FileStatus, Path}
 import graft.layout._
 
-/** PrunedScan v2 (SURVEY.md §4.3): a zone-map-aware `FileIndex` so file
-  * skipping happens INSIDE Catalyst for arbitrary SQL — no manual
-  * predicate plumbing. `FileSourceStrategy` hands the scan's data
-  * filters to `listFiles`; we translate them to zone predicates, drop
-  * files whose [min,max] cannot match, and Spark never opens them.
+/** The table's one file-skipping path (SURVEY.md §4.3): a `FileIndex`
+  * that lists files from the zone-map manifest, so skipping happens
+  * INSIDE Catalyst for arbitrary SQL or DataFrame filters — no manual
+  * predicate plumbing. `FileSourceStrategy` hands the scan's data filters
+  * to `listFiles`; they translate to zone predicates, the manifest is
+  * pruned through [[ZoneMap.pruneRead]] (streamed for large sidecars:
+  * driver heap O(survivors)), and Spark never opens the dropped files.
   * This is exactly where Delta/Hudi/Iceberg hook their stats-based
   * skipping; the reference measures that skipping as files/bytes
   * scanned (lakehouse_op/run_queries.py:165-248).
+  *
+  * Manifest-driven: no directory is listed, so a file the manifest does
+  * not name — a staged rewrite not yet committed, a superseded file a
+  * crash left before its delete — is never read. Hive partition values
+  * come from the entry paths; partition filters apply exactly (Spark
+  * drops them from the post-scan filter).
+  *
+  * One prune per translated predicate set is memoized, so the scan's
+  * listing and the planner's estimates ([[graft.plans.StatsBroadcastHint]],
+  * [[graft.plans.FactBroadcastGuard]], the fold's pre-job gate via
+  * [[SfcTable.pruned]]) share a single manifest pass. `refresh` drops the
+  * memo; otherwise an index keeps the file sets it first saw.
   *
   * Correctness: pruning is conservative (unknown expressions / columns
   * without stats keep the file) and Spark still evaluates the full
@@ -26,40 +45,122 @@ import graft.layout._
 class GraftFileIndex(
     spark: SparkSession,
     rootPath: Path,
-    val manifest: TableManifest,
-    val tableSchema: StructType)
-  extends InMemoryFileIndex(
-    spark, Seq(rootPath), Map.empty, Some(tableSchema), FileStatusCache.getOrCreate(spark)) {
+    val tableSchema: StructType,
+    override val partitionSchema: StructType,
+    /** Manifest entries when the table was opened (header cost). */
+    val fileCount: Int)
+  extends FileIndex {
 
-  private val byPath: Map[String, FileEntry] =
-    manifest.files.map(f => normalize(f.path) -> f).toMap
+  private val memo =
+    new java.util.concurrent.ConcurrentHashMap[Set[ZonePredicate], PrunedView]()
 
-  private def normalize(p: String): String = new Path(p).toUri.getPath
-
-  /** How many files the last listFiles call kept (for tests/metrics). */
+  /** How many files the last listFiles call kept, of the manifest's total;
+    * both -1 when no scan filter translated to a zone predicate.
+    */
   @volatile var lastKept: Int = -1
   @volatile var lastTotal: Int = -1
+
+  /** The zone predicates scan filters translate to (partition columns
+    * carry manifest stats too).
+    */
+  def zonePreds(filters: Seq[Expression]): Seq[ZonePredicate] =
+    filters.flatMap(ZoneTranslator.translate(_, tableSchema))
+
+  /** The zone prune for these scan filters. */
+  def pruned(filters: Seq[Expression]): PrunedView = {
+    val preds = zonePreds(filters)
+    memo.computeIfAbsent(preds.toSet, _ => ZoneMap.pruneRead(rootPath.toString, preds))
+  }
+
+  /** Whether [[pruned]] for these filters is already memoized. */
+  def isPruned(filters: Seq[Expression]): Boolean =
+    memo.containsKey(zonePreds(filters).toSet)
+
+  /** Whole-table totals: every prune counts all entries, so any memoized
+    * one serves.
+    */
+  def totals: PrunedView = {
+    val it = memo.values.iterator
+    if (it.hasNext) it.next() else pruned(Nil)
+  }
+
+  override def rootPaths: Seq[Path] = Seq(rootPath)
+  override def inputFiles: Array[String] = pruned(Nil).kept.map(_.path).toArray
+  override def refresh(): Unit = memo.clear()
+  override def sizeInBytes: Long = totals.bytesTotal
 
   override def listFiles(
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val all = super.listFiles(partitionFilters, dataFilters)
-    val preds = dataFilters.flatMap(ZoneTranslator.translate(_, tableSchema))
-    if (preds.isEmpty) {
-      lastKept = -1; lastTotal = -1
-      return all
-    }
-    val pruned = all.map { pd =>
-      PartitionDirectory(pd.values, pd.files.filter { fs =>
-        byPath.get(normalize(fs.getPath.toString)) match {
-          case Some(entry) => preds.forall(_.mayMatch(entry))
-          case None => true // not in manifest — keep (sound)
+    val filters = partitionFilters ++ dataFilters
+    val view = pruned(filters)
+    val dirs =
+      if (partitionSchema.isEmpty)
+        Seq(PartitionDirectory(InternalRow.empty, view.kept.map(status)))
+      else {
+        val keep = partitionPredicate(partitionFilters)
+        val zone = DateTimeUtils.getZoneId(SQLConf.get.sessionLocalTimeZone)
+        view.kept.groupBy(partitionValues(_, zone)).toSeq
+          .map { case (v, fs) => (InternalRow.fromSeq(v), fs) }
+          .collect { case (row, fs) if keep.eval(row) => PartitionDirectory(row, fs.map(status)) }
+      }
+    if (zonePreds(filters).isEmpty) { lastKept = -1; lastTotal = -1 }
+    else { lastTotal = view.filesTotal; lastKept = dirs.map(_.files.length).sum }
+    dirs
+  }
+
+  /** Entry paths are URIs (escaped partition values stay escaped once). */
+  private def path(f: FileEntry): Path = new Path(new java.net.URI(f.path))
+
+  private def status(f: FileEntry): FileStatusWithMetadata = {
+    val p = path(f)
+    val len = f.bytes.getOrElse(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).getLen)
+    FileStatusWithMetadata(new FileStatus(len, false, 0, 0L, 0L, p))
+  }
+
+  /** Partition values from the entry path's trailing `col=value` dirs. */
+  private def partitionValues(f: FileEntry, zone: java.time.ZoneId): Seq[Any] = {
+    var dir = path(f).getParent
+    partitionSchema.fields.reverse.map { field =>
+      val seg = dir.getName
+      val eq = seg.indexOf('=')
+      require(eq > 0 && ExternalCatalogUtils.unescapePathName(seg.take(eq)) == field.name,
+        s"${f.path}: expected a ${field.name}= partition directory")
+      dir = dir.getParent
+      PartitioningUtils.castPartValueToDesiredType(field.dataType, seg.drop(eq + 1), zone)
+    }.reverse.toSeq
+  }
+
+  private def partitionPredicate(filters: Seq[Expression]): BasePredicate =
+    Predicate.createInterpreted(filters.reduceOption(CAnd).getOrElse(Literal(true)).transform {
+      case a: AttributeReference =>
+        val i = partitionSchema.fieldNames.indexOf(a.name)
+        BoundReference(i, partitionSchema(i).dataType, nullable = true)
+    })
+}
+
+object GraftFileIndex extends PredicateHelper {
+
+  /** The zone-mapped relation a chain of Filter/Project nodes reads, with
+    * the chain's conjuncts. None for any other shape.
+    */
+  def scanOf(p: LogicalPlan): Option[(GraftFileIndex, Seq[Expression])] = {
+    @scala.annotation.tailrec
+    def walk(p: LogicalPlan, conds: Seq[Expression])
+        : Option[(GraftFileIndex, Seq[Expression])] = p match {
+      case Filter(c, child) => walk(child, conds ++ splitConjunctivePredicates(c))
+      case Project(_, child) => walk(child, conds)
+      case lr: LogicalRelation => lr.relation match {
+        case fs: HadoopFsRelation => fs.location match {
+          case g: GraftFileIndex => Some((g, conds))
+          case _ => None
         }
-      })
+        case _ => None
+      }
+      case _ => None
     }
-    lastTotal = all.map(_.files.length).sum
-    lastKept = pruned.map(_.files.length).sum
-    pruned
+    walk(p, Nil)
   }
 }
 
@@ -217,47 +318,43 @@ object ZoneTranslator {
 
 object SfcTable {
 
-  /** Open a layout table with zone-map skipping wired into the scan.
-    * The returned DataFrame behaves like `spark.read.parquet(dir)` but
-    * any pushable range/point/IN predicate — from the DataFrame API or
-    * SQL over a temp view — skips non-matching files at planning time.
-    *
-    * Hive-partitioned layouts (round-17, for the RQ6 protocol whose
-    * reference tables partition by l_returnflag,l_linestatus ×
-    * o_orderstatus,o_orderpriority): the file index infers the
-    * partition spec from the directory structure exactly as a plain
-    * parquet read would, partition-column predicates prune DIRECTORIES
-    * through Spark's own partitionFilters path, and zone predicates
-    * keep pruning the surviving FILES — the two prunings compose.
-    */
   /** Inferred-schema memo keyed by (canonical dir, manifest generation):
-    * the schemaless parquet read below pays a fixed-latency footer job on
-    * EVERY open (the round-11 "Next #4" cost PrunedScan.read avoids via
-    * its caller-supplied schema), yet the schema can only change through
-    * a commit, which bumps the generation. Metadata-only (same category
-    * as Spark's FileStatusCache) — never query results. Bounded: cleared
-    * wholesale past 64 table generations.
+    * a schemaless parquet read pays a fixed-latency footer job on EVERY
+    * open, yet the schema can only change through a commit, which bumps
+    * the generation. Metadata-only — never query results. Bounded:
+    * cleared wholesale past 64 table generations.
     */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), StructType]()
 
-  def open(spark: SparkSession, dir: String): DataFrame = {
-    val manifest = ZoneMap.read(dir)
-    val root = new Path(dir)
-    if (schemaCache.size > 64) schemaCache.clear()
-    val schema = schemaCache.computeIfAbsent(
-      (ZoneMap.canonical(dir), manifest.generation.getOrElse(0L)),
-      _ => spark.read.parquet(dir).schema)
-    val index = new GraftFileIndex(spark, root, manifest, schema)
-    // partition columns come back typed from the inferred spec (the
-    // userSpecifiedSchema passed above pins their types to the plain
-    // read's); data schema must EXCLUDE them — they live in dir paths,
-    // and a dataSchema that listed them would read nulls from files
-    val partSchema = index.partitionSchema
+  /** Open a layout table with zone-map skipping wired into the scan.
+    * The returned DataFrame behaves like `spark.read.parquet(dir)` over
+    * the manifest's files, and any pushable range/point/IN predicate —
+    * from the DataFrame API or SQL over a temp view — skips non-matching
+    * files at planning time. Opening reads the manifest header only.
+    *
+    * `schema`, when the caller knows it statically, skips the footer
+    * inference a table whose generation the memo has not seen pays (a
+    * store appended every fold bumps it every fold). Hive partition
+    * columns (the manifest's `partitionCols`, typed by the schema) come
+    * from the file paths, never from the files.
+    */
+  def open(spark: SparkSession, dir: String,
+      schema: Option[StructType] = None): DataFrame = {
+    val header = ZoneMap.header(dir)
+    val tableSchema = schema.getOrElse {
+      if (schemaCache.size > 64) schemaCache.clear()
+      schemaCache.computeIfAbsent(
+        (ZoneMap.canonical(dir), header.generation.getOrElse(0L)),
+        _ => spark.read.parquet(dir).schema)
+    }
+    val partSchema = StructType(header.hivePartitions.map(c =>
+      tableSchema.find(_.name == c).getOrElse(StructField(c, StringType))))
     val dataSchema = StructType(
-      schema.filterNot(f => partSchema.fieldNames.contains(f.name)))
+      tableSchema.filterNot(f => partSchema.fieldNames.contains(f.name)))
     val relation = HadoopFsRelation(
-      location = index,
+      location = new GraftFileIndex(spark, new Path(dir), tableSchema, partSchema,
+        header.fileCount.getOrElse(header.files.length)),
       partitionSchema = partSchema,
       dataSchema = dataSchema,
       bucketSpec = None,
@@ -265,6 +362,15 @@ object SfcTable {
       options = Map.empty)(Bridge.classicSession(spark))
     Bridge.ofRows(spark, LogicalRelation(relation))
   }
+
+  /** The memoized zone prune of the [[open]]ed table `df` reads: its
+    * survivors and whole-table totals, evaluated on the driver without a
+    * job, shared with the scan's own listing. None when `df` reads no
+    * opened table.
+    */
+  def pruned(df: DataFrame): Option[PrunedView] =
+    df.queryExecution.optimizedPlan.collectFirst(Function.unlift(GraftFileIndex.scanOf))
+      .map { case (g, conds) => g.pruned(conds) }
 
   /** Dim-driven zone-map file pruning for a fact ⋈ dim equi-join — the
     * zone-map analog of dynamic file pruning / dynamic partition

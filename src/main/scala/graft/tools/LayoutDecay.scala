@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.layout._
 import graft.layout.LayoutWriter.LayoutSpec
+import graft.table.SfcTable
 
 /** Reference RQ7 analog on our manifest tables: LAYOUT DECAY under
   * keyed copy-on-write updates, and its repair by re-clustering
@@ -88,9 +89,9 @@ object LayoutDecay {
     // drift context IN the artifact (r16 stretch #8): probes first...
     val calFirst = graft.runner.Calibration.measure(spark, sfDir)
 
-    // (base rows, layout spec, zone probe, row-level probe filter,
-    // batch maker) per source — the decay loop below is shared
-    val (li, probePreds, probeFilter, mkBatch) =
+    // (base rows, probe filter, batch maker) per source — the decay
+    // loop below is shared
+    val (li, probeFilter, mkBatch) =
       if (source.startsWith("amazon")) {
         val rows = source.split(":").lift(1).map(_.toLong).getOrElse(8000000L)
         val nUsers = math.max(1000L, rows / 16)
@@ -105,8 +106,8 @@ object LayoutDecay {
           recordKeys = Seq("user_id", "asin"),
           precombineCol = Some("record_timestamp")),
           extraStatsCols = Seq("record_timestamp", "rating", "helpful_vote"))
-        // fixed asin IN probe (the amazon Q3 point family): StrIn zone
-        // pruning over the string layout
+        // fixed asin IN probe (the amazon Q3 point family): zone pruning
+        // over the string layout
         val probeAsins = AmazonGen.sampleCodes(
           spark, nAsins, 8, 21, "B0", 8, seed = 4242)
         val mk = (df: org.apache.spark.sql.DataFrame, i: Int) =>
@@ -116,8 +117,7 @@ object LayoutDecay {
             // strictly later precombine so the update wins the dedup
             .withColumn("record_timestamp",
               col("record_timestamp") + expr(s"INTERVAL ${i + 1} SECONDS"))
-        (base, Seq(StrIn("asin", probeAsins)),
-          col("asin").isin(probeAsins: _*), mk)
+        (base, col("asin").isin(probeAsins: _*), mk)
       } else {
         // l_linenumber is 1..7, so *8 folds the composite key into one
         // column; the driver's synthetic lineitem carries DUPLICATE
@@ -140,8 +140,6 @@ object LayoutDecay {
         // fixed S1-band probe (~2.2% per dimension, the rq1 protocol's
         // finest band): zone pruning quality is (files, bytes) kept
         (base,
-          Seq(NumBetween("l_quantity", 24.0, 25.0),
-            NumBetween("l_extendedprice", 30000.0, 32000.0)),
           col("l_quantity").between(24.0, 25.0) &&
             col("l_extendedprice").between(30000.0, 32000.0), mk)
       }
@@ -163,13 +161,14 @@ object LayoutDecay {
     var lastReclustered = false
     def probe(phase: String, batch: Int, mutateSec: Double): Unit = {
       val t0 = System.nanoTime()
-      val scan = PrunedScan.read(spark, table, probePreds)
-      val rows = scan.df.filter(probeFilter).count()
+      val probeDf = SfcTable.open(spark, table).filter(probeFilter)
+      val m = graft.runner.QueryRunner.run(spark, probeDf, s"probe-$phase-$batch")
       val sec = (System.nanoTime() - t0) / 1e9
+      val view = SfcTable.pruned(probeDf).get
       val health = Compactor.clusteringHealth(ZoneMap.read(table))
         .map(h => f"$h%.3f").getOrElse("")
-      csv += f"$phase,$batch,${scan.filesKept},${scan.filesTotal}," +
-        f"${scan.bytesKept / 1e6}%.1f,${scan.bytesTotal / 1e6}%.1f,$rows,$sec%.3f,$mutateSec%.2f,$health,$lastReclustered"
+      csv += f"$phase,$batch,${m.filesScanned},${view.filesTotal}," +
+        f"${m.filesSize / 1e6}%.1f,${view.bytesTotal / 1e6}%.1f,${m.rows},$sec%.3f,$mutateSec%.2f,$health,$lastReclustered"
       println(csv.last)
     }
     probe("base", 0, 0.0)

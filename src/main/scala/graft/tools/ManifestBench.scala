@@ -1,15 +1,27 @@
 package graft.tools
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import graft.layout.{ColRange, FileEntry, NumBetween, TableManifest, ZoneMap}
+import graft.runner.QueryRunner
+import graft.table.SfcTable
 
 /** Manifest scale audit (r17 VERDICT Next #7): at 100 TB with ~128 MB
   * files a table holds ~10⁶ file entries, and every planning-time prune
-  * (GraftFileIndex / PrunedScan), compaction scan, and keyed commit
-  * reads + rewrites `_graft_manifest.json`. This tool measures
+  * (the file listing of a [[SfcTable]] scan), compaction scan, and keyed
+  * commit reads + rewrites `_graft_manifest.json`. This tool measures
   * write / read / prune latency and on-disk size at 10⁴–10⁶ synthetic
   * lineitem-shaped entries (6 stats columns, hive partition values,
   * realistic paths) → results/manifest_scale.json, driving the storage
-  * decision the VERDICT asked for.
+  * decision the VERDICT asked for. Beside the bare streaming prune
+  * (`prune_stream_sec`, `heap_stream_mb`) it plans the same range query
+  * end to end through [[SfcTable.open]] — header read, Catalyst
+  * planning, the file index's listing — without executing it
+  * (`sfc_plan_sec`, `heap_sfc_plan_mb`: heap retained by the planned
+  * query, which should stay O(survivors) like the streaming prune, not
+  * O(entries) like `heap_mb`).
   *
   * Usage: runMain graft.tools.ManifestBench [outJson] [sizes,csv]
   */
@@ -53,6 +65,25 @@ object ManifestBench {
     val sizes = args.lift(1).map(_.split(",").map(_.toInt).toSeq)
       .getOrElse(Seq(10000, 100000, 1000000))
     def f3(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    val spark = SparkSession.builder().master("local[2]")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // every stats column is a double (the synth ranges' domain) plus the
+    // two hive partition columns: no data file exists, so the schema is
+    // supplied, never inferred
+    val schema = StructType(StatsCols.map(StructField(_, DoubleType)) ++
+      Seq(StructField("l_returnflag", StringType), StructField("l_linestatus", StringType)))
+    // one planned (never executed) S2-band query; returns the plan and
+    // the files its scan lists
+    def planned(dir: String): (org.apache.spark.sql.DataFrame, Int) = {
+      val df = SfcTable.open(spark, dir, Some(schema))
+        .filter(col("l_shipdate").between(1000.0, 6000.0))
+        .groupBy(col("l_returnflag")).count()
+      val files = QueryRunner.allNodes(df.queryExecution.executedPlan).collect {
+        case s: FileSourceScanExec => s.selectedPartitions.totalNumberOfFiles.toInt
+      }.sum
+      (df, files)
+    }
     val rt = Runtime.getRuntime
     def usedMb(): Long = {
       System.gc(); System.gc()
@@ -88,6 +119,17 @@ object ManifestBench {
             Seq(NumBetween("l_shipdate", 1000.0, 6000.0))))._2
         }.sorted
         val secPS = warm(1)
+        // the same prune as a planned query through SfcTable: retained
+        // heap with the planned frame (and its memoized prune) still live
+        ZoneMap.clearReadCache()
+        val b1 = usedMb()
+        var ((plannedDf, keptPlan), secPlanCold) = time(planned(dir))
+        val heapPlanMb = usedMb() - b1
+        plannedDf = null
+        val secPlan = (1 to 3).map { _ =>
+          ZoneMap.clearReadCache()
+          time(planned(dir))._2
+        }.sorted.apply(1)
         // second write with the read manifest = the keyed-commit shape
         val (r1, secR) = time(ZoneMap.read(dir))
         // repeat read = the per-query planning cost with the read cache
@@ -104,10 +146,13 @@ object ManifestBench {
           .map(_.length).sum
         assert(keptStream == kept.length,
           s"stream prune kept $keptStream, in-memory kept ${kept.length}")
+        assert(keptPlan == kept.length,
+          s"SfcTable scan listed $keptPlan files, in-memory prune kept ${kept.length}")
         println(f"[manifest] n=$n%7d  write=${secW}%7.3fs  read=${secR}%7.3fs" +
           f"  read_cached=${secRC}%8.5fs  prune=${secP}%6.3fs" +
           f"  prune_stream=${secPS}%6.3fs (streamed=$streamed," +
-          f" heap=${heapStreamMb}%4d MB)  rewrite=${secW2}%7.3fs" +
+          f" heap=${heapStreamMb}%4d MB)  sfc_plan=${secPlan}%6.3fs" +
+          f" (heap=${heapPlanMb}%4d MB)  rewrite=${secW2}%7.3fs" +
           f"  size=${(bytes + sidecarBytes) / 1048576.0}%8.1f MB" +
           f"  heap=${heapMb}%5d MB  kept=${kept.length}")
         s"""{"n":$n,"write_sec":${f3(secW)},"read_sec":${f3(secR)},""" +
@@ -115,6 +160,8 @@ object ManifestBench {
           s""""prune_sec":${f3(secP)},"prune_stream_sec":${f3(secPS)},""" +
           s""""prune_stream_cold_sec":${f3(secPSCold)},""" +
           s""""prune_streamed":$streamed,"heap_stream_mb":$heapStreamMb,""" +
+          s""""sfc_plan_sec":${f3(secPlan)},"sfc_plan_cold_sec":${f3(secPlanCold)},""" +
+          s""""heap_sfc_plan_mb":$heapPlanMb,""" +
           s""""rewrite_sec":${f3(secW2)},""" +
           s""""header_bytes":$bytes,"sidecar_bytes":$sidecarBytes,""" +
           s""""heap_mb":$heapMb,"files_kept":${kept.length}}"""
@@ -127,5 +174,6 @@ object ManifestBench {
     if (op.getParent != null) java.nio.file.Files.createDirectories(op.getParent)
     java.nio.file.Files.writeString(op, json + "\n")
     println(json)
+    spark.stop()
   }
 }

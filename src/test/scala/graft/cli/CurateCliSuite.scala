@@ -133,14 +133,14 @@ class CurateCliSuite extends SparkTestBase {
         numFiles = Some(16), recordKey = Some("doc_id")))
     // one bucket's key must prune to a file subset AND keep all its rows
     val one = postRows.select(col("bh")).limit(1).collect()(0).getLong(0)
-    val scan = graft.layout.PrunedScan.read(spark, postDir,
-      Seq(graft.layout.NumIn("bh", Seq(one.toDouble))),
-      schema = Some(graft.queries.IncrementalCuration.PostingsSchema))
-    assert(scan.filesTotal >= 15, s"expected ~16 postings files, got ${scan.filesTotal}")
-    assert(scan.filesKept < scan.filesTotal,
-      s"bucket key must prune files (${scan.filesKept}/${scan.filesTotal})")
+    val scan = graft.table.SfcTable.open(spark, postDir,
+      Some(graft.queries.IncrementalCuration.PostingsSchema)).filter(col("bh") === one)
+    val view = graft.table.SfcTable.pruned(scan).get
+    assert(view.filesTotal >= 15, s"expected ~16 postings files, got ${view.filesTotal}")
+    assert(view.kept.length < view.filesTotal,
+      s"bucket key must prune files (${view.kept.length}/${view.filesTotal})")
     val expected = postRows.filter(col("bh") === one).count()
-    assert(scan.df.filter(col("bh") === one).count() == expected,
+    assert(scan.count() == expected,
       "pruned read must keep every row of the touched bucket")
 
     // the fold over the multi-file postings still matches the rebuild

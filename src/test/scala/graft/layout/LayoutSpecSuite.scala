@@ -2,6 +2,7 @@ package graft.layout
 
 import graft.SparkTestBase
 import graft.curve.{Curves, CurveExpressions}
+import graft.table.SfcTable
 import org.apache.spark.sql.functions._
 import scala.util.Random
 
@@ -77,10 +78,7 @@ class LayoutSpecSuite extends SparkTestBase {
     for (_ <- 1 to 25) {
       val xlo = rnd.nextInt(1000); val xhi = xlo + rnd.nextInt(1000 - xlo)
       val ylo = rnd.nextDouble() * 100; val yhi = ylo + rnd.nextDouble() * (100 - ylo)
-      val preds = Seq(
-        NumBetween("x", xlo, xhi), NumBetween("y", ylo, yhi))
-      val scan = PrunedScan.read(spark, dir, preds)
-      val prunedCnt = scan.df
+      val prunedCnt = SfcTable.open(spark, dir)
         .filter(col("x").between(xlo, xhi) && col("y").between(ylo, yhi)).count()
       val fullCnt = spark.read.parquet(dir)
         .filter(col("x").between(xlo, xhi) && col("y").between(ylo, yhi)).count()
@@ -92,15 +90,17 @@ class LayoutSpecSuite extends SparkTestBase {
     val dir = tmpDir("graft_strsound")
     LayoutWriter.write(
       data, dir, LayoutSpec("linear", Seq("cat"), numFiles = Some(10)))
-    val scan = PrunedScan.read(spark, dir, Seq(StrBetween("cat", "cat03", "cat05")))
-    val prunedCnt = scan.df.filter(col("cat").between("cat03", "cat05")).count()
+    val scan = SfcTable.open(spark, dir).filter(col("cat").between("cat03", "cat05"))
+    val prunedCnt = scan.count()
     val fullCnt = data.filter(col("cat").between("cat03", "cat05")).count()
     assert(prunedCnt == fullCnt)
-    assert(scan.filesKept < scan.filesTotal, "linear layout should prune some files")
-    val inScan = PrunedScan.read(spark, dir, Seq(StrIn("cat", Seq("cat07"))))
-    assert(inScan.df.filter(col("cat") === "cat07").count() ==
+    val view = SfcTable.pruned(scan).get
+    assert(view.kept.length < view.filesTotal, "linear layout should prune some files")
+    val inScan = SfcTable.open(spark, dir).filter(col("cat").isin("cat07"))
+    assert(inScan.count() ==
       data.filter(col("cat") === "cat07").count())
-    assert(inScan.filesKept < inScan.filesTotal)
+    val inView = SfcTable.pruned(inScan).get
+    assert(inView.kept.length < inView.filesTotal)
   }
 
   test("layout effectiveness: zorder/hilbert prune more than baseline on 2-D boxes") {
@@ -110,18 +110,18 @@ class LayoutSpecSuite extends SparkTestBase {
         data, dir, LayoutSpec(layout, Seq("x", "y"), numFiles = Some(16)))
       layout -> dir
     }.toMap
-    def kept(layout: String, preds: Seq[ZonePredicate]): Int =
-      PrunedScan.read(spark, dirs(layout), preds).filesKept
+    def kept(layout: String, filter: org.apache.spark.sql.Column): Int =
+      SfcTable.pruned(SfcTable.open(spark, dirs(layout)).filter(filter)).get.kept.length
 
     // 2-D box, selective in both dims
-    val box = Seq(NumBetween("x", 100, 199), NumBetween("y", 20.0, 30.0))
+    val box = col("x").between(100, 199) && col("y").between(20.0, 30.0)
     assert(kept("baseline", box) == 16, "random layout should keep every file")
     assert(kept("zorder", box) < 16 && kept("hilbert", box) < 16,
       s"curves must beat baseline: z=${kept("zorder", box)} h=${kept("hilbert", box)}")
 
     // Non-leading-dimension query: linear (sorted x-first) cannot prune on
     // y alone; the curves can — this is the whole point of SFC layouts.
-    val yOnly = Seq(NumBetween("y", 20.0, 30.0))
+    val yOnly = col("y").between(20.0, 30.0)
     assert(kept("linear", yOnly) == 16,
       s"x-leading linear layout should not prune a y-only query")
     assert(kept("zorder", yOnly) < 16 && kept("hilbert", yOnly) < 16,
@@ -137,10 +137,11 @@ class LayoutSpecSuite extends SparkTestBase {
     val subdirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
     assert(subdirs.exists(_.getName.startsWith("cat=")), "expected cat= dirs")
     // pruning on the partition column keeps only its files
-    val scan = PrunedScan.read(spark, dir, Seq(StrBetween("cat", "cat05", "cat05")))
-    assert(scan.filesKept < scan.filesTotal)
-    assert(scan.df.columns.contains("cat"), "basePath must restore partition col")
-    val got = scan.df.filter(col("cat") === "cat05").count()
+    val scan = SfcTable.open(spark, dir).filter(col("cat") === "cat05")
+    val view = SfcTable.pruned(scan).get
+    assert(view.kept.length < view.filesTotal)
+    assert(scan.columns.contains("cat"), "the file paths must restore the partition col")
+    val got = scan.count()
     assert(got == data.filter(col("cat") === "cat05").count())
     // Catalyst partition pruning fires on the plain directory read too
     val planStr = spark.read.parquet(dir).filter(col("cat") === "cat05")
@@ -167,10 +168,10 @@ class LayoutSpecSuite extends SparkTestBase {
   test("empty survivor set yields empty result with correct schema") {
     val dir = tmpDir("graft_empty")
     LayoutWriter.write(data, dir, LayoutSpec("zorder", Seq("x", "y"), numFiles = Some(4)))
-    val scan = PrunedScan.read(spark, dir, Seq(NumBetween("x", 5000, 6000)))
-    assert(scan.filesKept == 0)
-    assert(scan.df.count() == 0)
-    assert(scan.df.columns.toSeq == data.columns.toSeq)
+    val scan = SfcTable.open(spark, dir).filter(col("x").between(5000, 6000))
+    assert(SfcTable.pruned(scan).get.kept.length == 0)
+    assert(scan.count() == 0)
+    assert(scan.columns.toSeq == data.columns.toSeq)
   }
 
   test("scoped compaction rewrites only matching files") {

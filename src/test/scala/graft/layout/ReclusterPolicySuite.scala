@@ -154,13 +154,14 @@ class ReclusterPolicySuite extends SparkTestBase {
       Upserter.upsert(spark, dir, batch,
         sortRewrites = true, autoRecluster = false, targetFileBytes = target)
     }
-    val scan = PrunedScan.read(spark, dir, Seq(NumBetween("k", 1001, 1100)))
-    assert(scan.filesTotal >= 8, s"degenerate file count ${scan.filesTotal}")
-    assert(scan.filesKept.toDouble / scan.filesTotal <= 0.25,
-      s"sorted COW lost pruning: ${scan.filesKept}/${scan.filesTotal} kept")
+    val scan = graft.table.SfcTable.open(spark, dir).filter(col("k").between(1001, 1100))
+    val view = graft.table.SfcTable.pruned(scan).get
+    assert(view.filesTotal >= 8, s"degenerate file count ${view.filesTotal}")
+    assert(view.kept.length.toDouble / view.filesTotal <= 0.25,
+      s"sorted COW lost pruning: ${view.kept.length}/${view.filesTotal} kept")
     assert(spark.read.parquet(dir).count() == 2400)
     // the probe's answer is exact through the prune
-    val rows = scan.df.filter(col("k").between(1001, 1100)).count()
+    val rows = scan.count()
     assert(rows == 100)
   }
 }

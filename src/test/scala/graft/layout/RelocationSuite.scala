@@ -32,11 +32,12 @@ class RelocationSuite extends SparkTestBase {
     assert(m.files.forall(f =>
       ZoneMap.canonical(f.path).startsWith(ZoneMap.canonical(dst) + "/")),
       "entry paths must be rebased onto the new dir")
-    val scan = PrunedScan.read(spark, dst, Seq(NumBetween("x", 10, 20)))
-    assert(scan.filesKept < scan.filesTotal, "zones must still prune")
+    val scan = graft.table.SfcTable.open(spark, dst).filter($"x".between(10, 20))
+    val view = graft.table.SfcTable.pruned(scan).get
+    assert(view.kept.length < view.filesTotal, "zones must still prune")
     // pruning is file-level: kept files + the row predicate must equal
     // the full scan's filtered result
-    assert(scan.df.filter($"x".between(10, 20)).count() ==
+    assert(scan.count() ==
       spark.read.parquet(dst).filter($"x".between(10, 20)).count())
 
     val before = new java.io.File(dst).listFiles

@@ -1,7 +1,8 @@
 package graft.runner
 
 import graft.SparkTestBase
-import graft.layout.{LayoutWriter, NumBetween, PrunedScan}
+import graft.layout.LayoutWriter
+import graft.table.SfcTable
 import graft.layout.LayoutWriter.LayoutSpec
 import org.apache.spark.sql.functions._
 import scala.util.Random
@@ -27,18 +28,16 @@ class QueryRunnerSuite extends SparkTestBase {
       spark.read.parquet(dir).filter($"x".between(100, 150) && $"y".between(10, 20)),
       "full", Some(listener))
     // pruned scan, same predicate
-    val scan = PrunedScan.read(spark, dir,
-      Seq(NumBetween("x", 100, 150), NumBetween("y", 10, 20)))
-    val pruned = QueryRunner.run(spark,
-      scan.df.filter($"x".between(100, 150) && $"y".between(10, 20)),
-      "pruned", Some(listener))
+    val scan = SfcTable.open(spark, dir)
+      .filter($"x".between(100, 150) && $"y".between(10, 20))
+    val pruned = QueryRunner.run(spark, scan, "pruned", Some(listener))
 
     assert(full.rows == pruned.rows, "pruning must not change results")
     // the full scan must touch every written file (curve cut snapping
     // may produce slightly fewer files than the 16 requested)
     assert(full.filesScanned == graft.layout.ZoneMap.read(dir).files.length.toLong,
       s"full scan files=${full.filesScanned}")
-    assert(pruned.filesScanned == scan.filesKept.toLong)
+    assert(pruned.filesScanned == SfcTable.pruned(scan).get.kept.length.toLong)
     assert(pruned.filesScanned < full.filesScanned)
     assert(pruned.bytesScanned > 0 && pruned.bytesScanned < full.bytesScanned,
       s"bytes pruned=${pruned.bytesScanned} full=${full.bytesScanned}")

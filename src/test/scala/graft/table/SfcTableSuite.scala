@@ -186,6 +186,53 @@ class SfcTableSuite extends SparkTestBase {
     assert(m.filesScanned < 8, s"date-domain predicate should prune: ${m.filesScanned}")
   }
 
+  test("files the manifest does not list are never read: a staged upsert " +
+      "before its commit, superseded files a crash left before their delete") {
+    val spark2 = spark
+    import spark2.implicits._
+    def keyed(name: String): String = {
+      val d = tmpDir(name)
+      LayoutWriter.write((1 to 2000).map(i => (i.toLong, i % 500, 1.0)).toDF("id", "x", "y"),
+        d, LayoutSpec("linear", Seq("x"), numFiles = Some(4), recordKey = Some("id")))
+      d
+    }
+    // one updated row in each quarter of x, the layout column
+    val batch = Seq(1L, 700L, 1300L, 1900L).map(k => (k, (k % 500).toInt, 2.0))
+      .toDF("id", "x", "y")
+    def answers(d: String): Seq[Seq[Any]] = {
+      val t = SfcTable.open(spark, d)
+      Seq(t, t.filter(col("x").between(0, 100)))
+        .map(_.agg(count(lit(1)), sum(col("y"))).collect()(0).toSeq)
+    }
+    def parquetFiles(d: String): Set[java.nio.file.Path] = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
+      try s.filter(_.toString.endsWith(".parquet")).toArray
+        .map(_.asInstanceOf[java.nio.file.Path]).toSet
+      finally s.close()
+    }
+
+    // staged: the rewrite's files are moved in, then the commit crashes
+    val staged = keyed("sfc_orphan_staged")
+    val before = answers(staged)
+    Upserter.testHookBeforeCommit = () => throw new RuntimeException("crash before commit")
+    try intercept[RuntimeException](Upserter.upsert(spark, staged, batch))
+    finally Upserter.testHookBeforeCommit = () => ()
+    assert(spark.read.parquet(staged).count() > 2000, "the staged files must be on disk")
+    assert(answers(staged) == before)
+
+    // superseded: the commit lands, the old files' delete never runs
+    val superseded = keyed("sfc_orphan_superseded")
+    val backup = parquetFiles(superseded).map(p => p -> java.nio.file.Files.readAllBytes(p))
+    Upserter.upsert(spark, superseded, batch, autoRecluster = false)
+    val after = answers(superseded)
+    backup.foreach { case (p, bytes) =>
+      if (!java.nio.file.Files.exists(p)) java.nio.file.Files.write(p, bytes)
+    }
+    assert(spark.read.parquet(superseded).count() > 2000, "the superseded files must be back")
+    assert(answers(superseded) == after)
+    assert(after.head == Seq(2000L, 2004.0))
+  }
+
   test("hive-partitioned layout: partition cols read correctly, dir " +
       "pruning and zone pruning compose (r17, the RQ6 table shape)") {
     val spark2 = spark
