@@ -51,12 +51,11 @@ object Bench {
       .config("spark.eventLog.compress", "true"))
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val gateListener = new graft.runner.MetricsListener
-    if (eventLogGate) spark.sparkContext.addSparkListener(gateListener)
     System.err.println(s"[bench] shuffle.partitions=" +
       spark.conf.get("spark.sql.shuffle.partitions"))
-    val diag = new graft.runner.DiagListener
-    spark.sparkContext.addSparkListener(diag)
+    // per-run totals, and per-query groups for the eventlog gate
+    val metrics = new graft.runner.MetricsListener
+    spark.sparkContext.addSparkListener(metrics)
     val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
     def driverGcMs(): Long = {
       var t = 0L; gcBeans.forEach(b => t += math.max(0L, b.getCollectionTime)); t
@@ -83,7 +82,7 @@ object Bench {
       def once(): Run = {
         org.apache.spark.graftbridge.SparkBridge.drainListenerBus(spark.sparkContext)
         graft.runner.Materialize.resetDiag()
-        val d0 = diag.snapshot(); val g0 = driverGcMs()
+        val d0 = metrics.snapshot(); val g0 = driverGcMs()
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch {
           case scala.util.control.NonFatal(e) =>
@@ -103,14 +102,14 @@ object Bench {
         }
         val sec = (System.nanoTime() - t0) / 1e9
         org.apache.spark.graftbridge.SparkBridge.drainListenerBus(spark.sparkContext)
-        val d = diag.snapshot() - d0
+        val d = metrics.snapshot() - d0
         Run(sec,
-          spillMb = (d.memSpilled + d.diskSpilled) / 1048576L,
-          taskGcMs = d.gcTimeMs,
+          spillMb = (d.task.memorySpilledBytes + d.task.diskSpilledBytes) / 1048576L,
+          taskGcMs = d.task.gcTimeMs,
           driverGcMs = math.max(0L, driverGcMs() - g0),
           cachedMb = graft.runner.Materialize.peakTrackedBytes / 1048576L,
           evictions = graft.runner.Materialize.evictions,
-          jobs = d.jobs, stages = d.stages, tasks = d.tasks,
+          jobs = d.jobs, stages = d.stages, tasks = d.task.tasks,
           schedMs = d.schedulerDelayMs, deserMs = d.deserializeMs,
           codegenCompiles = d.codegenCompiles)
       }
@@ -238,17 +237,14 @@ object Bench {
     println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","sf":"$sfDir","drift":${f3(drift)},"total_normalized":${f3(total / math.max(drift, 1e-9))},"leaked_caches":$leakedCaches,"queries":$qs}""")
     if (eventLogGate) {
       org.apache.spark.graftbridge.SparkBridge.drainListenerBus(spark.sparkContext)
-      val live = names.map(n => n -> gateListener.snapshot(n)).toMap
+      val live = names.map(n => n -> metrics.snapshot(n)).toMap
       spark.stop() // flush + finalize the event log before parsing
       val parsed = graft.runner.EventLogMetrics.parse(eventLogDir.get.toString)
       val rows = names.map { n =>
         val l = live(n)
         val p = parsed.getOrElse(n, graft.runner.EventLogMetrics.GroupMetrics())
-        val ok = l.bytesRead == p.bytesRead && l.recordsRead == p.recordsRead &&
-          l.executorRunTimeMs == p.executorRunTimeMs &&
-          l.executorCpuTimeNs == p.executorCpuTimeNs && l.tasks == p.tasks
-        if (!ok) System.err.println(
-          s"[bench] eventlog gate MISMATCH $n: live=(${l.bytesRead},${l.recordsRead},${l.tasks}) parsed=(${p.bytesRead},${p.recordsRead},${p.tasks})")
+        val ok = l == p
+        if (!ok) System.err.println(s"[bench] eventlog gate MISMATCH $n: live=$l parsed=$p")
         s"""{"query":"$n","ok":$ok,"tasks":${p.tasks},"bytes":${p.bytesRead}}"""
       }
       val allOk = !rows.exists(_.contains("\"ok\":false"))

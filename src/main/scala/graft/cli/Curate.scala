@@ -211,7 +211,7 @@ object Curate {
     // value claim is "O(batch), not O(corpus)" — the phase split shows
     // which side of that a slow add actually sits on, and the job count
     // names the fixed per-job latency share (round-10 VERDICT "Next #4")
-    val diag = new graft.runner.DiagListener
+    val diag = new graft.runner.MetricsListener
     spark.sparkContext.addSparkListener(diag)
     // AQE OFF for the fold (round-11 VERDICT "What's wrong #2"): with
     // AQE every materialized exchange is its own stage-job, and a fold

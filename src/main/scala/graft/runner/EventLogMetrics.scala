@@ -44,32 +44,9 @@ import org.json4s.jackson.JsonMethods
   */
 object EventLogMetrics {
 
-  case class GroupMetrics(
-      bytesRead: Long = 0L,
-      recordsRead: Long = 0L,
-      executorRunTimeMs: Long = 0L,
-      executorCpuTimeNs: Long = 0L,
-      gcTimeMs: Long = 0L,
-      memorySpilledBytes: Long = 0L,
-      diskSpilledBytes: Long = 0L,
-      tasks: Int = 0) {
-    def +(o: GroupMetrics): GroupMetrics = GroupMetrics(
-      bytesRead + o.bytesRead, recordsRead + o.recordsRead,
-      executorRunTimeMs + o.executorRunTimeMs,
-      executorCpuTimeNs + o.executorCpuTimeNs,
-      gcTimeMs + o.gcTimeMs,
-      memorySpilledBytes + o.memorySpilledBytes,
-      diskSpilledBytes + o.diskSpilledBytes,
-      tasks + o.tasks)
-    def -(o: GroupMetrics): GroupMetrics = GroupMetrics(
-      bytesRead - o.bytesRead, recordsRead - o.recordsRead,
-      executorRunTimeMs - o.executorRunTimeMs,
-      executorCpuTimeNs - o.executorCpuTimeNs,
-      gcTimeMs - o.gcTimeMs,
-      memorySpilledBytes - o.memorySpilledBytes,
-      diskSpilledBytes - o.diskSpilledBytes,
-      tasks - o.tasks)
-  }
+  /** The live listener's record: parsed and live sums compare with `==`. */
+  type GroupMetrics = MetricsListener.GroupMetrics
+  val GroupMetrics = MetricsListener.GroupMetrics
 
   private def jLong(v: JValue): Long = v match {
     case JInt(i) => i.toLong

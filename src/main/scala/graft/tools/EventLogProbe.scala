@@ -6,20 +6,31 @@ import org.apache.spark.sql.SparkSession
   * job-grouped query in a session that writes a REAL Spark event log,
   * capture the same run through the live [[graft.runner
   * .MetricsListener]] (M4), then parse the finished log and compare —
-  * both sources read TaskEnd payloads, so the shared fields must match
-  * exactly.
+  * both sources read TaskEnd payloads and produce the same record, so
+  * the two must be equal.
   *
   * Usage: runMain graft.tools.EventLogProbe [sfDir]
   */
 object EventLogProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val ok = probe(sfDir, compress = false, "")
+    // second pass: a COMPRESSED log (Spark's default eventlog codec is
+    // zstd) through the same live-vs-parsed gate
+    val ok2 = probe(sfDir, compress = true, "zstd ")
+    if (!ok || !ok2) sys.exit(1)
+  }
+
+  /** One grouped query in a fresh session logging to a fresh dir; prints
+    * both sources' records and returns whether they are equal.
+    */
+  private def probe(sfDir: String, compress: Boolean, label: String): Boolean = {
     val logDir = java.nio.file.Files.createTempDirectory("graft_eventlog_")
     val spark = graft.runner.Sessions
       .tuned(SparkSession.builder().master("local[8]"), "8")
       .config("spark.eventLog.enabled", "true")
       .config("spark.eventLog.dir", logDir.toUri.toString)
-      .config("spark.eventLog.compress", "false")
+      .config("spark.eventLog.compress", compress.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val listener = new graft.runner.MetricsListener
@@ -38,47 +49,9 @@ object EventLogProbe {
     // app id, e.g. ".inprogress" until close or a compression ext)
     val parsed = graft.runner.EventLogMetrics
       .parse(logDir.toString)("probe_q1")
-    println(s"live:   bytesRead=${live.bytesRead} records=${live.recordsRead} " +
-      s"runMs=${live.executorRunTimeMs} cpuNs=${live.executorCpuTimeNs} tasks=${live.tasks}")
-    println(s"parsed: bytesRead=${parsed.bytesRead} records=${parsed.recordsRead} " +
-      s"runMs=${parsed.executorRunTimeMs} cpuNs=${parsed.executorCpuTimeNs} tasks=${parsed.tasks}")
-    val ok = live.bytesRead == parsed.bytesRead &&
-      live.recordsRead == parsed.recordsRead &&
-      live.executorRunTimeMs == parsed.executorRunTimeMs &&
-      live.executorCpuTimeNs == parsed.executorCpuTimeNs &&
-      live.tasks == parsed.tasks
-    println(s"match=$ok")
-
-    // second pass: a COMPRESSED log (Spark's default eventlog codec is
-    // zstd) through the same live-vs-parsed gate
-    val logDir2 = java.nio.file.Files.createTempDirectory("graft_eventlog_z_")
-    val spark2 = graft.runner.Sessions
-      .tuned(SparkSession.builder().master("local[8]"), "8")
-      .config("spark.eventLog.enabled", "true")
-      .config("spark.eventLog.dir", logDir2.toUri.toString)
-      .config("spark.eventLog.compress", "true")
-      .getOrCreate()
-    spark2.sparkContext.setLogLevel("WARN")
-    val listener2 = new graft.runner.MetricsListener
-    spark2.sparkContext.addSparkListener(listener2)
-    spark2.sparkContext.setJobGroup("probe_q1", "eventlog probe zstd", false)
-    spark2.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy("l_returnflag").count().collect()
-    spark2.sparkContext.clearJobGroup()
-    org.apache.spark.graftbridge.SparkBridge
-      .drainListenerBus(spark2.sparkContext)
-    val live2 = listener2.snapshot("probe_q1")
-    spark2.stop()
-    val parsed2 = graft.runner.EventLogMetrics
-      .parse(logDir2.toString)("probe_q1")
-    println(s"zstd live:   bytes=${live2.bytesRead} tasks=${live2.tasks}")
-    println(s"zstd parsed: bytes=${parsed2.bytesRead} tasks=${parsed2.tasks}")
-    val ok2 = live2.bytesRead == parsed2.bytesRead &&
-      live2.recordsRead == parsed2.recordsRead &&
-      live2.executorRunTimeMs == parsed2.executorRunTimeMs &&
-      live2.executorCpuTimeNs == parsed2.executorCpuTimeNs &&
-      live2.tasks == parsed2.tasks
-    println(s"zstd match=$ok2")
-    if (!ok || !ok2) sys.exit(1)
+    println(s"${label}live:   $live")
+    println(s"${label}parsed: $parsed")
+    println(s"${label}match=${live == parsed}")
+    live == parsed
   }
 }

@@ -162,13 +162,8 @@ object StreamBench {
         val live = names.map(n => n -> gateListener.snapshot(n)).toMap
         spark.stop()
         val parsed = graft.runner.EventLogMetrics.parse(eventLogDir.get.toString)
-        val bad = names.filter { n =>
-          val l = live(n)
-          val p = parsed.getOrElse(n, graft.runner.EventLogMetrics.GroupMetrics())
-          !(l.bytesRead == p.bytesRead && l.recordsRead == p.recordsRead &&
-            l.executorRunTimeMs == p.executorRunTimeMs &&
-            l.executorCpuTimeNs == p.executorCpuTimeNs && l.tasks == p.tasks)
-        }
+        val bad = names.filter(n =>
+          live(n) != parsed.getOrElse(n, graft.runner.EventLogMetrics.GroupMetrics()))
         bad.foreach(n => System.err.println(s"[streambench] eventlog gate MISMATCH $n"))
         s""","eventlog_gate_ok":${bad.isEmpty},"eventlog_groups":${names.size}"""
       }

@@ -149,4 +149,21 @@ class EventLogMetricsSuite extends AnyFunSuite {
       EventLogMetrics.GroupMetrics(10, 1, 1, 1, 0, 0, 0, 1)))
     assert(byApp("app-B")("").bytesRead == 1000)
   }
+
+  test("live-vs-parsed gate: equal records match, any one differing field fails") {
+    val r = EventLogMetrics.GroupMetrics(10, 1, 2, 3, 4, 5, 6, 7)
+    val live: MetricsListener.GroupMetrics = r.copy()
+    assert(live == r)
+    val oneOff = Seq(
+      r.copy(bytesRead = r.bytesRead + 1),
+      r.copy(recordsRead = r.recordsRead + 1),
+      r.copy(executorRunTimeMs = r.executorRunTimeMs + 1),
+      r.copy(executorCpuTimeNs = r.executorCpuTimeNs + 1),
+      r.copy(gcTimeMs = r.gcTimeMs + 1),
+      r.copy(memorySpilledBytes = r.memorySpilledBytes + 1),
+      r.copy(diskSpilledBytes = r.diskSpilledBytes + 1),
+      r.copy(tasks = r.tasks + 1))
+    assert(oneOff.distinct.size == r.productArity, "one variant per field")
+    oneOff.foreach(d => assert(d != r, s"$d must not match $r"))
+  }
 }

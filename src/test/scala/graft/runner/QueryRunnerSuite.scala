@@ -14,36 +14,37 @@ class QueryRunnerSuite extends SparkTestBase {
     import spark2.implicits._
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
+    try {
+      val rnd = new Random(9)
+      val df = (1 to 50000)
+        .map(i => (i.toLong, rnd.nextInt(1000), rnd.nextDouble() * 100))
+        .toDF("id", "x", "y")
+      val dir = tmpDir("runner_layout")
+      LayoutWriter.write(df, dir,
+        LayoutSpec("zorder", Seq("x", "y"), numFiles = Some(16)))
 
-    val rnd = new Random(9)
-    val df = (1 to 50000)
-      .map(i => (i.toLong, rnd.nextInt(1000), rnd.nextDouble() * 100))
-      .toDF("id", "x", "y")
-    val dir = tmpDir("runner_layout")
-    LayoutWriter.write(df, dir,
-      LayoutSpec("zorder", Seq("x", "y"), numFiles = Some(16)))
+      // full scan
+      val full = QueryRunner.run(spark,
+        spark.read.parquet(dir).filter($"x".between(100, 150) && $"y".between(10, 20)),
+        "full", Some(listener))
+      // pruned scan, same predicate
+      val scan = SfcTable.open(spark, dir)
+        .filter($"x".between(100, 150) && $"y".between(10, 20))
+      val pruned = QueryRunner.run(spark, scan, "pruned", Some(listener))
 
-    // full scan
-    val full = QueryRunner.run(spark,
-      spark.read.parquet(dir).filter($"x".between(100, 150) && $"y".between(10, 20)),
-      "full", Some(listener))
-    // pruned scan, same predicate
-    val scan = SfcTable.open(spark, dir)
-      .filter($"x".between(100, 150) && $"y".between(10, 20))
-    val pruned = QueryRunner.run(spark, scan, "pruned", Some(listener))
-
-    assert(full.rows == pruned.rows, "pruning must not change results")
-    // the full scan must touch every written file (curve cut snapping
-    // may produce slightly fewer files than the 16 requested)
-    assert(full.filesScanned == graft.layout.ZoneMap.read(dir).files.length.toLong,
-      s"full scan files=${full.filesScanned}")
-    assert(pruned.filesScanned == SfcTable.pruned(scan).get.kept.length.toLong)
-    assert(pruned.filesScanned < full.filesScanned)
-    assert(pruned.bytesScanned > 0 && pruned.bytesScanned < full.bytesScanned,
-      s"bytes pruned=${pruned.bytesScanned} full=${full.bytesScanned}")
-    // recordsRead < 50000 because parquet row-group stats + pushed
-    // filters skip non-matching row groups — that's the pushdown working.
-    assert(full.executorRunTimeMs >= 0 && full.recordsRead > 0)
+      assert(full.rows == pruned.rows, "pruning must not change results")
+      // the full scan must touch every written file (curve cut snapping
+      // may produce slightly fewer files than the 16 requested)
+      assert(full.filesScanned == graft.layout.ZoneMap.read(dir).files.length.toLong,
+        s"full scan files=${full.filesScanned}")
+      assert(pruned.filesScanned == SfcTable.pruned(scan).get.kept.length.toLong)
+      assert(pruned.filesScanned < full.filesScanned)
+      assert(pruned.bytesScanned > 0 && pruned.bytesScanned < full.bytesScanned,
+        s"bytes pruned=${pruned.bytesScanned} full=${full.bytesScanned}")
+      // recordsRead < 50000 because parquet row-group stats + pushed
+      // filters skip non-matching row groups — that's the pushdown working.
+      assert(full.executorRunTimeMs >= 0 && full.recordsRead > 0)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("csv sink writes the fixed header and one row per query") {
