@@ -163,19 +163,17 @@ object Bench {
     val calLast = graft.runner.Calibration.measure(spark, sfDir)
     val calQuiet = graft.runner.Calibration.quietEnd(calFirst, calLast)
     val calHistPath = java.nio.file.Paths.get("results/calibration_history.jsonl")
-    // repin only over SAME-SF history entries: the scan probe reads the
-    // sweep's own lineitem, so a quiet end recorded under a
+    // repin only over SAME-SF, SAME-HOST history entries: the scan probe
+    // reads the sweep's own lineitem, so a quiet end recorded under a
     // GRAFT_BENCH_ARTIFACT_SF override at another scale would poison the
-    // rolling scan minimum for every later canonical sweep (cpu/jobs are
-    // sf-independent, but one filter keeps the whole entry comparable)
-    def sfBaseOf(p: String): String =
-      new java.io.File(p.replaceAll("/+$", "")).getName
-    // sf filter goes INSIDE loadHistory (pre-window): other-sf entries
-    // must not consume HistoryKeep slots and evict same-sf quiet ends
-    // (r17 ADVICE #1)
-    val calHist = graft.runner.Calibration.loadHistory(calHistPath,
-      e => sfBaseOf(e.sfDir) == sfBaseOf(sfDir))
-    val selfRefs = graft.runner.Calibration.repin(calHist, calQuiet)
+    // rolling scan minimum for every later canonical sweep, and probe
+    // seconds from a host with other cores or another CPU model are not
+    // this host's quiet end. Both filters run inside loadHistory
+    // (pre-window): other entries must not consume HistoryKeep slots and
+    // evict comparable quiet ends (r17 ADVICE #1)
+    val host = graft.runner.Calibration.hostFingerprint()
+    val selfRefs = graft.runner.Calibration.sameHostRefs(
+      calHistPath, sfDir, host, calQuiet)
     val drift = graft.runner.Calibration.driftFactor(
       calFirst, calLast, selfRefs.cpu, selfRefs.jobs)
     val driftPinned = graft.runner.Calibration.driftFactor(calFirst, calLast,
@@ -208,7 +206,7 @@ object Bench {
     // is overridable via GRAFT_BENCH_ARTIFACT_SF for a driver that
     // benches at another scale; the choice is logged either way.
     val canonicalSf = sys.env.getOrElse("GRAFT_BENCH_ARTIFACT_SF", "sf0.1")
-    val sfBase = sfBaseOf(sfDir) // same rule as the history filter above
+    val sfBase = graft.runner.Calibration.sfBase(sfDir) // as the history filter
     val runsFile =
       if (arg.isEmpty && sfBase == canonicalSf) "BENCH_RUNS.json"
       else "BENCH_RUNS_DEV.json"
@@ -221,7 +219,7 @@ object Bench {
       graft.runner.Calibration.appendHistory(calHistPath,
         graft.runner.Calibration.QuietEnd(
           System.currentTimeMillis() / 1000L, sfDir,
-          calQuiet._1, calQuiet._2, calQuiet._3))
+          calQuiet._1, calQuiet._2, calQuiet._3, Some(host)))
     val calJson = s"""{"first":${calFirst.json},"last":${calLast.json},""" +
       s""""self_refs":{"cpu_sec":${f3(selfRefs.cpu)},""" +
       s""""scan_sec":${f3(selfRefs.scan)},"jobs_sec":${f3(selfRefs.jobs)},""" +

@@ -283,13 +283,9 @@ object Compactor {
       if (keys.isEmpty) df0.repartition(numFiles)
       else df0.repartitionByRange(numFiles, keys: _*).sortWithinPartitions(keys: _*)
     val staging = dir.stripSuffix("/") + ".compactw_tmp"
-    val moved = StagedRewrite.writeAndMove(
-      spark, dir, staging, arranged, manifest.hivePartitions)
-
-    val newEntries =
-      if (moved.isEmpty) Seq.empty[FileEntry]
-      else ZoneMap.collectStatsDf(
-        StagedRewrite.readFiles(spark, dir, moved, partitioned), manifest.statsCols)
+    val written = StagedRewrite.writeAndMove(spark, dir, staging, arranged,
+      manifest.hivePartitions, manifest.statsCols, KeyIndex.bloomSpecs(dir, manifest))
+    val newEntries = written.map(_.entry)
     val updated = manifest.copy(files = untouched ++ newEntries)
     // commit order matches KeyedDelta/Upserter (round-11 ADVICE):
     // manifest first, superseded files after — never a manifest that
@@ -299,16 +295,15 @@ object Compactor {
       try ZoneMap.writeCas(dir, updated)
       catch {
         case e: ConcurrentCommitException =>
-          moved.foreach(p => fs.delete(
-            new org.apache.hadoop.fs.Path(new java.net.URI(p)), false))
+          StagedRewrite.deleteFiles(fs, newEntries)
           spark.catalog.refreshByPath(dir)
           throw e
-      } finally StagedRewrite.release(moved)
+      } finally StagedRewrite.release(written)
     StagedRewrite.deleteFiles(fs, affected)
     spark.catalog.refreshByPath(dir)
     // scoped rewrites keep every key-index sidecar current (whole-table
     // [[compact]] rebuilds them over the swapped dir instead)
-    KeyIndex.updateAll(spark, dir, affected.map(_.path), newEntries)
+    KeyIndex.updateAll(spark, dir, affected.map(_.path), written)
     committed
   }
 }

@@ -340,39 +340,61 @@ object KeyIndex {
   /** Shards read by the most recent [[affectedPaths]] (test/probe hook). */
   @volatile private[graft] var lastShardsRead: Int = -1
 
-  private def bloomOf(keys: Iterator[Long], expected: Long): Array[Byte] = {
+  /** A file's serialized key bloom, sized by that file's own row count —
+    * the one bloom function for the writer's records, [[build]] and the
+    * heal scan in [[update]].
+    */
+  private[layout] def bloomOf(keys: Iterator[Long], rows: Long): Array[Byte] = {
     val bf = org.apache.spark.util.sketch.BloomFilter
-      .create(math.max(1L, expected), Fpp)
+      .create(math.max(1L, rows), Fpp)
     keys.foreach(bf.putLong)
     val out = new java.io.ByteArrayOutputStream()
     bf.writeTo(out)
     out.toByteArray
   }
 
-  /** One bloom row per file of `files` (their data read fresh — used
-    * for both the full build and the per-mutation delta). Rows with a
-    * NULL in any key column are not indexed; the probe side skips them
-    * identically, so both sides stay consistent.
+  /** One bloom row per file of `files`, their data read fresh — the
+    * full build and the heal of files an earlier crashed mutation
+    * committed. Rows with a NULL in any key column are not indexed; the
+    * probe side skips them identically, so both sides stay consistent.
     */
   private def bloomRows(spark: SparkSession, dir: String, keys: Seq[String],
       files: Seq[FileEntry], partitioned: Boolean): DataFrame = {
     import spark.implicits._
-    val maxRows = files.map(_.rows).max
     val df = StagedRewrite
       .readFiles(spark, dir, files.map(_.path), partitioned)
     // input_file_name is the runtime path; [[norm]] makes it and the
     // manifest's stored paths compare equal
-    val wanted = files.map(f => norm(f.path) -> f.rows).toMap
+    val rows = files.map(f => norm(f.path) -> f.rows).toMap
     df.filter(keys.map(col(_).isNotNull).reduce(_ && _))
       .select(input_file_name().as("path"), keyHashCol(keys).as("__k"))
       .as[(String, Long)]
       .groupByKey(t => norm(t._1))
       .mapGroups { (p, it) =>
-        (p, wanted.getOrElse(p, maxRows), bloomOf(it.map(_._2), maxRows),
-          shardOf(p))
+        (p, rows(p), bloomOf(it.map(_._2), rows(p)), shardOf(p))
       }
       .toDF("path", "rows", "bloom", "s")
   }
+
+  /** The sidecar's row schema: reads pass it instead of inferring it
+    * from a footer (an inference job per lookup).
+    */
+  private val SidecarSchema = new org.apache.spark.sql.types.StructType()
+    .add("path", org.apache.spark.sql.types.StringType)
+    .add("rows", org.apache.spark.sql.types.LongType)
+    .add("bloom", org.apache.spark.sql.types.BinaryType)
+
+  /** The (sidecar name, key columns) pairs a write into `dir` blooms per
+    * file: every sidecar whose columns are known and are data columns (a
+    * key in a hive partition column lives in the directory name, not in
+    * the row; [[update]] heals such files by scan).
+    */
+  def bloomSpecs(dir: String, manifest: TableManifest): Seq[(String, Seq[String])] =
+    sidecarNames(dir).flatMap { n =>
+      val cols = if (n == DirName) Some(manifest.keyCols) else readMeta(dir, n).map(_.keys)
+      cols.filter(ks => ks.nonEmpty && ks.forall(!manifest.hivePartitions.contains(_)))
+        .map(n -> _)
+    }
 
   /** Build (or rebuild) the index for every file in the manifest —
     * over the record key when `indexCols` is empty, or a named
@@ -477,7 +499,7 @@ object KeyIndex {
     import spark.implicits._
     val positives =
       try {
-        spark.read.parquet(selected: _*)
+        spark.read.schema(SidecarSchema).parquet(selected: _*)
           .select(col("path"), col("bloom")).as[(String, Array[Byte])]
           .mapPartitions { it =>
             val ks = bcKeys.value
@@ -494,8 +516,34 @@ object KeyIndex {
     Some(positives.iterator.filter(live.contains).toSet ++ unindexed)
   }
 
-  /** Post-mutation maintenance: append blooms for the files the
-    * mutation created; superseded paths become STALE rows, which
+  /** Append bloom rows to their shards: written into a fresh hidden
+    * staging dir, then the part files move into their `s=` dirs. An
+    * append into the sidecar dir itself would rewrite its `_SUCCESS`
+    * marker (and checksum) on every mutation, and overwriting a
+    * non-empty file forces a flush on ext4. A crash mid-move leaves
+    * rows for files whose gen the meta does not yet cover: duplicates
+    * or gaps the lookup's fail-safe and [[gc]] already absorb.
+    */
+  private def appendRows(spark: SparkSession, dir: String, name: String,
+      rows: DataFrame): Unit = {
+    val stage = path(dir, name).resolve(".append_tmp").toString
+    rows.write.mode("overwrite").partitionBy("s").parquet(stage)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stagePath = new org.apache.hadoop.fs.Path(stage)
+    fs.listStatus(stagePath).filter(_.isDirectory).foreach { sd =>
+      val shard = new org.apache.hadoop.fs.Path(path(dir, name).toString,
+        sd.getPath.getName)
+      fs.mkdirs(shard)
+      fs.listStatus(sd.getPath).map(_.getPath).filter(_.getName.startsWith("part-"))
+        .foreach(f => fs.rename(f, new org.apache.hadoop.fs.Path(shard, f.getName)))
+    }
+    fs.delete(stagePath, true)
+  }
+
+  /** Post-mutation maintenance: append the blooms the write recorded
+    * for the files the mutation created (one single-task write; no data
+    * file is read); superseded paths become STALE rows, which
     * lookups already ignore for free (live-manifest intersection) —
     * no shard is rewritten on the mutation path, so maintenance is
     * O(appended files), the Hudi write-once-footer-bloom asymptotic.
@@ -507,7 +555,7 @@ object KeyIndex {
     * as v2 once.
     */
   def update(spark: SparkSession, dir: String, removedPaths: Seq[String],
-      added: Seq[FileEntry], name: String = DirName): UpdateStats = {
+      added: Seq[StatsWriter.WrittenFile], name: String = DirName): UpdateStats = {
     if (!exists(dir, name)) return UpdateStats(0, 0L, 0, 0)
     val manifest = ZoneMap.read(dir)
     // a named secondary carries its columns in its own meta; the
@@ -538,20 +586,26 @@ object KeyIndex {
           gc = true)
     }
     val currentGen = manifest.generation.getOrElse(0L)
+    // the mutation's own files: the blooms their writer recorded
+    val recorded = added.flatMap(w => w.blooms.get(name).map { b =>
+      val p = norm(w.entry.path)
+      (p, w.entry.rows, b, shardOf(p))
+    })
+    if (recorded.nonEmpty)
+      appendRows(spark, dir, name, spark.createDataFrame(recorded)
+        .toDF("path", "rows", "bloom", "s").coalesce(1))
     // self-heal the crash window: a live file whose commit generation
-    // postdates the sidecar but is NOT part of this mutation's adds has
-    // no bloom row (a previous mutation committed, then crashed before
-    // its index update) — append its bloom now, or advancing indexedGen
-    // below would silently claim it indexed (lost-update risk)
-    val addedPaths = added.map(f => norm(f.path)).toSet
+    // postdates the sidecar but has no recorded bloom here has no bloom
+    // row (a previous mutation committed, then crashed before its index
+    // update) — bloom it by scan now, or advancing indexedGen below
+    // would silently claim it indexed (lost-update risk)
+    val recordedPaths = recorded.map(_._1).toSet
     val healed = manifest.files.filter(f =>
       f.gen.getOrElse(0L) > meta.indexedGen &&
-        !addedPaths.contains(norm(f.path)))
-    val toIndex = added ++ healed
-    if (toIndex.nonEmpty) {
-      bloomRows(spark, dir, keys, toIndex, manifest.hivePartitions.nonEmpty)
-        .write.mode("append").partitionBy("s").parquet(path(dir, name).toString)
-    }
+        !recordedPaths.contains(norm(f.path)))
+    if (healed.nonEmpty)
+      appendRows(spark, dir, name,
+        bloomRows(spark, dir, keys, healed, manifest.hivePartitions.nonEmpty))
     // union maintenance is AMORTIZED, never per-mutation: files newer
     // than the unions stamp are read unconditionally by lookups (their
     // shardOf is driver math over the manifest), so appending rows here
@@ -619,7 +673,7 @@ object KeyIndex {
       // same path always shards identically, so per-shard dedup is
       // global dedup (duplicate rows only arise from unusual re-index
       // flows; blooms for one path are interchangeable)
-      val kept = spark.read.parquet(sd.toString)
+      val kept = spark.read.schema(SidecarSchema).parquet(sd.toString)
         .filter(org.apache.spark.sql.graftbridge.Bridge.inSetString(
           col("path"), live))
         .dropDuplicates("path")
@@ -643,7 +697,7 @@ object KeyIndex {
     * Returns the primary's stats (the one probes historically pin).
     */
   def updateAll(spark: SparkSession, dir: String, removedPaths: Seq[String],
-      added: Seq[FileEntry]): UpdateStats = {
+      added: Seq[StatsWriter.WrittenFile]): UpdateStats = {
     val names = sidecarNames(dir)
     if (names.isEmpty) return UpdateStats(0, 0L, 0, 0)
     val stats = names.map(n => n -> update(spark, dir, removedPaths, added, n))

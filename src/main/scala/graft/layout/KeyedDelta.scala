@@ -13,9 +13,9 @@ import org.apache.hadoop.fs.Path
   *
   * Scale shape: only files whose record-key zone may contain a dropped
   * key are rewritten (NumIn pruning — scattered keys keep untouched
-  * files untouched); appended rows land as NEW files whose stats are
-  * computed by scanning just those files. Cost is O(affected files +
-  * appended rows), never O(table).
+  * files untouched); appended rows land as NEW files whose stats and
+  * key blooms the write itself records ([[StatsWriter]]). Cost is
+  * O(affected files + appended rows), never O(table).
   */
 object KeyedDelta {
 
@@ -85,20 +85,17 @@ object KeyedDelta {
       case (None, Some(a)) => Some(a)
       case _ => None
     }
-    val moved = toWrite match {
+    // the write records each new file's zone entry and, per key-index
+    // sidecar, its bloom
+    val written = toWrite match {
       case Some(rows) =>
         val staging = dir.stripSuffix("/") + ".delta_tmp"
-        StagedRewrite.writeAndMove(
-          spark, dir, staging, rows, manifest.hivePartitions)
-      case None => Seq.empty[String]
+        StagedRewrite.writeAndMove(spark, dir, staging, rows,
+          manifest.hivePartitions, manifest.statsCols,
+          KeyIndex.bloomSpecs(dir, manifest), schema)
+      case None => Seq.empty[StatsWriter.WrittenFile]
     }
-
-    // ---- stats: ONE scan over all new files
-    val newEntries =
-      if (moved.isEmpty) Seq.empty[FileEntry]
-      else ZoneMap.collectStatsDf(
-        StagedRewrite.readFiles(spark, dir, moved, partitioned, schema),
-        manifest.statsCols)
+    val newEntries = written.map(_.entry)
 
     val updated = manifest.copy(files = untouched ++ newEntries)
     // commit order (round-10 ADVICE): atomically publish the manifest
@@ -117,17 +114,17 @@ object KeyedDelta {
       catch {
         case e: ConcurrentCommitException =>
           // loser cleanup: our uuid-unique moved files come back out
-          moved.foreach(p => fs.delete(new Path(new java.net.URI(p)), false))
+          StagedRewrite.deleteFiles(fs, newEntries)
           spark.catalog.refreshByPath(dir)
           throw e
-      } finally StagedRewrite.release(moved)
+      } finally StagedRewrite.release(written)
     StagedRewrite.deleteFiles(fs, affected)
     // manual file moves bypass Spark's write-path invalidation — stale
     // listings would read deleted part files on the next dir-level scan
     spark.catalog.refreshByPath(dir)
     // every key-index sidecar (primary + any named secondaries) must
     // track the rewrite — stale blooms would be unsound to consult
-    KeyIndex.updateAll(spark, dir, affected.map(_.path), newEntries)
+    KeyIndex.updateAll(spark, dir, affected.map(_.path), written)
     committed
   }
 }

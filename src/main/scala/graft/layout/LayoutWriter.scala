@@ -169,9 +169,15 @@ object LayoutWriter {
             df.repartitionByRange(key).sortWithinPartitions(key)
         }
     }
-    val writer = arranged.write.mode("overwrite")
-    (if (spec.partitionBy.nonEmpty) writer.partitionBy(spec.partitionBy: _*)
-     else writer).parquet(dir)
+    // Partition columns live in dir paths, not files, but come back as
+    // regular columns on read, so the manifest keeps their ranges and
+    // prunes on them like any other column (partition pruning). The
+    // record key always gets stats: Upserter's file-scoped COW needs key
+    // zones to avoid rewriting the whole table.
+    val keyCols = spec.keyCols
+    val statsCols =
+      (spec.cols ++ spec.partitionBy ++ keyCols ++ extraStatsCols).distinct
+    val written = StatsWriter.write(arranged, dir, spec.partitionBy, statsCols)
 
     // Byte-balance pass (round-18, RQ6 sf10 straggler class): the cuts
     // above equalize ROWS per file, but curve-sorted data compresses
@@ -179,21 +185,13 @@ object LayoutWriter {
     // MB on the hilbert sf10 lineitem) and full-scan task waves
     // straggle. Split oversized files at snapped curve cuts / merge
     // runs of adjacent undersized files until sizes sit in a tight
-    // band. No-op (one FS listing) when the write came out balanced.
-    if (spec.byteBalance && balanceKey.isDefined &&
-        spec.numFiles.forall(_ > 1) && bits * spec.cols.length <= 52)
-      byteBalancePass(spark, dir, balanceKey.get, bits * spec.cols.length,
-        spec.partitionBy)
-
-    // Partition columns live in dir paths, not files, but come back as
-    // regular columns on read — the per-file stats job sees them, so the
-    // manifest prunes on them like any other column (partition pruning).
-    // The record key always gets stats: Upserter's file-scoped COW needs
-    // key zones to avoid rewriting the whole table.
-    val keyCols = spec.keyCols
-    val statsCols =
-      (spec.cols ++ spec.partitionBy ++ keyCols ++ extraStatsCols).distinct
-    val files = ZoneMap.collectStats(spark, dir, statsCols)
+    // band. No-op when the write came out balanced.
+    val files =
+      if (spec.byteBalance && balanceKey.isDefined &&
+          spec.numFiles.forall(_ > 1) && bits * spec.cols.length <= 52)
+        byteBalancePass(spark, dir, balanceKey.get, bits * spec.cols.length,
+          spec.partitionBy, statsCols, written)
+      else written
     val manifest = TableManifest(
       layout = spec.layout,
       layoutCols = spec.cols,
@@ -204,7 +202,8 @@ object LayoutWriter {
       recordKey = if (keyCols.length == 1) Some(keyCols.head) else None,
       recordKeys = if (keyCols.length > 1) Some(keyCols) else None,
       precombineCol = spec.precombineCol,
-      files = files,
+      files = StatsWriter.entries(spark, dir, files, spec.partitionBy, statsCols)
+        .map(_.entry),
       partitionCols = if (spec.partitionBy.nonEmpty) Some(spec.partitionBy) else None,
       strOffsets = if (strOffsets.exists(_._2 > 0)) Some(strOffsets) else None)
     ZoneMap.write(dir, manifest)
@@ -445,35 +444,28 @@ object LayoutWriter {
     out.toSeq
   }
 
-  /** Post-write byte balancing of a curve layout (round-18): list the
+  /** Post-write byte balancing of a curve layout (round-18): group the
     * written files per hive partition dir (curve order == part-name
     * order: files come from one repartitionByRange job), plan
-    * [[balancePlan]] groups against target = mean file bytes, and
+    * [[balancePlan]] groups against target = median file bytes, and
     * rewrite each group into byte-balanced pieces cut at
     * [[snapCuts]]-aligned curve boundaries (interior cuts from one
     * percentile pass per batch, so a whole pass is TWO Spark jobs over
     * only the skewed tail — nothing when the write came out balanced).
-    * Scale: at 100 TB the rewrite cost is proportional to the skewed
-    * byte mass, not the table; group count per job is capped so the
-    * CASE dispatch expression stays small.
+    * Returns the table's files after the pass. Scale: at 100 TB the
+    * rewrite cost is proportional to the skewed byte mass, not the
+    * table; group count per job is capped so the CASE dispatch
+    * expression stays small.
     */
   private[layout] def byteBalancePass(
       spark: SparkSession,
       dir: String,
       key: Column,
       totalBits: Int,
-      hiveCols: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def walk(p: Path): Seq[FileStatus] =
-      fs.listStatus(p).toSeq.flatMap { s =>
-        if (s.isDirectory) walk(s.getPath)
-        else if (s.getPath.getName.startsWith("part-")) Seq(s)
-        else Nil
-      }
-    val all = walk(root)
-    if (all.length < 2) return
+      hiveCols: Seq[String],
+      statsCols: Seq[String],
+      files: Seq[StatsWriter.Produced]): Seq[StatsWriter.Produced] = {
+    if (files.length < 2) return files
     // target = MEDIAN first-write size, not mean: the mean is inflated
     // by the oversized tail this pass exists to remove, so an
     // untouched "in band" file (<= 1.3x mean) could still sit 1.6x
@@ -481,21 +473,23 @@ object LayoutWriter {
     // lineitem: kept 3.64 MB = 1.3 x mean 2.80 vs final median 2.23).
     // Banding against the median keeps max/median <= ~1.3 by
     // construction.
-    val sorted = all.map(_.getLen).sorted
+    val sorted = files.map(_.status.getLen).sorted
     val target = math.max(1L, sorted(sorted.length / 2))
-    val groups = all.groupBy(_.getPath.getParent.toString).toSeq
+    val groups = files.map(_.status).groupBy(_.getPath.getParent.toString).toSeq
       .flatMap { case (_, inDir) =>
         balancePlan(
           inDir.sortBy(_.getPath.getName)
             .map(s => (s.getPath.toString, s.getLen)),
           target)
       }
-    if (groups.isEmpty) return
-    groups.grouped(MaxGroupsPerJob).foreach(batch =>
-      rewriteGroups(spark, dir, batch, key, totalBits, hiveCols))
+    if (groups.isEmpty) return files
+    val pieces = groups.grouped(MaxGroupsPerJob).flatMap(batch =>
+      rewriteGroups(spark, dir, batch, key, totalBits, hiveCols, statsCols)).toSeq
     // listings are cached across queries (FileStatusCache) — drop them
-    // so the stats pass and readers see the post-balance file set
+    // so readers see the post-balance file set
     spark.catalog.refreshByPath(dir)
+    val replaced = groups.flatMap(_.paths).toSet
+    files.filterNot(p => replaced(p.status.getPath.toString)) ++ pieces
   }
 
   /** CASE-dispatch bound per rewrite job (expression size / codegen). */
@@ -514,7 +508,8 @@ object LayoutWriter {
       groups: Seq[BalanceGroup],
       key: Column,
       totalBits: Int,
-      hiveCols: Seq[String]): Unit = {
+      hiveCols: Seq[String],
+      statsCols: Seq[String]): Seq[StatsWriter.Produced] = {
     import org.apache.hadoop.fs.Path
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val partitioned = hiveCols.nonEmpty
@@ -579,32 +574,24 @@ object LayoutWriter {
     val out = df0.withColumn("__piece", pid)
       .repartition(col("__piece"))
       .sortWithinPartitions(hiveCols.map(col) ++ Seq(col("__piece"), key): _*)
-    out.write.mode("overwrite")
-      .partitionBy((hiveCols :+ "__piece"): _*).parquet(staging)
+    val produced = StatsWriter.write(out, staging, hiveCols :+ "__piece", statsCols)
 
     // move pieces in (strip the __piece=N path segment, uniquify the
     // part name with it), then drop the originals
-    val stagingPath = new Path(staging)
-    val stagingUri = stagingPath.toUri.getPath
-    def partFiles(p: Path): Seq[Path] =
-      fs.listStatus(p).toSeq.flatMap { s =>
-        if (s.isDirectory) partFiles(s.getPath)
-        else if (s.getPath.getName.startsWith("part-")) Seq(s.getPath)
-        else Nil
-      }
-    partFiles(stagingPath).foreach { src =>
-      val rel = src.toUri.getPath.stripPrefix(stagingUri).stripPrefix("/")
-      val segs = rel.split("/")
+    val moved = produced.map { p =>
+      val segs = p.stats.rel.split("/")
       val pieceId = segs.find(_.startsWith("__piece="))
         .map(_.stripPrefix("__piece=")).getOrElse("0")
       val kept = segs.filterNot(_.startsWith("__piece="))
       val name = kept.last.stripSuffix(".parquet") + s"-b$pieceId.parquet"
       val dst = new Path(dir, (kept.init :+ name).mkString("/"))
       fs.mkdirs(dst.getParent)
-      fs.rename(src, dst)
+      fs.rename(p.status.getPath, dst)
+      p.copy(status = fs.getFileStatus(dst))
     }
-    fs.delete(stagingPath, true)
+    fs.delete(new Path(staging), true)
     allPaths.foreach(p => fs.delete(new Path(p), false))
+    moved
   }
 
   private def pieceExpr(base: Long, cuts: Array[Long], keyd: Column): Column =

@@ -44,44 +44,40 @@ object StagedRewrite {
   /** Deregister moved files once their manifest commit landed (or their
     * abort cleanup deleted them).
     */
-  def release(paths: Seq[String]): Unit = paths.foreach(p => inFlight.remove(pathKey(p)))
+  def release(files: Seq[StatsWriter.WrittenFile]): Unit =
+    files.foreach(f => inFlight.remove(pathKey(f.entry.path)))
 
-  /** Write `df` to `staging` (partitionBy when the table is partitioned),
-    * then move every part file into `dir` PRESERVING its
-    * partition-relative subpath (`p=1/part-xxx.parquet` stays under
-    * `dir/p=1/`). Part names are UUID-unique, so moves cannot collide
-    * with surviving files. Returns the moved files' URIs (registered
-    * in-flight until [[release]]).
+  /** Write `df` to `staging` (partitionBy when the table is partitioned)
+    * through [[StatsWriter]], then move every part file that holds rows
+    * into `dir` PRESERVING its partition-relative subpath
+    * (`p=1/part-xxx.parquet` stays under `dir/p=1/`). Part names are
+    * UUID-unique, so moves cannot collide with surviving files. Returns
+    * the moved files' manifest entries and blooms (`blooms`: see
+    * [[KeyIndex.bloomSpecs]]); `schema` types the partition columns as
+    * [[readFiles]] with that schema would. The moved files are registered
+    * in-flight until [[release]].
     */
   def writeAndMove(
       spark: SparkSession,
       dir: String,
       staging: String,
       df: DataFrame,
-      partitionCols: Seq[String]): Seq[String] = {
-    val writer = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
-     else writer).parquet(staging)
-
+      partitionCols: Seq[String],
+      statsCols: Seq[String],
+      blooms: Seq[(String, Seq[String])] = Nil,
+      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      : Seq[StatsWriter.WrittenFile] = {
+    val produced = StatsWriter.write(df, staging, partitionCols, statsCols, blooms)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stagingPath = new Path(staging)
-    val stagingUri = stagingPath.toUri.getPath
-    def partFiles(p: Path): Seq[Path] =
-      fs.listStatus(p).toSeq.flatMap { s =>
-        if (s.isDirectory) partFiles(s.getPath)
-        else if (s.getPath.getName.startsWith("part-")) Seq(s.getPath)
-        else Nil
-      }
-    val moved = partFiles(stagingPath).map { src =>
-      val rel = src.toUri.getPath.stripPrefix(stagingUri).stripPrefix("/")
-      val dst = new Path(dir, rel)
+    val moved = produced.map { p =>
+      val dst = new Path(dir, p.stats.rel)
       fs.mkdirs(dst.getParent)
-      fs.rename(src, dst)
+      fs.rename(p.status.getPath, dst)
       inFlight.add(dst.toUri.getPath)
-      dst.toUri.toString
+      p.copy(status = fs.getFileStatus(dst))
     }
-    fs.delete(stagingPath, true)
-    moved
+    fs.delete(new Path(staging), true)
+    StatsWriter.entries(spark, dir, moved, partitionCols, statsCols, schema)
   }
 
   /** Delete `files` (by manifest URI) from the table. */

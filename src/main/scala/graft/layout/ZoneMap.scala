@@ -1,6 +1,5 @@
 package graft.layout
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.charset.StandardCharsets
@@ -21,8 +20,8 @@ import org.json4s.jackson.Serialization
   *
   * Scale note: the manifest is one JSON object per *file* (~128 MB of
   * data each), so at 100 TB it is ~800k entries — fine for driver-side
-  * pruning, and the stats job that builds it is a distributed
-  * `groupBy(input_file_name())`.
+  * pruning. Entries come from the writes themselves ([[StatsWriter]]):
+  * no job ever re-reads a written file to build one.
   */
 case class ColRange(
     min: Option[Double],
@@ -275,9 +274,6 @@ object ZoneMap {
     * conversion on both sides (round-13 VERDICT "What's wrong #1").
     */
   def numericView(dt: DataType, c: String): Option[org.apache.spark.sql.Column] =
-    numericizer(dt, c)
-
-  private def numericizer(dt: DataType, c: String): Option[org.apache.spark.sql.Column] =
     dt match {
       case _: NumericType => Some(col(c).cast(DoubleType))
       case DateType => Some(datediff(col(c), lit("1970-01-01").cast(DateType)).cast(DoubleType))
@@ -288,75 +284,6 @@ object ZoneMap {
         Some(col(c).cast(TimestampType).cast(DoubleType))
       case _ => None
     }
-
-  /** One distributed pass over a written table dir computing per-file
-    * min/max for `statsCols` (groupBy input_file_name — scales with files).
-    */
-  def collectStats(
-      spark: SparkSession,
-      dir: String,
-      statsCols: Seq[String]): Seq[FileEntry] =
-    collectStatsDf(spark.read.parquet(dir), statsCols)
-
-  /** Same one-pass per-file stats over an explicit DataFrame (e.g. a
-    * file-list read after an upsert's partial rewrite).
-    */
-  def collectStatsDf(df: DataFrame, statsCols: Seq[String]): Seq[FileEntry] = {
-    val schema = df.schema
-    val aggs = statsCols.flatMap { c =>
-      val dt = schema(c).dataType
-      numericizer(dt, c) match {
-        case Some(num) =>
-          Seq(min(num).as(s"__min_$c"), max(num).as(s"__max_$c"),
-            count(col(c)).as(s"__cnt_$c"))
-        case None =>
-          Seq(min(col(c).cast(StringType)).as(s"__mins_$c"),
-            max(col(c).cast(StringType)).as(s"__maxs_$c"),
-            count(col(c)).as(s"__cnt_$c"))
-      }
-    }
-    val rows = df
-      .groupBy(input_file_name().as("__file"))
-      .agg(count(lit(1)).as("__rows"), aggs: _*)
-      .collect()
-    val entries = rows.toSeq.map { r =>
-      val ranges = statsCols.map { c =>
-        val nonNull = r.getAs[Long](s"__cnt_$c")
-        val isStr = r.schema.fieldNames.contains(s"__mins_$c")
-        val cr =
-          if (isStr)
-            ColRange(None, None,
-              Option(r.getAs[String](s"__mins_$c")),
-              Option(r.getAs[String](s"__maxs_$c")),
-              allNull = nonNull == 0L)
-          else
-            ColRange(
-              Option(r.getAs[java.lang.Double](s"__min_$c")).map(_.doubleValue),
-              Option(r.getAs[java.lang.Double](s"__max_$c")).map(_.doubleValue),
-              None, None, allNull = nonNull == 0L)
-        c -> cr
-      }.toMap
-      FileEntry(r.getAs[String]("__file"), r.getAs[Long]("__rows"), ranges)
-    }
-    withSizes(df.sparkSession, entries)
-  }
-
-  /** Enrich entries with on-disk sizes (one driver-side stat per file —
-    * O(#files), no Spark job; at 100 TB / 128 MB files ~800k stats,
-    * amortized into the manifest so readers never re-list).
-    */
-  def withSizes(spark: org.apache.spark.sql.SparkSession,
-      entries: Seq[FileEntry]): Seq[FileEntry] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    entries.map { e =>
-      val sz =
-        try {
-          val p = new org.apache.hadoop.fs.Path(new java.net.URI(e.path))
-          Some(p.getFileSystem(conf).getFileStatus(p).getLen)
-        } catch { case scala.util.control.NonFatal(_) => None }
-      e.copy(bytes = sz)
-    }
-  }
 
   /** Commit a manifest: stamps the next generation (previous manifest's
     * + 1; the in-memory `m` carries the read generation, so no disk

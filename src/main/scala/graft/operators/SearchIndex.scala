@@ -48,9 +48,9 @@ object SearchIndex {
     SfcTable.open(spark, s"$dir/postings")
 
   /** Fold a NEW document batch into the stored index without touching
-    * existing files: the batch's postings append as term-sorted files,
-    * only those files are stat-scanned, and their entries join the
-    * manifest — O(batch), the same incremental contract as `Curate add`.
+    * existing files: the batch's postings append as term-sorted files
+    * whose entries the write itself records, and join the manifest —
+    * O(batch), the same incremental contract as `Curate add`.
     * Batch files overlap the old files' term ranges, so skipping
     * degrades as batches accumulate; [[optimize]] restores one global
     * term sort. Caller owns doc_id disjointness (index a curated
@@ -60,31 +60,21 @@ object SearchIndex {
       textCol: String, dir: String, batchFiles: Int = 4): Unit = {
     val pdir = s"$dir/postings"
     val before = graft.layout.ZoneMap.read(pdir)
-    // canonical on both sides: entry paths come from input_file_name()
-    // (file:///...), listings from the file system (file:/...); a raw
-    // compare re-appends every existing file as "fresh"
-    def norm(p: String) = graft.layout.ZoneMap.canonical(p)
-    val known = before.files.map(f => norm(f.path)).toSet
-    InvertedIndex.postings(batch, idCol, textCol)
-      .repartitionByRange(batchFiles, col("term"))
-      .sortWithinPartitions(col("term"))
-      .write.mode("append").parquet(pdir)
-    val fs = new org.apache.hadoop.fs.Path(pdir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fresh = fs.listStatus(new org.apache.hadoop.fs.Path(pdir))
-      .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-      .map(_.toString).filterNot(p => known(norm(p)))
-    // an empty batch (or a writer emitting zero files for empty
-    // partitions) appends nothing: reading zero parquet paths throws
-    // UNABLE_TO_INFER_SCHEMA and would abort mid-add with the manifest
-    // and doclen out of step — skip the whole update instead
-    if (fresh.nonEmpty) {
-      val entries = graft.layout.ZoneMap.collectStatsDf(
-        spark.read.parquet(fresh.toIndexedSeq: _*), before.statsCols)
+    val written = graft.layout.StagedRewrite.writeAndMove(spark, pdir,
+      s"$pdir.add_tmp",
+      InvertedIndex.postings(batch, idCol, textCol)
+        .repartitionByRange(batchFiles, col("term"))
+        .sortWithinPartitions(col("term")),
+      Nil, before.statsCols)
+    // an empty batch appends no file: skip the whole update, or the
+    // manifest and doclen would fall out of step
+    if (written.nonEmpty) {
       // writeCas (round-19 OCC): appends rebase trivially, but a racing
       // optimize() rewrites the whole postings set - fail loudly instead
-      graft.layout.ZoneMap.writeCas(pdir,
-        before.copy(files = before.files ++ entries))
+      try graft.layout.ZoneMap.writeCas(pdir,
+        before.copy(files = before.files ++ written.map(_.entry)))
+      finally graft.layout.StagedRewrite.release(written)
+      spark.catalog.refreshByPath(pdir)
       InvertedIndex.docLengths(batch, idCol, textCol)
         .write.mode("append").parquet(s"$dir/doclen")
     }

@@ -133,9 +133,33 @@ object Calibration {
   // cross-host-suspect signal, with a `refs_disagree` flag when they
   // sit >10 % from the self-derived refs.
 
-  /** One history entry: a sweep's quiet-end probe seconds. */
+  /** One history entry: a sweep's quiet-end probe seconds and the
+    * [[hostFingerprint]] of the host that measured them (None on entries
+    * written before entries carried one).
+    */
   case class QuietEnd(epochSec: Long, sfDir: String,
-      cpuSec: Double, scanSec: Double, jobsSec: Double)
+      cpuSec: Double, scanSec: Double, jobsSec: Double,
+      host: Option[String] = None)
+
+  /** The host as the probes see it: processor count (`nproc`), CPU model
+    * and the sweep's `SPARK_GRAFT_CPUS`. Probe seconds are comparable
+    * only between runs with the same fingerprint — a 4-core run read
+    * drift 7.0 against refs a larger host wrote.
+    */
+  def hostFingerprint(): String = {
+    val model =
+      try {
+        import scala.jdk.CollectionConverters._
+        java.nio.file.Files.readAllLines(java.nio.file.Paths.get("/proc/cpuinfo"))
+          .asScala.find(_.startsWith("model name")).map(_.split(":", 2)(1).trim)
+          .getOrElse("?")
+      } catch { case scala.util.control.NonFatal(_) => "?" }
+    s"nproc=${Runtime.getRuntime.availableProcessors()};cpu=$model;" +
+      s"graft_cpus=${sys.env.getOrElse("SPARK_GRAFT_CPUS", "")}"
+  }
+
+  /** The sf of a data dir, by basename ("/x/sf0.1/" -> "sf0.1"). */
+  def sfBase(p: String): String = new java.io.File(p.replaceAll("/+$", "")).getName
 
   /** Self-derived reference seconds (rolling quiet-window minima). */
   case class SelfRefs(cpu: Double, scan: Double, jobs: Double, nHistory: Int)
@@ -171,6 +195,16 @@ object Calibration {
       minPos(history.map(_.jobsSec) :+ cur._3),
       history.length)
   }
+
+  /** Refs for a run at `sfDir` on `host`: [[repin]] over the history
+    * entries of the same sf and the same fingerprint, plus `cur`. Entries
+    * of other hosts and fingerprint-less entries are skipped inside
+    * [[loadHistory]] (before its window), never deleted.
+    */
+  def sameHostRefs(path: java.nio.file.Path, sfDir: String, host: String,
+      cur: (Double, Double, Double)): SelfRefs =
+    repin(loadHistory(path,
+      e => sfBase(e.sfDir) == sfBase(sfDir) && e.host.contains(host)), cur)
 
   /** The drift factor, vs ARBITRARY refs: the worse of the mean cpu
     * ratio (bulk-throughput drift, the r15 signature) and the mean

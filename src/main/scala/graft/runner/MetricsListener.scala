@@ -7,7 +7,8 @@ import org.apache.spark.scheduler._
   *
   *  - per job group, the task-payload sums the event-log parser
   *    ([[EventLogMetrics]]) reads from a finished log — the same record
-  *    type, so a live-vs-parsed gate is one `==`. This replaces the
+  *    type, so a live-vs-parsed gate is one `==` — and the group's job
+  *    count. This replaces the
   *    reference's four-source metric harvest (REST polling with task
   *    dedup, eventlog 2-pass parse, run_queries.py:251-548): no HTTP, no
   *    files, no dedup races, identical numbers;
@@ -31,6 +32,7 @@ class MetricsListener extends SparkListener {
 
   private val stageToGroup = scala.collection.mutable.Map.empty[Int, String]
   private val groups = scala.collection.mutable.Map.empty[String, GroupMetrics]
+  private val groupJobs = scala.collection.mutable.Map.empty[String, Long]
   private var total = Snapshot()
 
   override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -39,6 +41,7 @@ class MetricsListener extends SparkListener {
       .getOrElse("")
     synchronized {
       e.stageIds.foreach(stageToGroup(_) = group)
+      if (group.nonEmpty) groupJobs(group) = groupJobs.getOrElse(group, 0L) + 1
       total = total.copy(jobs = total.jobs + 1)
     }
   }
@@ -84,7 +87,12 @@ class MetricsListener extends SparkListener {
   def snapshot(group: String): GroupMetrics =
     synchronized(groups.getOrElse(group, GroupMetrics()))
 
-  def reset(group: String): Unit = synchronized(groups.remove(group))
+  /** Jobs started in one job group since its last [[reset]]. */
+  def jobs(group: String): Long = synchronized(groupJobs.getOrElse(group, 0L))
+
+  def reset(group: String): Unit = synchronized {
+    groups.remove(group); groupJobs.remove(group)
+  }
 
   /** Whole-context totals since registration; diff two with `-`. */
   def snapshot(): Snapshot = synchronized(total).copy(codegenCompiles =

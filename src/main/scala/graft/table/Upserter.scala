@@ -243,15 +243,11 @@ object Upserter {
     // under their partition subdirs when the table is hive-partitioned.
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = dir.stripSuffix("/") + ".upsert_tmp"
-    val moved = StagedRewrite.writeAndMove(
-      spark, dir, staging, arranged, manifest.hivePartitions)
-
-    // Manifest: stats for the new files only (distributed scan of just
-    // those files), untouched entries carried over.
-    val newEntries =
-      if (moved.isEmpty) Seq.empty[FileEntry]
-      else ZoneMap.collectStatsDf(
-        StagedRewrite.readFiles(spark, dir, moved, partitioned), manifest.statsCols)
+    // Manifest: the new files' entries (and blooms) come from the write
+    // itself, untouched entries carried over.
+    val written = StagedRewrite.writeAndMove(spark, dir, staging, arranged,
+      manifest.hivePartitions, manifest.statsCols, KeyIndex.bloomSpecs(dir, manifest))
+    val newEntries = written.map(_.entry)
     // commit order matches KeyedDelta (round-11 ADVICE): atomically
     // publish the manifest FIRST, delete superseded files after — a
     // crash in between leaves orphan old files a manifest-driven reader
@@ -303,15 +299,15 @@ object Upserter {
         // abort cleanly: OUR moved-but-uncommitted part files come back
         // out of the table dir (they are ours alone — part names are
         // uuid-unique), so the loser leaves no orphans at all
-        moved.foreach(p => fs.delete(new Path(new java.net.URI(p)), false))
+        StagedRewrite.deleteFiles(fs, newEntries)
         spark.catalog.refreshByPath(dir)
         throw e
-    } finally StagedRewrite.release(moved)
+    } finally StagedRewrite.release(written)
     StagedRewrite.deleteFiles(fs, affected)
     spark.catalog.refreshByPath(dir)
     // index maintenance AFTER the commit: a crash in between leaves
     // the new files unindexed, which the lookup treats as affected
-    KeyIndex.updateAll(spark, dir, affected.map(_.path), newEntries)
+    KeyIndex.updateAll(spark, dir, affected.map(_.path), written)
     if (!autoRecluster) UpsertResult(updated, reclustered = false)
     else Compactor.maybeRecluster(spark, dir,
         targetFileBytes = targetFileBytes) match {

@@ -80,4 +80,22 @@ object Bridge {
       .lookupCachedData(cs, df.queryExecution.analyzed)
       .map(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers.id)
   }
+
+  /** `cols` analyzed against a relation of `schema` and bound to its
+    * ordinals: expressions a task can evaluate on that schema's rows
+    * (functions resolved, casts carrying the session time zone). No job
+    * runs; the relation is empty.
+    */
+  def boundExprs(s: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      cols: Seq[Column]): Seq[Expression] = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences}
+    val rel = org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema))
+    val plan = ofRows(s, rel).select(cols: _*).queryExecution.analyzed
+    plan.expressions.map { e =>
+      val inner = e match { case a: Alias => a.child; case x => x }
+      BindReferences.bindReference(inner, rel.output)
+    }
+  }
 }

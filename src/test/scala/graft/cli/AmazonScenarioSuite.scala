@@ -75,7 +75,7 @@ class AmazonScenarioSuite extends SparkTestBase {
         .coalesce(1).write.mode("append").parquet(dir)
     }
     ZoneMap.write(dir, TableManifest("baseline", Nil, 0, Seq("record_timestamp"),
-      None, None, ZoneMap.collectStats(spark, dir, Seq("record_timestamp"))))
+      None, None, graft.layout.StatsReference.collectStats(spark, dir, Seq("record_timestamp"))))
     SfcTable.open(spark, dir).createOrReplaceTempView("amz_round_t")
     spark.read.parquet(dir).createOrReplaceTempView("amz_round_plain")
     qs.foreach { q =>

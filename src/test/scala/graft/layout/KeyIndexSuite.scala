@@ -155,6 +155,28 @@ class KeyIndexSuite extends SparkTestBase {
       s"O(table): attempts ${attempts.mkString(", ")} bytes")
   }
 
+  test("a lookup reads the sidecar with its fixed schema: exactly one job") {
+    val dir = tmpDir("graft_keyidx_onejob")
+    writeOrthogonal(dir)
+    KeyIndex.build(spark, dir)
+    val manifest = ZoneMap.read(dir)
+    val h = hashOf(4242L) // a present key: its shard is read
+    val sc = spark.sparkContext
+    val listener = new graft.runner.MetricsListener
+    sc.addSparkListener(listener)
+    val group = s"keyidx-lookup-${java.util.UUID.randomUUID()}"
+    try {
+      sc.setJobGroup(group, "one KeyIndex lookup", interruptOnCancel = false)
+      val hit =
+        try KeyIndex.affectedPaths(spark, dir, Seq(h), manifest)
+        finally sc.clearJobGroup()
+      org.apache.spark.graftbridge.SparkBridge.drainListenerBus(sc)
+      assert(hit.exists(_.nonEmpty)) // the key's shard was read
+      assert(listener.jobs(group) == 1L,
+        s"lookup ran ${listener.jobs(group)} jobs (a footer-inference job is one too many)")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("maintenance is append-only; stale rows reclaimed by amortized GC") {
     val dir = tmpDir("graft_keyidx_shard")
     writeOrthogonal(dir)
@@ -166,21 +188,31 @@ class KeyIndexSuite extends SparkTestBase {
     val stats = KeyIndex.update(spark, dir, manifest.files.take(2).map(_.path), Nil)
     assert(stats.shardsRewritten == 0 && stats.bytesRewritten == 0L && !stats.gc,
       s"removal must not rewrite the sidecar: $stats")
-    // a pure append rewrites nothing either
-    val readd = ZoneMap.collectStatsDf(
-      StagedRewrite.readFiles(spark, dir,
-        manifest.files.drop(2).take(1).map(_.path), partitioned = false),
-      manifest.statsCols)
+    // a pure append rewrites nothing either: re-adding a live file with
+    // its recorded bloom appends one (duplicate) row and touches no shard
+    def sidecarRows(): Long = spark.read.parquet(KeyIndex.path(dir).toString).count()
+    val rows0 = sidecarRows()
+    assert(rows0 == manifest.files.length.toLong,
+      s"precondition: one sidecar row per live file, got $rows0")
+    val readdDf = StagedRewrite.readFiles(spark, dir,
+      manifest.files.drop(2).take(1).map(_.path), partitioned = false)
+    val readd = StatsReference.collectStatsDf(readdDf, manifest.statsCols).map { e =>
+      val hashes = readdDf.select(KeyIndex.keyHashCol(Seq("k"))).collect().map(_.getLong(0))
+      StatsWriter.WrittenFile(e,
+        Map(KeyIndex.DirName -> KeyIndex.bloomOf(hashes.iterator, e.rows)))
+    }
     val stats2 = KeyIndex.update(spark, dir, Nil, readd)
     assert(stats2.shardsRewritten == 0 && stats2.bytesRewritten == 0L,
       s"append-only update must rewrite nothing: $stats2")
+    assert(sidecarRows() == rows0 + 1,
+      s"the recorded bloom must be appended as one row: ${sidecarRows()} vs $rows0")
     // stale accumulation beyond max(64, files/2) triggers the GC sweep
     val fakeRemovals = (1 to 70).map(i => s"file:/nonexistent/part-$i.parquet")
     val stats3 = KeyIndex.update(spark, dir, fakeRemovals, Nil)
     assert(stats3.gc && stats3.shardsRewritten > 0,
       s"stale overflow must trigger GC: $stats3")
-    // GC kept only live-manifest rows; lookups still scope correctly
-    val rows = spark.read.parquet(KeyIndex.path(dir).toString).count()
+    // GC kept only live-manifest rows, dropping the re-added duplicate
+    val rows = sidecarRows()
     assert(rows == ZoneMap.read(dir).files.length.toLong,
       s"GC must keep exactly the live rows, got $rows")
   }
@@ -471,11 +503,12 @@ class KeyIndexSuite extends SparkTestBase {
       new java.io.File(new java.net.URI(manifest.files.head.path)).getParentFile,
       "part-fresh777.parquet")
     java.nio.file.Files.copy(part.toPath, dest.toPath)
-    val entries = ZoneMap.collectStatsDf(
+    val entries = StatsReference.collectStatsDf(
       spark.read.parquet(dest.toString), manifest.statsCols)
     ZoneMap.write(dir, ZoneMap.read(dir).copy(
       files = ZoneMap.read(dir).files ++ entries))
-    KeyIndex.update(spark, dir, Nil, entries) // appends the row, no refresh
+    // appends the row (a bloom-less add is bloomed by scan), no refresh
+    KeyIndex.update(spark, dir, Nil, entries.map(StatsWriter.WrittenFile(_)))
     val m2 = ZoneMap.read(dir)
     val freshHit = KeyIndex.affectedPaths(spark, dir,
       Seq(hashOf(777777L)), m2).get

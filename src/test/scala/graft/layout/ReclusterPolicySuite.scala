@@ -57,7 +57,7 @@ class ReclusterPolicySuite extends SparkTestBase {
     val m0 = ZoneMap.read(dir)
     df.repartition(6).write.mode("overwrite").parquet(dir)
     ZoneMap.write(dir, m0.copy(files =
-      ZoneMap.collectStats(spark, dir, m0.statsCols)))
+      StatsReference.collectStats(spark, dir, m0.statsCols)))
     val smeared = Compactor.clusteringHealth(ZoneMap.read(dir)).get
     assert(smeared > 0.9, s"fully smeared table scored $smeared")
   }
@@ -83,7 +83,7 @@ class ReclusterPolicySuite extends SparkTestBase {
     val m0 = ZoneMap.read(dir)
     spark.read.parquet(dir).repartition(6).write.mode("overwrite").parquet(dir)
     ZoneMap.write(dir, m0.copy(files =
-      ZoneMap.collectStats(spark, dir, m0.statsCols)))
+      StatsReference.collectStats(spark, dir, m0.statsCols)))
     val smeared = Compactor.clusteringHealth(ZoneMap.read(dir)).get
     assert(smeared > 0.9, s"smeared string table scored $smeared")
     // deep-common-prefix pools: the shared StringCode strips the global
@@ -103,7 +103,7 @@ class ReclusterPolicySuite extends SparkTestBase {
     val m2 = ZoneMap.read(dir2)
     spark.read.parquet(dir2).repartition(6).write.mode("overwrite").parquet(dir2)
     ZoneMap.write(dir2, m2.copy(files =
-      ZoneMap.collectStats(spark, dir2, m2.statsCols)))
+      StatsReference.collectStats(spark, dir2, m2.statsCols)))
     val deepSmeared = Compactor.clusteringHealth(ZoneMap.read(dir2)).get
     assert(deepSmeared > 0.9, s"smeared deep-prefix table scored $deepSmeared")
   }

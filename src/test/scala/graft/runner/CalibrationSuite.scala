@@ -101,4 +101,44 @@ class CalibrationSuite extends AnyFunSuite {
       appendHistory(p, QuietEnd(i.toLong, "/data/sf0.1", 0.41, 0.17, 0.71))
     assert(loadHistory(p, e => sfBase(e) == "sf0.1").length == HistoryKeep)
   }
+
+  test("a mixed-host history repins from same-host minima only") {
+    val p = java.nio.file.Files.createTempDirectory("graft_cal")
+      .resolve("hist.jsonl")
+    val here = "nproc=4;cpu=Some CPU;graft_cpus=4"
+    val big = "nproc=32;cpu=Other CPU;graft_cpus=32"
+    // the larger host's probes are faster: a mixed minimum would read
+    // every 4-core run as drifted (the 7.0 the fingerprint exists for)
+    appendHistory(p, QuietEnd(1L, "/data/sf0.1", 0.27, 0.09, 0.55, Some(big)))
+    appendHistory(p, QuietEnd(2L, "/data/sf0.1", 1.70, 0.40, 0.95, Some(here)))
+    appendHistory(p, QuietEnd(3L, "/data/sf0.1", 0.20, 0.08, 0.50)) // legacy
+    appendHistory(p, QuietEnd(4L, "/data/sf0.1", 1.60, 0.45, 0.90, Some(here)))
+    appendHistory(p, QuietEnd(5L, "/data/sf0.01", 1.00, 0.10, 0.80, Some(here)))
+    val refs = sameHostRefs(p, "/other/sf0.1/", here, (1.66, 0.42, 0.93))
+    assert(refs == SelfRefs(1.60, 0.40, 0.90, 2))
+    // the other host's entries are kept on disk, only skipped
+    assert(java.nio.file.Files.readAllLines(p).size == 5)
+    assert(sameHostRefs(p, "/data/sf0.1", big, (0.3, 0.1, 0.6)) ==
+      SelfRefs(0.27, 0.09, 0.55, 1))
+  }
+
+  test("a history of legacy entries only: the run is its own reference") {
+    val p = java.nio.file.Files.createTempDirectory("graft_cal")
+      .resolve("hist.jsonl")
+    // the committed file's shape: no host field
+    java.nio.file.Files.write(p, java.util.Arrays.asList(
+      """{"epochSec":1786833667,"sfDir":"/root/testdata/sf0.1","cpuSec":0.266479126,"scanSec":0.096638238,"jobsSec":0.622403357}""",
+      """{"epochSec":1786833866,"sfDir":"/root/testdata/sf0.1","cpuSec":0.253675408,"scanSec":0.085977296,"jobsSec":0.539575735}"""))
+    assert(loadHistory(p).map(_.host) == Seq(None, None))
+    val refs = sameHostRefs(p, "/root/testdata/sf0.1", hostFingerprint(),
+      (1.66, 0.40, 0.95))
+    assert(refs == SelfRefs(1.66, 0.40, 0.95, 0))
+  }
+
+  test("hostFingerprint names processors, CPU model and SPARK_GRAFT_CPUS") {
+    val f = hostFingerprint()
+    assert(f.startsWith(s"nproc=${Runtime.getRuntime.availableProcessors()};cpu="))
+    assert(f.endsWith(s";graft_cpus=${sys.env.getOrElse("SPARK_GRAFT_CPUS", "")}"))
+    assert(f == hostFingerprint())
+  }
 }
