@@ -54,6 +54,24 @@ object Curate {
   val StoreCompactFactor = 4
   val StoreTargetFileBytes: Long = 32L * 1024 * 1024
 
+  /** Rows per file of the doc-keyed stores (docs, components, fold
+    * appends) and of the corpus: ~32 MB of parquet, so a 10B-doc store
+    * stays at ~5k files.
+    */
+  val StoreRowsPerFile: Double = 2e6
+
+  private def storeFiles(rows: Long): Int =
+    math.max(1, math.ceil(rows / StoreRowsPerFile).toInt)
+
+  /** [[storeFiles]] for a frame of about the state docs store's rows,
+    * read from its manifest (no job).
+    */
+  private def stateStoreFiles(outDir: String): Int = {
+    val d = s"$outDir/state/docs"
+    storeFiles(
+      if (graft.layout.ZoneMap.exists(d)) graft.layout.ZoneMap.read(d).totalRows else 0L)
+  }
+
   /** Trigger floor: compact no earlier than this many files (test hook:
     * `-Dgraft.curate.compactFloor=N` lets suites exercise the trigger
     * without 16 folds of setup).
@@ -103,7 +121,7 @@ object Curate {
       graft.layout.LayoutWriter.write(
         state.drop("component"), s"$outDir/state/docs",
         graft.layout.LayoutWriter.LayoutSpec("linear", Seq("doc_id"),
-          numFiles = Some(math.max(1, math.ceil(nState / 2e6).toInt)),
+          numFiles = Some(storeFiles(nState)),
           recordKey = Some("doc_id")))
       // secondary bloom index over the exact-dedup content hash: __h is
       // a random md5, so NO zone/range structure can scope the per-fold
@@ -114,12 +132,11 @@ object Curate {
       // mutate the mapping with a file-scoped KeyedDelta instead of a
       // corpus-sized rewrite — tight doc_id zones (linear layout) make
       // the delete-by-key touch only the files holding changed labels.
-      // ~2M rows per file ≈ 32 MB: a 10B-doc store stays at ~5k files.
       graft.layout.LayoutWriter.write(
         state.select(col("doc_id"), col("component")),
         s"$outDir/state/components",
         graft.layout.LayoutWriter.LayoutSpec("linear", Seq("doc_id"),
-          numFiles = Some(math.max(1, math.ceil(nState / 2e6).toInt)),
+          numFiles = Some(storeFiles(nState)),
           recordKey = Some("doc_id")))
       // persisted bucket postings (round-11 VERDICT "Next #5"): the
       // state's band rows (both families, one store), bh-sorted with a
@@ -325,7 +342,7 @@ object Curate {
       // (no kept-count hint) keeps natural partitioning — compaction
       // bin-packs either way. ~2M rows/file matches the build layout.
       val appendFiles: Option[Int] =
-        prep.nHint.map(n => math.max(1, math.ceil(n / 2e6).toInt))
+        prep.nHint.map(storeFiles)
       val postingsAppendFiles: Option[Int] =
         prep.nHint.map(n => math.max(1, math.ceil(
           n * graft.queries.IncrementalCuration.BandRowsPerDoc / 262144.0).toInt))
@@ -425,7 +442,7 @@ object Curate {
           val tmpManifest = graft.layout.LayoutWriter.write(
             comps.select(col("doc_id"), col("component")), newPath.toString,
             graft.layout.LayoutWriter.LayoutSpec("linear", Seq("doc_id"),
-              recordKey = Some("doc_id")))
+              numFiles = Some(stateStoreFiles(outDir)), recordKey = Some("doc_id")))
           System.err.println(f"[curate.add]   fullrelabel/store_write " +
             f"${(System.nanoTime() - tfr0) / 1e9}%.2fs")
           val tfr1 = System.nanoTime()
@@ -578,6 +595,7 @@ object Curate {
           s"$outDir/docs",
           graft.layout.LayoutWriter.LayoutSpec(
             layout = "linear", cols = Seq("doc_id"),
+            numFiles = Some(stateStoreFiles(outDir)),
             recordKey = Some("doc_id"), partitionBy = Seq("split")))
     }
     writeSummary(spark, outDir)

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * the WholeStageCodegen span, unlike a Scala UDF which breaks it).
   *
   * Children are pre-normalized integer coordinates in [0, 2^bits); use
-  * [[CurveExpressions.normalizedCol]] to build them from raw columns.
+  * [[CurveExpressions.rankNormalizedCol]] to build them from raw columns.
   */
 abstract class CurveExpr extends Expression {
   def bits: Int
@@ -133,27 +133,9 @@ object CurveExpressions {
   def hilbertvalue(bits: Int, coords: Column*): Column =
     Bridge.column(HilbertValueExpr(coords.map(Bridge.expression), bits))
 
-  /** Normalize a raw column to a curve coordinate in [0, 2^bits) given its
-    * domain [min, max]. Numeric/date/timestamp columns all cast to double
-    * first (dates → days, timestamps → seconds since epoch). Nulls map to 0
-    * (cluster together at the curve origin).
-    */
-  def normalizedCol(c: Column, min: Double, max: Double, bits: Int): Column = {
-    val buckets = (1L << bits).toDouble
-    val asD = c.cast("double")
-    val span = max - min
-    val scaled =
-      if (span <= 0) lit(0L)
-      else least(
-        lit((1L << bits) - 1),
-        greatest(lit(0L),
-          floor((asD - lit(min)) / lit(span) * lit(buckets)).cast("long")))
-    coalesce(scaled, lit(0L))
-  }
-
   /** Raw equi-depth bucket index (count of cuts <= value, in
     * [0, cuts.length]) of a DOUBLE column — `cuts` must be sorted
-    * distinct. Monotone in the input, so range-partitioning on it
+    * distinct. Monotone in the input, so routing rows by it
     * reproduces the cut boundaries exactly.
     */
   def bucketIndexCol(c: Column, cuts: Array[Double]): Column =
@@ -162,7 +144,7 @@ object CurveExpressions {
   /** Rank-normalized curve coordinate: equi-depth bucket index against
     * `cuts` (sorted distinct quantile boundaries), spread over the full
     * [0, 2^bits) domain so distinct-poor columns keep their interleave
-    * weight. Nulls map to the curve origin like [[normalizedCol]].
+    * weight. Nulls map to 0, the curve origin.
     */
   def rankNormalizedCol(c: Column, cuts: Array[Double], bits: Int): Column = {
     val idx = Bridge.column(BucketIndexExpr(Bridge.expression(c), cuts))

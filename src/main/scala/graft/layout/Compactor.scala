@@ -188,15 +188,19 @@ object Compactor {
     // a previous compact's crash leftovers, before re-reading
     heal(dir, spark.sparkContext.hadoopConfiguration)
     val manifest = ZoneMap.read(dir)
-    // compact reads the whole dir, so orphans from a crashed prior
-    // mutation would be folded into the rewrite as duplicate rows —
-    // reconcile first (round-12 ADVICE), mirroring Upserter/KeyedDelta.
+    // compact swaps the whole dir, so orphans from a crashed prior
+    // mutation are purged first (round-12 ADVICE), mirroring
+    // Upserter/KeyedDelta.
     StagedRewrite.reconcile(spark, dir, manifest)
     // capture index columns BEFORE the rewrite — the sidecar metas die
     // with the superseded files' dir
     val sidecars = KeyIndex.sidecarNames(dir)
       .flatMap(n => KeyIndex.indexColsOf(dir, n).map(n -> _))
-    val df = spark.read.parquet(dir)
+    // the manifest's files in manifest order, not a dir listing (whose
+    // order follows the part names' uuids): the cut's input, and so the
+    // order of rows that tie on the layout key, repeats
+    val df = StagedRewrite.readFiles(spark, dir, manifest.files.map(_.path),
+      manifest.hivePartitions.nonEmpty)
 
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val totalBytes = fs.getContentSummary(new Path(dir)).getLength
@@ -275,13 +279,8 @@ object Compactor {
       math.ceil(affectedBytes.toDouble / targetFileBytes).toInt)
 
     val df0 = StagedRewrite.readFiles(spark, dir, affected.map(_.path), partitioned)
-    val keys =
-      if (manifest.layoutCols.isEmpty) Nil
-      else LayoutWriter.curveKeyOrCols(
-        df0, manifest.layoutCols, manifest.bits, manifest.layout)
-    val arranged =
-      if (keys.isEmpty) df0.repartition(numFiles)
-      else df0.repartitionByRange(numFiles, keys: _*).sortWithinPartitions(keys: _*)
+    val arranged = LayoutWriter.cut(
+      df0, manifest.layout, manifest.layoutCols, manifest.bits, numFiles).rows
     val staging = dir.stripSuffix("/") + ".compactw_tmp"
     val written = StagedRewrite.writeAndMove(spark, dir, staging, arranged,
       manifest.hivePartitions, manifest.statsCols, KeyIndex.bloomSpecs(dir, manifest))

@@ -13,19 +13,19 @@ import graft.curve.{Curves, CurveExpressions}
   * Layouts:
   *  - `baseline`: write as-loaded (delta_write_layout.py:107,253)
   *  - `linear`:   sortWithinPartitions on the layout columns across
-  *                deterministic quantile-cut files (delta_write_layout
-  *                .py:165-181); the cuts come from the concatenated
-  *                per-column codes, not sampled range bounds, so the
-  *                build is reproducible (see the "linear" case below)
-  *  - `zorder`:   Morton curve key; repartitionByRange + sort on the key
-  *                (delegated in the reference: delta OPTIMIZE ZORDER BY)
+  *                quantile-cut files (delta_write_layout.py:165-181)
+  *  - `zorder`:   Morton curve key (delegated in the reference: delta
+  *                OPTIMIZE ZORDER BY)
   *  - `hilbert`:  Hilbert curve key (Hudi-only in the reference)
   *
-  * The curve key is a codegen'd Catalyst expression over normalized
+  * Every sized write, upsert rewrite and scoped compaction cuts rows
+  * into files through one function, [[cut]]: a key (the curve key, or
+  * linear's concatenated per-column codes), cuts at its quantiles, a
+  * bucket id per row, and `repartitionById` routing bucket p to file
+  * p. The cuts depend only on the rows, never on the session's job
+  * history, so the same spec over the same input writes the same files.
+  * The curve key is a codegen'd Catalyst expression over rank-normalized
   * coordinates, so the pre-write sort stays inside whole-stage codegen.
-  * Range-partitioning by the key gives near-global curve order with
-  * bounded per-task memory — the multi-executor-safe equivalent of a
-  * global sort, which is exactly how the engines implement clustering.
   */
 object LayoutWriter {
 
@@ -33,11 +33,12 @@ object LayoutWriter {
       layout: String, // baseline | linear | zorder | hilbert
       cols: Seq[String] = Nil,
       bits: Option[Int] = None,
-      numFiles: Option[Int] = None, // None → leave input partitioning
+      // files to cut the rows into; required by every layout but
+      // baseline, where None keeps the input partitioning
+      numFiles: Option[Int] = None,
       recordKey: Option[String] = None,
       precombineCol: Option[String] = None,
       partitionBy: Seq[String] = Nil, // hive-style partition dirs (S3/P8)
-      norm: String = "rank", // curve coordinate normalization: rank | minmax
       // composite record key (reference ComplexKeyGenerator,
       // tpch_all_loader.py:141-148); wins over `recordKey` when nonEmpty
       recordKeys: Seq[String] = Nil,
@@ -64,110 +65,17 @@ object LayoutWriter {
     require(
       Seq("baseline", "linear", "zorder", "hilbert").contains(spec.layout),
       s"unknown layout ${spec.layout}")
+    if (spec.layout != "baseline") {
+      require(spec.cols.nonEmpty, s"${spec.layout} layout needs layout columns")
+      require(spec.numFiles.isDefined, s"${spec.layout} layout needs numFiles")
+    }
     val missing = spec.cols.filterNot(df.columns.contains)
     require(missing.isEmpty, s"layout columns not in schema: $missing")
 
     val bits = spec.bits.getOrElse(Curves.bitsFor(spec.cols.length))
-    // string common-prefix offsets the curve key stripped — recorded in
-    // the manifest below (advisor/observability; the health metric
-    // re-derives its own skip from the manifest's global min/max so it
-    // stays sound across appends that widen the prefix pool)
-    var strOffsets = Map.empty[String, Int]
-    // curve key expression, captured for the post-write byte-balance
-    // pass (the Column is built from unresolved col() refs + literal
-    // normalization state, so it re-applies to a re-read of the
-    // written files unchanged)
-    var balanceKey: Option[Column] = None
-    val arranged = spec.layout match {
-      case "baseline" =>
-        spec.numFiles.map(df.repartition).getOrElse(df)
-      case "linear" =>
-        val cs = spec.cols.map(col)
-        spec.numFiles match {
-          case Some(n) if n > 1 && spec.cols.nonEmpty =>
-            // Deterministic file cuts, same machinery as the curves: a
-            // bare repartitionByRange(cs) samples range bounds with a
-            // seed derived from the shuffle RDD's id (RangePartitioner.
-            // sketch — session-history-dependent), so two builds of the
-            // SAME spec land file boundaries differently and the layout
-            // isn't reproducible (the per-arm sf64 schedule diverged
-            // from the interleaved one on exactly this). Instead:
-            // concatenate the per-column codes into a lexicographic key
-            // (linear IS the k=1-interleave degenerate curve), place
-            // cuts at its quantiles, and range-partition on the bucket
-            // id alone — equal buckets never split across files, and
-            // contiguous key ranges are contiguous lexicographic ranges,
-            // so arbitrary cuts need no quadrant snapping (hilbert's
-            // property, not zorder's). Rows still sort by the RAW
-            // columns within each file; manifest min/max come from file
-            // contents, so quantization fuzz at bucket edges cannot
-            // affect pruning soundness.
-            val bLin = math.min(bits, 52 / spec.cols.length)
-            val (key, offs) =
-              curveKeyAndOffsets(df, spec.cols, bLin, "linear", spec.norm)
-            strOffsets = offs
-            val keyed = df.withColumn("__graft_ck", key)
-            val probes = (1 until n).map(_.toDouble / n).toArray
-            val cuts = keyed.select(col("__graft_ck").cast("double").as("__d"))
-              .stat.approxQuantile("__d", probes, 1.0 / (8 * n))
-              .distinct.sorted
-            val fid = CurveExpressions
-              .bucketIndexCol(col("__graft_ck").cast("double"), cuts)
-            exactPartition(keyed, fid, cuts.length + 1)
-              .sortWithinPartitions(cs: _*)
-              .drop("__graft_ck")
-          case Some(n) if n > 1 =>
-            df.repartitionByRange(n, cs: _*).sortWithinPartitions(cs: _*)
-          case _ =>
-            val parted = spec.numFiles
-              .map(nf => df.repartitionByRange(nf, cs: _*))
-              .getOrElse(df.repartitionByRange(cs: _*))
-            parted.sortWithinPartitions(cs: _*)
-        }
-      case curve @ ("zorder" | "hilbert") =>
-        val (key, offs) = curveKeyAndOffsets(df, spec.cols, bits, curve, spec.norm)
-        strOffsets = offs
-        balanceKey = Some(key)
-        // Z-order with explicit file count: snap the file cuts to
-        // power-of-two-aligned z-key boundaries. Sampling-placed cuts
-        // land mid-quadrant, and a z-range that straddles a quadrant
-        // boundary JUMPS spatially — both neighboring files inherit a
-        // bounding box spanning the jump (measured ~2x pruning loss vs
-        // hilbert, results/rq1 through r7). Aligned cuts make each file
-        // a union of whole quadrants, so boxes stay tight; with rank
-        // normalization the key mass is near-uniform, so snapping barely
-        // moves the balance point. Hilbert needs none of this: its
-        // adjacent cells are spatially adjacent, so arbitrary cuts
-        // produce contiguous boxes already.
-        spec.numFiles match {
-          case Some(n) if n > 1 =>
-            val totalBits = bits * spec.cols.length
-            val keyed = df.withColumn("__graft_ck", key)
-            val probes = (1 until n).map(_.toDouble / n).toArray
-            val raw = keyed.select(col("__graft_ck").cast("double").as("__d"))
-              .stat.approxQuantile("__d", probes, 1.0 / (8 * n))
-              .map(_.toLong)
-            val cuts = snapCuts(raw, totalBits)
-            val fid = CurveExpressions
-              .bucketIndexCol(col("__graft_ck").cast("double"), cuts.map(_.toDouble))
-            // range-partition on the bucket id ALONE: equal fids can
-            // never split across files, so every file is a union of
-            // whole aligned buckets. (Adding the key as a secondary
-            // range column was measured to WRECK this — the sampler
-            // then places bounds mid-quadrant and neighboring files
-            // span z-jumps again, 32x -> 10x files-ratio at S1.) A
-            // snapped bucket with no data between its cuts merges into
-            // a neighbor file — the written file count can fall 1-2
-            // short of the target; balance holds because raw cuts are
-            // data quantiles, so a merged file carries <= 2x target mass.
-            keyed.repartitionByRange(n, fid)
-              .sortWithinPartitions(col("__graft_ck"))
-              .drop("__graft_ck")
-          case Some(n) =>
-            df.repartitionByRange(n, key).sortWithinPartitions(key)
-          case None =>
-            df.repartitionByRange(key).sortWithinPartitions(key)
-        }
+    val arranged = spec.numFiles match {
+      case Some(n) => cut(df, spec.layout, spec.cols, bits, n)
+      case None => Cut(df, None, Map.empty)
     }
     // Partition columns live in dir paths, not files, but come back as
     // regular columns on read, so the manifest keeps their ranges and
@@ -177,7 +85,7 @@ object LayoutWriter {
     val keyCols = spec.keyCols
     val statsCols =
       (spec.cols ++ spec.partitionBy ++ keyCols ++ extraStatsCols).distinct
-    val written = StatsWriter.write(arranged, dir, spec.partitionBy, statsCols)
+    val written = StatsWriter.write(arranged.rows, dir, spec.partitionBy, statsCols)
 
     // Byte-balance pass (round-18, RQ6 sf10 straggler class): the cuts
     // above equalize ROWS per file, but curve-sorted data compresses
@@ -186,12 +94,13 @@ object LayoutWriter {
     // straggle. Split oversized files at snapped curve cuts / merge
     // runs of adjacent undersized files until sizes sit in a tight
     // band. No-op when the write came out balanced.
-    val files =
-      if (spec.byteBalance && balanceKey.isDefined &&
-          spec.numFiles.forall(_ > 1) && bits * spec.cols.length <= 52)
-        byteBalancePass(spark, dir, balanceKey.get, bits * spec.cols.length,
+    val files = arranged.curveKey match {
+      case Some(key) if spec.byteBalance && spec.numFiles.exists(_ > 1) &&
+          bits * spec.cols.length <= 52 =>
+        byteBalancePass(spark, dir, key, bits * spec.cols.length,
           spec.partitionBy, statsCols, written)
-      else written
+      case _ => written
+    }
     val manifest = TableManifest(
       layout = spec.layout,
       layoutCols = spec.cols,
@@ -205,87 +114,114 @@ object LayoutWriter {
       files = StatsWriter.entries(spark, dir, files, spec.partitionBy, statsCols)
         .map(_.entry),
       partitionCols = if (spec.partitionBy.nonEmpty) Some(spec.partitionBy) else None,
-      strOffsets = if (strOffsets.exists(_._2 > 0)) Some(strOffsets) else None)
+      // string common-prefix offsets the key stripped (advisor and
+      // observability; the health metric re-derives its own skip from
+      // the manifest's global min/max so it stays sound across appends
+      // that widen the prefix pool)
+      strOffsets =
+        if (arranged.strOffsets.exists(_._2 > 0)) Some(arranged.strOffsets) else None)
     ZoneMap.write(dir, manifest)
     manifest
   }
 
-  /** The ordering key(s) for a layout: the curve key for zorder/hilbert,
-    * the raw columns for linear, nothing for baseline.
+  /** Rows arranged into files by [[cut]]: `rows` is ready for the
+    * parquet writer; `curveKey` is the curve key of a zorder/hilbert cut
+    * (built from unresolved col() refs + literal normalization state, so
+    * the byte-balance pass re-applies it to a re-read of the written
+    * files); `strOffsets` are the string prefix offsets the key stripped.
     */
-  def curveKeyOrCols(
-      df: DataFrame, cols: Seq[String], bits: Int, layout: String,
-      norm: String = "rank"): Seq[Column] =
-    layout match {
-      case "zorder" | "hilbert" => Seq(curveKey(df, cols, bits, layout, norm))
-      case "linear" => cols.map(col)
-      case _ => Nil
-    }
+  private[graft] case class Cut(rows: DataFrame, curveKey: Option[Column],
+      strOffsets: Map[String, Int])
 
-  /** Curve-key expression: normalize each layout column to [0, 2^bits),
-    * then interleave. Null coordinates sort to the curve origin.
+  /** The one path from a layout to files: cut `df` into `n` files of
+    * contiguous key ranges, rows sorted within each.
     *
-    * `norm = "rank"` (default): equi-depth quantile buckets (one
-    * approxQuantile pass over all layout columns at write time; the
-    * production z-order approach — Delta's OPTIMIZE ZORDER partitions
-    * each column by range_partition_id for the same reason). Skewed or
-    * clustered value distributions get uniform coordinate mass, so
-    * every interleaved bit carries signal. `norm = "minmax"`: linear
-    * scaling from the global [min, max] — cheaper to compute, but a
-    * skewed column collapses onto few coordinates (SURVEY §7.3's
-    * skew-normalization risk, observed as z-order losing to linear on
-    * correlated TPC-H value columns in results/rq1-rq2 through r7).
+    *  - baseline (or no layout columns): `repartition(n)`, no sort;
+    *  - otherwise build the key — the curve key, or for linear the
+    *    per-column codes concatenated (linear IS the degenerate curve
+    *    whose interleave is per-column blocks) — take n-quantile cuts of
+    *    it, snap them to aligned boundaries for the curves
+    *    ([[snapCuts]]), and route each row's bucket id to exactly that
+    *    partition with `repartitionById`, so file part-0000p holds
+    *    bucket p and part-name order is key order. Within a file linear
+    *    sorts by the raw columns, the curves by the key. Manifest
+    *    min/max come from file contents, so quantization fuzz at bucket
+    *    edges cannot affect pruning soundness.
+    *
+    * With n = 1 there is no cut pass. An empty bucket writes no file, so
+    * duplicate or snapped-together cuts give fewer than n files.
+    * `sample`, when given, is where the key's normalization and the cuts
+    * are taken from instead of `df`: rows spanning the same keys that
+    * are cheaper to scan (cuts set file balance only, never which rows
+    * are written).
     */
-  def curveKey(df: DataFrame, cols: Seq[String], bits: Int, curve: String,
-      norm: String = "rank"): Column =
-    curveKeyAndOffsets(df, cols, bits, curve, norm)._1
+  private[graft] def cut(df: DataFrame, layout: String, cols: Seq[String],
+      bits: Int, n: Int, sample: Option[DataFrame] = None): Cut = {
+    val curve = layout == "zorder" || layout == "hilbert"
+    if (layout == "baseline" || cols.isEmpty) Cut(df.repartition(n), None, Map.empty)
+    else if (n == 1 && !curve)
+      Cut(df.repartition(1).sortWithinPartitions(cols.map(col): _*), None, Map.empty)
+    else {
+      // linear's concatenated key stays double-exact for the casts below
+      val keyBits = if (curve) bits else math.min(bits, 52 / cols.length)
+      val src = sample.getOrElse(df)
+      val (key, offs) = curveKeyAndOffsets(src, cols, keyBits, layout)
+      val rows =
+        if (n == 1) df.repartition(1).sortWithinPartitions(key)
+        else {
+          val probes = (1 until n).map(_.toDouble / n).toArray
+          val raw = src.select(key.cast(DoubleType).as("__d"))
+            .stat.approxQuantile("__d", probes, 1.0 / (8 * n))
+          val cuts =
+            if (curve) snapCuts(raw.map(_.toLong), keyBits * cols.length).map(_.toDouble)
+            else raw.distinct.sorted
+          val keyed = df.withColumn("__graft_ck", key)
+          val fid = CurveExpressions
+            .bucketIndexCol(col("__graft_ck").cast(DoubleType), cuts).cast("int")
+          keyed.repartitionById(cuts.length + 1, fid)
+            .sortWithinPartitions((if (curve) Seq(col("__graft_ck")) else cols.map(col)): _*)
+            .drop("__graft_ck")
+        }
+      Cut(rows, if (curve) Some(key) else None, offs)
+    }
+  }
 
-  /** [[curveKey]] plus the string common-prefix offsets it stripped
-    * (column → skipped code points, string layout columns only) so
-    * [[write]] can record them in the manifest for observability and
-    * the advisor.
+  /** Curve-key expression plus the string common-prefix offsets it
+    * stripped (column → skipped code points, string layout columns
+    * only). Each layout column is rank-normalized to [0, 2^bits):
+    * equi-depth quantile buckets from one approxQuantile pass over all
+    * layout columns (the production z-order approach — Delta's OPTIMIZE
+    * ZORDER partitions each column by range_partition_id for the same
+    * reason), so skewed or clustered value distributions get uniform
+    * coordinate mass and every interleaved bit carries signal. Null
+    * coordinates sort to the curve origin. `curve` is zorder, hilbert or
+    * linear (the codes concatenated, first column in the high bits).
     */
-  def curveKeyAndOffsets(df: DataFrame, cols: Seq[String], bits: Int,
-      curve: String, norm: String = "rank"): (Column, Map[String, Int]) = {
-    require(Seq("rank", "minmax").contains(norm), s"unknown curve norm $norm")
+  private[layout] def curveKeyAndOffsets(df: DataFrame, cols: Seq[String], bits: Int,
+      curve: String): (Column, Map[String, Int]) = {
     // One extra min/max aggregate, string layout columns only: the skip
     // offsets that keep deep-common-prefix id pools (ASIN "B0...",
     // tenant-prefixed UUIDs) from collapsing the curve coordinate to a
     // single value (StringCode doc; results/rq1_amazon C1deep measured
     // curves at 1x files-ratio vs linear 12x before the strip).
     val strSkips = StringCode.offsets(df, cols)
-    val norms =
-      if (norm == "rank") {
-        // one quantile pass for ALL columns; 2^10 equi-depth buckets per
-        // column is resolution far beyond any realistic file count, and
-        // duplicate cuts (hot values / low ndv) collapse harmlessly
-        val b = math.min(bits, 10)
-        val probes = (1 until (1 << b)).map(_.toDouble / (1 << b)).toArray
-        val viewNames = cols.indices.map(i => s"__cv_$i")
-        val view = df.select(cols.zip(viewNames).map { case (c, a) =>
-          doubleView(df, c, strSkips).as(a)
-        }: _*)
-        val cuts = view.stat.approxQuantile(viewNames.toArray, probes, 0.001)
-        cols.indices.map { i =>
-          val sortedCuts = cuts(i).distinct.sorted
-          CurveExpressions.rankNormalizedCol(
-            doubleView(df, cols(i), strSkips), sortedCuts, bits)
-        }
-      } else {
-        val bounds = colBounds(df, cols, strSkips)
-        cols.map { c =>
-          val (lo, hi) = bounds(c)
-          CurveExpressions.normalizedCol(doubleView(df, c, strSkips), lo, hi, bits)
-        }
-      }
+    // one quantile pass for ALL columns; 2^10 equi-depth buckets per
+    // column is resolution far beyond any realistic file count, and
+    // duplicate cuts (hot values / low ndv) collapse harmlessly
+    val b = math.min(bits, 10)
+    val probes = (1 until (1 << b)).map(_.toDouble / (1 << b)).toArray
+    val viewNames = cols.indices.map(i => s"__cv_$i")
+    val view = df.select(cols.zip(viewNames).map { case (c, a) =>
+      doubleView(df, c, strSkips).as(a)
+    }: _*)
+    val cuts = view.stat.approxQuantile(viewNames.toArray, probes, 0.001)
+    val norms = cols.indices.map { i =>
+      CurveExpressions.rankNormalizedCol(
+        doubleView(df, cols(i), strSkips), cuts(i).distinct.sorted, bits)
+    }
     val key = curve match {
       case "hilbert" => CurveExpressions.hilbertvalue(bits, norms: _*)
-      case "linear" =>
-        // lexicographic concatenation: code(0) in the high bits, ties
-        // broken by code(1), ... — linear as the degenerate curve whose
-        // "interleave" is per-column blocks (caller caps bits so the
-        // total stays double-exact for the quantile/bucket casts)
-        norms.reduceLeft((hi, lo) => hi * lit(1L << bits) + lo)
+      case "linear" => norms.reduceLeft((hi, lo) => hi * lit(1L << bits) + lo)
       case _ => CurveExpressions.zvalue(bits, norms: _*)
     }
     (key, strSkips)
@@ -311,51 +247,21 @@ object LayoutWriter {
       case dt => throw new IllegalArgumentException(s"cannot curve-order $c: $dt")
     }
 
-  /** Snap each sampled z-key cut to the COARSEST power-of-two boundary
-    * that stays within its slack window (half the gap to each neighbor
-    * cut, so rough balance is preserved). Coarser alignment = whole
-    * quadrants at a higher level = tighter per-file bounding boxes.
+  /** Snap each quantile curve-key cut to the COARSEST power-of-two
+    * boundary that stays within its slack window (half the gap to each
+    * neighbor cut, so rough balance is preserved). Coarser alignment =
+    * whole quadrants at a higher level = tighter per-file bounding boxes:
+    * a z-range that straddles a quadrant boundary JUMPS spatially, and
+    * both neighboring files inherit a box spanning the jump (measured
+    * ~2x pruning loss vs hilbert, results/rq1 through r7). [[cut]] snaps
+    * both curves; linear cuts stay raw (contiguous lexicographic ranges
+    * need no alignment).
     * Sequential: each window is additionally floored just above the
     * previous snapped cut, so the cut COUNT survives (file sizing is a
     * real constraint — merging cuts doubles a file). Pathological
     * integer-adjacent cuts may still collide; the final distinct only
     * fires then.
     */
-  /** Shuffle each row to EXACTLY partition `fid` (0 <= fid < n).
-    *
-    * `repartitionByRange(n, fid)` on a discrete bucket id cannot do
-    * this: RangePartitioner's boundary placement over n equal-mass
-    * values is a per-cut coin flip on its sample (buckets merge, file
-    * counts fall short), and the sample seed folds in the shuffle RDD's
-    * id, so the outcome is session-history-dependent. Instead, hash-
-    * partition on a driver-computed remap value v(p) chosen so that
-    * pmod(murmur3(v), n) == p — HashPartitioning's own routing function
-    * (functions.hash is the same Murmur3/seed-42) then sends bucket p
-    * precisely to partition p. One bounded probe job computes the remap;
-    * expected coverage is n·ln n candidates (coupon collector), batched.
-    */
-  private[layout] def exactPartition(df: DataFrame, fid: Column, n: Int): DataFrame = {
-    val spark = df.sparkSession
-    val remap = new Array[Long](n)
-    val seen = new Array[Boolean](n)
-    var found = 0
-    var from = 0L
-    while (found < n) {
-      val batch = math.max(16L * n, 1024L)
-      val probe = spark.range(from, from + batch)
-        .select(col("id"), pmod(hash(col("id")), lit(n)).as("p"))
-        .collect()
-      probe.foreach { r =>
-        val p = r.getInt(1)
-        if (!seen(p)) { seen(p) = true; remap(p) = r.getLong(0); found += 1 }
-      }
-      from += batch
-    }
-    val route = element_at(
-      array(remap.map(lit(_)).toIndexedSeq: _*), (fid + 1).cast("int"))
-    df.repartition(n, route)
-  }
-
   private[layout] def snapCuts(raw: Array[Long], totalBits: Int): Array[Long] = {
     val sorted = raw.sorted.distinct
     val domainHi = if (totalBits >= 63) Long.MaxValue else 1L << totalBits
@@ -446,7 +352,7 @@ object LayoutWriter {
 
   /** Post-write byte balancing of a curve layout (round-18): group the
     * written files per hive partition dir (curve order == part-name
-    * order: files come from one repartitionByRange job), plan
+    * order: [[cut]] routes bucket p to part p), plan
     * [[balancePlan]] groups against target = median file bytes, and
     * rewrite each group into byte-balanced pieces cut at
     * [[snapCuts]]-aligned curve boundaries (interior cuts from one
@@ -576,14 +482,21 @@ object LayoutWriter {
       .sortWithinPartitions(hiveCols.map(col) ++ Seq(col("__piece"), key): _*)
     val produced = StatsWriter.write(out, staging, hiveCols :+ "__piece", statsCols)
 
-    // move pieces in (strip the __piece=N path segment, uniquify the
-    // part name with it), then drop the originals
+    // move pieces in (strip the __piece=N path segment), then drop the
+    // originals. A piece is named after its group's first file plus its
+    // index in the group, so part-name order stays curve order and no
+    // name depends on the staging write's uuid (rows outside every
+    // group, piece -1, keep the staging name)
     val moved = produced.map { p =>
       val segs = p.stats.rel.split("/")
       val pieceId = segs.find(_.startsWith("__piece="))
-        .map(_.stripPrefix("__piece=")).getOrElse("0")
+        .map(_.stripPrefix("__piece=").toLong).getOrElse(0L)
       val kept = segs.filterNot(_.startsWith("__piece="))
-      val name = kept.last.stripSuffix(".parquet") + s"-b$pieceId.parquet"
+      val g = bases.lastIndexWhere(_ <= pieceId)
+      val name =
+        if (g < 0) kept.last.stripSuffix(".parquet") + s"-b$pieceId.parquet"
+        else new Path(groups(g).paths.head).getName.stripSuffix(".parquet") +
+          f"-b${pieceId - bases(g)}%02d.parquet"
       val dst = new Path(dir, (kept.init :+ name).mkString("/"))
       fs.mkdirs(dst.getParent)
       fs.rename(p.status.getPath, dst)
@@ -637,19 +550,5 @@ object LayoutWriter {
       prev = best
     }
     out.distinct
-  }
-
-  private def colBounds(df: DataFrame, cols: Seq[String],
-      strSkips: Map[String, Int]): Map[String, (Double, Double)] = {
-    val aggs = cols.flatMap { c =>
-      val d = doubleView(df, c, strSkips)
-      Seq(min(d).as(s"__lo_$c"), max(d).as(s"__hi_$c"))
-    }
-    val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    cols.map { c =>
-      val lo = Option(r.getAs[java.lang.Double](s"__lo_$c")).map(_.doubleValue).getOrElse(0d)
-      val hi = Option(r.getAs[java.lang.Double](s"__hi_$c")).map(_.doubleValue).getOrElse(0d)
-      c -> (lo, hi)
-    }.toMap
   }
 }

@@ -62,9 +62,8 @@ object SearchIndex {
     val before = graft.layout.ZoneMap.read(pdir)
     val written = graft.layout.StagedRewrite.writeAndMove(spark, pdir,
       s"$pdir.add_tmp",
-      InvertedIndex.postings(batch, idCol, textCol)
-        .repartitionByRange(batchFiles, col("term"))
-        .sortWithinPartitions(col("term")),
+      LayoutWriter.cut(InvertedIndex.postings(batch, idCol, textCol),
+        before.layout, before.layoutCols, before.bits, batchFiles).rows,
       Nil, before.statsCols)
     // an empty batch appends no file: skip the whole update, or the
     // manifest and doclen would fall out of step

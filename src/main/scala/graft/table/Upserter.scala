@@ -55,7 +55,7 @@ object Upserter {
     * column come from the manifest.
     *
     *  - `sortRewrites`: re-run the recorded layout sort WITHIN the
-    *    rewritten file set (range-partitioned on the layout key), so a
+    *    rewritten file set (cut on the layout key like a write), so a
     *    scattered upsert degrades pruning proportionally to the bytes it
     *    touches instead of collapsing it to 1x (the RQ7 decay cliff,
     *    results/rq7_layout/). DEFAULT ON since round 14 (a no-op for
@@ -225,19 +225,14 @@ object Upserter {
         math.ceil(affectedBytes.toDouble / (32L * 1024 * 1024)).toInt)
     }
     // sorted COW: the rewritten rows re-enter the recorded layout
-    // order, so each new file's zones stay as tight as the merged
-    // key span allows ("baseline" layouts have no keys and stay on
-    // the plain path)
-    val sortKeys =
-      if (!sortRewrites || manifest.layoutCols.isEmpty) Nil
-      else LayoutWriter.curveKeyOrCols(
-        deduped, manifest.layoutCols, manifest.bits, manifest.layout)
-    val arranged =
-      if (sortKeys.isEmpty) deduped.repartition(numFiles)
-      else if (numFiles == 1)
-        deduped.repartition(1).sortWithinPartitions(sortKeys: _*)
-      else deduped.repartitionByRange(numFiles, sortKeys: _*)
-        .sortWithinPartitions(sortKeys: _*)
+    // order through the write's own cut path, so each new file's zones
+    // stay as tight as the merged key span allows ("baseline" layouts
+    // have no keys and stay on the plain path). The cuts come from the
+    // pre-dedup union: it spans the same keys, and scanning it skips
+    // re-running the dedup window's shuffle for each cut pass.
+    val arranged = LayoutWriter.cut(deduped,
+      if (sortRewrites) manifest.layout else "baseline",
+      manifest.layoutCols, manifest.bits, numFiles, sample = Some(merged)).rows
 
     // Stage the rewrite, then move the (uuid-unique) part files in —
     // under their partition subdirs when the table is hive-partitioned.

@@ -69,6 +69,18 @@ class LayoutSpecSuite extends SparkTestBase {
     }
   }
 
+  test("write rejects a non-baseline spec with no layout columns") {
+    val e = intercept[IllegalArgumentException](LayoutWriter.write(
+      data, tmpDir("graft_nocols"), LayoutSpec("linear", Nil, numFiles = Some(4))))
+    assert(e.getMessage.contains("linear layout needs layout columns"))
+  }
+
+  test("write rejects a non-baseline spec with no numFiles") {
+    val e = intercept[IllegalArgumentException](LayoutWriter.write(
+      data, tmpDir("graft_nofiles"), LayoutSpec("zorder", Seq("x", "y"))))
+    assert(e.getMessage.contains("zorder layout needs numFiles"))
+  }
+
   test("pruning soundness: pruned scan == full scan for random range queries") {
     val dir = tmpDir("graft_sound")
     LayoutWriter.write(
