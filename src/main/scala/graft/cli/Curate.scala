@@ -44,8 +44,8 @@ object Curate {
     * (round-15: the 50-batch streaming soak measured per-fold reads
     * growing with FOLD COUNT — each fold appends ~1 file per store, so
     * listings/footers grow linearly and append-era zones decay). A
-    * store is re-sorted + bin-packed (Compactor.compact: crash-safe
-    * swap, sidecars rebuilt) once its file count exceeds
+    * store is re-sorted + bin-packed (Compactor.compact: one staged
+    * commit, sidecars kept current) once its file count exceeds
     * [[StoreCompactFactor]] x its byte-ideal count. The trigger is
     * geometric, so the O(store) rewrite is paid at most once per
     * ~factor-x growth in file count: O(1) amortized per appended file,
@@ -265,20 +265,7 @@ object Curate {
     try {
       require(java.nio.file.Files.exists(java.nio.file.Paths.get(outDir, "state")),
         s"$outDir/state not found — run the full build first")
-      // crash-recovery: a FullRelabel fold that died mid-swap can leave
-      // state/components renamed away to components.old — restore it
-      // (the pre-fold mapping is always safe: the retry recomputes)
-      // a previous fold's store compaction may have crashed mid-swap —
-      // heal each store (rollback or cleanup) before any read
-      Seq(s"$outDir/state/docs", s"$outDir/state/postings",
-          s"$outDir/state/components", s"$outDir/docs")
-        .foreach(graft.layout.Compactor.heal)
-      val compPath = java.nio.file.Paths.get(outDir, "state", "components")
-      val oldPath = java.nio.file.Paths.get(outDir, "state", "components.old")
-      if (!java.nio.file.Files.exists(compPath) &&
-          java.nio.file.Files.exists(oldPath))
-        java.nio.file.Files.move(oldPath, compPath)
-      val compDir = compPath.toString
+      val compDir = s"$outDir/state/components"
       // state-format gate: folds mutate the mapping via KeyedDelta, which
       // needs the zone manifest the round-13 full build writes
       require(graft.layout.ZoneMap.exists(compDir),
@@ -433,16 +420,18 @@ object Curate {
           lines
         case FullRelabel(labels) =>
           // degenerate merge storm beyond the delta caps: whole-mapping
-          // rewrite through the components.old/.new swap (rare by
-          // construction; the common fold never takes this branch)
+          // rewrite, staged now and committed once the corpus delta
+          // below has read the old mapping (rare by construction; the
+          // common fold never takes this branch)
           val comps = graft.runner.Materialize.trackLazy(labels)
-          val newPath = java.nio.file.Paths.get(outDir, "state", "components.new")
-          if (java.nio.file.Files.exists(newPath)) Scenario.deleteRec(newPath.toFile)
+          val compBase = graft.layout.ZoneMap.read(compDir)
           val tfr0 = System.nanoTime()
-          val tmpManifest = graft.layout.LayoutWriter.write(
-            comps.select(col("doc_id"), col("component")), newPath.toString,
+          val (_, relabeled) = graft.layout.LayoutWriter.stage(
+            comps.select(col("doc_id"), col("component")),
+            graft.layout.StagedRewrite.stagingDir(compDir, "relabel"),
             graft.layout.LayoutWriter.LayoutSpec("linear", Seq("doc_id"),
-              numFiles = Some(stateStoreFiles(outDir)), recordKey = Some("doc_id")))
+              numFiles = Some(stateStoreFiles(outDir)), recordKey = Some("doc_id")),
+            Nil, graft.layout.KeyIndex.bloomSpecs(compDir, compBase))
           System.err.println(f"[curate.add]   fullrelabel/store_write " +
             f"${(System.nanoTime() - tfr0) / 1e9}%.2fs")
           val tfr1 = System.nanoTime()
@@ -487,22 +476,8 @@ object Curate {
           if (failAfterCorpusDelta)
             throw new IllegalStateException(
               "test hook: simulated crash after corpus delta, before state writes")
-          // swap in the rewritten mapping through components.old so no
-          // window leaves the state without a components dir (restored
-          // on entry above); manifest paths rebased after the move
-          if (java.nio.file.Files.exists(oldPath)) Scenario.deleteRec(oldPath.toFile)
-          java.nio.file.Files.move(compPath, oldPath)
-          java.nio.file.Files.move(newPath, compPath)
-          Scenario.deleteRec(oldPath.toFile)
-          val newUri = new org.apache.hadoop.fs.Path(newPath.toString).toUri.toString
-          val dstUri = new org.apache.hadoop.fs.Path(compDir).toUri.toString
-          graft.layout.ZoneMap.write(compDir, tmpManifest.copy(
-            files = tmpManifest.files.map { f =>
-              val u = new org.apache.hadoop.fs.Path(f.path).toUri.toString
-              f.copy(path =
-                if (u.startsWith(newUri)) dstUri + u.stripPrefix(newUri) else u)
-            }))
-          spark.catalog.refreshByPath(compDir)
+          graft.layout.StagedRewrite.commit(
+            spark, compDir, compBase, compBase.files, relabeled)
           lines
       }
       val useDelta = deltaLines.nonEmpty

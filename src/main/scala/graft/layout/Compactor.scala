@@ -1,7 +1,6 @@
 package graft.layout
 
 import org.apache.spark.sql.SparkSession
-import org.apache.hadoop.fs.Path
 
 /** Bin-packing compaction — the reference's L5 (Delta OPTIMIZE
   * executeCompaction, Iceberg rewrite_data_files binpack, Hudi small-file
@@ -10,47 +9,14 @@ import org.apache.hadoop.fs.Path
   *
   * Rewrites a table dir into files of ~targetFileBytes, preserving the
   * recorded layout order (re-runs the layout sort so compaction never
-  * degrades clustering), then refreshes the manifest. Writes to a temp
-  * dir and renames for crash safety (no half-compacted table visible).
+  * degrades clustering). Sizes come from the manifest's recorded file
+  * bytes; the rewrite commits through [[StagedRewrite.commit]] like every
+  * other mutation, so no half-compacted table is ever visible and a
+  * racing commit aborts the compaction instead of being overwritten.
   */
 object Compactor {
 
   val DefaultTargetFileBytes: Long = 128L * 1024 * 1024 // reference default
-
-  /** Heal a [[compact]] that crashed mid-swap. The swap is
-    * `rename(dir → .compact_old); rename(.compact_tmp → dir);
-    * ZoneMap.write(dir); delete(.compact_old)`, so a crash can leave:
-    * (a) `dir` missing with the pre-compact store intact under
-    * `.compact_old` → roll back (rename it home); (b) `dir` present but
-    * its manifest still the tmp-written one whose paths point into the
-    * now-renamed tmp dir → the old store is still complete under
-    * `.compact_old`, roll back wholesale; (c) `dir` present with a
-    * committed manifest and a leftover `.compact_old` → finish the
-    * cleanup. Call before relying on a store a compaction may have
-    * touched (the fold path does, every add).
-    */
-  def heal(dir: String): Unit =
-    heal(dir, new org.apache.hadoop.conf.Configuration())
-
-  /** Same Hadoop FileSystem API as [[compact]]'s swap — a crashed swap
-    * on a non-`file:` scheme (hdfs://, s3a://) must roll back too; the
-    * old java.nio implementation silently no-op'd there (r15 ADVICE).
-    * Manifest liveness still goes through ZoneMap (local-fs JSON IO),
-    * so on remote schemes only the rename/delete legs are exercised —
-    * consistent with the rest of the layout store.
-    */
-  def heal(dir: String, conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
-    val old = new Path(dir.stripSuffix("/") + ".compact_old")
-    if (!fs.exists(old)) return
-    if (!fs.exists(d)) { fs.rename(old, d); return } // (a)
-    val committed = ZoneMap.exists(dir) && ZoneMap.read(dir).files.forall { f =>
-      fs.exists(new Path(new java.net.URI(f.path)))
-    }
-    if (committed) fs.delete(old, true) // (c)
-    else { fs.delete(d, true); fs.rename(old, d) } // (b)
-  }
 
   /** Rows-weighted expected fraction of the table's ROWS a point query
     * on `c` must scan, straight off the manifest (no Spark job):
@@ -181,72 +147,45 @@ object Compactor {
     }
   }
 
+  /** Re-cluster the whole table: the manifest's files, read in manifest
+    * order, go through the same cut, byte-balance pass and stats as
+    * [[LayoutWriter.write]] with the table's own spec, into a staging
+    * dir; the commit replaces every file at once and resets the
+    * recluster counter. Aborts on a concurrent commit.
+    */
   def compact(
       spark: SparkSession,
       dir: String,
       targetFileBytes: Long = DefaultTargetFileBytes): TableManifest = {
-    // a previous compact's crash leftovers, before re-reading
-    heal(dir, spark.sparkContext.hadoopConfiguration)
     val manifest = ZoneMap.read(dir)
-    // compact swaps the whole dir, so orphans from a crashed prior
-    // mutation are purged first (round-12 ADVICE), mirroring
-    // Upserter/KeyedDelta.
+    // orphans from a crashed prior mutation are purged first (round-12
+    // ADVICE), mirroring Upserter/KeyedDelta
     StagedRewrite.reconcile(spark, dir, manifest)
-    // capture index columns BEFORE the rewrite — the sidecar metas die
-    // with the superseded files' dir
-    val sidecars = KeyIndex.sidecarNames(dir)
-      .flatMap(n => KeyIndex.indexColsOf(dir, n).map(n -> _))
     // the manifest's files in manifest order, not a dir listing (whose
     // order follows the part names' uuids): the cut's input, and so the
     // order of rows that tie on the layout key, repeats
     val df = StagedRewrite.readFiles(spark, dir, manifest.files.map(_.path),
       manifest.hivePartitions.nonEmpty)
-
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val totalBytes = fs.getContentSummary(new Path(dir)).getLength
-    val numFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-
-    val tmp = dir.stripSuffix("/") + ".compact_tmp"
     val spec = LayoutWriter.LayoutSpec(
       layout = manifest.layout,
       cols = manifest.layoutCols,
       bits = Some(manifest.bits),
-      numFiles = Some(numFiles),
+      numFiles = Some(filesFor(manifest.files, targetFileBytes)),
       recordKey = manifest.recordKey,
       recordKeys = manifest.recordKeys.getOrElse(Nil),
       precombineCol = manifest.precombineCol,
       partitionBy = manifest.hivePartitions) // preserve hive partitioning
-    val tmpManifest =
-      LayoutWriter.write(df, tmp, spec, manifest.statsCols.diff(manifest.layoutCols))
-
-    val dst = new Path(dir)
-    val bak = new Path(dir.stripSuffix("/") + ".compact_old")
-    fs.delete(bak, true)
-    fs.rename(dst, bak)
-    fs.rename(new Path(tmp), dst)
-    fs.delete(bak, true)
-    // The rename moved the files wholesale — the tmp manifest's stats are
-    // already correct, only the path prefixes changed. Rewriting them
-    // avoids a second full-table stats scan.
-    val tmpUri = new Path(tmp).toUri.toString
-    val dstUri = dst.toUri.toString
-    def rebase(p: String): String = {
-      val u = new Path(p).toUri.toString
-      if (u.startsWith(tmpUri)) dstUri + u.stripPrefix(tmpUri)
-      else u.replaceFirst(java.util.regex.Pattern.quote(tmp), dstUri)
-    }
-    val fixed = tmpManifest.copy(
-      files = tmpManifest.files.map(f => f.copy(path = rebase(f.path))))
-    // propagate the stamped manifest (generation/gen/root), not `fixed`
-    val committed = ZoneMap.write(dir, fixed)
-    // key-index sidecars rode into the .compact_old dir and died with
-    // it — rebuild each (primary over the record key, secondaries over
-    // their meta columns) so an auto-recluster (maybeRecluster) never
-    // silently downgrades later keyed upserts back to table-wide COW.
-    // One extra shuffle per index, only when the table had one.
-    sidecars.foreach { case (_, cols) => KeyIndex.build(spark, dir, cols) }
-    committed
+    val (laid, staged) = LayoutWriter.stage(df,
+      StagedRewrite.stagingDir(dir, "compact"), spec,
+      manifest.statsCols.diff(manifest.layoutCols), KeyIndex.bloomSpecs(dir, manifest))
+    StagedRewrite.commit(spark, dir,
+      manifest.copy(commitsSinceCluster = None, strOffsets = laid.strOffsets),
+      manifest.files, staged)
   }
+
+  /** Files of ~`targetFileBytes` that `files`' recorded bytes fill. */
+  private def filesFor(files: Seq[FileEntry], targetFileBytes: Long): Int =
+    math.max(1, math.ceil(files.flatMap(_.bytes).sum.toDouble / targetFileBytes).toInt)
 
   /** Scoped compaction — the reference's L6 (`OPTIMIZE ... WHERE`,
     * delta_write_layout.py:136-138,195-219): only files whose zone
@@ -262,47 +201,20 @@ object Compactor {
       preds: Seq[ZonePredicate],
       targetFileBytes: Long = DefaultTargetFileBytes): TableManifest = {
     val manifest = ZoneMap.read(dir)
-    // Crash inside a previous mutation (incl. this one, after writeAndMove
-    // but before the manifest commit) leaves orphan part files that
-    // dir-level readers would double-count — clean them at entry, same as
-    // Upserter/KeyedDelta (round-12 ADVICE).
+    // Crash inside a previous mutation (incl. this one, after the
+    // commit's file moves but before its manifest swap) leaves orphan
+    // part files that dir-level readers would double-count — clean them
+    // at entry, same as Upserter/KeyedDelta (round-12 ADVICE).
     StagedRewrite.reconcile(spark, dir, manifest)
     val partitioned = manifest.hivePartitions.nonEmpty
-    val (affected, untouched) = manifest.files.partition(f =>
-      preds.forall(_.mayMatch(f)))
+    val affected = manifest.files.filter(f => preds.forall(_.mayMatch(f)))
     if (affected.length <= 1) return manifest // nothing to bin-pack
 
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val affectedBytes = affected.map(f =>
-      fs.getFileStatus(new Path(new java.net.URI(f.path))).getLen).sum
-    val numFiles = math.max(1,
-      math.ceil(affectedBytes.toDouble / targetFileBytes).toInt)
-
     val df0 = StagedRewrite.readFiles(spark, dir, affected.map(_.path), partitioned)
-    val arranged = LayoutWriter.cut(
-      df0, manifest.layout, manifest.layoutCols, manifest.bits, numFiles).rows
-    val staging = dir.stripSuffix("/") + ".compactw_tmp"
-    val written = StagedRewrite.writeAndMove(spark, dir, staging, arranged,
-      manifest.hivePartitions, manifest.statsCols, KeyIndex.bloomSpecs(dir, manifest))
-    val newEntries = written.map(_.entry)
-    val updated = manifest.copy(files = untouched ++ newEntries)
-    // commit order matches KeyedDelta/Upserter (round-11 ADVICE):
-    // manifest first, superseded files after — never a manifest that
-    // references deleted files
-    // writeCas (round-19 OCC): abort rather than clobber a racing commit
-    val committed =
-      try ZoneMap.writeCas(dir, updated)
-      catch {
-        case e: ConcurrentCommitException =>
-          StagedRewrite.deleteFiles(fs, newEntries)
-          spark.catalog.refreshByPath(dir)
-          throw e
-      } finally StagedRewrite.release(written)
-    StagedRewrite.deleteFiles(fs, affected)
-    spark.catalog.refreshByPath(dir)
-    // scoped rewrites keep every key-index sidecar current (whole-table
-    // [[compact]] rebuilds them over the swapped dir instead)
-    KeyIndex.updateAll(spark, dir, affected.map(_.path), written)
-    committed
+    val arranged = LayoutWriter.cut(df0, manifest.layout, manifest.layoutCols,
+      manifest.bits, filesFor(affected, targetFileBytes)).rows
+    StagedRewrite.commit(spark, dir, manifest, affected,
+      StagedRewrite.stage(dir, "compactw", arranged, manifest.hivePartitions,
+        manifest.statsCols, KeyIndex.bloomSpecs(dir, manifest)))
   }
 }

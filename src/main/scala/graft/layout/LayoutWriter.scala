@@ -53,14 +53,33 @@ object LayoutWriter {
       if (recordKeys.nonEmpty) recordKeys else recordKey.toSeq
   }
 
-  /** Columns the manifest keeps stats for: layout cols always; callers can
-    * pass extras (e.g. partition-ish columns queried with equality).
+  /** Lay `df` out into `dir` as `spec` says and commit a fresh manifest
+    * there; returns the committed (generation-stamped) manifest. Columns
+    * the manifest keeps stats for: layout cols always; callers can pass
+    * extras (e.g. partition-ish columns queried with equality).
     */
   def write(
       df: DataFrame,
       dir: String,
       spec: LayoutSpec,
       extraStatsCols: Seq[String] = Nil): TableManifest = {
+    val (manifest, staged) = stage(df, dir, spec, extraStatsCols)
+    ZoneMap.write(dir, manifest.copy(files = StatsWriter.entries(df.sparkSession,
+      dir, staged.files, spec.partitionBy, manifest.statsCols).map(_.entry)))
+  }
+
+  /** Cut and write `df` into `out` as `spec` lays it out, committing
+    * nothing: the manifest for the layout (no files yet) and the written
+    * files, for [[write]] to commit in place or a whole-table rewrite to
+    * move into its table ([[StagedRewrite.commit]]). `blooms` as for
+    * [[StatsWriter.write]].
+    */
+  private[graft] def stage(
+      df: DataFrame,
+      out: String,
+      spec: LayoutSpec,
+      extraStatsCols: Seq[String],
+      blooms: Seq[(String, Seq[String])] = Nil): (TableManifest, StagedRewrite.Staged) = {
     val spark = df.sparkSession
     require(
       Seq("baseline", "linear", "zorder", "hilbert").contains(spec.layout),
@@ -85,7 +104,7 @@ object LayoutWriter {
     val keyCols = spec.keyCols
     val statsCols =
       (spec.cols ++ spec.partitionBy ++ keyCols ++ extraStatsCols).distinct
-    val written = StatsWriter.write(arranged.rows, dir, spec.partitionBy, statsCols)
+    val written = StatsWriter.write(arranged.rows, out, spec.partitionBy, statsCols, blooms)
 
     // Byte-balance pass (round-18, RQ6 sf10 straggler class): the cuts
     // above equalize ROWS per file, but curve-sorted data compresses
@@ -97,7 +116,7 @@ object LayoutWriter {
     val files = arranged.curveKey match {
       case Some(key) if spec.byteBalance && spec.numFiles.exists(_ > 1) &&
           bits * spec.cols.length <= 52 =>
-        byteBalancePass(spark, dir, key, bits * spec.cols.length,
+        byteBalancePass(spark, out, key, bits * spec.cols.length,
           spec.partitionBy, statsCols, written)
       case _ => written
     }
@@ -111,8 +130,7 @@ object LayoutWriter {
       recordKey = if (keyCols.length == 1) Some(keyCols.head) else None,
       recordKeys = if (keyCols.length > 1) Some(keyCols) else None,
       precombineCol = spec.precombineCol,
-      files = StatsWriter.entries(spark, dir, files, spec.partitionBy, statsCols)
-        .map(_.entry),
+      files = Nil,
       partitionCols = if (spec.partitionBy.nonEmpty) Some(spec.partitionBy) else None,
       // string common-prefix offsets the key stripped (advisor and
       // observability; the health metric re-derives its own skip from
@@ -120,8 +138,7 @@ object LayoutWriter {
       // that widen the prefix pool)
       strOffsets =
         if (arranged.strOffsets.exists(_._2 > 0)) Some(arranged.strOffsets) else None)
-    ZoneMap.write(dir, manifest)
-    manifest
+    (manifest, StagedRewrite.Staged(out, files, spec.partitionBy, statsCols))
   }
 
   /** Rows arranged into files by [[cut]]: `rows` is ready for the

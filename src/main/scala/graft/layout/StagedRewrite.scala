@@ -2,13 +2,18 @@ package graft.layout
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.types.StructType
 
-/** Shared mechanics for partial-table rewrites (scoped compaction L6,
-  * keyed upsert L9) that also work on hive-partitioned tables — the
-  * round-3 gap: a naive `spark.read.parquet(files)` loses partition
-  * columns, and a flat file-move drops the partition-dir values
-  * entirely (reference compacts and upserts partitioned tables
-  * routinely: delta_write_layout.py:136-138, hudi_upsert.py:217-228).
+/** The one commit path for every mutation of an existing table —
+  * upsert, keyed delta, scoped and whole-table compaction, full relabel
+  * and index append: the rewrite is [[stage]]d beside the table, then
+  * [[commit]] moves it in and publishes `base` minus the replaced files
+  * plus the new ones through the manifest's check-and-swap, the one
+  * atomic metadata commit Delta, Hudi and Iceberg each use. Works on
+  * hive-partitioned tables: reads keep the partition columns, moves keep
+  * each file's partition subdir (reference compacts and upserts
+  * partitioned tables routinely: delta_write_layout.py:136-138,
+  * hudi_upsert.py:217-228).
   */
 object StagedRewrite {
 
@@ -22,66 +27,132 @@ object StagedRewrite {
       dir: String,
       paths: Seq[String],
       partitioned: Boolean,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+      schema: Option[StructType] = None): DataFrame = {
     val r = schema.foldLeft(spark.read)((r, s) => r.schema(s))
     (if (partitioned) r.option("basePath", dir) else r).parquet(paths: _*)
   }
 
-  /** Part files an IN-FLIGHT mutation has moved into a table dir but not
-    * yet committed: [[reconcile]] must not purge them as orphans — a
+  /** Files written into a staging dir beside a table, not yet part of
+    * it: `files` hold rows; `partitionCols`, `statsCols` and `schema`
+    * type their manifest entries once moved in ([[StatsWriter.entries]]).
+    */
+  case class Staged(dir: String, files: Seq[StatsWriter.Produced],
+      partitionCols: Seq[String], statsCols: Seq[String],
+      schema: Option[StructType] = None)
+
+  /** The staging dir of one kind of mutation on the table at `dir`. */
+  def stagingDir(dir: String, kind: String): String =
+    dir.stripSuffix("/") + s".${kind}_stage"
+
+  /** Write `df` through [[StatsWriter]] into `kind`'s staging dir for
+    * `dir` (partitionBy when the table is partitioned), recording each
+    * file's zone entry and the `blooms` ([[KeyIndex.bloomSpecs]]).
+    */
+  def stage(dir: String, kind: String, df: DataFrame, partitionCols: Seq[String],
+      statsCols: Seq[String], blooms: Seq[(String, Seq[String])] = Nil,
+      schema: Option[StructType] = None): Staged = {
+    val staging = stagingDir(dir, kind)
+    val files = StatsWriter.write(df, staging, partitionCols, statsCols, blooms)
+    // nothing to commit: a caller that skips the commit leaves no dir
+    if (files.isEmpty) new Path(staging)
+      .getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+      .delete(new Path(staging), true)
+    Staged(staging, files, partitionCols, statsCols, schema)
+  }
+
+  /** Part files an IN-FLIGHT commit has moved into a table dir but not
+    * yet published: [[reconcile]] must not purge them as orphans — a
     * concurrent mutation on the same table runs reconcile at entry, and
-    * without this registry it would delete the other writer's staged
-    * rewrite out from under its commit (round-19 OCC work). Keyed by
-    * filesystem path component. [[writeAndMove]] registers; mutators
-    * [[release]] in a finally after commit or abort (an aborting writer
-    * deletes its own moved files first — see Upserter). Same-JVM only,
-    * matching the driver-side writer topology writeCas serializes.
+    * would otherwise delete the other writer's rewrite out from under its
+    * commit. Keyed by filesystem path component. Same-JVM only, matching
+    * the driver-side writer topology writeCas serializes.
     */
   private val inFlight = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  private def pathKey(uri: String): String = new java.net.URI(uri).getPath
-
-  /** Deregister moved files once their manifest commit landed (or their
-    * abort cleanup deleted them).
+  /** Test seam: runs inside every [[commit]] after the staged files are
+    * moved in and BEFORE the check-and-swap, so a suite can run a whole
+    * competing mutation (or a crash) in the commit window
+    * deterministically — a thread race would leave the interleaving to
+    * the scheduler.
     */
-  def release(files: Seq[StatsWriter.WrittenFile]): Unit =
-    files.foreach(f => inFlight.remove(pathKey(f.entry.path)))
+  private[graft] var testHookBeforeCommit: () => Unit = () => ()
 
-  /** Write `df` to `staging` (partitionBy when the table is partitioned)
-    * through [[StatsWriter]], then move every part file that holds rows
-    * into `dir` PRESERVING its partition-relative subpath
-    * (`p=1/part-xxx.parquet` stays under `dir/p=1/`). Part names are
-    * UUID-unique, so moves cannot collide with surviving files. Returns
-    * the moved files' manifest entries and blooms (`blooms`: see
-    * [[KeyIndex.bloomSpecs]]); `schema` types the partition columns as
-    * [[readFiles]] with that schema would. The moved files are registered
-    * in-flight until [[release]].
+  /** Commit `staged` into the table at `dir`, replacing `removed`:
+    *  1. move the staged files in, each under its partition subdir (part
+    *     names are uuid-unique, so moves cannot collide with live files);
+    *  2. check-and-swap `base` minus `removed` plus the new entries
+    *     ([[ZoneMap.writeCas]]) — the manifest goes first, so a crash
+    *     leaves at worst orphans the next mutation's [[reconcile]]
+    *     purges, never a manifest naming a deleted file;
+    *  3. on a lost race, delete the files this commit moved in and
+    *     rethrow [[ConcurrentCommitException]];
+    *  4. delete `removed`, drop cached listings and bring every key-index
+    *     sidecar up to date ([[KeyIndex.updateAll]]).
+    * Returns the committed (generation-stamped) manifest.
+    *
+    * `rebase` (upserts only): on a lost race against a commit that
+    * replaced none of `removed`, retry on `rebase(fresh manifest)` — the
+    * two file sets are disjoint, so carrying the other writer's files
+    * forward loses nothing. If the other commit replaced a file this one
+    * rewrote, the key ranges overlap and a merge would drop one side's
+    * rows: abort instead.
     */
-  def writeAndMove(
-      spark: SparkSession,
-      dir: String,
-      staging: String,
-      df: DataFrame,
-      partitionCols: Seq[String],
-      statsCols: Seq[String],
-      blooms: Seq[(String, Seq[String])] = Nil,
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
-      : Seq[StatsWriter.WrittenFile] = {
-    val produced = StatsWriter.write(df, staging, partitionCols, statsCols, blooms)
+  def commit(spark: SparkSession, dir: String, base: TableManifest,
+      removed: Seq[FileEntry], staged: Staged,
+      rebase: Option[TableManifest => TableManifest] = None): TableManifest = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val moved = produced.map { p =>
-      val dst = new Path(dir, p.stats.rel)
+    val moved = staged.files.map { p =>
+      val dst = new Path(dir, StatsWriter.relOf(p.status.getPath, staged.partitionCols.length))
       fs.mkdirs(dst.getParent)
       fs.rename(p.status.getPath, dst)
       inFlight.add(dst.toUri.getPath)
       p.copy(status = fs.getFileStatus(dst))
     }
-    fs.delete(new Path(staging), true)
-    StatsWriter.entries(spark, dir, moved, partitionCols, statsCols, schema)
+    fs.delete(new Path(staged.dir), true)
+    val written = StatsWriter.entries(spark, dir, moved, staged.partitionCols,
+      staged.statsCols, staged.schema)
+    val newEntries = written.map(_.entry)
+    val removedPaths = removed.map(f => ZoneMap.canonical(f.path)).toSet
+    def next(m: TableManifest) = m.copy(files =
+      m.files.filterNot(f => removedPaths(ZoneMap.canonical(f.path))) ++ newEntries)
+    var from = base
+    var committed: TableManifest = null
+    var attempt = 0
+    try {
+      testHookBeforeCommit()
+      while (committed == null) {
+        try committed = ZoneMap.writeCas(dir, next(from))
+        catch {
+          case e: ConcurrentCommitException if rebase.isDefined && attempt < 5 =>
+            attempt += 1
+            val fresh = ZoneMap.read(dir)
+            val gone = removedPaths -- fresh.files.map(f => ZoneMap.canonical(f.path))
+            if (gone.nonEmpty)
+              throw new ConcurrentCommitException(
+                s"overlapping concurrent commits on $dir: ${gone.size} " +
+                  "file(s) this commit rewrote were already replaced by " +
+                  s"another commit (e.g. ${gone.head}) — the key ranges " +
+                  "overlap; re-run against the fresh table", e.onDisk, e.expected)
+            from = rebase.get(fresh)
+        }
+      }
+    } catch {
+      case e: ConcurrentCommitException =>
+        deleteFiles(fs, newEntries)
+        spark.catalog.refreshByPath(dir)
+        throw e
+    } finally moved.foreach(p => inFlight.remove(p.status.getPath.toUri.getPath))
+    deleteFiles(fs, removed)
+    // manual moves bypass Spark's write-path invalidation — stale
+    // listings would read deleted part files on the next dir-level scan
+    spark.catalog.refreshByPath(dir)
+    // after the commit: a crash in between leaves the new files
+    // unindexed, which lookups treat as affected and update() blooms
+    KeyIndex.updateAll(spark, dir, removed.map(_.path), written)
+    committed
   }
 
-  /** Delete `files` (by manifest URI) from the table. */
-  def deleteFiles(fs: FileSystem, files: Seq[FileEntry]): Unit =
+  private def deleteFiles(fs: FileSystem, files: Seq[FileEntry]): Unit =
     files.foreach(f => fs.delete(new Path(new java.net.URI(f.path)), false))
 
   /** Reconcile the table dir against its manifest: delete part files the

@@ -57,13 +57,27 @@ object StatsWriter {
       blooms: Seq[(String, Seq[String])], partitionDepth: Int,
       acc: CollectionAccumulator[FileStats])
 
-  // the write's request, visible to [[StatsParquetFormat.prepareWrite]]:
-  // Spark plans and starts a file write on the calling thread
-  private val current = new scala.util.DynamicVariable[Option[Request]](None)
+  /** The write option that names a write's request. Spark may plan the
+    * write on another thread than the caller's (under AQE the write
+    * command can run in a query stage on a pooled thread), so the
+    * request travels with the write's options, not with the thread.
+    */
+  private[layout] val RequestOption = "graftstatsrequest"
 
-  private[layout] def request: Request = current.value.getOrElse(
-    throw new IllegalStateException(
-      "StatsParquetFormat writes only through StatsWriter.write"))
+  // live requests by id: [[bind]] registers, and drops in a finally
+  private val requests = new java.util.concurrent.ConcurrentHashMap[String, Request]()
+
+  /** Run `body` with `req` registered under a fresh id it receives. */
+  private[layout] def bind[T](req: Request)(body: String => T): T = {
+    val id = java.util.UUID.randomUUID().toString
+    requests.put(id, req)
+    try body(id) finally requests.remove(id)
+  }
+
+  private[layout] def request(options: Map[String, String]): Request =
+    options.get(RequestOption).flatMap(id => Option(requests.get(id))).getOrElse(
+      throw new IllegalStateException(
+        "StatsParquetFormat writes only through StatsWriter.write"))
 
   /** Write `df` as parquet into `out` (hive dirs for `partitionCols`),
     * replacing whatever `out` held — the helper owns the whole output
@@ -82,8 +96,9 @@ object StatsWriter {
     val spark = df.sparkSession
     val acc = new CollectionAccumulator[FileStats]
     spark.sparkContext.register(acc)
-    val w = df.write.mode(SaveMode.Overwrite).format(classOf[StatsParquetFormat].getName)
-    current.withValue(Some(Request(statsCols, blooms, partitionCols.length, acc))) {
+    bind(Request(statsCols, blooms, partitionCols.length, acc)) { id =>
+      val w = df.write.mode(SaveMode.Overwrite).format(classOf[StatsParquetFormat].getName)
+        .option(RequestOption, id)
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).save(out)
     }
     import scala.jdk.CollectionConverters._
@@ -284,11 +299,11 @@ class StatsParquetFormat extends ParquetFileFormat {
   override def prepareWrite(spark: SparkSession, job: Job,
       options: Map[String, String], dataSchema: StructType): OutputWriterFactory =
     new StatsOutputWriterFactory(super.prepareWrite(spark, job, options, dataSchema),
-      StatsWriter.plan(spark, StatsWriter.request, dataSchema))
+      StatsWriter.plan(spark, StatsWriter.request(options), dataSchema))
 }
 
 private[layout] class StatsOutputWriterFactory(inner: OutputWriterFactory,
-    plan: StatsWriter.Plan) extends OutputWriterFactory {
+    val plan: StatsWriter.Plan) extends OutputWriterFactory {
   override def getFileExtension(context: TaskAttemptContext): String =
     inner.getFileExtension(context)
 

@@ -548,10 +548,10 @@ object ZoneMap {
 
   /** Check-and-swap commit: publish `m` ONLY if the on-disk generation
     * still equals the one `m` was read at (missing header = 0) — throws
-    * [[ConcurrentCommitException]] otherwise. Mutators of EXISTING
-    * tables (upsert, delta, compaction, index append) commit through
-    * this; fresh-table writers keep plain [[write]] (a re-layout
-    * legitimately replaces whatever generation is there).
+    * [[ConcurrentCommitException]] otherwise. Every mutation of an
+    * EXISTING table commits through this, from [[StagedRewrite.commit]];
+    * fresh-table writes ([[LayoutWriter.write]]) keep plain [[write]] (a
+    * re-layout legitimately replaces whatever generation is there).
     */
   def writeCas(dir: String, m: TableManifest): TableManifest =
     lockFor(dir).synchronized {

@@ -60,20 +60,16 @@ object SearchIndex {
       textCol: String, dir: String, batchFiles: Int = 4): Unit = {
     val pdir = s"$dir/postings"
     val before = graft.layout.ZoneMap.read(pdir)
-    val written = graft.layout.StagedRewrite.writeAndMove(spark, pdir,
-      s"$pdir.add_tmp",
+    val staged = graft.layout.StagedRewrite.stage(pdir, "add",
       LayoutWriter.cut(InvertedIndex.postings(batch, idCol, textCol),
         before.layout, before.layoutCols, before.bits, batchFiles).rows,
       Nil, before.statsCols)
     // an empty batch appends no file: skip the whole update, or the
     // manifest and doclen would fall out of step
-    if (written.nonEmpty) {
-      // writeCas (round-19 OCC): appends rebase trivially, but a racing
-      // optimize() rewrites the whole postings set - fail loudly instead
-      try graft.layout.ZoneMap.writeCas(pdir,
-        before.copy(files = before.files ++ written.map(_.entry)))
-      finally graft.layout.StagedRewrite.release(written)
-      spark.catalog.refreshByPath(pdir)
+    if (staged.files.nonEmpty) {
+      // appends remove nothing, but a racing optimize() rewrites the
+      // whole postings set - the commit fails loudly instead
+      graft.layout.StagedRewrite.commit(spark, pdir, before, Nil, staged)
       InvertedIndex.docLengths(batch, idCol, textCol)
         .write.mode("append").parquet(s"$dir/doclen")
     }

@@ -3,7 +3,6 @@ package graft.table
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
 import graft.layout._
 
 /** Keyed copy-on-write upsert on a plain-parquet + zone-map table — the
@@ -42,13 +41,6 @@ object Upserter {
     * the auto-recluster policy fired after the commit.
     */
   case class UpsertResult(manifest: TableManifest, reclustered: Boolean)
-
-  /** Test seam: runs after the rewrite is staged and BEFORE the CAS
-    * commit loop — a suite can run a whole competing upsert here to
-    * exercise the rebase/abort paths deterministically (a thread race
-    * would make which writer rebases nondeterministic).
-    */
-  private[table] var testHookBeforeCommit: () => Unit = () => ()
 
   /** Upsert `batch` into the layout table at `dir`. Returns the refreshed
     * manifest. Record key tuple (single or composite) and precombine
@@ -163,9 +155,9 @@ object Upserter {
           }
         }
       }
-    val (affected0, untouched0) =
-      if (preds.isEmpty) (manifest.files, Seq.empty[FileEntry])
-      else manifest.files.partition(f => preds.forall(_.mayMatch(f)))
+    val affected0 =
+      if (preds.isEmpty) manifest.files
+      else manifest.files.filter(f => preds.forall(_.mayMatch(f)))
     // Key-index refinement (round 13): on a layout ORTHOGONAL to the
     // record key every file's key zone spans the whole domain and the
     // zone test above keeps everything; the per-file bloom sidecar
@@ -173,17 +165,14 @@ object Upserter {
     // indexed file whose bloom excludes all batch key-tuple hashes.
     // Fail-safe: blooms only false-positive, unindexed files stay
     // affected.
-    val (affected, untouched) =
+    val affected =
       if (exact && KeyIndex.exists(dir)) {
         val hashes = tuples.iterator.map(_.getLong(0)).toSeq.distinct
         KeyIndex.affectedPaths(spark, dir, hashes, manifest) match {
-          case Some(paths) =>
-            val (a, skipped) = affected0.partition(f =>
-              paths.contains(KeyIndex.norm(f.path)))
-            (a, untouched0 ++ skipped)
-          case None => (affected0, untouched0)
+          case Some(paths) => affected0.filter(f => paths.contains(KeyIndex.norm(f.path)))
+          case None => affected0
         }
-      } else (affected0, untouched0)
+      } else affected0
 
     val existing =
       if (affected.isEmpty) spark.createDataFrame(
@@ -234,75 +223,18 @@ object Upserter {
       if (sortRewrites) manifest.layout else "baseline",
       manifest.layoutCols, manifest.bits, numFiles, sample = Some(merged)).rows
 
-    // Stage the rewrite, then move the (uuid-unique) part files in —
-    // under their partition subdirs when the table is hive-partitioned.
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = dir.stripSuffix("/") + ".upsert_tmp"
-    // Manifest: the new files' entries (and blooms) come from the write
-    // itself, untouched entries carried over.
-    val written = StagedRewrite.writeAndMove(spark, dir, staging, arranged,
+    // Stage the rewrite; the new files' entries (and blooms) come from
+    // the write itself, untouched entries carry over. The commit is
+    // optimistic (the Delta/Hudi/Iceberg OCC analog): if another writer
+    // committed since our read and replaced none of our affected files,
+    // the commit rebases onto the fresh manifest, which carries the
+    // other writer's files forward; overlapping rewrites abort.
+    val staged = StagedRewrite.stage(dir, "upsert", arranged,
       manifest.hivePartitions, manifest.statsCols, KeyIndex.bloomSpecs(dir, manifest))
-    val newEntries = written.map(_.entry)
-    // commit order matches KeyedDelta (round-11 ADVICE): atomically
-    // publish the manifest FIRST, delete superseded files after — a
-    // crash in between leaves orphan old files a manifest-driven reader
-    // never sees, never a manifest referencing deleted files.
-    //
-    // OPTIMISTIC CONCURRENCY (round-19, the Delta/Hudi/Iceberg OCC
-    // analog): the commit goes through ZoneMap.writeCas — if another
-    // writer committed since our read, re-read the FRESH manifest and
-    // rebase: our untouched set is recomputed from the fresh file list
-    // (which now carries the other writer's files), our new entries are
-    // appended, and the CAS retries. Sound ONLY when the file sets are
-    // disjoint: if any file WE rewrote (and are about to delete) was
-    // already replaced by the other commit, the two upserts touched
-    // overlapping key ranges and a merge would silently drop one side's
-    // rows — abort loudly instead (our staged part files are left
-    // manifest-unreferenced; the next mutation's reconcile purges them).
-    val affectedPaths = affected.map(f => ZoneMap.canonical(f.path)).toSet
-    var base = manifest
-    var updated: TableManifest = null
-    var attempt = 0
-    try {
-      testHookBeforeCommit()
-      while (updated == null) {
-        val untouchedNow =
-          if (base eq manifest) untouched
-          else base.files.filterNot(f => affectedPaths(ZoneMap.canonical(f.path)))
-        try updated = ZoneMap.writeCas(dir, base.copy(
-          files = untouchedNow ++ newEntries,
-          commitsSinceCluster = Some(base.commitsSinceCluster.getOrElse(0) + 1)))
-        catch {
-          case e: ConcurrentCommitException =>
-            if (attempt >= 5) throw e
-            attempt += 1
-            val fresh = ZoneMap.read(dir)
-            val freshPaths = fresh.files.map(f => ZoneMap.canonical(f.path)).toSet
-            val gone = affectedPaths -- freshPaths
-            if (gone.nonEmpty)
-              throw new ConcurrentCommitException(
-                s"overlapping concurrent upserts on $dir: " +
-                  s"${gone.size} file(s) this upsert rewrote were already " +
-                  s"replaced by another commit (e.g. ${gone.head}) — " +
-                  "the key ranges overlap; re-run this upsert against the " +
-                  "fresh table", e.onDisk, e.expected)
-            base = fresh
-        }
-      }
-    } catch {
-      case e: ConcurrentCommitException =>
-        // abort cleanly: OUR moved-but-uncommitted part files come back
-        // out of the table dir (they are ours alone — part names are
-        // uuid-unique), so the loser leaves no orphans at all
-        StagedRewrite.deleteFiles(fs, newEntries)
-        spark.catalog.refreshByPath(dir)
-        throw e
-    } finally StagedRewrite.release(written)
-    StagedRewrite.deleteFiles(fs, affected)
-    spark.catalog.refreshByPath(dir)
-    // index maintenance AFTER the commit: a crash in between leaves
-    // the new files unindexed, which the lookup treats as affected
-    KeyIndex.updateAll(spark, dir, affected.map(_.path), written)
+    def counted(m: TableManifest) =
+      m.copy(commitsSinceCluster = Some(m.commitsSinceCluster.getOrElse(0) + 1))
+    val updated = StagedRewrite.commit(spark, dir, counted(manifest), affected,
+      staged, rebase = Some(counted))
     if (!autoRecluster) UpsertResult(updated, reclustered = false)
     else Compactor.maybeRecluster(spark, dir,
         targetFileBytes = targetFileBytes) match {

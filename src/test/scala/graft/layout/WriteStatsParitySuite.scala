@@ -133,9 +133,8 @@ class WriteStatsParitySuite extends SparkTestBase {
     val m = LayoutWriter.write(cases(0), dir, LayoutSpec("baseline"), ValueCols)
     assert(m.files.isEmpty)
     assert(StatsReference.collectStats(spark, dir, m.statsCols).isEmpty)
-    val staged = StagedRewrite.writeAndMove(spark, dir, dir + ".empty_tmp",
-      cases(0), Nil, m.statsCols)
-    assert(staged.isEmpty)
+    val staged = StagedRewrite.stage(dir, "empty", cases(0), Nil, m.statsCols)
+    assert(staged.files.isEmpty)
   }
 
   test("KeyedDelta, Upserter and scoped compaction entries equal the scan's") {
@@ -197,13 +196,13 @@ class WriteStatsParitySuite extends SparkTestBase {
       LayoutSpec("linear", Seq("id"), numFiles = Some(4), recordKey = Some("id")), ValueCols)
     val m = ZoneMap.read(dir)
     val specs = Seq("k" -> Seq("id"), "ks" -> Seq("id", "s"))
-    val written = StagedRewrite.writeAndMove(spark, dir, dir + ".bloom_tmp",
+    val staged = StagedRewrite.stage(dir, "bloom",
       cases(700, from = 4000L).repartition(3), Nil, m.statsCols, specs)
-    StagedRewrite.release(written)
+    val written = StatsWriter.entries(spark, staged.dir, staged.files, Nil, m.statsCols)
     assert(written.length == 3)
     written.foreach { case WrittenFile(e, blooms) =>
       assert(blooms.keySet == specs.map(_._1).toSet)
-      val rows = StagedRewrite.readFiles(spark, dir, Seq(e.path), partitioned = false)
+      val rows = StagedRewrite.readFiles(spark, staged.dir, Seq(e.path), partitioned = false)
       for ((name, keys) <- specs) {
         val hashes = rows.filter(keys.map(col(_).isNotNull).reduce(_ && _))
           .select(KeyIndex.keyHashCol(keys)).collect().map(_.getLong(0))
@@ -253,5 +252,43 @@ class WriteStatsParitySuite extends SparkTestBase {
         }
       }
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("prepareWrite on a thread started before the write binds that write's request") {
+    val req = StatsWriter.Request(Seq("id"), Nil, 0,
+      new org.apache.spark.util.CollectionAccumulator[StatsWriter.FileStats])
+    val schema = cases(1).schema
+    val id = new java.util.concurrent.SynchronousQueue[String]()
+    val got = new java.util.concurrent.atomic.AtomicReference[Any]()
+    // the thread exists before the request: nothing thread-local can
+    // reach it, only the write's options
+    val pooled = new Thread(() => got.set(
+      try new StatsParquetFormat().prepareWrite(spark,
+        org.apache.hadoop.mapreduce.Job.getInstance(),
+        Map(StatsWriter.RequestOption -> id.take()), schema)
+      catch { case e: Throwable => e }))
+    pooled.start()
+    StatsWriter.bind(req) { rid => id.put(rid); pooled.join() }
+    got.get match {
+      case f: StatsOutputWriterFactory => assert(f.plan.acc eq req.acc)
+      case other => fail(s"prepareWrite did not bind the request: $other")
+    }
+  }
+
+  test("two concurrent StatsWriter.write calls each get their own records") {
+    val (da, db) = (tmpDir("wsp_conc_a"), tmpDir("wsp_conc_b"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val fa = pool.submit(() => StatsWriter.write(
+        cases(300).repartition(3), da, Nil, Seq("id")))
+      val fb = pool.submit(() => StatsWriter.write(
+        cases(500, from = 10000L).repartition(2), db, Nil, Seq("id")))
+      for ((f, dir, n, lo) <- Seq((fa, da, 300L, 0.0), (fb, db, 500L, 10000.0))) {
+        val produced = f.get()
+        assert(produced.map(_.stats.rows).sum == n)
+        assert(produced.forall(_.status.getPath.toString.contains(new java.io.File(dir).getName)))
+        assert(produced.map(_.stats.ranges("id").min.get).min == lo)
+      }
+    } finally pool.shutdown()
   }
 }

@@ -1,7 +1,8 @@
 package graft.table
 
 import graft.SparkTestBase
-import graft.layout.{ConcurrentCommitException, LayoutWriter, ZoneMap}
+import graft.layout.{Compactor, ConcurrentCommitException, KeyedDelta, LayoutWriter,
+  NumBetween, StagedRewrite, ZoneMap}
 import graft.layout.LayoutWriter.LayoutSpec
 
 /** Optimistic concurrency on the manifest commit (round-19; the OCC
@@ -9,9 +10,11 @@ import graft.layout.LayoutWriter.LayoutSpec
   * assumed away — two racing commits could silently drop one
   * generation's file set). writeCas check-and-swaps on the generation;
   * Upserter rebases DISJOINT concurrent rewrites and aborts OVERLAPPING
-  * ones. The interleaving is driven deterministically through
-  * [[Upserter.testHookBeforeCommit]] (a thread race would leave which
-  * writer rebases to the scheduler).
+  * ones; every other mutation — compaction included — aborts. The
+  * interleaving is driven deterministically through
+  * [[StagedRewrite.testHookBeforeCommit]], the hook inside every
+  * mutation's commit (a thread race would leave which writer rebases to
+  * the scheduler).
   */
 class ConcurrentCommitSuite extends SparkTestBase {
 
@@ -57,14 +60,14 @@ class ConcurrentCommitSuite extends SparkTestBase {
     // low keys live in different files than high keys (linear layout on
     // k, 8 files) — the two upserts rewrite disjoint file sets
     var ran = false
-    Upserter.testHookBeforeCommit = () => {
+    StagedRewrite.testHookBeforeCommit = () => {
       if (!ran) { // only inside the OUTER upsert, not the nested one
         ran = true
         Upserter.upsert(spark, dir, batch(9990L -> "hi9990"))
       }
     }
     try Upserter.upsert(spark, dir, batch(5L -> "lo5"))
-    finally Upserter.testHookBeforeCommit = () => ()
+    finally StagedRewrite.testHookBeforeCommit = () => ()
     assert(ran, "competing upsert must have run inside the commit window")
     val got = spark.read.parquet(dir)
     assert(got.count() == 10000)
@@ -86,7 +89,7 @@ class ConcurrentCommitSuite extends SparkTestBase {
     import spark2.implicits._
     val dir = keyedTable("graft_occ_overlap")
     var ran = false
-    Upserter.testHookBeforeCommit = () => {
+    StagedRewrite.testHookBeforeCommit = () => {
       if (!ran) {
         ran = true
         Upserter.upsert(spark, dir, batch(5L -> "first5"))
@@ -96,7 +99,7 @@ class ConcurrentCommitSuite extends SparkTestBase {
       try intercept[ConcurrentCommitException] {
         Upserter.upsert(spark, dir, batch(6L -> "second6"))
       }
-      finally Upserter.testHookBeforeCommit = () => ()
+      finally StagedRewrite.testHookBeforeCommit = () => ()
     assert(e.getMessage.contains("overlapping"), e.getMessage)
     // the winning commit's data is intact; the aborted one left no rows
     val got = spark.read.parquet(ZoneMap.read(dir).files.map(_.path): _*)
@@ -111,5 +114,93 @@ class ConcurrentCommitSuite extends SparkTestBase {
     assert(after.count() == 10000)
     assert(after.filter($"k" === 6L).select("payload").as[String].head() == "v6")
     assert(after.filter($"k" === 7L).select("payload").as[String].head() == "third7")
+  }
+
+  /** Run `body` with `competing` run once inside the first commit window. */
+  private def racing[T](competing: => Unit)(body: => T): T = {
+    var ran = false
+    StagedRewrite.testHookBeforeCommit = () => {
+      if (!ran) { ran = true; competing }
+    }
+    try body
+    finally StagedRewrite.testHookBeforeCommit = () => ()
+  }
+
+  private def assertNoDangling(dir: String): Unit =
+    ZoneMap.read(dir).files.foreach { f =>
+      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(
+        new java.net.URI(f.path))), s"dangling manifest entry: ${f.path}")
+    }
+
+  private def partFiles(dir: String): Set[String] = {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try s.toArray.map(_.toString).filter(p =>
+      new java.io.File(p).getName.startsWith("part-")).toSet
+    finally s.close()
+  }
+
+  test("compaction inside an upsert's commit window: the upsert aborts") {
+    val spark2 = spark
+    import spark2.implicits._
+    val dir = keyedTable("graft_occ_compact_in_upsert")
+    var compacted: graft.layout.TableManifest = null
+    intercept[ConcurrentCommitException] {
+      racing { compacted = Compactor.compact(spark, dir, targetFileBytes = 1L << 30) } {
+        Upserter.upsert(spark, dir, batch(5L -> "lo5"))
+      }
+    }
+    assert(compacted != null, "the compaction must have run inside the commit window")
+    assertNoDangling(dir)
+    val m = ZoneMap.read(dir)
+    assert(m.generation == compacted.generation && m.files == compacted.files,
+      "the aborted upsert must not have published over the compaction")
+    // the dir holds exactly the compacted table: the loser took its files back out
+    val got = spark.read.parquet(dir)
+    assert(got.count() == 10000)
+    assert(got.except(base).isEmpty && base.except(got).isEmpty)
+    assert(got.filter($"k" === 5L).select("payload").as[String].head() == "v5")
+  }
+
+  test("an upsert inside a compaction's commit window: the compaction aborts") {
+    val spark2 = spark
+    import spark2.implicits._
+    val dir = keyedTable("graft_occ_upsert_in_compact")
+    val before = ZoneMap.read(dir)
+    intercept[ConcurrentCommitException] {
+      racing(Upserter.upsert(spark, dir, batch(5L -> "lo5"))) {
+        Compactor.compact(spark, dir, targetFileBytes = 1L << 30)
+      }
+    }
+    assertNoDangling(dir)
+    assert(ZoneMap.read(dir).generation.contains(before.generation.get + 1))
+    val got = spark.read.parquet(dir)
+    assert(got.count() == 10000, "the aborted compaction left files behind")
+    assert(got.filter($"k" === 5L).select("payload").as[String].head() == "lo5")
+  }
+
+  test("compactWhere, KeyedDelta and SearchIndex.add abort on a concurrent " +
+      "commit and leave no moved file behind") {
+    val spark2 = spark
+    import spark2.implicits._
+    def bump(dir: String): Unit = ZoneMap.writeCas(dir, ZoneMap.read(dir))
+    def aborts(dir: String)(mutate: => Any): Unit = {
+      val files = partFiles(dir)
+      val gen = ZoneMap.read(dir).generation.get
+      intercept[ConcurrentCommitException](racing(bump(dir))(mutate))
+      assert(partFiles(dir) == files, s"$dir: the aborted commit left files behind")
+      assert(ZoneMap.read(dir).generation.contains(gen + 1))
+      assertNoDangling(dir)
+    }
+    val t = keyedTable("graft_occ_aborts")
+    aborts(t)(Compactor.compactWhere(spark, t, Seq(NumBetween("k", 0, 5000)),
+      targetFileBytes = 1L << 30))
+    aborts(t)(KeyedDelta(spark, t, Seq(5L, 7000L), Some(batch(20000L -> "new"))))
+    val idx = tmpDir("graft_occ_search")
+    val docs = (1 to 60).map(i => (i.toLong, s"doc $i about t${i % 7}")).toDF("doc_id", "text")
+    graft.operators.SearchIndex.build(docs.filter($"doc_id" <= 40), "doc_id", "text", idx,
+      numFiles = 2)
+    aborts(s"$idx/postings")(graft.operators.SearchIndex.add(spark,
+      docs.filter($"doc_id" > 40), "doc_id", "text", idx))
+    assert(spark.read.parquet(t).count() == 10000)
   }
 }

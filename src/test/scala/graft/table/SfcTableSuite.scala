@@ -1,7 +1,7 @@
 package graft.table
 
 import graft.SparkTestBase
-import graft.layout.LayoutWriter
+import graft.layout.{LayoutWriter, StagedRewrite}
 import graft.layout.LayoutWriter.LayoutSpec
 import graft.runner.QueryRunner
 import org.apache.spark.sql.functions._
@@ -214,9 +214,9 @@ class SfcTableSuite extends SparkTestBase {
     // staged: the rewrite's files are moved in, then the commit crashes
     val staged = keyed("sfc_orphan_staged")
     val before = answers(staged)
-    Upserter.testHookBeforeCommit = () => throw new RuntimeException("crash before commit")
+    StagedRewrite.testHookBeforeCommit = () => throw new RuntimeException("crash before commit")
     try intercept[RuntimeException](Upserter.upsert(spark, staged, batch))
-    finally Upserter.testHookBeforeCommit = () => ()
+    finally StagedRewrite.testHookBeforeCommit = () => ()
     assert(spark.read.parquet(staged).count() > 2000, "the staged files must be on disk")
     assert(answers(staged) == before)
 

@@ -102,8 +102,8 @@ class TableMaintenanceSuite extends SparkTestBase {
   }
 
   test("mutation entry purges manifest-unreferenced orphan part files") {
-    // round-11 ADVICE: a crash between writeAndMove and the manifest
-    // commit leaves part files the manifest never lists; dir-level
+    // round-11 ADVICE: a crash between a commit's file moves and its
+    // manifest swap leaves part files the manifest never lists; dir-level
     // readers then see duplicate rows. Entry reconcile must delete them.
     val spark2 = spark
     import spark2.implicits._
