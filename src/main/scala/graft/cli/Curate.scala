@@ -623,9 +623,20 @@ object Curate {
       rows.map { case ((s, l), (n, t)) => s"$s,$l,$n,$t" })
   }
 
+  /** Replace summary.csv: the new content goes to a fresh temp file,
+    * the old CSV is unlinked and the temp file takes its name. Truncating
+    * or renaming over the CSV would force a flush on ext4. Folds call
+    * this inside the `pending_delta` window, so a crash between the
+    * unlink and the rename is healed by the retry: [[summaryDelta]] finds
+    * no CSV and the caller falls back to [[writeSummary]]'s full rescan.
+    */
   private def writeCsvLines(outDir: String, lines: Seq[String]): Seq[String] = {
-    java.nio.file.Files.write(java.nio.file.Paths.get(outDir, "summary.csv"),
+    val csv = java.nio.file.Paths.get(outDir, "summary.csv")
+    val tmp = java.nio.file.Paths.get(outDir, s".summary.csv-${java.util.UUID.randomUUID()}")
+    java.nio.file.Files.write(tmp,
       lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.nio.file.Files.deleteIfExists(csv)
+    java.nio.file.Files.move(tmp, csv)
     lines
   }
 
@@ -639,11 +650,8 @@ object Curate {
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("total_tokens"))
       .orderBy(col("split"), col("lang"))
       .collect()
-    val lines = "split,lang,n_docs,total_tokens" +:
-      summary.map(r => s"${r.get(0)},${r.get(1)},${r.get(2)},${r.get(3)}").toSeq
-    java.nio.file.Files.write(java.nio.file.Paths.get(outDir, "summary.csv"),
-      lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    lines
+    writeCsvLines(outDir, "split,lang,n_docs,total_tokens" +:
+      summary.map(r => s"${r.get(0)},${r.get(1)},${r.get(2)},${r.get(3)}").toSeq)
   }
 
   def main(args: Array[String]): Unit = {

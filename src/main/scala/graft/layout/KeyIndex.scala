@@ -14,9 +14,10 @@ import org.json4s.jackson.Serialization
   * consults this sidecar to shrink the affected set to files that MAY
   * contain a batch key.
   *
-  * Layout (v3): `<table>/_graft_keyindex/` holding `_meta.json`
+  * Layout (v3): `<table>/_graft_keyindex/` holding the `_meta/` log
   * (version, key columns, shard count, stale counter, indexedGen — the
-  * manifest generation the sidecar is current through) and [[Shards]]
+  * manifest generation the sidecar is current through; one write-once
+  * [[VersionLog]] file per update, the latest current) and [[Shards]]
   * hash-sharded
   * parquet dirs `s=0..s=N-1` of `(path: String, rows: Long,
   * bloom: Array[Byte])`, one row per data file. Shard = hash of the
@@ -124,7 +125,8 @@ object KeyIndex {
       // (round-15, alongside ZoneMap root rebasing).
       root: Option[String] = None)
   private implicit val fmts: Formats = Serialization.formats(NoTypeHints)
-  private val MetaName = "_meta.json"
+  private val MetaLog = "_meta"
+  private val MetaExt = ".json"
 
   /** What [[update]] did — logged and returned so probes/suites can pin
     * the sidecar-maintenance cost (bytes rewritten per mutation;
@@ -171,9 +173,7 @@ object KeyIndex {
   private def writeMeta(dir: String, keys: Seq[String],
       stale: Long = 0L, indexedGen: Long = -1L,
       name: String = DirName): Unit = {
-    val p = path(dir, name).resolve(MetaName)
-    java.nio.file.Files.createDirectories(path(dir, name))
-    java.nio.file.Files.write(p,
+    VersionLog.publishNext(path(dir, name).resolve(MetaLog), MetaExt,
       Serialization.write(Meta(3, keys, Shards, stale, indexedGen,
           root = Some(ZoneMap.canonical(dir))))
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -188,11 +188,9 @@ object KeyIndex {
     m.root.forall(_ == ZoneMap.canonical(dir))
 
   private def readMeta(dir: String, name: String = DirName): Option[Meta] = {
-    val p = path(dir, name).resolve(MetaName)
-    if (!java.nio.file.Files.exists(p)) None
-    else scala.util.Try(Serialization.read[Meta](new String(
-      java.nio.file.Files.readAllBytes(p),
-      java.nio.charset.StandardCharsets.UTF_8))).toOption
+    VersionLog.readLatest(path(dir, name).resolve(MetaLog), MetaExt)
+      .flatMap(b => scala.util.Try(Serialization.read[Meta](
+        new String(b, java.nio.charset.StandardCharsets.UTF_8))).toOption)
   }
 
   private def shardDirs(dir: String, name: String = DirName): Seq[java.nio.file.Path] = {
@@ -238,7 +236,8 @@ object KeyIndex {
   // byte-compatible for mergeInPlace across refreshes; a shard whose
   // true key count outgrows [[UnionExpected]] saturates smoothly
   // toward always-positive (no skip — exactly today's behavior).
-  private val UnionsName = "_unions.bin"
+  private[layout] val UnionsLog = "_unions"
+  private val UnionsExt = ".bin"
   private val UnionsMagic = 0x47554E42 // "GUNB"
   /** Union capacity bounds. The capacity is chosen at [[build]] time
     * from the manifest's row count (keys/shard x 1.3 headroom),
@@ -262,8 +261,12 @@ object KeyIndex {
   private def newUnionBloom(expected: Long): org.apache.spark.util.sketch.BloomFilter =
     org.apache.spark.util.sketch.BloomFilter.create(expected, UnionFpp)
 
-  private def unionsFile(dir: String, name: String): java.nio.file.Path =
-    path(dir, name).resolve(UnionsName)
+  private def unionsLog(dir: String, name: String): java.nio.file.Path =
+    path(dir, name).resolve(UnionsLog)
+
+  /** Delete every unions version: lookups then read all shards. */
+  private def dropUnions(dir: String, name: String): Unit =
+    VersionLog.dropBelow(unionsLog(dir, name), UnionsExt, Long.MaxValue)
 
   private def writeUnions(dir: String, name: String,
       unions: Map[Int, org.apache.spark.util.sketch.BloomFilter],
@@ -280,27 +283,21 @@ object KeyIndex {
       out.writeInt(s); out.writeInt(b.size()); b.writeTo(out)
     }
     out.flush()
-    java.nio.file.Files.createDirectories(path(dir, name))
-    val tmp = unionsFile(dir, name).resolveSibling(UnionsName + ".tmp")
-    java.nio.file.Files.write(tmp, bos.toByteArray)
-    java.nio.file.Files.move(tmp, unionsFile(dir, name),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    VersionLog.publishNext(unionsLog(dir, name), UnionsExt, bos.toByteArray)
   }
 
   private case class Unions(gen: Long, expected: Long,
       blooms: Map[Int, org.apache.spark.util.sketch.BloomFilter])
 
   /** None when absent/torn/parameter-mismatched — lookups then read all
-    * shards (the no-unions behavior) and [[update]] deletes the file so
+    * shards (the no-unions behavior) and [[update]] drops every version so
     * the superset invariant can never silently break.
     */
   private def readUnions(dir: String, name: String): Option[Unions] = {
-    val p = unionsFile(dir, name)
-    if (!java.nio.file.Files.exists(p)) return None
+    val bytes = VersionLog.readLatest(unionsLog(dir, name), UnionsExt)
+      .getOrElse(return None)
     scala.util.Try {
-      val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(
-        java.nio.file.Files.readAllBytes(p)))
+      val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
       require(in.readInt() == UnionsMagic && in.readInt() == 2)
       val expected = in.readLong()
       require(expected >= UnionExpected && expected <= UnionExpectedMax &&
@@ -430,7 +427,7 @@ object KeyIndex {
     if (unionsUseful)
       writeUnions(dir, name, unionBloomsOf(spark, dir, keys, manifest.files,
         manifest.hivePartitions.nonEmpty, cap), unionsGen = gen, expected = cap)
-    else java.nio.file.Files.deleteIfExists(unionsFile(dir, name))
+    else dropUnions(dir, name)
     // meta AFTER the parquet write (overwrite clears the dir); a crash
     // in between leaves a meta-less sidecar, which lookups skip and the
     // next mutation's update() rebuilds. indexedGen = the manifest
@@ -516,31 +513,6 @@ object KeyIndex {
     Some(positives.iterator.filter(live.contains).toSet ++ unindexed)
   }
 
-  /** Append bloom rows to their shards: written into a fresh hidden
-    * staging dir, then the part files move into their `s=` dirs. An
-    * append into the sidecar dir itself would rewrite its `_SUCCESS`
-    * marker (and checksum) on every mutation, and overwriting a
-    * non-empty file forces a flush on ext4. A crash mid-move leaves
-    * rows for files whose gen the meta does not yet cover: duplicates
-    * or gaps the lookup's fail-safe and [[gc]] already absorb.
-    */
-  private def appendRows(spark: SparkSession, dir: String, name: String,
-      rows: DataFrame): Unit = {
-    val stage = path(dir, name).resolve(".append_tmp").toString
-    rows.write.mode("overwrite").partitionBy("s").parquet(stage)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stagePath = new org.apache.hadoop.fs.Path(stage)
-    fs.listStatus(stagePath).filter(_.isDirectory).foreach { sd =>
-      val shard = new org.apache.hadoop.fs.Path(path(dir, name).toString,
-        sd.getPath.getName)
-      fs.mkdirs(shard)
-      fs.listStatus(sd.getPath).map(_.getPath).filter(_.getName.startsWith("part-"))
-        .foreach(f => fs.rename(f, new org.apache.hadoop.fs.Path(shard, f.getName)))
-    }
-    fs.delete(stagePath, true)
-  }
-
   /** Post-mutation maintenance: append the blooms the write recorded
     * for the files the mutation created (one single-task write; no data
     * file is read); superseded paths become STALE rows, which
@@ -591,9 +563,12 @@ object KeyIndex {
       val p = norm(w.entry.path)
       (p, w.entry.rows, b, shardOf(p))
     })
+    // appended under fresh names into their shards; a crash mid-move
+    // leaves rows for files whose gen the meta does not yet cover:
+    // duplicates or gaps the lookup's fail-safe and [[gc]] already absorb
     if (recorded.nonEmpty)
-      appendRows(spark, dir, name, spark.createDataFrame(recorded)
-        .toDF("path", "rows", "bloom", "s").coalesce(1))
+      StagedRewrite.appendParts(spark.createDataFrame(recorded)
+        .toDF("path", "rows", "bloom", "s").coalesce(1), path(dir, name).toString, Seq("s"))
     // self-heal the crash window: a live file whose commit generation
     // postdates the sidecar but has no recorded bloom here has no bloom
     // row (a previous mutation committed, then crashed before its index
@@ -604,8 +579,9 @@ object KeyIndex {
       f.gen.getOrElse(0L) > meta.indexedGen &&
         !recordedPaths.contains(norm(f.path)))
     if (healed.nonEmpty)
-      appendRows(spark, dir, name,
-        bloomRows(spark, dir, keys, healed, manifest.hivePartitions.nonEmpty))
+      StagedRewrite.appendParts(
+        bloomRows(spark, dir, keys, healed, manifest.hivePartitions.nonEmpty),
+        path(dir, name).toString, Seq("s"))
     // union maintenance is AMORTIZED, never per-mutation: files newer
     // than the unions stamp are read unconditionally by lookups (their
     // shardOf is driver math over the manifest), so appending rows here
@@ -630,8 +606,7 @@ object KeyIndex {
           writeUnions(dir, name, merged, unionsGen = currentGen,
             expected = u.expected)
         }
-      case None =>
-        java.nio.file.Files.deleteIfExists(unionsFile(dir, name))
+      case None => dropUnions(dir, name)
     }
     val stale = meta.stale + removedPaths.length
     val stats =
@@ -681,7 +656,11 @@ object KeyIndex {
       val tmp = new org.apache.hadoop.fs.Path(
         dir, s".${name}_tmp_${sd.getFileName}")
       fs.delete(tmp, true)
-      kept.write.mode("overwrite").parquet(tmp.toString)
+      // no _SUCCESS marker: the swap below would put a new file under
+      // the old marker's path
+      kept.write.mode("overwrite")
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .parquet(tmp.toString)
       bytesRewritten += fs.getContentSummary(tmp).getLength
       fs.delete(sdir, true)
       fs.rename(tmp, sdir)

@@ -40,9 +40,22 @@ object StagedRewrite {
       partitionCols: Seq[String], statsCols: Seq[String],
       schema: Option[StructType] = None)
 
-  /** The staging dir of one kind of mutation on the table at `dir`. */
-  def stagingDir(dir: String, kind: String): String =
-    dir.stripSuffix("/") + s".${kind}_stage"
+  /** A fresh staging dir for one `kind` of mutation on the table at
+    * `dir`: `<table>.<kind>_stage-<id>`, unique per call, so two
+    * mutations of one kind on one table never share (and overwrite) a
+    * stage. It stays in flight until [[commit]] takes it; [[reconcile]]
+    * sweeps only stage dirs no live mutation owns.
+    */
+  def stagingDir(dir: String, kind: String): String = {
+    val staging = dir.stripSuffix("/") +
+      s".${kind}$StageTag-${java.util.UUID.randomUUID().toString.take(8)}"
+    inFlight.add(new Path(staging).toUri.getPath)
+    staging
+  }
+
+  private val StageTag = "_stage"
+  // `<kind>_stage-<id>`, and the fixed `<kind>_stage` older builds used
+  private val StageSuffix = raw"[a-z]+_stage(-[0-9a-f]{8})?".r
 
   /** Write `df` through [[StatsWriter]] into `kind`'s staging dir for
     * `dir` (partitionBy when the table is partitioned), recording each
@@ -54,18 +67,47 @@ object StagedRewrite {
     val staging = stagingDir(dir, kind)
     val files = StatsWriter.write(df, staging, partitionCols, statsCols, blooms)
     // nothing to commit: a caller that skips the commit leaves no dir
-    if (files.isEmpty) new Path(staging)
-      .getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-      .delete(new Path(staging), true)
+    if (files.isEmpty) {
+      new Path(staging).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+        .delete(new Path(staging), true)
+      inFlight.remove(new Path(staging).toUri.getPath)
+    }
     Staged(staging, files, partitionCols, statsCols, schema)
   }
 
-  /** Part files an IN-FLIGHT commit has moved into a table dir but not
-    * yet published: [[reconcile]] must not purge them as orphans — a
-    * concurrent mutation on the same table runs reconcile at entry, and
-    * would otherwise delete the other writer's rewrite out from under its
-    * commit. Keyed by filesystem path component. Same-JVM only, matching
-    * the driver-side writer topology writeCas serializes.
+  /** Append `df` to the parquet dir `dest` as new part files (under
+    * `partitionBy` subdirs when given): written into a fresh hidden
+    * staging dir inside `dest`, then each part file moves in under its
+    * own uuid name. Writing straight into `dest` in append mode would
+    * rewrite its `_SUCCESS` marker and checksum in place, and replacing
+    * a non-empty file forces a flush on ext4. Readers skip the hidden
+    * staging dir; a crash mid-move leaves some of the parts moved.
+    */
+  def appendParts(df: DataFrame, dest: String, partitionBy: Seq[String] = Nil): Unit = {
+    val stage = new Path(dest, s".append_tmp-${java.util.UUID.randomUUID()}")
+    val w = df.write.mode("overwrite")
+    (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*)).parquet(stage.toString)
+    val fs = stage.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    def move(from: Path, to: Path): Unit = fs.listStatus(from).foreach { st =>
+      val name = st.getPath.getName
+      if (st.isDirectory) move(st.getPath, new Path(to, name))
+      else if (name.startsWith("part-")) {
+        fs.mkdirs(to)
+        fs.rename(st.getPath, new Path(to, name))
+      }
+    }
+    move(stage, new Path(dest))
+    fs.delete(stage, true)
+  }
+
+  /** Staging dirs of live mutations, and part files an IN-FLIGHT commit
+    * has moved into a table dir but not yet published: [[reconcile]]
+    * must not purge them — a concurrent mutation on the same table runs
+    * reconcile at entry, and would otherwise delete the other writer's
+    * rewrite out from under its commit. Keyed by filesystem path
+    * component. Same-JVM only: a mutation in another JVM can lose its
+    * stage or moved files to this JVM's reconcile and then fails; it
+    * never publishes a manifest naming a missing file.
     */
   private val inFlight = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -103,12 +145,15 @@ object StagedRewrite {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val moved = staged.files.map { p =>
       val dst = new Path(dir, StatsWriter.relOf(p.status.getPath, staged.partitionCols.length))
+      // in flight BEFORE it lands: a concurrent reconcile must never see
+      // it as an orphan
+      inFlight.add(dst.toUri.getPath)
       fs.mkdirs(dst.getParent)
       fs.rename(p.status.getPath, dst)
-      inFlight.add(dst.toUri.getPath)
       p.copy(status = fs.getFileStatus(dst))
     }
     fs.delete(new Path(staged.dir), true)
+    inFlight.remove(new Path(staged.dir).toUri.getPath)
     val written = StatsWriter.entries(spark, dir, moved, staged.partitionCols,
       staged.statsCols, staged.schema)
     val newEntries = written.map(_.entry)
@@ -192,6 +237,18 @@ object StagedRewrite {
       }
     }
     walk(new Path(dir))
+    // stage dirs beside the table that no live mutation of this JVM owns
+    // are a crashed mutation's leftovers
+    val table = new Path(dir)
+    val deadStages = Option(table.getParent).toSeq
+      .flatMap(p => scala.util.Try(fs.listStatus(p)).getOrElse(Array.empty))
+      .map(_.getPath)
+      .filter { p =>
+        val n = p.getName
+        n.startsWith(table.getName + ".") &&
+          StageSuffix.matches(n.stripPrefix(table.getName + ".")) &&
+          !inFlight.contains(p.toUri.getPath)
+      }
     if (referenced.nonEmpty && candidates.nonEmpty && !anyReferenced)
       throw new IllegalStateException(
         s"$dir: the manifest references no file present here but the dir " +
@@ -200,6 +257,7 @@ object StagedRewrite {
           "reconcile (it would delete the data); rewrite the manifest " +
           "paths or rebuild the table.")
     candidates.foreach(p => fs.delete(p, false))
+    deadStages.foreach(p => fs.delete(p, true))
     if (candidates.nonEmpty) spark.catalog.refreshByPath(dir)
   }
 }

@@ -12,7 +12,10 @@ import org.json4s.jackson.Serialization
   * driving data skipping; reference measures exactly this as
   * `files_scanned`/`bytes_scanned`, lakehouse_op/run_queries.py:165-248).
   *
-  * Stored as `_graft_manifest.json` inside the table directory. Numeric,
+  * Stored as a write-once version log inside the table directory:
+  * generation g's header is `_graft_log/<g, 20 digits>.json`
+  * ([[VersionLog]]), and the current manifest is the highest generation
+  * listed. Numeric,
   * date and timestamp columns are normalized to a double (`days` /
   * `epoch seconds`); strings keep lexicographic min/max. `allNull` marks a
   * file whose every value of that column is NULL (range predicates can
@@ -264,7 +267,21 @@ class ConcurrentCommitException(msg: String, val onDisk: Long, val expected: Lon
 
 object ZoneMap {
   private implicit val fmts: Formats = Serialization.formats(NoTypeHints)
-  val ManifestName = "_graft_manifest.json"
+  /** The table's manifest log: one write-once header per generation. */
+  val LogDir = "_graft_log"
+  private val VersionExt = ".json"
+  /** The pre-log manifest file: tables holding only this are not read
+    * (rebuild them); [[read]] names it when it is all a dir has.
+    */
+  private val LegacyManifestName = "_graft_manifest.json"
+
+  def logDir(dir: String): java.nio.file.Path = Paths.get(dir, LogDir)
+
+  /** The current generation's header file, None when the table has no
+    * manifest.
+    */
+  def currentVersionFile(dir: String): Option[java.nio.file.Path] =
+    headerGeneration(dir).map(VersionLog.file(logDir(dir), _, VersionExt))
 
   /** Double representation of a column for zone stats: dates → epoch days,
     * timestamps → epoch seconds, numerics → value. Strings return None.
@@ -285,12 +302,6 @@ object ZoneMap {
       case _ => None
     }
 
-  /** Commit a manifest: stamps the next generation (previous manifest's
-    * + 1; the in-memory `m` carries the read generation, so no disk
-    * re-read) and marks gen-less file entries as created by THIS commit,
-    * then writes atomically. Returns the stamped manifest — mutators
-    * should propagate it, not `m`.
-    */
   /** Entry count at which the files section moves to the compact JSONL
     * sidecar (see [[TableManifest.filesRef]]). Overridable via the
     * `graft.manifest.sidecarThreshold` system property so suites
@@ -302,19 +313,18 @@ object ZoneMap {
 
   private val SidecarPrefix = "_graft_manifest_files."
 
-  /** Read cache: (header fileKey + FileTime + size) → parsed manifest.
+  /** Read cache: (canonical dir, header version) → parsed manifest.
     * Every planning-time prune re-reads the manifest; at sidecar scale
-    * that is seconds of parse per QUERY without this. Commits go through
-    * the atomic rename above, so a content change always produces a new
-    * inode — `BasicFileAttributes.fileKey()` — even when a cross-JVM
-    * writer lands a same-size header inside one coarse mtime tick
-    * (sidecar-mode headers are routinely byte-identical in size across
-    * generations; r18 ADVICE #2). Entries are immutable case classes,
-    * shared safely. Bounded two ways (r18 ADVICE #3): at most
-    * [[ReadCacheMax]] manifests AND at most [[cacheEntryBudget]] total
-    * retained FileEntry rows (~2 KB each at manifest-scale shapes), with
-    * oldest-insertion eviction; a single manifest above the budget is
-    * never cached at all.
+    * that is seconds of parse per QUERY without this. A version file is
+    * never rewritten, so the listing that names the current version is
+    * the whole validation: a commit in any JVM lists as a new version.
+    * (Plain [[write]] may replace a version at or above its own
+    * generation; it drops this JVM's entry, and only fresh-table flows
+    * use it.) Entries are immutable case classes, shared safely. Bounded
+    * two ways (r18 ADVICE #3): at most [[ReadCacheMax]] manifests AND at
+    * most [[cacheEntryBudget]] total retained FileEntry rows (~2 KB each
+    * at manifest-scale shapes), with oldest-insertion eviction; a single
+    * manifest above the budget is never cached at all.
     */
   private val ReadCacheMax = 64
   private def cacheEntryBudget: Long =
@@ -322,24 +332,17 @@ object ZoneMap {
       .getOrElse(1200000L) // one 10⁶-entry table stays cached (~2.5 GB
       // ceiling at ~2 KB/entry); several large tables evict each other
       // instead of accumulating toward OOM
-  private case class CacheVal(fileKey: AnyRef,
-      time: java.nio.file.attribute.FileTime, size: Long, m: TableManifest)
+  private case class CacheVal(version: Long, m: TableManifest)
   private val readCache = new java.util.LinkedHashMap[String, CacheVal]()
   private var cachedEntries: Long = 0L
 
-  private def cacheLookup(key: String,
-      attrs: java.nio.file.attribute.BasicFileAttributes): TableManifest =
+  private def cacheLookup(key: String, version: Long): TableManifest =
     readCache.synchronized {
       val hit = readCache.get(key)
-      if (hit != null && hit.fileKey == attrs.fileKey() &&
-          hit.time == attrs.lastModifiedTime() && hit.size == attrs.size())
-        hit.m
-      else null
+      if (hit != null && hit.version == version) hit.m else null
     }
 
-  private def cacheStore(key: String,
-      attrs: java.nio.file.attribute.BasicFileAttributes,
-      m: TableManifest): Unit = {
+  private def cacheStore(key: String, version: Long, m: TableManifest): Unit = {
     val n = m.files.length.toLong
     if (n > cacheEntryBudget) return // too big to retain — stay transient
     readCache.synchronized {
@@ -351,8 +354,7 @@ object ZoneMap {
         cachedEntries -= it.next().getValue.m.files.length
         it.remove()
       }
-      readCache.put(key, CacheVal(attrs.fileKey(), attrs.lastModifiedTime(),
-        attrs.size(), m))
+      readCache.put(key, CacheVal(version, m))
       cachedEntries += n
     }
   }
@@ -493,86 +495,79 @@ object ZoneMap {
     } finally p.close()
   }
 
-  /** The generation stamped on the CURRENT on-disk header, by token
-    * streaming (cheap even on non-sidecar headers). None = no header.
+  /** The CURRENT generation: the highest version in the table's log, by
+    * listing alone (no header is parsed). None = no manifest.
     */
-  def headerGeneration(dir: String): Option[Long] = {
+  def headerGeneration(dir: String): Option[Long] =
+    VersionLog.latest(logDir(dir), VersionExt)
+
+  /** The sidecar a header version references, extracted by token
+    * streaming (skips the inline files array) — the sidecar GC keep-set
+    * authority. None when the version is gone or references none.
+    */
+  private def headerFilesRef(dir: String, version: Long): Option[String] = {
     import com.fasterxml.jackson.core.JsonToken._
-    val hp = Paths.get(dir, ManifestName)
-    if (!Files.exists(hp)) return None
-    val p = jsonFactory.createParser(hp.toFile)
     try {
-      if (p.nextToken() != START_OBJECT) return None
-      while (p.nextToken() != END_OBJECT) {
-        val name = p.currentName(); p.nextToken()
-        if (name == "generation") return Some(p.getLongValue)
-        p.skipChildren()
-      }
-      None
+      val p = jsonFactory.createParser(
+        VersionLog.file(logDir(dir), version, VersionExt).toFile)
+      try {
+        if (p.nextToken() != START_OBJECT) return None
+        while (p.nextToken() != END_OBJECT) {
+          val name = p.currentName(); p.nextToken()
+          if (name == "filesRef") return Option(p.getText)
+          p.skipChildren()
+        }
+        None
+      } finally p.close()
     } catch { case scala.util.control.NonFatal(_) => None }
-    finally p.close()
   }
 
-  /** The sidecar name the CURRENT on-disk header references, extracted
-    * by token streaming (skips the inline files array, so this is cheap
-    * even on non-sidecar headers) — the GC keep-set authority.
+  /** The generation a sidecar was written for (its `g<gen>-` prefix). */
+  private def sidecarGen(name: String): Long =
+    name.stripPrefix(SidecarPrefix + "g").takeWhile(_.isDigit).toLongOption
+      .getOrElse(0L)
+
+  /** Test seam: runs inside [[read]] after the listing names the current
+    * version and before its header is opened, so a suite can commit in
+    * between deterministically.
     */
-  private def headerFilesRef(dir: String): Option[String] = {
-    import com.fasterxml.jackson.core.JsonToken._
-    val hp = Paths.get(dir, ManifestName)
-    if (!Files.exists(hp)) return None
-    val p = jsonFactory.createParser(hp.toFile)
-    try {
-      if (p.nextToken() != START_OBJECT) return None
-      while (p.nextToken() != END_OBJECT) {
-        val name = p.currentName(); p.nextToken()
-        if (name == "filesRef") return Option(p.getText)
-        p.skipChildren()
-      }
-      None
-    } catch { case scala.util.control.NonFatal(_) => None }
-    finally p.close()
-  }
+  @volatile private[graft] var testHookAfterList: () => Unit = () => ()
 
-  // one lock object per canonical table dir: same-JVM commits serialize,
-  // so writeCas's generation check-and-publish is atomic within the
-  // driver (the only writer topology this engine runs — mutations are
-  // driver-side). Cross-JVM writers get best-effort detection: the gen
-  // re-read inside the lock narrows the race to the rename window, the
-  // same storage-dependent guarantee Delta on non-locking object stores
-  // documents.
-  private val commitLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def lockFor(dir: String): Object =
-    commitLocks.computeIfAbsent(canonical(dir), _ => new Object)
+  /** Check-and-swap commit: publish `m` as the next generation ONLY if
+    * the log's current generation is still the one `m` was read at (no
+    * manifest = 0) — throws [[ConcurrentCommitException]] otherwise.
+    * The publish is [[VersionLog]]'s put-if-absent link, so of two
+    * writers from one base, in one JVM or in two, exactly one wins; no
+    * lock is needed. Every mutation of an EXISTING table commits through
+    * this, from [[StagedRewrite.commit]]; fresh-table writes
+    * ([[LayoutWriter.write]]) keep plain [[write]].
+    */
+  def writeCas(dir: String, m: TableManifest): TableManifest = commit(dir, m, cas = true)
 
-  /** Check-and-swap commit: publish `m` ONLY if the on-disk generation
-    * still equals the one `m` was read at (missing header = 0) — throws
-    * [[ConcurrentCommitException]] otherwise. Every mutation of an
-    * EXISTING table commits through this, from [[StagedRewrite.commit]];
-    * fresh-table writes ([[LayoutWriter.write]]) keep plain [[write]] (a
+  /** Commit a manifest: stamps the next generation (`m`'s + 1; the
+    * in-memory `m` carries the read generation, so no disk re-read),
+    * marks gen-less file entries as created by THIS commit, then
+    * publishes it as that generation's header. Returns the stamped
+    * manifest — mutators should propagate it, not `m`. Last writer wins:
+    * log versions at or above the new generation are replaced (a
     * re-layout legitimately replaces whatever generation is there).
     */
-  def writeCas(dir: String, m: TableManifest): TableManifest =
-    lockFor(dir).synchronized {
-      val onDisk = headerGeneration(dir).getOrElse(0L)
-      val expected = m.generation.getOrElse(0L)
-      if (onDisk != expected)
-        throw new ConcurrentCommitException(
-          s"concurrent commit on $dir: manifest is at generation $onDisk, " +
-            s"this mutation was computed against $expected — re-read and " +
-            "rebase (disjoint file sets) or re-run (overlapping)",
-          onDisk, expected)
-      write(dir, m)
-    }
+  def write(dir: String, m: TableManifest): TableManifest = commit(dir, m, cas = false)
 
-  def write(dir: String, m: TableManifest): TableManifest = lockFor(dir).synchronized {
+  private def commit(dir: String, m: TableManifest, cas: Boolean): TableManifest = {
+    val log = logDir(dir)
+    val expected = m.generation.getOrElse(0L)
+    def conflict(onDisk: Long) = new ConcurrentCommitException(
+      s"concurrent commit on $dir: manifest is at generation $onDisk, " +
+        s"this mutation was computed against $expected — re-read and " +
+        "rebase (disjoint file sets) or re-run (overlapping)",
+      onDisk, expected)
     // generations start at 1, NOT 0: KeyIndex.build on a never-stamped
     // manifest records indexedGen = generation.getOrElse(0) = 0, so a
     // first commit at gen 0 that crashed before KeyIndex.update would
     // satisfy gen <= indexedGen and be silently treated as indexed —
     // the exact unsoundness indexedGen exists to prevent (r15 ADVICE).
-    val nextGen = m.generation.getOrElse(0L) + 1
+    val nextGen = expected + 1
     val stamped = m.copy(
       root = Some(canonical(dir)),
       generation = Some(nextGen),
@@ -581,10 +576,10 @@ object ZoneMap {
       filesRef = None, fileCount = None)
     // gen + random suffix: two writers racing from the same base
     // generation (or a writer re-running after a crash between sidecar
-    // and header move) must NEVER target the same sidecar name — a
+    // and header publish) must NEVER target the same sidecar name — a
     // gen-N header pairing with another writer's gen-N sidecar is a
-    // torn manifest the single-file rename could not produce (r18
-    // ADVICE #1). GC below keys off header references, not gen math.
+    // torn manifest (r18 ADVICE #1). GC below keys off header
+    // references, not gen math.
     val sidecar =
       if (stamped.files.length >= sidecarThreshold)
         Some(SidecarPrefix + s"g$nextGen-" +
@@ -594,7 +589,7 @@ object ZoneMap {
       // one COMPACT line per entry, serialized in PARALLEL (jackson's
       // ObjectMapper is thread-safe; single-threaded reflection emit
       // measured 22 s for 10⁶ entries — the dominant commit cost),
-      // written sequentially
+      // written sequentially, then moved to its (fresh) name whole
       val entries = stamped.files.toArray
       val lines = new Array[String](entries.length)
       java.util.stream.IntStream.range(0, entries.length).parallel()
@@ -604,7 +599,6 @@ object ZoneMap {
       try lines.foreach { l => w.write(l); w.write("\n") }
       finally w.close()
       Files.move(tmpS, Paths.get(dir, ref),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     }
     val onDisk = sidecar match {
@@ -612,30 +606,51 @@ object ZoneMap {
         stamped.copy(files = Nil, filesRef = Some(ref), fileCount = Some(stamped.files.length))
       case None => stamped
     }
-    val json = Serialization.writePretty(onDisk)
-    // the sidecar the header WE ARE REPLACING references — kept through
-    // GC so a reader that loaded that header concurrently with this
-    // commit still finds its sidecar (the read side also retries
-    // through the header on a missing sidecar, covering two commits in
-    // the reader's window). Captured BEFORE the rename.
-    val prevRef = headerFilesRef(dir)
-    // temp + atomic rename: a reader never observes a torn manifest,
-    // and mutation paths (KeyedDelta/Upserter) can order "commit
-    // manifest, then delete superseded part files" safely. The sidecar
-    // lands BEFORE the header that names it, so a reader can never see
-    // a header pointing at a missing sidecar; orphaned sidecars
-    // (crashed writers, superseded generations) are GCed after the
-    // header commit by HEADER REFERENCE, never by gen arithmetic.
-    val tmp = Paths.get(dir, ManifestName + ".tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(dir, ManifestName),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    // a commit must invalidate this JVM's read cache NOW — the cache
-    // check alone can miss a same-size header rewritten inside one
-    // filesystem timestamp tick on filesystems without stable fileKeys
+    val bytes = Serialization.writePretty(onDisk).getBytes(StandardCharsets.UTF_8)
+    // the sidecar lands BEFORE the header that names it, so a reader
+    // can never see a header pointing at a missing sidecar; the header
+    // goes first relative to the data files, so mutation paths can
+    // order "commit manifest, then delete superseded part files" safely
+    val published =
+      if (cas) {
+        headerGeneration(dir).getOrElse(0L) == expected &&
+          VersionLog.publish(log, nextGen, VersionExt, bytes) && {
+            // the link can land on a name GC already freed only if other
+            // writers committed nextGen, nextGen+1 and nextGen+2 between
+            // the listing and the link: that version was never current —
+            // withdraw it
+            val superseded = headerGeneration(dir).exists(_ >= nextGen + 2)
+            if (superseded) Files.deleteIfExists(VersionLog.file(log, nextGen, VersionExt))
+            !superseded
+          }
+      } else {
+        VersionLog.versions(log, VersionExt).filter(_ >= nextGen)
+          .foreach(v => Files.deleteIfExists(VersionLog.file(log, v, VersionExt)))
+        VersionLog.publish(log, nextGen, VersionExt, bytes)
+      }
+    // a plain write may have replaced a version this JVM cached
     cacheInvalidate(canonical(dir))
+    if (!published) {
+      sidecar.foreach(r => Files.deleteIfExists(Paths.get(dir, r)))
+      throw conflict(headerGeneration(dir).getOrElse(0L))
+    }
+    gc(dir, nextGen, sidecar)
+    stamped
+  }
+
+  /** After publishing generation `gen`: keep it and the version before
+    * it (a reader that listed that one still finds it; [[read]] retries
+    * through the listing when two commits land in its window), drop
+    * older versions and every sidecar neither kept header references.
+    * Sidecars of later generations belong to writers still in flight
+    * and are left to the commit that supersedes them.
+    */
+  private def gc(dir: String, gen: Long, ours: Option[String]): Unit =
     try {
+      val log = logDir(dir)
+      val prev = VersionLog.versions(log, VersionExt).filter(_ < gen).lastOption
+      VersionLog.dropBelow(log, VersionExt, prev.getOrElse(gen))
+      val keep = ours.toSet ++ prev.flatMap(headerFilesRef(dir, _))
       // Files.list streams hold a directory fd — close them.
       val stream = Files.list(Paths.get(dir))
       try {
@@ -643,40 +658,53 @@ object ZoneMap {
         stream.iterator().asScala
           .filter { p =>
             val n = p.getFileName.toString
-            n.startsWith(SidecarPrefix) && !sidecar.contains(n) &&
-              !prevRef.contains(n)
+            n.startsWith(SidecarPrefix) && !keep.contains(n) && sidecarGen(n) <= gen
           }
           .foreach(p => Files.deleteIfExists(p))
       } finally stream.close()
     } catch { case scala.util.control.NonFatal(_) => () }
-    stamped
-  }
 
-  def read(dir: String): TableManifest = {
-    // a concurrent commit can GC the sidecar between our header read
-    // and the sidecar read; the fresh header names the new sidecar, so
-    // retry through it (write keeps one prior gen, so a single retry
-    // suffices unless commits outpace the reader — bounded at 3)
+  /** The current header: its generation and file. Throws
+    * NoSuchFileException (never retried) when the table has no manifest.
+    */
+  private def currentHeader(dir: String): (Long, java.nio.file.Path) =
+    headerGeneration(dir) match {
+      case Some(g) => (g, VersionLog.file(logDir(dir), g, VersionExt))
+      case None =>
+        val legacy = Files.exists(Paths.get(dir, LegacyManifestName))
+        throw new java.nio.file.NoSuchFileException(dir, null,
+          if (legacy) s"only a pre-log $LegacyManifestName: rebuild the table"
+          else "no table manifest")
+    }
+
+  /** Runs `body` again when a header version or sidecar it opened was
+    * deleted under it: a concurrent commit's GC can drop what a reader
+    * just listed, and the re-listing names the new ones. GC keeps one
+    * prior version, so one retry suffices unless commits outpace the
+    * reader — bounded at 3.
+    */
+  private def retryMissing[A](body: => A): A = {
     var attempt = 0
     while (true) {
-      try return readOnce(dir)
+      try return body
       catch {
         case e: java.nio.file.NoSuchFileException
             if attempt < 3 && e.getFile != null &&
-              e.getFile.contains(SidecarPrefix) =>
+              (e.getFile.contains(SidecarPrefix) || e.getFile.contains(s"/$LogDir/")) =>
           attempt += 1
       }
     }
     sys.error("unreachable")
   }
 
+  def read(dir: String): TableManifest = retryMissing(readOnce(dir))
+
   private def readOnce(dir: String): TableManifest = {
-    val hp = Paths.get(dir, ManifestName)
-    val attrs = Files.readAttributes(hp,
-      classOf[java.nio.file.attribute.BasicFileAttributes])
+    val (version, hp) = currentHeader(dir)
     val cacheKey = canonical(dir)
-    val hit = cacheLookup(cacheKey, attrs)
+    val hit = cacheLookup(cacheKey, version)
     if (hit != null) return hit
+    testHookAfterList()
     val json = new String(Files.readAllBytes(hp), StandardCharsets.UTF_8)
     val m0 = Serialization.read[TableManifest](json)
     val m = m0.filesRef match {
@@ -696,7 +724,7 @@ object ZoneMap {
       case None => m0
     }
     val result = rebase(m, dir)
-    cacheStore(cacheKey, attrs, result)
+    cacheStore(cacheKey, version, result)
     result
   }
 
@@ -831,19 +859,8 @@ object ZoneMap {
     * OOM the driver on the old path). Small / cached manifests take the
     * in-memory [[TableManifest.prune]] fast path unchanged.
     */
-  def pruneRead(dir: String, preds: Seq[ZonePredicate]): PrunedView = {
-    var attempt = 0
-    while (true) {
-      try return pruneReadOnce(dir, preds)
-      catch {
-        case e: java.nio.file.NoSuchFileException
-            if attempt < 3 && e.getFile != null &&
-              e.getFile.contains(SidecarPrefix) =>
-          attempt += 1
-      }
-    }
-    sys.error("unreachable")
-  }
+  def pruneRead(dir: String, preds: Seq[ZonePredicate]): PrunedView =
+    retryMissing(pruneReadOnce(dir, preds))
 
   private def pruneReadOnce(dir: String, preds: Seq[ZonePredicate]): PrunedView = {
     def fromFull(m: TableManifest): PrunedView =
@@ -873,18 +890,16 @@ object ZoneMap {
     * root as stamped — the streaming prune rebases survivors from it).
     */
   def header(dir: String): TableManifest = {
-    val hp = Paths.get(dir, ManifestName)
-    val attrs = Files.readAttributes(hp,
-      classOf[java.nio.file.attribute.BasicFileAttributes])
+    val (version, hp) = currentHeader(dir)
     val cacheKey = canonical(dir)
-    val cached = cacheLookup(cacheKey, attrs)
+    val cached = cacheLookup(cacheKey, version)
     if (cached != null) return cached
     val m0 = Serialization.read[TableManifest](
       new String(Files.readAllBytes(hp), StandardCharsets.UTF_8))
     if (m0.filesRef.isDefined) m0
     else {
       val result = rebase(m0, dir)
-      cacheStore(cacheKey, attrs, result)
+      cacheStore(cacheKey, version, result)
       result
     }
   }
@@ -908,5 +923,5 @@ object ZoneMap {
     scheme + ":" + auth + path.stripSuffix("/")
   }
 
-  def exists(dir: String): Boolean = Files.exists(Paths.get(dir, ManifestName))
+  def exists(dir: String): Boolean = headerGeneration(dir).isDefined
 }

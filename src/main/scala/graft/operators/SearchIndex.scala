@@ -70,8 +70,8 @@ object SearchIndex {
       // appends remove nothing, but a racing optimize() rewrites the
       // whole postings set - the commit fails loudly instead
       graft.layout.StagedRewrite.commit(spark, pdir, before, Nil, staged)
-      InvertedIndex.docLengths(batch, idCol, textCol)
-        .write.mode("append").parquet(s"$dir/doclen")
+      graft.layout.StagedRewrite.appendParts(
+        InvertedIndex.docLengths(batch, idCol, textCol), s"$dir/doclen")
     }
   }
 

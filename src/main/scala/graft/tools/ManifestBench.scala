@@ -11,7 +11,9 @@ import graft.table.SfcTable
 /** Manifest scale audit (r17 VERDICT Next #7): at 100 TB with ~128 MB
   * files a table holds ~10⁶ file entries, and every planning-time prune
   * (the file listing of a [[SfcTable]] scan), compaction scan, and keyed
-  * commit reads + rewrites `_graft_manifest.json`. This tool measures
+  * commit reads the current header of the table's `_graft_log/` and
+  * publishes the next one (with its JSONL sidecar above
+  * `ZoneMap.sidecarThreshold` entries). This tool measures
   * write / read / prune latency and on-disk size at 10⁴–10⁶ synthetic
   * lineitem-shaped entries (6 stats columns, hive partition values,
   * realistic paths) → results/manifest_scale.json, driving the storage
@@ -95,8 +97,7 @@ object ManifestBench {
         val m0 = usedMb()
         val m = synth(n)
         val (_, secW) = time(ZoneMap.write(dir, m))
-        val bytes = java.nio.file.Files.size(
-          java.nio.file.Paths.get(dir, ZoneMap.ManifestName))
+        val bytes = java.nio.file.Files.size(ZoneMap.currentVersionFile(dir).get)
         // STREAMING prune (r18 VERDICT Next #2): survivors without the
         // manifest in memory — retained heap is O(kept), measured
         // against its own baseline while the synth manifest stays live
@@ -132,8 +133,11 @@ object ManifestBench {
         }.sorted.apply(1)
         // second write with the read manifest = the keyed-commit shape
         val (r1, secR) = time(ZoneMap.read(dir))
-        // repeat read = the per-query planning cost with the read cache
+        // repeat read = the per-query planning cost with the read cache;
+        // one shot, and the median of 1001 (a one-shot time of a ~µs
+        // call reads whatever the JVM was doing at that moment)
         val (_, secRC) = time(ZoneMap.read(dir))
+        val secRCp50 = (0 to 1000).map(_ => time(ZoneMap.read(dir))._2).sorted.apply(500)
         val heapMb = usedMb() - m0
         // S2-band prune on the leading sort column (~0.5% of entries)
         val (kept, secP) = time(
@@ -149,7 +153,7 @@ object ManifestBench {
         assert(keptPlan == kept.length,
           s"SfcTable scan listed $keptPlan files, in-memory prune kept ${kept.length}")
         println(f"[manifest] n=$n%7d  write=${secW}%7.3fs  read=${secR}%7.3fs" +
-          f"  read_cached=${secRC}%8.5fs  prune=${secP}%6.3fs" +
+          f"  read_cached=${secRC}%8.5fs (p50 ${secRCp50 * 1e6}%5.1f us)  prune=${secP}%6.3fs" +
           f"  prune_stream=${secPS}%6.3fs (streamed=$streamed," +
           f" heap=${heapStreamMb}%4d MB)  sfc_plan=${secPlan}%6.3fs" +
           f" (heap=${heapPlanMb}%4d MB)  rewrite=${secW2}%7.3fs" +
@@ -157,6 +161,7 @@ object ManifestBench {
           f"  heap=${heapMb}%5d MB  kept=${kept.length}")
         s"""{"n":$n,"write_sec":${f3(secW)},"read_sec":${f3(secR)},""" +
           s""""read_cached_sec":${"%.5f".formatLocal(java.util.Locale.ROOT, secRC)},""" +
+          s""""read_cached_p50_us":${"%.1f".formatLocal(java.util.Locale.ROOT, secRCp50 * 1e6)},""" +
           s""""prune_sec":${f3(secP)},"prune_stream_sec":${f3(secPS)},""" +
           s""""prune_stream_cold_sec":${f3(secPSCold)},""" +
           s""""prune_streamed":$streamed,"heap_stream_mb":$heapStreamMb,""" +

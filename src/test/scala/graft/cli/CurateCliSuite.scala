@@ -361,8 +361,7 @@ class CurateCliSuite extends SparkTestBase {
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
     }
-    java.nio.file.Files.delete(java.nio.file.Paths.get(
-      s"$outOld/state/docs", "_graft_manifest.json"))
+    rm(new java.io.File(s"$outOld/state/docs", graft.layout.ZoneMap.LogDir))
     graft.layout.KeyIndex.sidecarNames(s"$outOld/state/docs")
       .foreach(n => rm(new java.io.File(s"$outOld/state/docs/$n")))
     assert(!graft.layout.ZoneMap.exists(s"$outOld/state/docs"))

@@ -440,9 +440,12 @@ class KeyIndexSuite extends SparkTestBase {
     implicit val fmts: org.json4s.Formats =
       org.json4s.jackson.Serialization.formats(org.json4s.NoTypeHints)
     java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, ZoneMap.ManifestName),
+      ZoneMap.currentVersionFile(dir).get,
       org.json4s.jackson.Serialization.writePretty(legacy)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    // a version file is write-once, so the read cache never re-checks
+    // one; this raw in-place rewrite must drop it
+    ZoneMap.clearReadCache()
     // index the legacy table: indexedGen records 0 (no generation yet)
     KeyIndex.build(spark, dir)
     // first stamped commit adds a file, then CRASH before KeyIndex.update.
@@ -520,7 +523,8 @@ class KeyIndexSuite extends SparkTestBase {
 
     // without the unions file the lookup reads every shard and can only
     // ADD per-file-bloom false positives
-    java.nio.file.Files.delete(KeyIndex.path(dir).resolve("_unions.bin"))
+    val unions = KeyIndex.path(dir).resolve(KeyIndex.UnionsLog).toFile
+    unions.listFiles().foreach(_.delete()); unions.delete()
     val full = KeyIndex.affectedPaths(spark, dir, hashes, manifest).get
     assert(KeyIndex.lastShardsRead >= shardsSkipped)
     assert(skipped.subsetOf(full),

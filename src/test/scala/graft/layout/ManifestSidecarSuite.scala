@@ -30,8 +30,7 @@ class ManifestSidecarSuite extends AnyFunSuite {
     java.nio.file.Files.createTempDirectory("graft_sidecar").toString
 
   private def headerJson(dir: String): String = new String(
-    java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, ZoneMap.ManifestName)), "UTF-8")
+    java.nio.file.Files.readAllBytes(ZoneMap.currentVersionFile(dir).get), "UTF-8")
 
   private def sidecars(dir: String): Seq[String] =
     new java.io.File(dir).list().toSeq

@@ -94,7 +94,7 @@ class RelocationSuite extends SparkTestBase {
       (1 to 5000).map(i => (i.toLong, i % 7)).toDF("id", "x"),
       src, LayoutSpec("linear", Seq("x"), numFiles = Some(4)))
     // strip the root stamp -> pre-r15 manifest shape
-    val mf = java.nio.file.Paths.get(src, ZoneMap.ManifestName)
+    val mf = ZoneMap.currentVersionFile(src).get
     val json = java.nio.file.Files.readString(mf)
     val stripped = json.replaceAll(""",\s*"root"\s*:\s*"[^"]*"""", "")
     java.nio.file.Files.writeString(mf, stripped)

@@ -2,7 +2,7 @@ package graft.table
 
 import graft.SparkTestBase
 import graft.layout.{Compactor, ConcurrentCommitException, KeyedDelta, LayoutWriter,
-  NumBetween, StagedRewrite, ZoneMap}
+  NumBetween, StagedRewrite, VersionLog, ZoneMap}
 import graft.layout.LayoutWriter.LayoutSpec
 
 /** Optimistic concurrency on the manifest commit (round-19; the OCC
@@ -202,5 +202,116 @@ class ConcurrentCommitSuite extends SparkTestBase {
     aborts(s"$idx/postings")(graft.operators.SearchIndex.add(spark,
       docs.filter($"doc_id" > 40), "doc_id", "text", idx))
     assert(spark.read.parquet(t).count() == 10000)
+  }
+
+  /** Runs each body on its own thread, all released at once; returns
+    * what each returned or threw, in body order.
+    */
+  private def together[T](bodies: (() => T)*): Seq[Either[Throwable, T]] = {
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val out = Array.fill[Either[Throwable, T]](bodies.length)(null)
+    val threads = bodies.zipWithIndex.map { case (b, i) =>
+      val t = new Thread(() => {
+        go.await()
+        out(i) = try Right(b()) catch { case e: Throwable => Left(e) }
+      })
+      t.start(); t
+    }
+    go.countDown()
+    threads.foreach(_.join())
+    out.toSeq
+  }
+
+  test("writeCas: a raw publish of the next generation, as another JVM " +
+      "makes it, wins and stays current") {
+    val dir = keyedTable("graft_cas_raw")
+    val m1 = ZoneMap.read(dir) // gen 1
+    val log = ZoneMap.logDir(dir)
+    // no in-JVM lock and no ZoneMap call: temp file + link(2)
+    val raw = java.nio.file.Files.readAllBytes(ZoneMap.currentVersionFile(dir).get)
+    val tmp = log.resolve(".tmp-other-jvm")
+    java.nio.file.Files.write(tmp, raw)
+    java.nio.file.Files.createLink(log.resolve(VersionLog.fileName(2L, ".json")), tmp)
+    java.nio.file.Files.delete(tmp)
+    val e = intercept[ConcurrentCommitException](ZoneMap.writeCas(dir, m1))
+    assert(e.onDisk == 2L && e.expected == 1L)
+    assert(ZoneMap.headerGeneration(dir).contains(2L))
+    assert(java.util.Arrays.equals(
+      java.nio.file.Files.readAllBytes(ZoneMap.currentVersionFile(dir).get), raw),
+      "the losing commit must not touch the winner's version")
+    // the link itself is the put-if-absent: publishing an existing
+    // version fails and leaves its bytes as they were
+    assert(!VersionLog.publish(log, 2L, ".json", "{}".getBytes("UTF-8")))
+    assert(java.util.Arrays.equals(
+      java.nio.file.Files.readAllBytes(ZoneMap.currentVersionFile(dir).get), raw))
+  }
+
+  test("two threads committing from one base: exactly one wins") {
+    val dir = keyedTable("graft_cas_threads")
+    (1 to 20).foreach { round =>
+      val base = ZoneMap.read(dir)
+      val res = together(
+        () => ZoneMap.writeCas(dir, base.copy(commitsSinceCluster = Some(1))),
+        () => ZoneMap.writeCas(dir, base.copy(commitsSinceCluster = Some(2))))
+      val wins = res.collect { case Right(m) => m }
+      assert(wins.length == 1, s"round $round: ${wins.length} commits won")
+      res.collect { case Left(e) => e }.foreach(e =>
+        assert(e.isInstanceOf[ConcurrentCommitException], s"round $round: $e"))
+      assert(ZoneMap.headerGeneration(dir) == base.generation.map(_ + 1))
+      assert(ZoneMap.read(dir).commitsSinceCluster == wins.head.commitsSinceCluster,
+        s"round $round: the current version is not the winner's")
+    }
+  }
+
+  test("a reader that listed generation N still reads after two later commits") {
+    val dir = keyedTable("graft_cas_reader")
+    val m1 = ZoneMap.read(dir)
+    ZoneMap.clearReadCache()
+    var ran = false
+    ZoneMap.testHookAfterList = () => {
+      if (!ran) {
+        ran = true
+        ZoneMap.writeCas(dir, ZoneMap.writeCas(dir, m1))
+      }
+    }
+    val got = try ZoneMap.read(dir) finally ZoneMap.testHookAfterList = () => ()
+    assert(ran, "the commits must have run between the listing and the read")
+    assert(!java.nio.file.Files.exists(
+      ZoneMap.logDir(dir).resolve(VersionLog.fileName(1L, ".json"))),
+      "GC must have dropped the version the reader listed")
+    assert(got.generation.contains(3L) && got.files == m1.files)
+  }
+
+  test("two concurrent upserts of disjoint keys into one table both land") {
+    val spark2 = spark
+    import spark2.implicits._
+    val dir = keyedTable("graft_occ_two_threads")
+    val res = together(
+      () => Upserter.upsert(spark, dir, batch(5L -> "lo5")),
+      () => Upserter.upsert(spark, dir, batch(9990L -> "hi9990")))
+    res.collect { case Left(e) => e }.foreach(e => throw e)
+    val got = spark.read.parquet(dir)
+    assert(got.count() == 10000)
+    assert(got.filter($"k" === 5L).select("payload").as[String].head() == "lo5")
+    assert(got.filter($"k" === 9990L).select("payload").as[String].head() == "hi9990")
+    assert(ZoneMap.read(dir).generation.contains(3L))
+    assertNoDangling(dir)
+  }
+
+  test("reconcile sweeps dead stage dirs beside a table, never a live one") {
+    val dir = keyedTable("graft_occ_stages")
+    def withFile(d: String): java.io.File = {
+      val f = new java.io.File(d); f.mkdirs()
+      java.nio.file.Files.writeString(new java.io.File(f, "part-x.parquet").toPath, "x")
+      f
+    }
+    val dead = withFile(s"$dir.upsert_stage-deadbeef") // a crashed mutation's
+    val legacy = withFile(s"$dir.compact_stage") // an older build's fixed name
+    val live = withFile(StagedRewrite.stagingDir(dir, "upsert"))
+    val other = withFile(s"$dir.backup") // not a stage dir
+    StagedRewrite.reconcile(spark, dir, ZoneMap.read(dir))
+    assert(!dead.exists() && !legacy.exists(), "dead stage dirs must be swept")
+    assert(live.exists(), "a live mutation's stage dir must survive")
+    assert(other.exists(), "only stage dirs are swept")
   }
 }
