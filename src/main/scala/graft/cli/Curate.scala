@@ -66,11 +66,8 @@ object Curate {
   /** [[storeFiles]] for a frame of about the state docs store's rows,
     * read from its manifest (no job).
     */
-  private def stateStoreFiles(outDir: String): Int = {
-    val d = s"$outDir/state/docs"
-    storeFiles(
-      if (graft.layout.ZoneMap.exists(d)) graft.layout.ZoneMap.read(d).totalRows else 0L)
-  }
+  private def stateStoreFiles(outDir: String): Int =
+    storeFiles(graft.layout.ZoneMap.read(s"$outDir/state/docs").totalRows)
 
   /** Trigger floor: compact no earlier than this many files (test hook:
     * `-Dgraft.curate.compactFloor=N` lets suites exercise the trigger
@@ -300,14 +297,13 @@ object Curate {
       // "Next #1"): no footer-inference jobs on the fold's hot path.
       val stateDocsDir = s"$outDir/state/docs"
       // manifest'd docs store (round-15: soak-measured O(state) fold
-      // lookups — see the full build): reconcile crash orphans BEFORE
-      // the dir-level read, mirroring components above. Pre-r15 states
-      // have no manifest — every new path below degrades to the old
-      // full-scan/plain-append behavior on them.
-      val docsZoned = graft.layout.ZoneMap.exists(stateDocsDir)
-      if (docsZoned)
-        graft.layout.StagedRewrite.reconcile(
-          spark, stateDocsDir, graft.layout.ZoneMap.read(stateDocsDir))
+      // lookups — see the full build), gated like components above:
+      // reconcile crash orphans BEFORE the dir-level read
+      require(graft.layout.ZoneMap.exists(stateDocsDir),
+        s"$outDir/state/docs has no zone manifest — state format " +
+          "changed; re-run the full build to migrate")
+      graft.layout.StagedRewrite.reconcile(
+        spark, stateDocsDir, graft.layout.ZoneMap.read(stateDocsDir))
       val stateDocs = readSchema(outDir, "docs_schema.json")
         .foldLeft(spark.read)((r, s) => r.schema(s))
         .parquet(stateDocsDir)
@@ -321,8 +317,7 @@ object Curate {
       val batch = graft.Tables.parallelized(
         graft.Tables.load(spark, batchDir, "documents"))
       val prep = graft.queries.IncrementalCuration.prepareBatch(
-        stateDocs, batch, minChars,
-        docsDir = if (docsZoned) Some(stateDocsDir) else None)
+        stateDocs, batch, minChars, docsDir = Some(stateDocsDir))
       lap("prepare_batch")
       // fold-append sizing (round-15): micro-batches land as ONE sorted
       // file per store; a batch too large for the exact-dedup fast path
@@ -336,8 +331,7 @@ object Curate {
       val postingsDir = s"$outDir/state/postings"
       val usePostings = graft.layout.ZoneMap.exists(postingsDir)
       val docsDir = s"$outDir/docs"
-      val deltaEligible = storedBudget(outDir).isEmpty &&
-        graft.layout.ZoneMap.exists(docsDir)
+      val deltaEligible = storedBudget(outDir).isEmpty
       val corpusSchema = readSchema(outDir, "corpus_schema.json")
       // labels as a DELTA against the stored mapping (round-12 VERDICT
       // "Next #1"): driver-local pairs and CC when every bound fits, the
@@ -345,7 +339,7 @@ object Curate {
       val deltaRes = graft.queries.IncrementalCuration.foldLabels(
         stateDocs, stateComps, prep,
         postingsDir = if (usePostings) Some(postingsDir) else None,
-        docsDir = if (docsZoned) Some(stateDocsDir) else None)
+        docsDir = Some(stateDocsDir))
       lap("components")
       // retry-only (round-10 ADVICE): batch rows a crashed fold already
       // appended to the components/postings stores must be dropped
@@ -360,7 +354,7 @@ object Curate {
       // marker BEFORE the first state-store mutation on EVERY path
       // (round-13 ADVICE, medium): the components/postings KeyedDelta
       // appends below run unconditionally, so a !deltaEligible fold
-      // (packed corpus, pre-manifest docs dir) that crashed between
+      // (packed corpus) that crashed between
       // them and the state/docs append must also retry with
       // retrying=true — otherwise retryIds=Nil re-appends the batch's
       // component/postings rows as duplicates
@@ -496,17 +490,13 @@ object Curate {
       if (failAfterPostingsAppend)
         throw new IllegalStateException(
           "test hook: simulated crash after postings append, before docs append")
-      if (docsZoned) {
-        // manifest-maintained append; a retry's delete-by-key removes a
-        // crashed fold's half-appended rows first (batch ids exceed the
-        // corpus ids, so the delete prunes to zero files on clean folds).
-        // KeyedDelta also keeps the __h bloom sidecar current (updateAll).
-        graft.layout.KeyedDelta(spark, stateDocsDir, retryIds,
-          Some(prep.rows.select(stateDocs.columns.map(col).toSeq: _*)),
-          Some(stateDocs.schema), appendPartitions = appendFiles)
-      } else {
-        prep.rows.write.mode("append").parquet(stateDocsDir)
-      }
+      // manifest-maintained append; a retry's delete-by-key removes a
+      // crashed fold's half-appended rows first (batch ids exceed the
+      // corpus ids, so the delete prunes to zero files on clean folds).
+      // KeyedDelta also keeps the __h bloom sidecar current (updateAll).
+      graft.layout.KeyedDelta(spark, stateDocsDir, retryIds,
+        Some(prep.rows.select(stateDocs.columns.map(col).toSeq: _*)),
+        Some(stateDocs.schema), appendPartitions = appendFiles)
       java.nio.file.Files.deleteIfExists(marker)
       lap("state_writes")
       // amortized re-sort/bin-pack of whichever stores outgrew their
@@ -516,8 +506,8 @@ object Curate {
       lap("store_compact")
       if (useDelta) deltaLines
       else {
-        // packed corpus, pre-manifest corpus dir, or a degenerate
-        // merge-storm batch: fall back to the full corpus rewrite
+        // packed corpus or a degenerate merge-storm batch: fall back to
+        // the full corpus rewrite
         writeCorpusAndSummary(spark, outDir, storedBudget(outDir))
       }
     } finally {

@@ -180,12 +180,15 @@ object KeyIndex {
   }
 
   /** The sidecar is usable from `dir` only if it was built there —
-    * see [[Meta.root]]. Metas written before the root stamp pass (they
-    * predate the relocation handling; their tables also predate rooted
-    * manifests, so a move already fails loudly at reconcile).
+    * see [[Meta.root]]; a meta without a root counts as relocated.
     */
   private def rootOk(dir: String, m: Meta): Boolean =
-    m.root.forall(_ == ZoneMap.canonical(dir))
+    m.root.contains(ZoneMap.canonical(dir))
+
+  /** Whether `f` was committed after generation `g`: true for an entry
+    * not yet committed (no gen), which no index pass has covered.
+    */
+  private def newerThan(g: Long)(f: FileEntry): Boolean = f.gen.forall(_ > g)
 
   private def readMeta(dir: String, name: String = DirName): Option[Meta] = {
     VersionLog.readLatest(path(dir, name).resolve(MetaLog), MetaExt)
@@ -437,9 +440,11 @@ object KeyIndex {
 
   /** The file paths (URI form) that MAY contain one of the key-tuple
     * `hashes` ([[keyHashCol]] values), plus every `manifest` file
-    * missing from the sidecar (fail-safe). None when no v3 index
-    * exists (v1/v2 sidecars are skipped — sound, and the next
-    * mutation's [[update]] upgrades them in place).
+    * missing from the sidecar (fail-safe): files newer than its
+    * `indexedGen`, and files whose shard dir is gone (a [[gc]] that
+    * crashed between its delete and its rename). None when no usable
+    * index exists (torn or relocated: the next mutation's [[update]]
+    * rebuilds it in place).
     *
     * Network cost is O(batch + positives): only the batch hash array is
     * broadcast; executors bloom-test every sidecar row (stale rows
@@ -458,18 +463,21 @@ object KeyIndex {
       indexCols: Seq[String] = Nil): Option[Set[String]] = {
     val name = indexName(indexCols)
     val meta = readMeta(dir, name) match {
-      case Some(m) if m.version == 3 && rootOk(dir, m) => m
-      case _ => return None // no/legacy/relocated sidecar: fail-safe
+      case Some(m) if rootOk(dir, m) => m
+      case _ => return None // no/torn/relocated sidecar: fail-safe
     }
     val dirs = shardDirs(dir, name)
     if (dirs.isEmpty) return None
     val live = manifest.files.map(f => norm(f.path)).toSet
     // fail-safe, driver-side: files committed after the sidecar's last
     // index pass (crash window between a mutation's manifest commit and
-    // its KeyIndex.update) are affected unconditionally
-    val unindexed = manifest.files
-      .filter(_.gen.getOrElse(0L) > meta.indexedGen)
-      .map(f => norm(f.path)).toSet
+    // its KeyIndex.update), and files whose shard dir is missing, are
+    // affected unconditionally
+    val present = dirs.map(_.getFileName.toString).toSet
+    val unindexed = manifest.files.iterator.map(f => f -> norm(f.path))
+      .collect { case (f, p) if newerThan(meta.indexedGen)(f) ||
+        !present(s"s=${shardOf(p)}") => p }
+      .toSet
     // shard skipping: read only the shard dirs whose union bloom might
     // contain a batch hash, PLUS the shards holding files newer than
     // the unions stamp (not yet covered — pure driver math; see the
@@ -478,8 +486,7 @@ object KeyIndex {
     val base = path(dir, name)
     val selected: Seq[String] = readUnions(dir, name) match {
       case Some(u) =>
-        val uncovered = manifest.files
-          .filter(_.gen.getOrElse(0L) > u.gen)
+        val uncovered = manifest.files.filter(newerThan(u.gen))
           .map(f => shardOf(norm(f.path))).toSet
         (0 until meta.shards).iterator
           .filter(s => uncovered.contains(s) ||
@@ -523,8 +530,8 @@ object KeyIndex {
     * ~half the live file count. Runs AFTER the manifest commit — a
     * crash in between leaves missing entries, which the lookup treats
     * as affected; a crash inside leaves stale rows or an understated
-    * stale counter, both harmless. A v1 sidecar (no meta) is rebuilt
-    * as v2 once.
+    * stale counter, both harmless. A torn or relocated sidecar is
+    * rebuilt once.
     */
   def update(spark: SparkSession, dir: String, removedPaths: Seq[String],
       added: Seq[StatsWriter.WrittenFile], name: String = DirName): UpdateStats = {
@@ -537,22 +544,22 @@ object KeyIndex {
     val keys = if (name == DirName) manifest.keyCols else metaKeys
     if (keys.isEmpty) { drop(dir, name); return UpdateStats(0, 0L, 0, 0) }
     val meta = readMeta(dir, name) match {
-      case Some(m) if m.version == 3 && rootOk(dir, m) => m
-      case Some(m) if m.version == 3 && !rootOk(dir, m) && name != DirName =>
+      case Some(m) if rootOk(dir, m) => m
+      case Some(m) if name != DirName =>
         // relocated secondary: its columns are known — rebuild in place
         System.err.println(s"[graft] KeyIndex: rebuilding relocated sidecar $name at $dir")
         build(spark, dir, m.keys)
         return UpdateStats(Shards, 0L, removedPaths.length, added.length, gc = true)
       case _ =>
-        // legacy/torn/relocated sidecar: one-time in-place
-        // upgrade (full rebuild over the already-committed manifest).
-        // A meta-less SECONDARY is unrecoverable (its columns lived only
-        // in the meta) — drop it; the owner rebuilds explicitly.
+        // torn/relocated primary: full rebuild over the
+        // already-committed manifest. A meta-less SECONDARY is
+        // unrecoverable (its columns lived only in the meta) — drop it;
+        // the owner rebuilds explicitly.
         if (name != DirName) {
           drop(dir, name)
           return UpdateStats(0, 0L, removedPaths.length, added.length)
         }
-        System.err.println(s"[graft] KeyIndex: upgrading legacy sidecar at $dir")
+        System.err.println(s"[graft] KeyIndex: rebuilding torn or relocated sidecar at $dir")
         build(spark, dir)
         return UpdateStats(Shards, 0L, removedPaths.length, added.length,
           gc = true)
@@ -576,8 +583,7 @@ object KeyIndex {
     // would silently claim it indexed (lost-update risk)
     val recordedPaths = recorded.map(_._1).toSet
     val healed = manifest.files.filter(f =>
-      f.gen.getOrElse(0L) > meta.indexedGen &&
-        !recordedPaths.contains(norm(f.path)))
+      newerThan(meta.indexedGen)(f) && !recordedPaths.contains(norm(f.path)))
     if (healed.nonEmpty)
       StagedRewrite.appendParts(
         bloomRows(spark, dir, keys, healed, manifest.hivePartitions.nonEmpty),
@@ -591,7 +597,7 @@ object KeyIndex {
     // to no-skip); only a full [[build]] re-establishes one.
     readUnions(dir, name) match {
       case Some(u) =>
-        val pending = manifest.files.filter(_.gen.getOrElse(0L) > u.gen)
+        val pending = manifest.files.filter(newerThan(u.gen))
         if (pending.length > math.max(Shards.toLong, manifest.files.length / 8L)) {
           // batch blooms at the HEADER capacity: byte-compatible merge
           val batch = unionBloomsOf(spark, dir, keys, pending,
@@ -627,8 +633,10 @@ object KeyIndex {
   /** Reclaim stale rows: rewrite each shard keeping only live-manifest
     * paths. O(sidecar) — called by [[update]] only once stale rows
     * amortize it over O(table/2) removals; callable directly from a
-    * maintenance window. Crash-safe per shard (stage + swap; a shard
-    * lost mid-swap only fail-safes its files to affected).
+    * maintenance window. Each shard is staged, then swapped by a delete
+    * and a rename; a crash between the two loses the shard's dir, and
+    * [[affectedPaths]] then counts every live file of that shard as
+    * affected.
     */
   def gc(spark: SparkSession, dir: String, manifest: TableManifest,
       indexedGen: Option[Long] = None, name: String = DirName): UpdateStats = {

@@ -207,7 +207,9 @@ object StagedRewrite {
     * post-commit delete never ran. Manifest-driven readers are already
     * consistent; this makes dir-level readers (plain
     * spark.read.parquet(dir)) consistent too. Runs at mutation entry —
-    * a healthy table pays one directory listing.
+    * a healthy table pays one directory listing. A moved table is safe:
+    * its manifest's root stamp rebases the entry paths onto `dir` on
+    * read ([[ZoneMap.read]]), so its files stay referenced.
     */
   def reconcile(spark: SparkSession, dir: String, manifest: TableManifest): Unit = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -215,12 +217,7 @@ object StagedRewrite {
     // by filesystem path component
     val referenced = manifest.files
       .map(f => new java.net.URI(f.path).getPath).toSet
-    // collect candidates first: if NOTHING in this dir is referenced
-    // while the manifest references files elsewhere, this is a moved
-    // legacy (root-less) table, not crash debris — deleting would wipe
-    // the data (round-15; rooted manifests rebase on read instead)
     val candidates = scala.collection.mutable.ArrayBuffer.empty[Path]
-    var anyReferenced = false
     def walk(p: Path): Unit = fs.listStatus(p).foreach { s =>
       if (s.isDirectory) {
         // hidden (_/. prefixed) dirs are metadata, not data — the
@@ -228,13 +225,12 @@ object StagedRewrite {
         val n = s.getPath.getName
         if (!n.startsWith("_") && !n.startsWith(".")) walk(s.getPath)
       }
-      else if (s.getPath.getName.startsWith("part-")) {
-        if (referenced.contains(s.getPath.toUri.getPath)) anyReferenced = true
-        // in-flight files belong to a concurrent mutation that has not
-        // committed yet — not crash debris
-        else if (!inFlight.contains(s.getPath.toUri.getPath))
-          candidates += s.getPath
-      }
+      // in-flight files belong to a concurrent mutation that has not
+      // committed yet — not crash debris
+      else if (s.getPath.getName.startsWith("part-") &&
+          !referenced.contains(s.getPath.toUri.getPath) &&
+          !inFlight.contains(s.getPath.toUri.getPath))
+        candidates += s.getPath
     }
     walk(new Path(dir))
     // stage dirs beside the table that no live mutation of this JVM owns
@@ -249,13 +245,6 @@ object StagedRewrite {
           StageSuffix.matches(n.stripPrefix(table.getName + ".")) &&
           !inFlight.contains(p.toUri.getPath)
       }
-    if (referenced.nonEmpty && candidates.nonEmpty && !anyReferenced)
-      throw new IllegalStateException(
-        s"$dir: the manifest references no file present here but the dir " +
-          s"holds ${candidates.length} data files — a moved/copied table " +
-          "written before manifests carried a root stamp. Refusing to " +
-          "reconcile (it would delete the data); rewrite the manifest " +
-          "paths or rebuild the table.")
     candidates.foreach(p => fs.delete(p, false))
     deadStages.foreach(p => fs.delete(p, true))
     if (candidates.nonEmpty) spark.catalog.refreshByPath(dir)

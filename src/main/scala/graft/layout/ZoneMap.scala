@@ -35,19 +35,17 @@ case class ColRange(
 
 /** `bytes` is the on-disk file size — what a lakehouse's bytes_scanned
   * counts when a file survives pruning (reference CSVs sum whole-file
-  * bytes, not parquet column-chunk reads). Optional so manifests written
-  * by earlier builds keep deserializing.
+  * bytes, not parquet column-chunk reads). Every writer records it, and
+  * [[ZoneMap.read]] refuses an entry without it.
   */
 case class FileEntry(path: String, rows: Long, ranges: Map[String, ColRange],
     bytes: Option[Long] = None,
-    // commit generation that created the file ([[ZoneMap.write]] stamps
-    // entries missing it with the committing generation). Lets the
-    // key-index sidecar prove "every file of gen <= indexedGen has a
-    // bloom row" entirely driver-side — no live-set broadcast, no
-    // duplicate-fragile count gate (round-14 VERDICT #3/ADVICE).
-    // Optional so manifests written by earlier builds keep deserializing
-    // (legacy entries read as gen 0: they predate the sidecar's last
-    // full build, which indexed everything then alive).
+    // commit generation that created the file: None until
+    // [[ZoneMap.write]] stamps it with the committing generation, and
+    // required on read. Lets the key-index sidecar prove "every file of
+    // gen <= indexedGen has a bloom row" entirely driver-side — no
+    // live-set broadcast, no duplicate-fragile count gate (round-14
+    // VERDICT #3/ADVICE).
     gen: Option[Long] = None)
 
 case class TableManifest(
@@ -70,25 +68,25 @@ case class TableManifest(
     // policy (the analog of Hudi's hoodie.clustering.inline.max.commits)
     commitsSinceCluster: Option[Int] = None,
     // monotone commit counter, bumped by every [[ZoneMap.write]];
-    // [[FileEntry.gen]] values come from it
+    // [[FileEntry.gen]] values come from it. None only on a manifest
+    // not yet committed: a read refuses a version without it.
     generation: Option[Long] = None,
     // canonical URI of the dir this manifest was written into. File
     // entry paths are absolute, so a moved/copied table dir would
     // otherwise read a manifest referencing the OLD location — readers
     // would scan stale files and reconcile would purge the new dir's
-    // data as orphans (round-15; found writing the legacy-fold parity
-    // test). [[ZoneMap.read]] compares root to the dir it is reading
-    // from and rebases entry paths in memory; the next manifest commit
-    // persists the rebase. None on pre-r15 manifests (reconcile guards
-    // those against relocation wipes instead).
+    // data as orphans (round-15). [[ZoneMap.read]] compares root to the
+    // dir it is reading from and rebases entry paths in memory; the
+    // next manifest commit persists the rebase. Stamped by every
+    // commit, and a read refuses a version without it.
     root: Option[String] = None,
     // string layout columns: code points of common prefix the curve
     // writer STRIPPED before the positional prefix code (round-17,
     // StringCode doc) — observability + advisor input. The health
     // metric re-derives its skip from the manifest's own global
     // min/max (sound across appends), so this is a record of what the
-    // writer did, not an input the reader depends on. None on
-    // pre-r17 manifests and when nothing was stripped.
+    // writer did, not an input the reader depends on. None when
+    // nothing was stripped.
     strOffsets: Option[Map[String, Int]] = None,
     // large tables (>= ZoneMap.sidecarThreshold entries): the files
     // section lives in a compact JSONL sidecar named here, one entry
@@ -97,7 +95,7 @@ case class TableManifest(
     // ~820 MB and tens of seconds of parse at the 10⁶ entries a 100 TB
     // table carries). In MEMORY `files` is always fully populated;
     // [[ZoneMap.read]] attaches the sidecar transparently. None on
-    // small tables and pre-r18 manifests.
+    // small tables.
     filesRef: Option[String] = None,
     // sidecar entries, stamped on sidecar-backed headers: a header read
     // ([[ZoneMap.header]]) knows the table's size without the sidecar
@@ -275,6 +273,29 @@ object ZoneMap {
     */
   private val LegacyManifestName = "_graft_manifest.json"
 
+  /** The refusal of an on-disk shape no current writer makes: a pre-log
+    * manifest, a version without `generation` or `root`, an entry
+    * without `bytes` or `gen`. Such a table is rebuilt, not read.
+    */
+  private def unreadable(where: String, what: String) =
+    new IllegalStateException(s"$where: $what: rebuild the table")
+
+  /** `m` as parsed from a header, refused unless it has the shape every
+    * commit writes (its inline entries included).
+    */
+  private def checked(dir: String, m: TableManifest): TableManifest = {
+    if (m.generation.isEmpty || m.root.isEmpty)
+      throw unreadable(dir, "a manifest version without generation or root")
+    m.files.foreach(checked)
+    m
+  }
+
+  private def checked(f: FileEntry): FileEntry = {
+    if (f.bytes.isEmpty || f.gen.isEmpty)
+      throw unreadable(f.path, "a manifest entry without bytes or gen")
+    f
+  }
+
   def logDir(dir: String): java.nio.file.Path = Paths.get(dir, LogDir)
 
   /** The current generation's header file, None when the table has no
@@ -430,7 +451,7 @@ object ZoneMap {
           case _ => p.skipChildren()
         }
       }
-      FileEntry(path, rows, ranges, bytes, gen)
+      checked(FileEntry(path, rows, ranges, bytes, gen))
     } finally p.close()
   }
 
@@ -447,7 +468,8 @@ object ZoneMap {
     val p = jsonFactory.createParser(buf, off, len)
     try {
       var rows = 0L
-      var bytes = 0L
+      var bytes = -1L
+      var gen = false
       var keep = true
       require(p.nextToken() == START_OBJECT,
         s"bad sidecar line: ${new String(buf, off, math.min(len, 200), StandardCharsets.UTF_8)}")
@@ -456,6 +478,7 @@ object ZoneMap {
         name match {
           case "rows" => rows = p.getLongValue
           case "bytes" => bytes = p.getLongValue
+          case "gen" => gen = true
           case "ranges" =>
             while (p.nextToken() != END_OBJECT) {
               val c = p.currentName(); p.nextToken() // at START_OBJECT
@@ -491,6 +514,9 @@ object ZoneMap {
           case _ => p.skipChildren()
         }
       }
+      if (bytes < 0 || !gen)
+        throw unreadable(new String(buf, off, math.min(len, 200), StandardCharsets.UTF_8),
+          "a manifest entry without bytes or gen")
       (rows, bytes, keep)
     } finally p.close()
   }
@@ -562,17 +588,16 @@ object ZoneMap {
         s"this mutation was computed against $expected — re-read and " +
         "rebase (disjoint file sets) or re-run (overlapping)",
       onDisk, expected)
-    // generations start at 1, NOT 0: KeyIndex.build on a never-stamped
-    // manifest records indexedGen = generation.getOrElse(0) = 0, so a
-    // first commit at gen 0 that crashed before KeyIndex.update would
-    // satisfy gen <= indexedGen and be silently treated as indexed —
-    // the exact unsoundness indexedGen exists to prevent (r15 ADVICE).
+    // generations start at 1: a table with no manifest is at 0
     val nextGen = expected + 1
     val stamped = m.copy(
       root = Some(canonical(dir)),
       generation = Some(nextGen),
-      files = m.files.map(f =>
-        if (f.gen.isEmpty) f.copy(gen = Some(nextGen)) else f),
+      files = m.files.map { f =>
+        // a size-less entry would publish a version no read accepts
+        require(f.bytes.isDefined, s"${f.path}: a manifest entry needs its byte size")
+        if (f.gen.isEmpty) f.copy(gen = Some(nextGen)) else f
+      },
       filesRef = None, fileCount = None)
     // gen + random suffix: two writers racing from the same base
     // generation (or a writer re-running after a crash between sidecar
@@ -670,11 +695,9 @@ object ZoneMap {
   private def currentHeader(dir: String): (Long, java.nio.file.Path) =
     headerGeneration(dir) match {
       case Some(g) => (g, VersionLog.file(logDir(dir), g, VersionExt))
-      case None =>
-        val legacy = Files.exists(Paths.get(dir, LegacyManifestName))
-        throw new java.nio.file.NoSuchFileException(dir, null,
-          if (legacy) s"only a pre-log $LegacyManifestName: rebuild the table"
-          else "no table manifest")
+      case None if Files.exists(Paths.get(dir, LegacyManifestName)) =>
+        throw unreadable(dir, s"only a pre-log $LegacyManifestName")
+      case None => throw new java.nio.file.NoSuchFileException(dir, null, "no table manifest")
     }
 
   /** Runs `body` again when a header version or sidecar it opened was
@@ -706,7 +729,7 @@ object ZoneMap {
     if (hit != null) return hit
     testHookAfterList()
     val json = new String(Files.readAllBytes(hp), StandardCharsets.UTF_8)
-    val m0 = Serialization.read[TableManifest](json)
+    val m0 = checked(dir, Serialization.read[TableManifest](json))
     val m = m0.filesRef match {
       case Some(ref) =>
         // attach the JSONL sidecar: jackson-streaming per-line parse in
@@ -894,8 +917,8 @@ object ZoneMap {
     val cacheKey = canonical(dir)
     val cached = cacheLookup(cacheKey, version)
     if (cached != null) return cached
-    val m0 = Serialization.read[TableManifest](
-      new String(Files.readAllBytes(hp), StandardCharsets.UTF_8))
+    val m0 = checked(dir, Serialization.read[TableManifest](
+      new String(Files.readAllBytes(hp), StandardCharsets.UTF_8)))
     if (m0.filesRef.isDefined) m0
     else {
       val result = rebase(m0, dir)

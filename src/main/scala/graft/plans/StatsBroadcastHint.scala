@@ -69,13 +69,7 @@ object StatsBroadcastHint extends Rule[LogicalPlan] {
       else {
         if (!g.isPruned(conds)) manifestPasses.incrementAndGet()
         val view = g.pruned(conds)
-        val totalRows = math.max(1L, view.rowsTotal)
-        // pre-manifest-v2 entries lack bytes: prorate the table total
-        def entryBytes(rows: Long, b: Option[Long]): Long =
-          b.getOrElse(
-            if (view.bytesTotal > 0) view.bytesTotal * rows / totalRows
-            else rows * 128L) // last resort: assume wide-ish rows
-        val bytes = view.kept.map(f => BigInt(entryBytes(f.rows, f.bytes))).sum
+        val bytes = view.kept.flatMap(_.bytes).map(BigInt(_)).sum
         val rows = view.kept.map(f => BigInt(f.rows)).sum
         Some(bytes.max(rows * HashEntryBytes))
       }

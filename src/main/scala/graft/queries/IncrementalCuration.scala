@@ -133,9 +133,9 @@ object IncrementalCuration {
       // probe — the secondary __h BLOOM sidecar can (round-15: the
       // 50-batch soak measured the un-scoped probe growing with the
       // store). Bloom-positive files only; no positives means no scan
-      // job at all. Fail-safes: no sidecar -> full scan (pre-r15
-      // states); files committed after the sidecar's generation are
-      // included by affectedPaths.
+      // job at all. Fail-safes: no sidecar (an in-memory fold, or a
+      // dropped one) -> full scan; files committed after the sidecar's
+      // generation are included by affectedPaths.
       val hProbe: Either[Set[String], DataFrame] = docsDir match {
         case Some(d) if hashRows.nonEmpty && graft.layout.KeyIndex.exists(
             d, graft.layout.KeyIndex.indexName(Seq("__h"))) =>

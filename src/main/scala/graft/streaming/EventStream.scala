@@ -223,10 +223,12 @@ object EventStream {
     if (!batch.isEmpty) {
       val spark = batch.sparkSession
       val marker = java.nio.file.Paths.get(outDir, "state", "pending_delta")
+      // through the manifest: a dir-level read would also count orphan
+      // files a crashed fold left before its reconcile
+      val stateDocs = s"$outDir/state/docs"
       val stateMax: Long =
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(outDir, "state", "docs"))) Long.MinValue
-        else spark.read.parquet(s"$outDir/state/docs")
+        if (!graft.layout.ZoneMap.exists(stateDocs)) Long.MinValue
+        else graft.table.SfcTable.open(spark, stateDocs)
           .agg(max(col("doc_id"))).collect()(0) match {
             case r if r.isNullAt(0) => Long.MinValue
             case r => r.getLong(0)

@@ -31,17 +31,7 @@ object LayoutRouter {
 
   /** One variant's pruning estimate for a query. */
   case class Choice(dir: String, layout: String, filesKept: Int,
-      filesTotal: Int, bytesKept: Long, bytesTotal: Long) {
-    /** Legacy routing metric for manifests without byte stats: the
-      * fraction of the variant's files a manifest-driven scan reads.
-      * Only comparable within one variant, so it is used only when
-      * some variant in the set cannot report bytes.
-      */
-    def keptFraction: Double =
-      if (bytesTotal > 0) bytesKept.toDouble / bytesTotal
-      else if (filesTotal > 0) filesKept.toDouble / filesTotal
-      else 1.0
-  }
+      filesTotal: Int, bytesKept: Long, bytesTotal: Long)
 
   private def conjuncts(e: Expression): Seq[Expression] = e match {
     case And(l, r) => conjuncts(l) ++ conjuncts(r)
@@ -101,17 +91,13 @@ object LayoutRouter {
     * bytes; estimates within [[ByteTieFraction]] of the minimum count
     * as tied and the fewest kept FILES wins among them (then bytes,
     * then variant order — stable, so baseline-first conventions hold on
-    * exact ties). Falls back to kept-fraction (then files) when any
-    * variant has a size-less legacy manifest, where absolute bytes are
-    * not comparable across the set.
+    * exact ties).
     */
   def pick(cs: Seq[Choice]): Choice = {
     require(cs.nonEmpty, "no layout variants to route over")
-    if (cs.forall(_.bytesTotal > 0)) {
-      val minB = cs.map(_.bytesKept).min
-      val cutoff = minB + math.max((minB * ByteTieFraction).toLong, 1L)
-      cs.filter(_.bytesKept <= cutoff).minBy(c => (c.filesKept, c.bytesKept))
-    } else cs.minBy(c => (c.keptFraction, c.filesKept))
+    val minB = cs.map(_.bytesKept).min
+    val cutoff = minB + math.max((minB * ByteTieFraction).toLong, 1L)
+    cs.filter(_.bytesKept <= cutoff).minBy(c => (c.filesKept, c.bytesKept))
   }
 
   /** The per-variant estimates (exposed for artifacts/suites). */

@@ -112,12 +112,9 @@ class GraftFileIndex(
   /** Entry paths are URIs (escaped partition values stay escaped once). */
   private def path(f: FileEntry): Path = new Path(new java.net.URI(f.path))
 
-  private def status(f: FileEntry): FileStatusWithMetadata = {
-    val p = path(f)
-    val len = f.bytes.getOrElse(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).getLen)
-    FileStatusWithMetadata(new FileStatus(len, false, 0, 0L, 0L, p))
-  }
+  /** The entry's recorded size: a manifest read refuses a size-less entry. */
+  private def status(f: FileEntry): FileStatusWithMetadata =
+    FileStatusWithMetadata(new FileStatus(f.bytes.get, false, 0, 0L, 0L, path(f)))
 
   /** Partition values from the entry path's trailing `col=value` dirs. */
   private def partitionValues(f: FileEntry, zone: java.time.ZoneId): Seq[Any] = {

@@ -335,7 +335,7 @@ class CurateCliSuite extends SparkTestBase {
     }
   }
 
-  test("state/docs is zone-mapped with a __h bloom sidecar; legacy states fold identically") {
+  test("state/docs is zone-mapped; a manifest-less state/docs is refused") {
     val sf = "/root/testdata/sf0.001"
     val docs = graft.Tables.load(spark, sf, "documents")
     val m = docs.agg(expr("percentile_approx(doc_id, 0.5)")).collect()(0).getLong(0)
@@ -352,10 +352,9 @@ class CurateCliSuite extends SparkTestBase {
     val hIdx = graft.layout.KeyIndex.indexName(Seq("__h"))
     assert(graft.layout.KeyIndex.exists(sd, hIdx), "state/docs must carry the __h bloom sidecar")
 
-    // legacy twin: an IDENTICAL full build (deterministic) with the
-    // manifest + sidecars stripped -> pre-r15 on-disk shape. (A file
-    // copy of outNew would NOT work: manifests store absolute paths,
-    // so a copied dir's reconcile sees every data file as an orphan.)
+    // legacy twin: an IDENTICAL full build with the state/docs manifest
+    // + sidecars stripped -> the pre-r15 on-disk shape, which no current
+    // build writes: runAdd refuses it and leaves the corpus untouched
     val outOld = tmpDir("curate_legacy")
     Curate.run(spark, b1, outOld, 100L)
     def rm(f: java.io.File): Unit = {
@@ -365,15 +364,16 @@ class CurateCliSuite extends SparkTestBase {
     graft.layout.KeyIndex.sidecarNames(s"$outOld/state/docs")
       .foreach(n => rm(new java.io.File(s"$outOld/state/docs/$n")))
     assert(!graft.layout.ZoneMap.exists(s"$outOld/state/docs"))
-
-    // the same fold through both shapes: byte-identical corpora, and the
-    // zoned state's docs append keeps the manifest file-complete
-    Curate.runAdd(spark, b2, outNew, 100L)
-    Curate.runAdd(spark, b2, outOld, 100L)
     def corpus(dir: String) = spark.read.parquet(s"$dir/docs")
       .select("doc_id", "lang", "split", "n_tok")
       .collect().map(_.toSeq.toVector).sortBy(_.head.toString.toLong).toSeq
-    assert(corpus(outNew) == corpus(outOld), "zoned and legacy folds must agree")
+    val oldCorpus = corpus(outOld)
+    val ex = intercept[IllegalArgumentException](Curate.runAdd(spark, b2, outOld, 100L))
+    assert(ex.getMessage.contains("state/docs has no zone manifest"), ex.getMessage)
+    assert(corpus(outOld) == oldCorpus, "a refused fold must leave the corpus untouched")
+
+    // the zoned state's docs append keeps the manifest file-complete
+    Curate.runAdd(spark, b2, outNew, 100L)
     val mf = graft.layout.ZoneMap.read(sd)
     val live = new java.io.File(sd).listFiles
       .count(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))

@@ -428,8 +428,33 @@ class KeyIndexSuite extends SparkTestBase {
     assert(miss.size <= 2, s"absent payload matched ${miss.size} files")
   }
 
-  test("legacy (generation-less) manifest: a first stamped commit that crashes " +
-      "before the index update still flags its files") {
+  test("a shard dir lost between gc's delete and rename leaves its files affected") {
+    val spark2 = spark
+    import spark2.implicits._
+    val dir = tmpDir("graft_keyidx_lostshard")
+    LayoutWriter.write((1 to 8000).map(k => (k.toLong, s"v$k")).toDF("k", "payload"),
+      dir, LayoutSpec("linear", Seq("k"), numFiles = Some(8), recordKey = Some("k")))
+    KeyIndex.build(spark, dir)
+    val m = ZoneMap.read(dir)
+    assert(m.files.length == 8)
+    val first = m.files.head
+    val victim = KeyIndex.norm(first.path)
+    // gc's crash state: the shard's old dir deleted, the rewrite not yet
+    // renamed into its place
+    val shard = KeyIndex.path(dir).resolve(s"s=${KeyIndex.shardOf(victim)}").toFile
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
+    }
+    assert(shard.isDirectory)
+    rm(shard)
+    val key = StagedRewrite.readFiles(spark, dir, Seq(first.path), partitioned = false)
+      .agg(min($"k")).as[Long].head()
+    val paths = KeyIndex.affectedPaths(spark, dir, Seq(hashOf(key)), m).get
+    assert(paths.contains(victim),
+      s"a file whose shard is missing must be affected by its own key: $paths")
+  }
+
+  test("legacy (generation-less) manifest: refused on read") {
     val dir = tmpDir("graft_keyidx_gen0")
     writeOrthogonal(dir)
     // strip the stamps: the pre-r15 manifest shape (generation = None,
@@ -446,26 +471,12 @@ class KeyIndexSuite extends SparkTestBase {
     // a version file is write-once, so the read cache never re-checks
     // one; this raw in-place rewrite must drop it
     ZoneMap.clearReadCache()
-    // index the legacy table: indexedGen records 0 (no generation yet)
-    KeyIndex.build(spark, dir)
-    // first stamped commit adds a file, then CRASH before KeyIndex.update.
-    // Generations start at 1 precisely so this commit cannot collide with
-    // the legacy sidecar's indexedGen of 0 (r15 ADVICE: a gen-0 first
-    // commit read as indexed would silently skip these files).
-    val src = new java.io.File(new java.net.URI(m.files.head.path))
-    val crashed = new java.io.File(src.getParentFile, "part-crashed-gen0.parquet")
-    java.nio.file.Files.copy(src.toPath, crashed.toPath)
-    val before = ZoneMap.read(dir)
-    val committed = ZoneMap.write(dir, before.copy(files =
-      before.files :+ m.files.head.copy(
-        path = crashed.toURI.toString, gen = None)))
-    assert(committed.generation.exists(_ > 0L),
-      s"first stamped commit must postdate the legacy indexedGen of 0: " +
-        s"${committed.generation}")
-    val h = hashOf(987654321L) // in no file: blooms all negative
-    val paths = KeyIndex.affectedPaths(spark, dir, Seq(h), committed).get
-    assert(paths.contains(KeyIndex.norm(crashed.toURI.toString)),
-      s"crash-window file on a legacy table must be affected: $paths")
+    val ex = intercept[IllegalStateException](ZoneMap.read(dir))
+    assert(ex.getMessage.contains("rebuild the table"), ex.getMessage)
+    // a build reads the manifest first: no sidecar can record an
+    // indexedGen against the unstamped files
+    intercept[IllegalStateException](KeyIndex.build(spark, dir))
+    assert(!KeyIndex.exists(dir))
   }
 
   test("per-shard union blooms: a scattered small batch reads fewer shard dirs, " +

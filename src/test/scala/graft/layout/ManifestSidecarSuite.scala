@@ -171,17 +171,27 @@ class ManifestSidecarSuite extends AnyFunSuite {
       // escapes, unicode (incl. supplementary plane), spaces in paths
       FileEntry("/tmp/x y/\"quoted\"\\part-\u03a9\ud835\udcb3.parquet", 5L,
         Map("s" -> ColRange(None, None, Some("a\"b\\c\nd\te"), Some("\u00fc\ud835\udd4f"),
-          allNull = false)), None, None),
+          allNull = false)), Some(1L), Some(2L)),
       // numeric ranges incl. negatives / large values; all options set
       FileEntry("/p", 0L,
         Map("n" -> ColRange(Some(-1.5), Some(2.0e9), None, None, allNull = true),
           "m" -> ColRange(Some(0.0), Some(0.0), None, None, allNull = false)),
         Some(123456789012L), Some(7L)),
-      // empty ranges, missing options (pre-r14 shape)
-      FileEntry("/q", 42L, Map.empty, None, None))
+      // empty ranges
+      FileEntry("/q", 42L, Map.empty, Some(9L), Some(1L)))
     entries.foreach { e =>
       val line = org.json4s.jackson.Serialization.write(e)
       assert(ZoneMap.parseEntryLine(line) == e, line)
+    }
+    // a bytes-less or gen-less line (the pre-r14 shape) is refused, by
+    // the full parse and by the streaming prune's verdict parse alike
+    Seq(FileEntry("/q", 42L, Map.empty, None, Some(1L)),
+        FileEntry("/q", 42L, Map.empty, Some(9L), None)).foreach { e =>
+      val line = org.json4s.jackson.Serialization.write(e)
+      val ex = intercept[IllegalStateException](ZoneMap.parseEntryLine(line))
+      assert(ex.getMessage.contains("rebuild the table"), ex.getMessage)
+      val b = line.getBytes("UTF-8")
+      intercept[IllegalStateException](ZoneMap.parseEntryVerdict(b, 0, b.length, Array.empty))
     }
   }
 

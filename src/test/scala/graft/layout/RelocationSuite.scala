@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * so before the root stamp a relocated table read stale files and —
   * worse — reconcile purged the new dir's data as orphans, and a keyed
   * table's bloom sidecar silently hid affected files. Rooted manifests
-  * now rebase on read; rooted sidecars fail-safe and self-heal; legacy
-  * (root-less) manifests fail LOUDLY at reconcile instead of wiping.
+  * now rebase on read; rooted sidecars fail-safe and self-heal; a
+  * root-less manifest is refused on read, so nothing reconciles it.
   */
 class RelocationSuite extends SparkTestBase {
 
@@ -85,7 +85,7 @@ class RelocationSuite extends SparkTestBase {
     assert(paths.isDefined, "sidecar must be rebuilt rooted at the new dir")
   }
 
-  test("legacy root-less manifest moved: reconcile refuses instead of wiping") {
+  test("legacy root-less manifest moved: the read refuses, the data stays") {
     val spark2 = spark
     import spark2.implicits._
     val base = tmpDir("reloc_c")
@@ -99,12 +99,12 @@ class RelocationSuite extends SparkTestBase {
     val stripped = json.replaceAll(""",\s*"root"\s*:\s*"[^"]*"""", "")
     java.nio.file.Files.writeString(mf, stripped)
     move(src, dst)
-    val m = ZoneMap.read(dst)
-    assert(m.root.isEmpty)
-    val ex = intercept[IllegalStateException] {
-      StagedRewrite.reconcile(spark, dst, m)
-    }
-    assert(ex.getMessage.contains("Refusing to reconcile"))
+    val ex = intercept[IllegalStateException](ZoneMap.read(dst))
+    assert(ex.getMessage.contains("rebuild the table"), ex.getMessage)
+    // every mutation reads the manifest before it reconciles, so none
+    // can reach the reconcile that would purge the moved files
+    val ex2 = intercept[IllegalStateException](Compactor.compact(spark, dst))
+    assert(ex2.getMessage.contains("rebuild the table"), ex2.getMessage)
     assert(spark.read.parquet(dst).count() == 5000, "data must be intact")
   }
 

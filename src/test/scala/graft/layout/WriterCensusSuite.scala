@@ -9,8 +9,9 @@ import org.json4s.jackson.JsonMethods.parse
 /** Writer census: every table kind the engine writes, and every
   * mutation of an existing table, leaves only the current on-disk shape.
   * Each manifest version carries a `generation` and a `root`, each file
-  * entry (inline or in the JSONL sidecar) a `gen` and a positive `bytes`,
-  * and each key-index meta a `root`. The census reads the raw JSON, not
+  * entry (inline or in the JSONL sidecar, which serializes the same
+  * stamped entries) a `gen` and a positive `bytes`, and each key-index
+  * meta a `root`. The census reads the raw JSON, not
   * [[ZoneMap.read]], so it checks the writers, not the reader that
   * refuses any other shape.
   */
@@ -98,19 +99,6 @@ class WriterCensusSuite extends SparkTestBase {
       census(dir)
       assert(spark.read.parquet(dir).count() == 6000 + 1 - 2 + 1, name)
     }
-  }
-
-  test("a sidecar-backed manifest writes stamped entries too") {
-    val dir = tmpDir("census_sidecar")
-    sys.props("graft.manifest.sidecarThreshold") = "2"
-    try {
-      LayoutWriter.write(keyed(3000), dir, LayoutSpec("linear", Seq("a"),
-        numFiles = Some(4), recordKey = Some("k")))
-      assert(ZoneMap.header(dir).filesRef.isDefined, "precondition: a sidecar")
-      census(dir)
-      KeyedDelta(spark, dir, Seq(1L), None)
-      census(dir)
-    } finally sys.props.remove("graft.manifest.sidecarThreshold")
   }
 
   test("Curate.run stores, a fold, and SearchIndex build + add write the current shape") {
