@@ -354,10 +354,10 @@ object Curate {
       // marker BEFORE the first state-store mutation on EVERY path
       // (round-13 ADVICE, medium): the components/postings KeyedDelta
       // appends below run unconditionally, so a !deltaEligible fold
-      // (packed corpus) that crashed between
-      // them and the state/docs append must also retry with
-      // retrying=true — otherwise retryIds=Nil re-appends the batch's
-      // component/postings rows as duplicates
+      // (packed corpus) that crashed between them and the state/docs
+      // append must also retry with retrying=true — otherwise
+      // retryIds=Nil re-appends the batch's component/postings rows as
+      // duplicates
       java.nio.file.Files.writeString(marker, batchId)
       val deltaLines: Seq[String] = deltaRes match {
         case CompDelta(batchLabels, changed) =>
