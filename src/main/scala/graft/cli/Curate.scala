@@ -1,7 +1,17 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import scala.util.chaining._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.layout.{ConcurrentCommitException, FileEntry, KeyIndex, KeyedDelta,
+  LayoutWriter, StagedRewrite, StatsWriter, VersionLog, ZoneMap}
+import graft.queries.IncrementalCuration
+import graft.table.SfcTable
+import org.apache.hadoop.fs.FileUtil.fullyDelete
+import org.json4s.jackson.Serialization
 
 /** Corpus curation CLI — runs the q72 pipeline (quality gate → exact
   * dedup → near-dup cluster dedup → deterministic split) over a
@@ -19,8 +29,8 @@ import org.apache.spark.sql.functions._
   *     signatures are read from the stored state, labels come from
   *     IncrementalCuration.foldLabels (edges batch x (batch ∪ state)
   *     only), and the corpus, the components mapping and the state stores
-  *     take file-scoped deltas; output matches a from-scratch rebuild
-  *     (CurateCliSuite).
+  *     take file-scoped deltas, committed together as one fold-log
+  *     version; output matches a from-scratch rebuild (CurateCliSuite).
   *
   * Output layout:
   *   outDir/docs/split=train|val|test/  parquet files with (doc_id,
@@ -28,6 +38,9 @@ import org.apache.spark.sql.functions._
   *   outDir/summary.csv  (split,lang,n_docs,total_tokens)
   *   outDir/state/  parquet: every exact-kept doc + signatures +
   *     component (see IncrementalCuration)
+  *   outDir/state/_fold_log/  one write-once version per build or fold
+  *     ([[FoldVersion]]); a dir without it predates atomic folds and is
+  *     refused: rebuild it
   */
 object Curate {
 
@@ -113,8 +126,7 @@ object Curate {
       // file pruning: candidate doc_ids span the id domain, so parquet's
       // In->range pushdown keeps every row group). linear-on-doc_id
       // zones + id-monotone appends make a candidate-id lookup touch
-      // O(candidate) files; recordKey=doc_id gives crash-retry
-      // delete-by-key, mirroring the postings store.
+      // O(candidate) files.
       graft.layout.LayoutWriter.write(
         state.drop("component"), s"$outDir/state/docs",
         graft.layout.LayoutWriter.LayoutSpec("linear", Seq("doc_id"),
@@ -139,10 +151,7 @@ object Curate {
       // state's band rows (both families, one store), bh-sorted with a
       // zone-map manifest, so folds read touched buckets as a
       // file-prune + row-InSet instead of re-deriving corpus band rows
-      // from the doc store every add. recordKey=doc_id lets the
-      // crash-retry delete a half-appended batch's rows by key (the
-      // appended files' doc_id zones are exactly the batch range, so
-      // the delete rewrites only them).
+      // from the doc store every add.
       if (forcePostings || nState >= PostingsMinDocs) {
         val postFiles = math.max(1, math.ceil(nState * 8.0 / 262144).toInt)
         graft.layout.LayoutWriter.write(
@@ -166,6 +175,12 @@ object Curate {
       writeSchema(outDir, "docs_schema.json", state.drop("component").schema)
       writeSchema(outDir, "corpus_schema.json",
         spark.read.parquet(s"$outDir/docs").schema)
+      // the fold log's base version: every store at its built generation
+      // (the next fold's entry deletes any older fold's stage)
+      val stores = Seq("docs", "state/components", "state/postings", "state/docs")
+        .flatMap(s => ZoneMap.headerGeneration(s"$outDir/$s").map(StoreFold(s, _, Nil, Nil)))
+      VersionLog.publishNext(foldLog(outDir), FoldExt, bytesOf(
+        FoldVersion(java.util.UUID.randomUUID().toString, "", stores, lines, false)))
       lines
     } finally graft.runner.Materialize.releaseAllFast(spark)
   }
@@ -175,14 +190,9 @@ object Curate {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outDir, "state", name), schema.json)
 
-  private def readSchema(outDir: String,
-      name: String): Option[org.apache.spark.sql.types.StructType] = {
-    val p = java.nio.file.Paths.get(outDir, "state", name)
-    if (!java.nio.file.Files.exists(p)) None
-    else Some(org.apache.spark.sql.types.DataType
-      .fromJson(java.nio.file.Files.readString(p))
-      .asInstanceOf[org.apache.spark.sql.types.StructType])
-  }
+  private def readSchema(outDir: String, name: String): org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.DataType.fromJson(Files.readString(Paths.get(outDir, "state", name)))
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
 
   /** The components store's static schema — never inferred. */
   private val CompsSchema: org.apache.spark.sql.types.StructType = {
@@ -199,28 +209,26 @@ object Curate {
   }
 
   /** Incremental run: fold a new batch into an existing corpus dir.
-    * Writes are O(batch) + O(components) + O(affected corpus files):
-    * the batch's doc rows APPEND to state/docs (they are runner-cached,
-    * so the append never reads the dir it mutates), only the small
-    * (doc_id, component) file is rewritten — never the corpus-sized
-    * doc+signature store — and the curated corpus itself takes a
-    * file-scoped delta (round-9 VERDICT "Next #5"): appending grows a
-    * cluster-set monotonically, so the representative set changes only
-    * by (a) old reps whose cluster merged into a lower id — deleted by
-    * key from just the files whose doc_id zone holds them — and (b)
-    * batch docs that head their own new cluster — appended as new
-    * files. A packed corpus (seq_id) still rewrites fully: removing a
-    * doc shifts every later sequence id in its split by construction.
-    * Labels come from IncrementalCuration.foldLabels alone.
+    * Writes are O(batch) + O(affected files): the batch's doc and band
+    * rows append to state/docs and state/postings, the components
+    * mapping takes a keyed delta, and the curated corpus a file-scoped
+    * one (round-9 VERDICT "Next #5"): appending grows a cluster-set
+    * monotonically, so the representative set changes only by old reps
+    * whose cluster merged into a lower id — deleted by key from just the
+    * files whose doc_id zone holds them — and batch docs that head their
+    * own new cluster, appended. A packed corpus (seq_id) is rewritten
+    * whole: removing a doc shifts every later sequence id in its split.
     *
-    * `failAfterCorpusDelta` and `failAfterPostingsAppend` are TEST hooks:
-    * throw right after the corpus delta (marker written, state not yet
-    * mutated) or after the postings append — the crash windows the
-    * pending-marker retry protocol exists for (CurateCliSuite).
+    * One commit per fold: every store's rewrite is staged under
+    * `state/_fold_stage/<id>/` and the new summary computed first (all
+    * reads of the old state happen there), then one put-if-absent
+    * version of the fold log publishes the whole fold, as the Iceberg
+    * REST catalog's multi-table commit does, and each store rolls
+    * forward to it ([[commitFold]]). A crash before the publish changes
+    * nothing; the next fold's entry finishes one after it ([[recover]]).
     */
   def runAdd(spark: SparkSession, batchDir: String, outDir: String,
-      minChars: Long, failAfterCorpusDelta: Boolean = false,
-      failAfterPostingsAppend: Boolean = false): Seq[String] = {
+      minChars: Long): Seq[String] = {
     // per-phase wall clock + job count to stderr: the incremental path's
     // value claim is "O(batch), not O(corpus)" — the phase split shows
     // which side of that a slow add actually sits on, and the job count
@@ -260,256 +268,123 @@ object Curate {
       t0 = System.nanoTime(); j0 = j
     }
     try {
-      require(java.nio.file.Files.exists(java.nio.file.Paths.get(outDir, "state")),
-        s"$outDir/state not found — run the full build first")
+      val read = recover(spark, outDir)
       val compDir = s"$outDir/state/components"
-      // state-format gate: folds mutate the mapping via KeyedDelta, which
-      // needs the zone manifest the round-13 full build writes
-      require(graft.layout.ZoneMap.exists(compDir),
-        s"$outDir/state/components has no zone manifest — state format " +
-          "changed; re-run the full build to migrate")
-      // reconcile BEFORE the dir-level read below: a crashed components
-      // KeyedDelta leaves orphan part files a dir-level reader would
-      // double-count (manifest-driven readers were never at risk)
-      graft.layout.StagedRewrite.reconcile(
-        spark, compDir, graft.layout.ZoneMap.read(compDir))
-      // pending-marker: present iff a previous fold crashed after its
-      // corpus delta but before its state writes (see the delta block).
-      // The marker RECORDS THE BATCH (round-11 ADVICE, medium): a crashed
-      // fold of batch B must be retried with B before any other batch —
-      // a different batch's run would clear the marker without healing
-      // B's orphaned corpus rows, and a later B re-run would append them
-      // a second time. Identity = the batch dir's canonical path.
-      val marker = java.nio.file.Paths.get(outDir, "state", "pending_delta")
-      val batchId = java.nio.file.Paths.get(batchDir)
-        .toAbsolutePath.normalize.toString
-      val retrying = java.nio.file.Files.exists(marker)
-      if (retrying) {
-        val pending = java.nio.file.Files.readString(marker).trim
-        require(pending.isEmpty || pending == batchId,
-          s"a previous fold of batch $pending crashed mid-write — " +
-            s"retry that batch first (got $batchId)")
-      }
+      val stateDocsDir = s"$outDir/state/docs"
+      // state-format gate: folds mutate the stores through keyed deltas,
+      // which need the zone manifests the full build writes
+      Seq(compDir, stateDocsDir).foreach(d => require(ZoneMap.exists(d),
+        s"$d has no zone manifest — state format changed; re-run the full build to migrate"))
       // docs and components stay SEPARATE frames: only the old-star
       // edges need components, and joining them up front would charge a
       // corpus×corpus shuffle join to every narrow signature projection.
-      // Schemas are pinned from the build-time capture (round-12 VERDICT
-      // "Next #1"): no footer-inference jobs on the fold's hot path.
-      val stateDocsDir = s"$outDir/state/docs"
-      // manifest'd docs store (round-15: soak-measured O(state) fold
-      // lookups — see the full build), gated like components above:
-      // reconcile crash orphans BEFORE the dir-level read
-      require(graft.layout.ZoneMap.exists(stateDocsDir),
-        s"$outDir/state/docs has no zone manifest — state format " +
-          "changed; re-run the full build to migrate")
-      graft.layout.StagedRewrite.reconcile(
-        spark, stateDocsDir, graft.layout.ZoneMap.read(stateDocsDir))
-      val stateDocs = readSchema(outDir, "docs_schema.json")
-        .foldLeft(spark.read)((r, s) => r.schema(s))
-        .parquet(stateDocsDir)
-      // state-format gate (round-11 ADVICE): the fold reads the stored
-      // sorted-shingle column `hs`; a pre-hs state would otherwise
-      // die deep in plan analysis with a raw unresolved-column error
-      require(stateDocs.columns.contains("hs"),
-        s"$outDir/state was written by an older build (no `hs` column) — " +
-          "state format changed; re-run the full build to migrate")
-      val stateComps = spark.read.schema(CompsSchema).parquet(compDir)
+      // Read through the manifests, with the schemas pinned at build time
+      // (round-12 VERDICT "Next #1": no footer-inference jobs), so files
+      // a crashed store compaction left behind are never read.
+      val stateDocs = SfcTable.open(spark, stateDocsDir, Some(readSchema(outDir, "docs_schema.json")))
+      val stateComps = SfcTable.open(spark, compDir, Some(CompsSchema))
       val batch = graft.Tables.parallelized(
         graft.Tables.load(spark, batchDir, "documents"))
-      val prep = graft.queries.IncrementalCuration.prepareBatch(
+      val prep = IncrementalCuration.prepareBatch(
         stateDocs, batch, minChars, docsDir = Some(stateDocsDir))
       lap("prepare_batch")
       // fold-append sizing (round-15): micro-batches land as ONE sorted
       // file per store; a batch too large for the exact-dedup fast path
       // (no kept-count hint) keeps natural partitioning — compaction
       // bin-packs either way. ~2M rows/file matches the build layout.
-      val appendFiles: Option[Int] =
-        prep.nHint.map(storeFiles)
-      val postingsAppendFiles: Option[Int] =
-        prep.nHint.map(n => math.max(1, math.ceil(
-          n * graft.queries.IncrementalCuration.BandRowsPerDoc / 262144.0).toInt))
+      val appendFiles: Option[Int] = prep.nHint.map(storeFiles)
       val postingsDir = s"$outDir/state/postings"
-      val usePostings = graft.layout.ZoneMap.exists(postingsDir)
+      val usePostings = ZoneMap.exists(postingsDir)
       val docsDir = s"$outDir/docs"
-      val deltaEligible = storedBudget(outDir).isEmpty
-      val corpusSchema = readSchema(outDir, "corpus_schema.json")
+      val corpusSchema = Some(readSchema(outDir, "corpus_schema.json"))
+      // a packed corpus (seq_id) has no delta path: every fold rewrites it
+      val packed = storedBudget(outDir)
       // labels as a DELTA against the stored mapping (round-12 VERDICT
       // "Next #1"): driver-local pairs and CC when every bound fits, the
       // distributed band join and star rounds beyond
-      val deltaRes = graft.queries.IncrementalCuration.foldLabels(
-        stateDocs, stateComps, prep,
-        postingsDir = if (usePostings) Some(postingsDir) else None,
+      val deltaRes = IncrementalCuration.foldLabels(stateDocs, stateComps, prep,
+        postingsDir = Some(postingsDir).filter(_ => usePostings),
         docsDir = Some(stateDocsDir))
       lap("components")
-      // retry-only (round-10 ADVICE): batch rows a crashed fold already
-      // appended to the components/postings stores must be dropped
-      // before re-append — one bounded collect shared by both stores
-      lazy val retryIds: Seq[Long] =
-        if (!retrying) Nil
-        else prep.rows.select(col("doc_id")).collect().map(_.getLong(0)).toSeq
-      val targetCols: Seq[String] = corpusSchema.map(_.fieldNames.toSeq)
-        .getOrElse(spark.read.parquet(docsDir).columns.toSeq)
 
-      import graft.queries.IncrementalCuration.{CompDelta, FullRelabel}
-      // marker BEFORE the first state-store mutation on EVERY path
-      // (round-13 ADVICE, medium): the components/postings KeyedDelta
-      // appends below run unconditionally, so a !deltaEligible fold
-      // (packed corpus) that crashed between them and the state/docs
-      // append must also retry with retrying=true — otherwise
-      // retryIds=Nil re-appends the batch's component/postings rows as
-      // duplicates
-      java.nio.file.Files.writeString(marker, batchId)
-      val deltaLines: Seq[String] = deltaRes match {
+      // the log version the fold stages against leads its id: the stage
+      // is dead once the log moves past it ([[recover]])
+      val id = s"$read-${java.util.UUID.randomUUID()}"
+      def staged(p: StagedRewrite.Pending) =
+        p.tap(p => StagedRewrite.testHookAtStep(s"staged ${storeOf(outDir, p.dir)}"))
+      def stage(dir: String, drop: Seq[Long], add: DataFrame,
+          schema: Option[org.apache.spark.sql.types.StructType],
+          files: Option[Int]): StagedRewrite.Pending =
+        staged(KeyedDelta.stage(spark, dir, drop, Some(add), schema, files,
+          Some(stageOf(outDir, id, storeOf(outDir, dir)).toString)))
+      import IncrementalCuration.{CompDelta, FullRelabel}
+      // the new mapping's rewrite, the labels the batch rows join, and
+      // the corpus keys it retires (None: rewrite the corpus in full)
+      val (comps, labels, retired) = deltaRes match {
         case CompDelta(batchLabels, changed) =>
-          // retired representatives = changed docs that were their own
-          // component (cluster-merge events, changedLimit-bounded)
-          val retired = changed.filter(c => c.oldComponent == c.docId).map(_.docId)
-          val lines =
-            if (!deltaEligible) Nil
-            else {
-              val addRows = graft.queries.IncrementalCuration.corpus(
-                prep.rows.join(batchLabels, Seq("doc_id")))
-                .select(targetCols.map(col): _*)
-              // idempotent retry (round-10 ADVICE): marker written before
-              // the corpus delta, cleared after the state writes; a retry
-              // adds the previously-appended doc_ids to the drop set so
-              // they are replaced, never duplicated
-              val addIds: Seq[Long] =
-                if (!retrying) Nil
-                else addRows.select(col("doc_id")).collect().map(_.getLong(0)).toSeq
-              // O(batch) summary maintenance: the (split, lang) rollup is
-              // adjusted by exactly the rows the delta removes and appends
-              // — the removal side MUST be read before the mutation below.
-              // On a RETRY the removal side is gone (the crashed fold's
-              // KeyedDelta may have committed before its writeCsvLines),
-              // so the adjustment would permanently overcount: fall back
-              // to the full writeSummary re-scan, which re-derives the
-              // exact numbers from disk post-mutation (round-13 ADVICE).
-              val adjusted =
-                if (retrying) None
-                else summaryDelta(
-                  spark, outDir, retired ++ addIds, addRows, corpusSchema)
-              graft.layout.KeyedDelta(spark, docsDir, retired ++ addIds,
-                Some(addRows), corpusSchema, appendPartitions = appendFiles)
-              lap(s"corpus_delta (${retired.length} retired reps)")
-              adjusted.map(writeCsvLines(outDir, _))
-                .getOrElse(writeSummary(spark, outDir))
-            }
-          if (failAfterCorpusDelta)
-            throw new IllegalStateException(
-              "test hook: simulated crash after corpus delta, before state writes")
-          // components delta BEFORE the docs append: the stored mapping's
-          // stars are edges of the final graph, so a retry that sees NEW
-          // labels with the OLD docs store just re-folds consistent star
-          // edges (CC is monotone under them) — whereas the reverse crash
-          // order would leave appended docs with no component row
           val changedDf = spark.createDataFrame(
               changed.map(c => (c.docId, c.component)))
             .toDF("doc_id", "component")
-          graft.layout.KeyedDelta(spark, compDir,
-            changed.map(_.docId) ++ retryIds,
-            Some(batchLabels.select(col("doc_id"), col("component"))
-              .unionByName(changedDf)),
-            Some(CompsSchema), appendPartitions = appendFiles)
-          lines
-        case FullRelabel(labels) =>
+          (stage(compDir, changed.map(_.docId),
+            batchLabels.select(col("doc_id"), col("component")).unionByName(changedDf),
+            Some(CompsSchema), appendFiles),
+            batchLabels,
+            // retired representatives = changed docs that were their own
+            // component (cluster-merge events, changedLimit-bounded)
+            Some(changed.filter(c => c.oldComponent == c.docId).map(_.docId))
+              .filter(_ => packed.isEmpty))
+        case FullRelabel(relabeled) =>
           // degenerate merge storm beyond the delta caps: whole-mapping
-          // rewrite, staged now and committed once the corpus delta
-          // below has read the old mapping (rare by construction; the
-          // common fold never takes this branch)
-          val comps = graft.runner.Materialize.trackLazy(labels)
-          val compBase = graft.layout.ZoneMap.read(compDir)
-          val tfr0 = System.nanoTime()
-          val (_, relabeled) = graft.layout.LayoutWriter.stage(
-            comps.select(col("doc_id"), col("component")),
-            graft.layout.StagedRewrite.stagingDir(compDir, "relabel"),
-            graft.layout.LayoutWriter.LayoutSpec("linear", Seq("doc_id"),
+          // rewrite (rare by construction; the common fold never takes
+          // this branch)
+          val labels = graft.runner.Materialize.trackLazy(relabeled)
+          val base = ZoneMap.read(compDir)
+          val (_, files) = LayoutWriter.stage(
+            labels.select(col("doc_id"), col("component")),
+            stageOf(outDir, id, storeOf(outDir, compDir)).toString,
+            LayoutWriter.LayoutSpec("linear", Seq("doc_id"),
               numFiles = Some(stateStoreFiles(outDir)), recordKey = Some("doc_id")),
-            Nil, graft.layout.KeyIndex.bloomSpecs(compDir, compBase))
-          System.err.println(f"[curate.add]   fullrelabel/store_write " +
-            f"${(System.nanoTime() - tfr0) / 1e9}%.2fs")
-          val tfr1 = System.nanoTime()
-          val dropIds: Seq[Long] =
-            if (!deltaEligible) Nil
-            else comps
+            Nil, KeyIndex.bloomSpecs(compDir, base))
+          val retired =
+            if (packed.nonEmpty) None
+            else Some(labels
               .filter(col("component") =!= col("doc_id"))
               .join(stateComps.filter(col("component") === col("doc_id"))
                 .select(col("doc_id")), Seq("doc_id"), "left_semi")
+              // beyond 100k retired reps the corpus is rewritten in full
               .select(col("doc_id")).limit(100001)
-              .collect().map(_.getLong(0)).toSeq
-          val useDelta = deltaEligible && dropIds.length <= 100000
-          System.err.println(f"[curate.add]   fullrelabel/drop_ids " +
-            f"${(System.nanoTime() - tfr1) / 1e9}%.2fs (${dropIds.length})")
-          val tfr2 = System.nanoTime()
-          val lines =
-            if (!useDelta) Nil
-            else {
-              val addRows = graft.queries.IncrementalCuration.corpus(
-                prep.rows.join(comps, Seq("doc_id")))
-                .select(targetCols.map(col): _*)
-              val addIds: Seq[Long] =
-                if (!retrying) Nil
-                else addRows.select(col("doc_id")).collect().map(_.getLong(0)).toSeq
-              // O(batch) summary maintenance exactly as the CompDelta
-              // branch: a full relabel changes the CORPUS only by
-              // dropIds removed + addRows appended, so the rollup
-              // adjustment is identical (removal side read before the
-              // mutation below; retries full-rescan, see CompDelta)
-              val adjusted =
-                if (retrying) None
-                else summaryDelta(
-                  spark, outDir, dropIds ++ addIds, addRows, corpusSchema)
-              System.err.println(f"[curate.add]   fullrelabel/summary_delta " +
-                f"${(System.nanoTime() - tfr2) / 1e9}%.2fs")
-              graft.layout.KeyedDelta(spark, docsDir, dropIds ++ addIds,
-                Some(addRows), corpusSchema, appendPartitions = appendFiles)
-              lap(s"corpus_delta (${dropIds.length} retired reps, full relabel)")
-              adjusted.map(writeCsvLines(outDir, _))
-                .getOrElse(writeSummary(spark, outDir))
-            }
-          if (failAfterCorpusDelta)
-            throw new IllegalStateException(
-              "test hook: simulated crash after corpus delta, before state writes")
-          graft.layout.StagedRewrite.commit(
-            spark, compDir, compBase, compBase.files, relabeled)
-          lines
+              .collect().map(_.getLong(0)).toSeq).filter(_.length <= 100000)
+          (staged(StagedRewrite.Pending(compDir, base, base.files, files)), labels, retired)
       }
-      val useDelta = deltaLines.nonEmpty
-      // postings append BEFORE the docs append: a crash in between
-      // retries with prep recomputed from the still-postings-free docs
-      // store (docs unchanged → prep identical), and the retry's
-      // delete-by-key removes any half-appended batch rows before
-      // re-appending — batch doc_ids exceed every corpus id, so on a
-      // clean retry the delete prunes to zero files and is free
-      if (usePostings) {
-        graft.layout.KeyedDelta(spark, postingsDir, retryIds,
-          Some(graft.queries.IncrementalCuration.postingsAll(prep.rows)),
-          Some(graft.queries.IncrementalCuration.PostingsSchema),
-          appendPartitions = postingsAppendFiles)
+      // the corpus delta and its summary: the removed rows are read
+      // from the old corpus, before anything is published
+      val corpus = retired.map { drop =>
+        val addRows = IncrementalCuration.corpus(prep.rows.join(labels, Seq("doc_id")))
+          .select(corpusSchema.get.fieldNames.map(col).toSeq: _*)
+        val lines = summaryDelta(spark, outDir, drop, addRows, corpusSchema)
+        (stage(docsDir, drop, addRows, corpusSchema, appendFiles), lines)
       }
-      if (failAfterPostingsAppend)
-        throw new IllegalStateException(
-          "test hook: simulated crash after postings append, before docs append")
-      // manifest-maintained append; a retry's delete-by-key removes a
-      // crashed fold's half-appended rows first (batch ids exceed the
-      // corpus ids, so the delete prunes to zero files on clean folds).
-      // KeyedDelta also keeps the __h bloom sidecar current (updateAll).
-      graft.layout.KeyedDelta(spark, stateDocsDir, retryIds,
-        Some(prep.rows.select(stateDocs.columns.map(col).toSeq: _*)),
-        Some(stateDocs.schema), appendPartitions = appendFiles)
-      java.nio.file.Files.deleteIfExists(marker)
-      lap("state_writes")
+      val postings = Option.when(usePostings)(stage(postingsDir, Nil,
+        IncrementalCuration.postingsAll(prep.rows),
+        Some(IncrementalCuration.PostingsSchema),
+        prep.nHint.map(n => math.max(1, math.ceil(
+          n * IncrementalCuration.BandRowsPerDoc / 262144.0).toInt))))
+      val docsAppend = stage(stateDocsDir, Nil,
+        prep.rows.select(stateDocs.columns.map(col).toSeq: _*),
+        Some(stateDocs.schema), appendFiles)
+      lap(s"stage (${deltaRes.getClass.getSimpleName}, " +
+        s"${retired.fold("corpus rewrite")(r => s"${r.length} retired reps")})")
+      val lines = commitFold(spark, outDir, read, id,
+        Paths.get(batchDir).toAbsolutePath.normalize.toString,
+        corpus.map(_._1).toSeq ++ Seq(comps) ++ postings ++ Seq(docsAppend),
+        corpus.map(_._2))
+      lap("commit")
       // amortized re-sort/bin-pack of whichever stores outgrew their
       // append debt (no-op most folds; see maybeCompactStore)
       Seq(stateDocsDir, postingsDir, compDir, docsDir)
         .foreach(d => maybeCompactStore(spark, d))
       lap("store_compact")
-      if (useDelta) deltaLines
-      else {
-        // packed corpus or a degenerate merge-storm batch: fall back to
-        // the full corpus rewrite
-        writeCorpusAndSummary(spark, outDir, storedBudget(outDir))
-      }
+      lines
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
       limBefore match {
@@ -522,6 +397,130 @@ object Curate {
         f"[curate.add] total ${(System.nanoTime() - tEnter) / 1e9}%.2fs")
     }
   }
+
+  // ---- the fold log
+
+  private val FoldExt = ".json"
+  private implicit val foldFormats: org.json4s.Formats = Serialization.formats(org.json4s.NoTypeHints)
+  private def bytesOf(f: FoldVersion) = Serialization.write(f).getBytes(StandardCharsets.UTF_8)
+
+  private def foldLog(outDir: String) = Paths.get(outDir, "state", "_fold_log")
+
+  /** The stage dir of fold `id`'s rewrite of `store`: the whole fold's
+    * for "", every fold's for id "".
+    */
+  private def stageOf(outDir: String, id: String, store: String = "") =
+    new java.io.File(s"$outDir/state/_fold_stage/$id/$store")
+
+  private def storeOf(outDir: String, dir: String) = dir.stripPrefix(outDir + "/")
+
+  /** One store's part of a fold: the rewrite of `<outDir>/<store>`
+    * staged against its generation `base`, replacing `removed` with
+    * `added` (entries at their paths in the store).
+    */
+  case class StoreFold(store: String, base: Long, removed: Seq[FileEntry],
+      added: Seq[FileEntry])
+
+  /** A fold-log version: fold `id` (its stage's name and the stamp it
+    * leaves on each store it rolls into) of `batch`, each store's part
+    * and the new summary.csv lines — none with `rewriteCorpus`, which
+    * rewrites corpus and summary from the rolled-forward state. [[run]]
+    * publishes a base version: every store at its built generation.
+    */
+  case class FoldVersion(id: String, batch: String, stores: Seq[StoreFold],
+      summary: Seq[String], rewriteCorpus: Boolean)
+
+  /** Publish the staged `stores` as fold-log version `read` + 1 and roll
+    * it forward; when the log has moved past `read`, delete the stage
+    * and throw [[ConcurrentCommitException]], having changed no store.
+    */
+  private def commitFold(spark: SparkSession, outDir: String, read: Long, id: String,
+      batch: String, stores: Seq[StagedRewrite.Pending],
+      summary: Option[Seq[String]]): Seq[String] = {
+    // computed once the log is known not to have moved: a fold that
+    // published meanwhile may have swept this stage
+    lazy val written = stores.map(StagedRewrite.entries(spark, _))
+    lazy val fold = FoldVersion(id, batch, stores.zip(written).map { case (p, w) =>
+      StoreFold(storeOf(outDir, p.dir), p.base.generation.getOrElse(0L),
+        p.removed, w.map(_.entry))
+    }, summary.getOrElse(Nil), summary.isEmpty)
+    val log = foldLog(outDir)
+    if (!(VersionLog.latest(log, FoldExt).contains(read) &&
+        VersionLog.publish(log, read + 1, FoldExt, bytesOf(fold)))) {
+      fullyDelete(stageOf(outDir, id))
+      throw new ConcurrentCommitException(s"concurrent fold on $outDir: the fold " +
+        s"log moved past version $read while this fold staged — re-run the batch",
+        VersionLog.latest(log, FoldExt).getOrElse(0L), read)
+    }
+    VersionLog.dropBelow(log, FoldExt, read)
+    sweep(outDir, read + 1, id)
+    StagedRewrite.testHookAtStep("published")
+    rollForward(spark, outDir, fold, written)
+  }
+
+  /** Roll published fold `f` forward: each store in turn, then
+    * summary.csv (or the full corpus rewrite), then its stage goes. A
+    * store is landed from the stage and CAS-committed with the fold's
+    * stamp on top of whatever its manifest now holds — a compaction
+    * that ran since the stage kept every row, so only the files this
+    * fold replaces must still be there — then its replaced files are
+    * deleted and its key index updated. A store that already carries
+    * the stamp is past its commit, and a fold whose stage is gone was
+    * finished by another writer, so re-running this after any crash
+    * only completes what is left.
+    */
+  private def rollForward(spark: SparkSession, outDir: String, f: FoldVersion,
+      written: Seq[Seq[StatsWriter.WrittenFile]]): Seq[String] = {
+    val stage = stageOf(outDir, f.id)
+    for ((s, w) <- f.stores.zip(written) if stage.exists) {
+      val dir = s"$outDir/${s.store}"
+      val gone = s.removed.map(e => ZoneMap.canonical(e.path)).toSet
+      var m = ZoneMap.read(dir)
+      while (!m.fold.contains(f.id) && (s.removed.nonEmpty || s.added.nonEmpty)) {
+        require(gone.subsetOf(m.files.map(e => ZoneMap.canonical(e.path)).toSet),
+          s"$dir: files fold ${f.id} replaces were rewritten before it rolled forward: rebuild")
+        m = try StagedRewrite.landed(dir, stageOf(outDir, f.id, s.store).toString, s.added) {
+          ZoneMap.writeCas(dir, m.copy(fold = Some(f.id),
+            files = m.files.filterNot(e => gone(ZoneMap.canonical(e.path))) ++ s.added))
+        } catch { case _: ConcurrentCommitException => ZoneMap.read(dir) }
+      }
+      StagedRewrite.testHookAtStep(s"rolled ${s.store}")
+      StagedRewrite.finish(spark, dir, s.removed, w)
+      StagedRewrite.testHookAtStep(s"cleaned ${s.store}")
+    }
+    if (!stage.exists) return Files.readAllLines(Paths.get(outDir, "summary.csv")).asScala.toSeq
+    val lines =
+      if (f.rewriteCorpus) writeCorpusAndSummary(spark, outDir, storedBudget(outDir))
+      else writeCsvLines(outDir, f.summary)
+    StagedRewrite.testHookAtStep("summary")
+    fullyDelete(stage)
+    lines
+  }
+
+  /** Open a curation dir for a fold: refuse one without a fold log
+    * (written before folds committed atomically), finish a published
+    * fold a crash cut short (its stage is still there) and [[sweep]]
+    * dead stages. Returns the log's version.
+    */
+  def recover(spark: SparkSession, outDir: String): Long = {
+    val log = foldLog(outDir)
+    val v = VersionLog.latest(log, FoldExt).getOrElse(throw new IllegalStateException(
+      s"$outDir has no fold log (state/_fold_log): written before folds " +
+        "committed atomically: rebuild it with the full build"))
+    val f = Serialization.read[FoldVersion](Files.readString(VersionLog.file(log, v, FoldExt)))
+    if (stageOf(outDir, f.id).exists)
+      rollForward(spark, outDir, f, f.stores.map(_.added.map(StatsWriter.WrittenFile(_))))
+    sweep(outDir, v, f.id)
+    v
+  }
+
+  /** Delete the stages of folds that can no longer publish: staged
+    * against a log version below `v`, other than `v`'s own fold `keep`.
+    * A stage of version `v` may be a live fold's, in any JVM.
+    */
+  private def sweep(outDir: String, v: Long, keep: String): Unit =
+    Option(stageOf(outDir, "").listFiles).toSeq.flatten.filter(d => d.getName != keep &&
+      d.getName.takeWhile(_ != '-').toLongOption.forall(_ < v)).foreach(fullyDelete)
 
   private def readState(spark: SparkSession, outDir: String) =
     spark.read.parquet(s"$outDir/state/docs")
@@ -563,30 +562,24 @@ object Curate {
             numFiles = Some(stateStoreFiles(outDir)),
             recordKey = Some("doc_id"), partitionBy = Seq("split")))
     }
-    writeSummary(spark, outDir)
+    writeCsvLines(outDir, rollup(spark, outDir))
   }
 
-  /** O(batch) summary maintenance (round-12 VERDICT "Next #1"): adjust
-    * the stored (split, lang) rollup by exactly the rows the corpus
-    * delta removes (read zone-pruned BEFORE the mutation) and appends —
-    * one small job instead of a corpus-wide re-scan per fold. Returns
-    * None when there is no prior CSV to adjust (caller falls back to
-    * the full rollup). Exact arithmetic (all longs), so folds cannot
-    * drift from the on-disk truth; a full rebuild re-derives the same
-    * numbers from scratch.
+  /** O(batch) summary maintenance (round-12 VERDICT "Next #1"): the
+    * stored (split, lang) rollup adjusted by exactly the rows the corpus
+    * delta removes (read zone-pruned from the old corpus) and appends —
+    * one small job instead of a corpus-wide re-scan per fold. Exact
+    * arithmetic (all longs), so folds cannot drift from the on-disk
+    * truth; a full rebuild re-derives the same numbers from scratch.
     */
   private def summaryDelta(spark: SparkSession, outDir: String,
-      droppedKeys: Seq[Long], addRows: org.apache.spark.sql.DataFrame,
-      corpusSchema: Option[org.apache.spark.sql.types.StructType])
-      : Option[Seq[String]] = {
-    val csvPath = java.nio.file.Paths.get(outDir, "summary.csv")
-    if (!java.nio.file.Files.exists(csvPath)) return None
-    val docsDir = s"$outDir/docs"
+      droppedKeys: Seq[Long], addRows: DataFrame,
+      corpusSchema: Option[org.apache.spark.sql.types.StructType]): Seq[String] = {
     val adds = addRows.select(col("split"), col("lang"),
       lit(1L).as("sgn"), col("n_tok").cast("long").as("t"))
     val removes =
       if (droppedKeys.isEmpty) adds.limit(0)
-      else graft.table.SfcTable.open(spark, docsDir, corpusSchema)
+      else SfcTable.open(spark, s"$outDir/docs", corpusSchema)
         .filter(org.apache.spark.sql.graftbridge.Bridge.inSetLong(
           col("doc_id"), droppedKeys))
         .select(col("split"), col("lang"),
@@ -598,8 +591,7 @@ object Curate {
     // merge into the parsed CSV (the old writer prints a null lang as
     // the string "null"; mirror that for key matching)
     val cur = scala.collection.mutable.Map[(String, String), (Long, Long)]()
-    val existing = java.nio.file.Files.readAllLines(csvPath)
-    existing.stream().skip(1).forEach { line =>
+    Files.readAllLines(Paths.get(outDir, "summary.csv")).asScala.drop(1).foreach { line =>
       val p = line.split(",", 4)
       if (p.length == 4) cur((p(0), p(1))) = (p(2).toLong, p(3).toLong)
     }
@@ -609,40 +601,35 @@ object Curate {
       cur(key) = (n + r.getLong(2), t + r.getLong(3))
     }
     val rows = cur.toSeq.filter(_._2._1 > 0).sortBy(_._1)
-    Some("split,lang,n_docs,total_tokens" +:
-      rows.map { case ((s, l), (n, t)) => s"$s,$l,$n,$t" })
+    "split,lang,n_docs,total_tokens" +: rows.map { case ((s, l), (n, t)) => s"$s,$l,$n,$t" }
   }
 
   /** Replace summary.csv: the new content goes to a fresh temp file,
     * the old CSV is unlinked and the temp file takes its name. Truncating
-    * or renaming over the CSV would force a flush on ext4. Folds call
-    * this inside the `pending_delta` window, so a crash between the
-    * unlink and the rename is healed by the retry: [[summaryDelta]] finds
-    * no CSV and the caller falls back to [[writeSummary]]'s full rescan.
+    * or renaming over the CSV would force a flush on ext4. A fold writes
+    * it while rolling forward, so a crash between the unlink and the
+    * rename is finished by [[recover]], which writes it again.
     */
   private def writeCsvLines(outDir: String, lines: Seq[String]): Seq[String] = {
-    val csv = java.nio.file.Paths.get(outDir, "summary.csv")
-    val tmp = java.nio.file.Paths.get(outDir, s".summary.csv-${java.util.UUID.randomUUID()}")
-    java.nio.file.Files.write(tmp,
-      lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.deleteIfExists(csv)
-    java.nio.file.Files.move(tmp, csv)
+    val csv = Paths.get(outDir, "summary.csv")
+    val tmp = Paths.get(outDir, s".summary.csv-${java.util.UUID.randomUUID()}")
+    Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    Files.deleteIfExists(csv)
+    Files.move(tmp, csv)
     lines
   }
 
-  /** (split, lang) doc/token rollup of the corpus dir → summary.csv.
-    * A narrow columnar scan (3 columns, never text) — cheap beside any
-    * corpus mutation, and always consistent with what's on disk.
+  /** (split, lang) doc/token rollup of the corpus dir, as summary.csv
+    * lines. A narrow columnar scan (3 columns, never text) — cheap beside
+    * any corpus rewrite, and always consistent with what's on disk.
     */
-  private def writeSummary(spark: SparkSession, outDir: String): Seq[String] = {
-    val summary = spark.read.parquet(s"$outDir/docs")
+  private def rollup(spark: SparkSession, outDir: String): Seq[String] =
+    "split,lang,n_docs,total_tokens" +: spark.read.parquet(s"$outDir/docs")
       .groupBy(col("split"), col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("total_tokens"))
       .orderBy(col("split"), col("lang"))
       .collect()
-    writeCsvLines(outDir, "split,lang,n_docs,total_tokens" +:
-      summary.map(r => s"${r.get(0)},${r.get(1)},${r.get(2)},${r.get(3)}").toSeq)
-  }
+      .map(r => s"${r.get(0)},${r.get(1)},${r.get(2)},${r.get(3)}").toSeq
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")

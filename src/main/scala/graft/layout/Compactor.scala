@@ -178,9 +178,9 @@ object Compactor {
     val (laid, staged) = LayoutWriter.stage(df,
       StagedRewrite.stagingDir(dir, "compact"), spec,
       manifest.statsCols.diff(manifest.layoutCols), KeyIndex.bloomSpecs(dir, manifest))
-    StagedRewrite.commit(spark, dir,
+    StagedRewrite.commit(spark, StagedRewrite.Pending(dir,
       manifest.copy(commitsSinceCluster = None, strOffsets = laid.strOffsets),
-      manifest.files, staged)
+      manifest.files, staged))
   }
 
   /** Files of ~`targetFileBytes` that `files`' recorded bytes fill. */
@@ -213,8 +213,8 @@ object Compactor {
     val df0 = StagedRewrite.readFiles(spark, dir, affected.map(_.path), partitioned)
     val arranged = LayoutWriter.cut(df0, manifest.layout, manifest.layoutCols,
       manifest.bits, filesFor(affected, targetFileBytes)).rows
-    StagedRewrite.commit(spark, dir, manifest, affected,
-      StagedRewrite.stage(dir, "compactw", arranged, manifest.hivePartitions,
-        manifest.statsCols, KeyIndex.bloomSpecs(dir, manifest)))
+    StagedRewrite.commit(spark, StagedRewrite.Pending(dir, manifest, affected,
+      StagedRewrite.stage(StagedRewrite.stagingDir(dir, "compactw"), arranged,
+        manifest.hivePartitions, manifest.statsCols, KeyIndex.bloomSpecs(dir, manifest))))
   }
 }

@@ -1,15 +1,18 @@
 package graft.layout
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types.StructType
+import java.nio.file.{Files, Paths}
 
 /** The one commit path for every mutation of an existing table —
-  * upsert, keyed delta, scoped and whole-table compaction, full relabel
-  * and index append: the rewrite is [[stage]]d beside the table, then
-  * [[commit]] moves it in and publishes `base` minus the replaced files
-  * plus the new ones through the manifest's check-and-swap, the one
-  * atomic metadata commit Delta, Hudi and Iceberg each use. Works on
+  * upsert, keyed delta, scoped and whole-table compaction and index
+  * append: the rewrite is [[stage]]d beside the table as a [[Pending]],
+  * then [[commit]] moves it in and publishes `base` minus the replaced
+  * files plus the new ones through the manifest's check-and-swap, the
+  * one atomic metadata commit Delta, Hudi and Iceberg each use. A
+  * curation fold commits several pending rewrites at once through its
+  * own log and lands each with [[landed]] and [[finish]]. Works on
   * hive-partitioned tables: reads keep the partition columns, moves keep
   * each file's partition subdir (reference compacts and upserts
   * partitioned tables routinely: delta_write_layout.py:136-138,
@@ -57,14 +60,13 @@ object StagedRewrite {
   // `<kind>_stage-<id>`, and the fixed `<kind>_stage` older builds used
   private val StageSuffix = raw"[a-z]+_stage(-[0-9a-f]{8})?".r
 
-  /** Write `df` through [[StatsWriter]] into `kind`'s staging dir for
-    * `dir` (partitionBy when the table is partitioned), recording each
-    * file's zone entry and the `blooms` ([[KeyIndex.bloomSpecs]]).
+  /** Write `df` through [[StatsWriter]] into the fresh dir `staging`
+    * (partitionBy when the table is partitioned), recording each file's
+    * zone entry and the `blooms` ([[KeyIndex.bloomSpecs]]).
     */
-  def stage(dir: String, kind: String, df: DataFrame, partitionCols: Seq[String],
+  def stage(staging: String, df: DataFrame, partitionCols: Seq[String],
       statsCols: Seq[String], blooms: Seq[(String, Seq[String])] = Nil,
       schema: Option[StructType] = None): Staged = {
-    val staging = stagingDir(dir, kind)
     val files = StatsWriter.write(df, staging, partitionCols, statsCols, blooms)
     // nothing to commit: a caller that skips the commit leaves no dir
     if (files.isEmpty) {
@@ -73,6 +75,24 @@ object StagedRewrite {
       inFlight.remove(new Path(staging).toUri.getPath)
     }
     Staged(staging, files, partitionCols, statsCols, schema)
+  }
+
+  /** A rewrite of the table at `dir` staged against `base` and not yet
+    * committed: committing it replaces `removed` with the staged files.
+    */
+  case class Pending(dir: String, base: TableManifest, removed: Seq[FileEntry],
+      staged: Staged)
+
+  /** The staged files' manifest entries (and blooms) at the paths they
+    * take in the table, known before any file moves.
+    */
+  def entries(spark: SparkSession, p: Pending): Seq[StatsWriter.WrittenFile] = {
+    val fs = new Path(p.dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    StatsWriter.entries(spark, p.dir, p.staged.files.map { f =>
+      f.copy(status = new org.apache.hadoop.fs.FileStatus(f.status.getLen, false, 0, 0,
+        f.status.getModificationTime, fs.makeQualified(new Path(p.dir,
+          StatsWriter.relOf(f.status.getPath, p.staged.partitionCols.length)))))
+    }, p.staged.partitionCols, p.staged.statsCols, p.staged.schema)
   }
 
   /** Append `df` to the parquet dir `dest` as new part files (under
@@ -119,17 +139,22 @@ object StagedRewrite {
     */
   private[graft] var testHookBeforeCommit: () => Unit = () => ()
 
-  /** Commit `staged` into the table at `dir`, replacing `removed`:
-    *  1. move the staged files in, each under its partition subdir (part
-    *     names are uuid-unique, so moves cannot collide with live files);
+  /** Test seam: called with each step of a curation fold's commit as it
+    * completes (`graft.cli.Curate`), so a suite can crash after it.
+    */
+  private[graft] var testHookAtStep: String => Unit = _ => ()
+
+  /** Commit `p` into its table:
+    *  1. link the staged files in, each under its partition subdir (part
+    *     names are uuid-unique, so they cannot collide with live files);
     *  2. check-and-swap `base` minus `removed` plus the new entries
     *     ([[ZoneMap.writeCas]]) — the manifest goes first, so a crash
     *     leaves at worst orphans the next mutation's [[reconcile]]
     *     purges, never a manifest naming a deleted file;
-    *  3. on a lost race, delete the files this commit moved in and
+    *  3. on a lost race, delete the files this commit linked in and
     *     rethrow [[ConcurrentCommitException]];
-    *  4. delete `removed`, drop cached listings and bring every key-index
-    *     sidecar up to date ([[KeyIndex.updateAll]]).
+    *  4. [[finish]]: delete `removed`, drop cached listings and bring
+    *     every key-index sidecar up to date.
     * Returns the committed (generation-stamped) manifest.
     *
     * `rebase` (upserts only): on a lost race against a commit that
@@ -139,66 +164,84 @@ object StagedRewrite {
     * rewrote, the key ranges overlap and a merge would drop one side's
     * rows: abort instead.
     */
-  def commit(spark: SparkSession, dir: String, base: TableManifest,
-      removed: Seq[FileEntry], staged: Staged,
+  def commit(spark: SparkSession, p: Pending,
       rebase: Option[TableManifest => TableManifest] = None): TableManifest = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val moved = staged.files.map { p =>
-      val dst = new Path(dir, StatsWriter.relOf(p.status.getPath, staged.partitionCols.length))
-      // in flight BEFORE it lands: a concurrent reconcile must never see
-      // it as an orphan
-      inFlight.add(dst.toUri.getPath)
-      fs.mkdirs(dst.getParent)
-      fs.rename(p.status.getPath, dst)
-      p.copy(status = fs.getFileStatus(dst))
-    }
-    fs.delete(new Path(staged.dir), true)
-    inFlight.remove(new Path(staged.dir).toUri.getPath)
-    val written = StatsWriter.entries(spark, dir, moved, staged.partitionCols,
-      staged.statsCols, staged.schema)
-    val newEntries = written.map(_.entry)
-    val removedPaths = removed.map(f => ZoneMap.canonical(f.path)).toSet
-    def next(m: TableManifest) = m.copy(files =
-      m.files.filterNot(f => removedPaths(ZoneMap.canonical(f.path))) ++ newEntries)
-    var from = base
-    var committed: TableManifest = null
-    var attempt = 0
-    try {
+    val written = entries(spark, p)
+    val added = written.map(_.entry)
+    val gone = p.removed.map(f => ZoneMap.canonical(f.path)).toSet
+    def next(m: TableManifest) =
+      m.copy(files = m.files.filterNot(f => gone(ZoneMap.canonical(f.path))) ++ added)
+    val committed = try landed(p.dir, p.staged.dir, added) {
       testHookBeforeCommit()
-      while (committed == null) {
-        try committed = ZoneMap.writeCas(dir, next(from))
+      var from = p.base
+      var attempt = 0
+      var done: TableManifest = null
+      while (done == null) {
+        try done = ZoneMap.writeCas(p.dir, next(from))
         catch {
           case e: ConcurrentCommitException if rebase.isDefined && attempt < 5 =>
             attempt += 1
-            val fresh = ZoneMap.read(dir)
-            val gone = removedPaths -- fresh.files.map(f => ZoneMap.canonical(f.path))
-            if (gone.nonEmpty)
+            val fresh = ZoneMap.read(p.dir)
+            val lost = gone -- fresh.files.map(f => ZoneMap.canonical(f.path))
+            if (lost.nonEmpty)
               throw new ConcurrentCommitException(
-                s"overlapping concurrent commits on $dir: ${gone.size} " +
+                s"overlapping concurrent commits on ${p.dir}: ${lost.size} " +
                   "file(s) this commit rewrote were already replaced by " +
-                  s"another commit (e.g. ${gone.head}) — the key ranges " +
+                  s"another commit (e.g. ${lost.head}) — the key ranges " +
                   "overlap; re-run against the fresh table", e.onDisk, e.expected)
             from = rebase.get(fresh)
         }
       }
+      done
     } catch {
       case e: ConcurrentCommitException =>
-        deleteFiles(fs, newEntries)
-        spark.catalog.refreshByPath(dir)
+        deleteFiles(spark, added)
+        spark.catalog.refreshByPath(p.dir)
         throw e
-    } finally moved.foreach(p => inFlight.remove(p.status.getPath.toUri.getPath))
-    deleteFiles(fs, removed)
-    // manual moves bypass Spark's write-path invalidation — stale
-    // listings would read deleted part files on the next dir-level scan
-    spark.catalog.refreshByPath(dir)
-    // after the commit: a crash in between leaves the new files
-    // unindexed, which lookups treat as affected and update() blooms
-    KeyIndex.updateAll(spark, dir, removed.map(_.path), written)
+    } finally {
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(p.staged.dir))
+      inFlight.remove(new Path(p.staged.dir).toUri.getPath)
+    }
+    finish(spark, p.dir, p.removed, written)
     committed
   }
 
-  private def deleteFiles(fs: FileSystem, files: Seq[FileEntry]): Unit =
-    files.foreach(f => fs.delete(new Path(new java.net.URI(f.path)), false))
+  /** Link each file of `added` into `dir` from the same relative path
+    * under `stage`, then run `publish`, the links in flight meanwhile so
+    * a concurrent [[reconcile]] never purges them. A file already in
+    * place is kept, so landing again after a crash is a no-op.
+    */
+  private[graft] def landed[A](dir: String, stage: String,
+      added: Seq[FileEntry])(publish: => A): A = {
+    val root = Paths.get(new Path(dir).toUri.getPath).toAbsolutePath.normalize
+    val dsts = added.map(e => Paths.get(new java.net.URI(e.path)))
+    dsts.foreach(d => inFlight.add(d.toString))
+    try {
+      dsts.filterNot(Files.exists(_)).foreach { dst =>
+        Files.createDirectories(dst.getParent)
+        Files.createLink(dst, Paths.get(stage).resolve(root.relativize(dst)))
+      }
+      publish
+    } finally dsts.foreach(d => inFlight.remove(d.toString))
+  }
+
+  /** After a commit of `dir`: delete the files it replaced, drop cached
+    * listings (links bypass Spark's write-path invalidation) and bring
+    * every key-index sidecar up to date with the `written` files; a
+    * crash before that leaves them unindexed, which lookups treat as
+    * affected and [[KeyIndex.update]] blooms.
+    */
+  private[graft] def finish(spark: SparkSession, dir: String,
+      removed: Seq[FileEntry], written: Seq[StatsWriter.WrittenFile]): Unit = {
+    deleteFiles(spark, removed)
+    spark.catalog.refreshByPath(dir)
+    KeyIndex.updateAll(spark, dir, removed.map(_.path), written)
+  }
+
+  private def deleteFiles(spark: SparkSession, files: Seq[FileEntry]): Unit = files.foreach { f =>
+    val p = new Path(new java.net.URI(f.path))
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
+  }
 
   /** Reconcile the table dir against its manifest: delete part files the
     * manifest does not reference (round-11 ADVICE). The manifest-first

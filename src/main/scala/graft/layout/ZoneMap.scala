@@ -99,7 +99,11 @@ case class TableManifest(
     filesRef: Option[String] = None,
     // sidecar entries, stamped on sidecar-backed headers: a header read
     // ([[ZoneMap.header]]) knows the table's size without the sidecar
-    fileCount: Option[Int] = None) {
+    fileCount: Option[Int] = None,
+    // id of the curation fold (graft.cli.Curate) that last rolled
+    // forward into this table, carried by every later commit: finishing
+    // a fold skips a store that already carries its id
+    fold: Option[String] = None) {
 
   def hivePartitions: Seq[String] = partitionCols.getOrElse(Nil)
 

@@ -60,7 +60,8 @@ object SearchIndex {
       textCol: String, dir: String, batchFiles: Int = 4): Unit = {
     val pdir = s"$dir/postings"
     val before = graft.layout.ZoneMap.read(pdir)
-    val staged = graft.layout.StagedRewrite.stage(pdir, "add",
+    val staged = graft.layout.StagedRewrite.stage(
+      graft.layout.StagedRewrite.stagingDir(pdir, "add"),
       LayoutWriter.cut(InvertedIndex.postings(batch, idCol, textCol),
         before.layout, before.layoutCols, before.bits, batchFiles).rows,
       Nil, before.statsCols)
@@ -69,7 +70,8 @@ object SearchIndex {
     if (staged.files.nonEmpty) {
       // appends remove nothing, but a racing optimize() rewrites the
       // whole postings set - the commit fails loudly instead
-      graft.layout.StagedRewrite.commit(spark, pdir, before, Nil, staged)
+      graft.layout.StagedRewrite.commit(spark,
+        graft.layout.StagedRewrite.Pending(pdir, before, Nil, staged))
       graft.layout.StagedRewrite.appendParts(
         InvertedIndex.docLengths(batch, idCol, textCol), s"$dir/doclen")
     }

@@ -296,10 +296,6 @@ object IncrementalCuration {
     *  4. Labels ([[labelTail]]): CC over the batch edges plus the star
     *     edges of the old components they touch, diffed against the
     *     stored labels.
-    *
-    * Crash-retry: the postings store may already hold this batch's rows
-    * (appended before the crash); [[corpusBandRows]] drops them, and the
-    * label recomputation is idempotent (see [[labelTail]]).
     */
   def foldLabels(state: DataFrame, stateComps: DataFrame, prep: BatchPrep,
       postingsDir: Option[String] = None,
@@ -313,11 +309,6 @@ object IncrementalCuration {
     val batchRows = if (local) batchBand.collect() else Array.empty[Row]
     if (local) lap(s"batch_rows (${batchRows.length})")
     if (local && batchRows.isEmpty) return selfLabels(prep)
-    // batch ids: band-row ids when collected (a batch doc without band
-    // rows joins no edge), otherwise one batch-bounded collect
-    val batchIds: Set[Long] =
-      if (local) batchRows.map(_.getLong(1)).toSet
-      else prep.rows.select(col("doc_id")).collect().map(_.getLong(0)).toSet
     // touched bucket keys (both families share the key space — a
     // cross-family bh collision only lets a few extra untouched rows
     // through, which the >=1-new pair condition then ignores)
@@ -330,7 +321,7 @@ object IncrementalCuration {
         if (keys.length > TouchedKeyLimit) None
         else Some(keys.map(_.getLong(0)).toSet)
       }
-    val (corpus, keptBound) = corpusBandRows(state, postingsDir, touched, batchIds)
+    val (corpus, keptBound) = corpusBandRows(state, postingsDir, touched)
     val localEdges =
       if (!local) None
       else localCandidates(corpus, keptBound, batchRows, lap)
@@ -352,7 +343,7 @@ object IncrementalCuration {
         }
     labelTail(stateComps, prep,
       localEdges.toLeft(distributedEdges(state, prep, batchBand, corpus, docsDir, lap)),
-      batchIds, lap)
+      lap)
   }
 
   /** Per-step wall clock on stderr — the fold's phase profile. */
@@ -378,15 +369,10 @@ object IncrementalCuration {
     * Candidate-set parity with an unrestricted read: the filter keeps
     * every row of every touched bucket (bh is a function of (band,
     * bucket)), and untouched buckets cannot emit a >=1-new pair.
-    *
-    * Crash-retry: rows carrying `batchIds` are this batch's half-appended
-    * postings. They are dropped here for both pair routes; the batch's
-    * own band rows re-add them. Counted as corpus rows they would shift
-    * an over-cap bucket's head/tail split and its census.
     */
   private def corpusBandRows(state: DataFrame, postingsDir: Option[String],
-      touched: Option[Set[Long]], batchIds: Set[Long]): (DataFrame, Option[Long]) = {
-    val (rows, keptBound) = (postingsDir, touched) match {
+      touched: Option[Set[Long]]): (DataFrame, Option[Long]) =
+    (postingsDir, touched) match {
       case (Some(dir), Some(keys)) =>
         val df = SfcTable.open(state.sparkSession, dir, Some(PostingsSchema))
           .filter(inSetLong(col("bh"), keys))
@@ -397,8 +383,6 @@ object IncrementalCuration {
         (postingsAll(state).filter(inSetLong(col("bh"), keys)), None)
       case (None, None) => (postingsAll(state), None)
     }
-    (rows.filter(!inSetLong(col("doc_id"), batchIds)), keptBound)
-  }
 
   /** Driver-side candidate generation: (SimHash pairs already hamming-
     * verified, MinHash candidates), or None when a bound is exceeded.
@@ -586,14 +570,10 @@ object IncrementalCuration {
     * everything else is batch-bounded: the label algebra runs on driver
     * rows, and the one frame the executors still need (the batch's
     * labels) re-enters the plan as a LocalRelation whose broadcast
-    * build launches no job. During a crash-retry the store may already
-    * hold some of this fold's labels; the recomputation is idempotent
-    * (stored new labels are final, so re-folding the batch edges
-    * reproduces them and `changed` shrinks to the not-yet-applied
-    * remainder).
+    * build launches no job.
     */
   private def labelTail(stateComps: DataFrame, prep: BatchPrep,
-      edges: Either[Seq[(Long, Long)], DataFrame], batchIds: Set[Long],
+      edges: Either[Seq[(Long, Long)], DataFrame],
       lap: String => Unit): DeltaResult = {
     val spark = stateComps.sparkSession
     val (localEdges, edgeFrame) = edges match {
@@ -628,8 +608,7 @@ object IncrementalCuration {
     // no edges at all: no label can change, no store scan and no CC
     if (endpointIds.isEmpty) return selfLabels(prep)
     // old components of the edge endpoints that exist in the store
-    // (batch endpoints aren't in it, except mid-retry where their stored
-    // label is already final — harmlessly idempotent)
+    // (batch endpoints aren't in it)
     val endpointsOld = stateComps
       .filter(inSetLong(col("doc_id"), endpointIds))
       .select(col("doc_id"), col("component"))
@@ -679,10 +658,8 @@ object IncrementalCuration {
         spark.createDataFrame(newLabel.toSeq).toDF("doc_id", "component")))
     // batch-side labels only (state-side changes ride in `changed`): the
     // broadcast build stays batch-sized even when the touched subgraph is
-    // corpus-scale. Mid-retry batch ids ALSO appear in oldOf (their
-    // labels were stored before the crash) — keep them by id
-    val batchLocal = newLabel.iterator
-      .filter(kv => batchIds.contains(kv._1) || !oldOf.contains(kv._1)).toSeq
+    // corpus-scale
+    val batchLocal = newLabel.iterator.filter(kv => !oldOf.contains(kv._1)).toSeq
     CompDelta(prep.rows.select(col("doc_id"))
       .join(broadcast(spark.createDataFrame(batchLocal)
         .toDF("doc_id", "component")), Seq("doc_id"), "left")
@@ -699,9 +676,6 @@ object IncrementalCuration {
     stateComps.select(col("doc_id"), col("component").as("__old"))
       .unionByName(prep.rows
         .select(col("doc_id"), col("doc_id").as("__old")))
-      // mid-retry the store may already hold batch rows — dedup (their
-      // stored label equals the recomputed one, so min is exact)
-      .groupBy(col("doc_id")).agg(min(col("__old")).as("__old"))
       .join(labelsDf, Seq("doc_id"), "left")
       .withColumn("component", coalesce(col("component"), col("__old")))
       .select(col("doc_id"), col("component"))

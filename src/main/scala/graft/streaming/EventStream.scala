@@ -187,64 +187,41 @@ object EventStream {
     * from-scratch rebuild over everything-so-far would produce (the
     * fold == rebuild contract, CurateCliSuite/IncBench).
     *
-    * Exactly-once WITHOUT a side ledger, derived from the incremental
-    * protocol's own invariants:
-    *
-    *  - a fully-replayed batch (checkpoint rewind, restarted query) is
-    *    a NATURAL no-op: the fold's exact-dedup drops every text the
-    *    state already stores, so the prepared batch is empty and every
-    *    downstream phase appends nothing — the stateMax guard below
-    *    merely skips the replay's jobs when it is cheap to prove
-    *    (batch max id <= state max id under the protocol's monotone
-    *    doc_ids, the same contract `addBatch` requires);
-    *  - a batch whose fold CRASHED mid-write left runAdd's pending
-    *    marker naming the staged batch dir — staging is DETERMINISTIC
-    *    per stream batch id (`outDir/stream_stage/batch_<id>`), so the
-    *    replay re-stages the identical content at the identical path
-    *    and runAdd's retry protocol heals the half-applied rows.
-    *
-    * The id-monotonicity contract is the stream's to keep (documents
-    * carrying globally increasing doc_ids — an arrival sequence number
-    * qualifies). The staged dir is removed after the fold commits.
+    * Exactly-once WITHOUT a side ledger: a fold commits atomically, so
+    * a crashed one changed nothing or is finished by the next fold's
+    * entry, and a replayed batch (checkpoint rewind, restarted query) is
+    * a NATURAL no-op — the fold's exact-dedup drops every text the state
+    * already stores. The doc_id guard below merely skips a replay's jobs
+    * when it is cheap to prove (batch max id <= state max id under
+    * monotone doc_ids, the contract `addBatch` requires and the stream
+    * keeps: an arrival sequence number qualifies).
     */
   def curationSink(docs: DataFrame, outDir: String, minChars: Long = 100)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      foldStreamBatch(batch, outDir, batchId, minChars)
+    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+      foldStreamBatch(batch, outDir, minChars)
     }
 
-  /** One micro-batch of [[curationSink]] — separated so the crash-retry
-    * window (fold dies with the pending marker written) is
-    * suite-drivable through runAdd's test hooks.
+  /** One micro-batch of [[curationSink]]: written to a fresh stage dir
+    * under `outDir/stream_stage/`, folded, and the stage deleted.
     */
   private[graft] def foldStreamBatch(batch: DataFrame, outDir: String,
-      batchId: Long, minChars: Long = 100,
-      failAfterPostingsAppend: Boolean = false): Unit =
+      minChars: Long = 100): Unit =
     if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      val marker = java.nio.file.Paths.get(outDir, "state", "pending_delta")
-      // through the manifest: a dir-level read would also count orphan
-      // files a crashed fold left before its reconcile
+      // the state's max doc_id from its manifest's zones, with no job; a
+      // zone max at or above 2^53 may be rounded, so it skips no batch
       val stateDocs = s"$outDir/state/docs"
-      val stateMax: Long =
-        if (!graft.layout.ZoneMap.exists(stateDocs)) Long.MinValue
-        else graft.table.SfcTable.open(spark, stateDocs)
-          .agg(max(col("doc_id"))).collect()(0) match {
-            case r if r.isNullAt(0) => Long.MinValue
-            case r => r.getLong(0)
-          }
+      val stateMax = Option.when(graft.layout.ZoneMap.exists(stateDocs))(
+        graft.layout.ZoneMap.read(stateDocs).files
+          .flatMap(_.ranges.get("doc_id").flatMap(_.max))).toSeq.flatten.maxOption
       val batchMax = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-      if (java.nio.file.Files.exists(marker) || batchMax > stateMax) {
-        val stage = java.nio.file.Paths
-          .get(outDir, "stream_stage", s"batch_$batchId").toString
-        batch.write.mode("overwrite").parquet(s"$stage/documents.parquet")
-        graft.cli.Curate.runAdd(spark, stage, outDir, minChars,
-          failAfterPostingsAppend = failAfterPostingsAppend)
-        // fold committed (marker cleared) — the staged copy is dead
-        def rec(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rec)); f.delete()
-        }
-        rec(new java.io.File(stage))
+      if (stateMax.forall(m => m >= (1L << 53) || batchMax.toDouble > m)) {
+        val stage = java.nio.file.Paths.get(outDir, "stream_stage",
+          s"batch-${java.util.UUID.randomUUID()}").toString
+        try {
+          batch.write.parquet(s"$stage/documents.parquet")
+          graft.cli.Curate.runAdd(batch.sparkSession, stage, outDir, minChars)
+        } finally org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(stage))
       }
     }
 

@@ -229,12 +229,12 @@ object Upserter {
     // committed since our read and replaced none of our affected files,
     // the commit rebases onto the fresh manifest, which carries the
     // other writer's files forward; overlapping rewrites abort.
-    val staged = StagedRewrite.stage(dir, "upsert", arranged,
+    val staged = StagedRewrite.stage(StagedRewrite.stagingDir(dir, "upsert"), arranged,
       manifest.hivePartitions, manifest.statsCols, KeyIndex.bloomSpecs(dir, manifest))
     def counted(m: TableManifest) =
       m.copy(commitsSinceCluster = Some(m.commitsSinceCluster.getOrElse(0) + 1))
-    val updated = StagedRewrite.commit(spark, dir, counted(manifest), affected,
-      staged, rebase = Some(counted))
+    val updated = StagedRewrite.commit(spark,
+      StagedRewrite.Pending(dir, counted(manifest), affected, staged), rebase = Some(counted))
     if (!autoRecluster) UpsertResult(updated, reclustered = false)
     else Compactor.maybeRecluster(spark, dir,
         targetFileBytes = targetFileBytes) match {

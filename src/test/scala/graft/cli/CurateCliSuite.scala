@@ -5,6 +5,14 @@ import org.apache.spark.sql.functions._
 
 class CurateCliSuite extends SparkTestBase {
 
+  /** Runs `body` with the fold's step seam throwing at `step`. */
+  private def crashAt[T](step: String)(body: => T): Unit = {
+    graft.layout.StagedRewrite.testHookAtStep = s =>
+      if (s == step) throw new IllegalStateException(s"simulated crash after $s")
+    try intercept[IllegalStateException](body)
+    finally graft.layout.StagedRewrite.testHookAtStep = _ => ()
+  }
+
   test("Curate writes a split-partitioned corpus matching the q72 rollup") {
     val out = tmpDir("curate_out")
     Curate.run(spark, "/root/testdata/sf0.001", out, 100L)
@@ -164,9 +172,8 @@ class CurateCliSuite extends SparkTestBase {
     val outInc = tmpDir("curate_crinc")
     Curate.run(spark, b1, outInc, 100L, forcePostings = true)
 
-    intercept[IllegalStateException] {
-      Curate.runAdd(spark, b2, outInc, 100L, failAfterPostingsAppend = true)
-    }
+    // the fold dies with its postings rolled forward and its docs not
+    crashAt("rolled state/postings")(Curate.runAdd(spark, b2, outInc, 100L))
     graft.runner.Materialize.releaseAll()
     Curate.runAdd(spark, b2, outInc, 100L)
     graft.runner.Materialize.releaseAll()
@@ -182,6 +189,8 @@ class CurateCliSuite extends SparkTestBase {
   }
 
   test("a distributed-route retry does not count the crashed fold's postings as corpus rows") {
+    // A fold that crashes before its commit leaves the postings store as
+    // it was, so the re-run's corpus rows hold none of the batch.
     // A synthetic family of 40 state docs (ids 1-40) and 40 batch docs
     // (ids 101-140). Every text starts with the same three words, whose
     // shingle hashes undercut every other shingle of the family, so it
@@ -220,30 +229,35 @@ class CurateCliSuite extends SparkTestBase {
 
     val outInc = tmpDir("curate_loinc")
     Curate.run(spark, b1, outInc, 100L, forcePostings = true)
+    val postDir = s"$outInc/state/postings"
+    def postings() = spark.read.parquet(postDir)
+      .collect().map(_.toSeq.toVector).toSeq.sortBy(_.toString)
+    val before = (graft.layout.ZoneMap.read(postDir).generation, postings())
+    def maxBucket() = spark.read.parquet(postDir)
+      .filter(col("fam") === 1).groupBy(col("band"), col("bucket")).count()
+      .agg(max(col("count"))).head().getLong(0)
     sys.props("graft.curate.localBatchRowLimit") = "0"
     try {
-      intercept[IllegalStateException] {
-        Curate.runAdd(spark, b2, outInc, 100L, failAfterPostingsAppend = true)
-      }
+      // the fold dies with every store staged, before its commit
+      crashAt("staged state/docs")(Curate.runAdd(spark, b2, outInc, 100L))
       graft.runner.Materialize.releaseAll()
-      val maxBucket = spark.read.parquet(s"$outInc/state/postings")
-        .filter(col("fam") === 1).groupBy(col("band"), col("bucket")).count()
-        .agg(max(col("count"))).head().getLong(0)
-      assert(maxBucket > graft.queries.DedupQueries.DegenerateBucketCap,
-        s"the crashed fold's store must hold an over-cap bucket (max $maxBucket)")
+      assert((graft.layout.ZoneMap.read(postDir).generation, postings()) == before,
+        "the crashed fold must leave state/postings unchanged")
       Curate.runAdd(spark, b2, outInc, 100L)
       graft.runner.Materialize.releaseAll()
     } finally sys.props.remove("graft.curate.localBatchRowLimit")
+    assert(maxBucket() > graft.queries.DedupQueries.DegenerateBucketCap,
+      s"the folded store must hold an over-cap bucket (max ${maxBucket()})")
     assert(corpus(outInc) == want)
   }
 
   test("a fold that crashes after the corpus delta retries without duplicating") {
     // round-10 ADVICE (medium): a crash between the corpus delta and the
     // state writes used to leave the corpus ahead of the state, and a
-    // retry re-appended the same representative rows. The pending-marker
-    // protocol makes the retry delete-then-insert; this pins it through
-    // the real crash window (the failAfterCorpusDelta hook throws with
-    // the marker written, corpus mutated, state untouched).
+    // retry re-appended the same representative rows. A fold now commits
+    // once: this crashes it after its corpus rolled forward and before
+    // any state store did, then folds another batch, which finishes the
+    // crashed fold first, and re-runs the crashed batch, a no-op.
     val sf = "/root/testdata/sf0.001"
     val docs = graft.Tables.load(spark, sf, "documents")
     val m = docs.agg(expr("percentile_approx(doc_id, 0.5)")).collect()(0).getLong(0)
@@ -256,31 +270,25 @@ class CurateCliSuite extends SparkTestBase {
     val outInc = tmpDir("curate_rinc")
     Curate.run(spark, b1, outInc, 100L)
 
-    intercept[IllegalStateException] {
-      Curate.runAdd(spark, b2, outInc, 100L, failAfterCorpusDelta = true)
-    }
+    val stateGen = graft.layout.ZoneMap.read(s"$outInc/state/docs").generation
+    crashAt("rolled docs")(Curate.runAdd(spark, b2, outInc, 100L))
     graft.runner.Materialize.releaseAll()
-    // the crash window is real: corpus mutated, marker present, state not
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(outInc, "state", "pending_delta")))
+    // the crash window is real: the fold is published, its stage is
+    // still there, and state/docs has not rolled forward
+    val stage = new java.io.File(s"$outInc/state/_fold_stage")
+    assert(stage.list().length == 1, "the published fold's stage must survive the crash")
+    assert(graft.layout.ZoneMap.read(s"$outInc/state/docs").generation == stateGen)
 
-    // the marker names the crashed batch (round-11 ADVICE, medium):
-    // folding a DIFFERENT batch while b2's delta is pending must fail
-    // fast — clearing the marker via another batch would orphan b2's
-    // appended rows and let a later b2 re-run duplicate them
+    // a DIFFERENT batch is accepted: its fold finishes b2's first (b3
+    // holds only texts the state already stores, so it adds nothing)
     val b3 = tmpDir("curate_rb3")
     docs.filter(col("doc_id") <= m / 2).write.parquet(s"$b3/documents.parquet")
-    val e = intercept[IllegalArgumentException] {
-      Curate.runAdd(spark, b3, outInc, 100L)
-    }
+    Curate.runAdd(spark, b3, outInc, 100L)
     graft.runner.Materialize.releaseAll()
-    assert(e.getMessage.contains("retry that batch first"))
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(outInc, "state", "pending_delta")),
-      "a rejected foreign batch must not clear the marker")
+    assert(stage.list().isEmpty, "the finished fold must leave no stage")
 
-    // retry heals: corpus equals the full build, no duplicate doc_ids,
-    // marker cleared
+    // re-running the crashed batch converges: corpus equals the full
+    // build, no duplicate doc_ids
     Curate.runAdd(spark, b2, outInc, 100L)
     def corpus(dir: String) = spark.read.parquet(s"$dir/docs")
       .select("doc_id", "lang", "split", "n_tok")
@@ -289,8 +297,7 @@ class CurateCliSuite extends SparkTestBase {
     assert(inc.map(_.head).distinct.length == inc.length,
       "retried fold must not duplicate doc_ids")
     assert(inc == corpus(outFull))
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(outInc, "state", "pending_delta")))
+    assert(stage.list().isEmpty)
   }
 
   test("every guarded fold path produces the rebuild corpus (forced fallback matrix)") {
@@ -320,6 +327,7 @@ class CurateCliSuite extends SparkTestBase {
         "graft.curate.edgeCollectLimit" -> "0"),
       "fullRelabel" -> Seq(
         "graft.curate.localBatchRowLimit" -> "0",
+        "graft.curate.edgeCollectLimit" -> "0",
         "graft.curate.changedLimit" -> "0"),
       "fullRelabel+local" -> Seq("graft.curate.changedLimit" -> "0"))
     for ((name, props) <- paths; postings <- Seq(false, true)) {

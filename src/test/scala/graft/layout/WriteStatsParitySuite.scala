@@ -133,7 +133,7 @@ class WriteStatsParitySuite extends SparkTestBase {
     val m = LayoutWriter.write(cases(0), dir, LayoutSpec("baseline"), ValueCols)
     assert(m.files.isEmpty)
     assert(StatsReference.collectStats(spark, dir, m.statsCols).isEmpty)
-    val staged = StagedRewrite.stage(dir, "empty", cases(0), Nil, m.statsCols)
+    val staged = StagedRewrite.stage(StagedRewrite.stagingDir(dir, "empty"), cases(0), Nil, m.statsCols)
     assert(staged.files.isEmpty)
   }
 
@@ -196,7 +196,7 @@ class WriteStatsParitySuite extends SparkTestBase {
       LayoutSpec("linear", Seq("id"), numFiles = Some(4), recordKey = Some("id")), ValueCols)
     val m = ZoneMap.read(dir)
     val specs = Seq("k" -> Seq("id"), "ks" -> Seq("id", "s"))
-    val staged = StagedRewrite.stage(dir, "bloom",
+    val staged = StagedRewrite.stage(StagedRewrite.stagingDir(dir, "bloom"),
       cases(700, from = 4000L).repartition(3), Nil, m.statsCols, specs)
     val written = StatsWriter.entries(spark, staged.dir, staged.files, Nil, m.statsCols)
     assert(written.length == 3)

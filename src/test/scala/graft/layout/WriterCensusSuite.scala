@@ -105,15 +105,42 @@ class WriterCensusSuite extends SparkTestBase {
     val sf = "/root/testdata/sf0.001"
     val docs = graft.Tables.load(spark, sf, "documents")
     val m = docs.agg(expr("percentile_approx(doc_id, 0.5)")).collect()(0).getLong(0)
-    val b1 = tmpDir("census_b1"); val b2 = tmpDir("census_b2")
+    val q = docs.stat.approxQuantile("doc_id", Array(0.75), 0.0).head.toLong
+    val b1 = tmpDir("census_b1"); val b2 = tmpDir("census_b2"); val b3 = tmpDir("census_b3")
     docs.filter(col("doc_id") <= m).write.parquet(s"$b1/documents.parquet")
-    docs.filter(col("doc_id") > m).write.parquet(s"$b2/documents.parquet")
+    docs.filter(col("doc_id") > m && col("doc_id") <= q).write.parquet(s"$b2/documents.parquet")
+    docs.filter(col("doc_id") > q).write.parquet(s"$b3/documents.parquet")
     val out = tmpDir("census_curate")
     val stores = Seq("state/docs", "state/components", "state/postings", "docs")
+    // the fold log's current version names every store, at a generation
+    // no newer than the store's manifest
+    def foldLog(): Unit = {
+      val log = java.nio.file.Paths.get(out, "state", "_fold_log")
+      val v = parse(java.nio.file.Files.readString(
+        VersionLog.file(log, VersionLog.latest(log, ".json").get, ".json")))
+      val named = (v \ "stores").children.map(st =>
+        (st \ "store").asInstanceOf[JString].s -> (st \ "base").asInstanceOf[JInt].num.toLong)
+      assert(named.map(_._1).toSet == stores.toSet, s"fold log names ${named.map(_._1)}")
+      named.foreach { case (st, base) =>
+        assert(base <= ZoneMap.headerGeneration(s"$out/$st").get,
+          s"$st: fold log base $base is newer than its manifest")
+      }
+    }
     graft.cli.Curate.run(spark, b1, out, 100L, forcePostings = true)
     stores.foreach(s => census(s"$out/$s"))
+    foldLog()
     graft.cli.Curate.runAdd(spark, b2, out, 100L)
     stores.foreach(s => census(s"$out/$s"))
+    foldLog()
+    // a forced whole-mapping relabel (the distributed star-round route
+    // with no room for changed labels)
+    val relabel = Seq("graft.curate.localBatchRowLimit", "graft.curate.edgeCollectLimit",
+      "graft.curate.changedLimit")
+    relabel.foreach(sys.props(_) = "0")
+    try graft.cli.Curate.runAdd(spark, b3, out, 100L)
+    finally relabel.foreach(sys.props.remove)
+    stores.foreach(s => census(s"$out/$s"))
+    foldLog()
 
     val idx = tmpDir("census_search")
     graft.operators.SearchIndex.build(docs.filter(col("doc_id") <= m),

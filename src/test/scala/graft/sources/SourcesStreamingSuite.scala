@@ -531,11 +531,13 @@ class SourcesStreamingSuite extends SparkTestBase {
     // each replayed fold an empty no-op and the corpus must not change
     runStream(tmpDir("stream_cur_ck2"))
     assert(corpus(out) == want, "replayed stream mutated the corpus")
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(out, "state", "pending_delta")))
+    // every fold finished and every micro-batch's stage was removed
+    Seq("state/_fold_stage", "stream_stage").foreach { d =>
+      assert(Option(new java.io.File(s"$out/$d").list()).forall(_.isEmpty), s"$d left behind")
+    }
   }
 
-  test("curation sink heals a crashed fold on redelivery (deterministic staging)") {
+  test("curation sink heals a crashed fold on redelivery") {
     val sf = "/root/testdata/sf0.001"
     val docs = graft.Tables.load(spark, sf, "documents")
     val m = docs.agg(expr("percentile_approx(doc_id, 0.5)")).collect()(0).getLong(0)
@@ -547,25 +549,24 @@ class SourcesStreamingSuite extends SparkTestBase {
     graft.cli.Curate.run(spark, b1, out, 100L, forcePostings = true)
 
     val batch = docs.filter(col("doc_id") > m)
-    // the fold dies between the postings append and the docs append —
-    // exactly-once now depends on the replay staging the identical
-    // content at the identical path so the marker check passes
-    intercept[IllegalStateException] {
-      EventStream.foldStreamBatch(batch, out, batchId = 7L,
-        failAfterPostingsAppend = true)
-    }
+    // the fold dies right after its commit, before any store rolled
+    // forward: exactly-once now depends on the redelivery finishing it
+    graft.layout.StagedRewrite.testHookAtStep = s =>
+      if (s == "published") throw new IllegalStateException("simulated crash")
+    try intercept[IllegalStateException](EventStream.foldStreamBatch(batch, out))
+    finally graft.layout.StagedRewrite.testHookAtStep = _ => ()
     graft.runner.Materialize.releaseAll()
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(out, "state", "pending_delta")))
-    // redelivery of the SAME stream batch id heals the half-applied rows
-    EventStream.foldStreamBatch(batch, out, batchId = 7L)
+    assert(new java.io.File(s"$out/state/_fold_stage").list().length == 1)
+    assert(new java.io.File(s"$out/stream_stage").list().isEmpty,
+      "the crashed micro-batch's stage must be removed")
+    // redelivery of the same micro-batch heals the half-applied fold
+    EventStream.foldStreamBatch(batch, out)
     graft.runner.Materialize.releaseAll()
     def corpus(dir: String) = spark.read.parquet(s"$dir/docs")
       .select("doc_id", "lang", "split", "n_tok")
       .collect().map(_.toSeq.toVector).sortBy(_.head.toString.toLong).toSeq
     assert(corpus(out) == corpus(outFull))
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(out, "state", "pending_delta")))
+    assert(new java.io.File(s"$out/state/_fold_stage").list().isEmpty)
     // no duplicate band rows survived the crash-retry
     val dups = spark.read.parquet(s"$out/state/postings")
       .groupBy(col("fam"), col("doc_id"), col("band")).count()
