@@ -128,15 +128,19 @@ class WriteOnceSuite extends SparkTestBase {
     val b1 = tmpDir("graft_wo_b1"); val b2 = tmpDir("graft_wo_b2")
     docs.filter($"doc_id" <= m).write.parquet(s"$b1/documents.parquet")
     docs.filter($"doc_id" > m).write.parquet(s"$b2/documents.parquet")
+    // the relabel is forced on the distributed star-round route, whose
+    // changed-label cap then fires on any edge
+    val forced = Seq("graft.curate.localBatchRowLimit", "graft.curate.edgeCollectLimit",
+      "graft.curate.changedLimit")
     for (relabel <- Seq(false, true)) {
       val out = tmpDir(s"graft_wo_curate_$relabel")
       graft.cli.Curate.run(spark, b1, out, 100L)
-      if (relabel) sys.props("graft.curate.changedLimit") = "0"
+      if (relabel) forced.foreach(sys.props(_) = "0")
       // summary.csv keeps its fixed name, replaced by unlink and create
       try assertWriteOnce(Seq(out), replaced = Set("summary.csv")) {
         graft.cli.Curate.runAdd(spark, b2, out, 100L)
       }
-      finally sys.props.remove("graft.curate.changedLimit")
+      finally forced.foreach(sys.props.remove)
     }
   }
 }
