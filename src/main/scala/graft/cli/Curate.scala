@@ -38,9 +38,9 @@ import org.json4s.jackson.Serialization
   *   outDir/summary.csv  (split,lang,n_docs,total_tokens)
   *   outDir/state/  parquet: every exact-kept doc + signatures +
   *     component (see IncrementalCuration)
-  *   outDir/state/_fold_log/  one write-once version per build or fold
-  *     ([[FoldVersion]]); a dir without it predates atomic folds and is
-  *     refused: rebuild it
+  *   outDir/state/_fold_log/  one write-once version per build, fold
+  *     or store compaction ([[FoldVersion]]); a dir without it predates
+  *     atomic folds and is refused: rebuild it
   */
 object Curate {
 
@@ -57,8 +57,8 @@ object Curate {
     * (round-15: the 50-batch streaming soak measured per-fold reads
     * growing with FOLD COUNT — each fold appends ~1 file per store, so
     * listings/footers grow linearly and append-era zones decay). A
-    * store is re-sorted + bin-packed (Compactor.compact: one staged
-    * commit, sidecars kept current) once its file count exceeds
+    * store is re-sorted + bin-packed ([[compactStores]]: Compactor's
+    * rewrite, committed through the fold log) once its file count exceeds
     * [[StoreCompactFactor]] x its byte-ideal count. The trigger is
     * geometric, so the O(store) rewrite is paid at most once per
     * ~factor-x growth in file count: O(1) amortized per appended file,
@@ -89,17 +89,30 @@ object Curate {
   private def compactFloor: Int =
     sys.props.get("graft.curate.compactFloor").map(_.toInt).getOrElse(16)
 
-  private def maybeCompactStore(spark: SparkSession, dir: String): Unit = {
-    if (!graft.layout.ZoneMap.exists(dir)) return
-    val m = graft.layout.ZoneMap.read(dir)
-    val bytes = m.files.flatMap(_.bytes).sum
-    val ideal = math.max(1,
-      math.ceil(bytes.toDouble / StoreTargetFileBytes).toInt)
-    if (m.files.length >= math.max(compactFloor, StoreCompactFactor * ideal)) {
+  /** The fold-mutated stores, in roll-forward order. */
+  private val Stores = Seq("docs", "state/components", "state/postings", "state/docs")
+
+  /** Compact the stores whose file count reached [[StoreCompactFactor]]
+    * x their byte-ideal count as one fold-log version on top of `read`,
+    * summary `lines` unchanged, so no compaction rewrites the files a
+    * fold another writer published is about to replace. Dropped when the
+    * log has moved on: the next fold's trigger fires again.
+    */
+  private[graft] def compactStores(spark: SparkSession, outDir: String, read: Long,
+      lines: Seq[String]): Unit = {
+    val due = Stores.filter(s => ZoneMap.exists(s"$outDir/$s")).filter { s =>
+      val m = ZoneMap.read(s"$outDir/$s")
+      m.files.length >= math.max(compactFloor, StoreCompactFactor * math.max(1,
+        math.ceil(m.files.flatMap(_.bytes).sum.toDouble / StoreTargetFileBytes).toInt))
+    }
+    if (due.nonEmpty) {
       val t = System.nanoTime()
-      graft.layout.Compactor.compact(spark, dir, StoreTargetFileBytes)
-      System.err.println(f"[curate.add]   store_compact $dir: " +
-        f"${m.files.length} files -> ~$ideal " +
+      val id = s"$read-${java.util.UUID.randomUUID()}"
+      try commitFold(spark, outDir, read, id, "", due.map(s => graft.layout.Compactor.stage(
+        spark, s"$outDir/$s", StoreTargetFileBytes, stageOf(outDir, id, s).toString)), Some(lines))
+      catch { case e: ConcurrentCommitException =>
+        System.err.println(s"[curate.add]   store_compact dropped: ${e.getMessage}") }
+      System.err.println(f"[curate.add]   store_compact ${due.mkString(", ")} " +
         f"(${(System.nanoTime() - t) / 1e9}%.2fs)")
     }
   }
@@ -175,12 +188,10 @@ object Curate {
       writeSchema(outDir, "docs_schema.json", state.drop("component").schema)
       writeSchema(outDir, "corpus_schema.json",
         spark.read.parquet(s"$outDir/docs").schema)
-      // the fold log's base version: every store at its built generation
-      // (the next fold's entry deletes any older fold's stage)
-      val stores = Seq("docs", "state/components", "state/postings", "state/docs")
-        .flatMap(s => ZoneMap.headerGeneration(s"$outDir/$s").map(StoreFold(s, _, Nil, Nil)))
+      // the fold log's base version, with no store to roll (the next
+      // fold's entry deletes any older fold's stage)
       VersionLog.publishNext(foldLog(outDir), FoldExt, bytesOf(
-        FoldVersion(java.util.UUID.randomUUID().toString, "", stores, lines, false)))
+        FoldVersion(java.util.UUID.randomUUID().toString, "", Nil, lines, false)))
       lines
     } finally graft.runner.Materialize.releaseAllFast(spark)
   }
@@ -380,9 +391,8 @@ object Curate {
         corpus.map(_._2))
       lap("commit")
       // amortized re-sort/bin-pack of whichever stores outgrew their
-      // append debt (no-op most folds; see maybeCompactStore)
-      Seq(stateDocsDir, postingsDir, compDir, docsDir)
-        .foreach(d => maybeCompactStore(spark, d))
+      // append debt (no-op most folds)
+      compactStores(spark, outDir, read + 1, lines)
       lap("store_compact")
       lines
     } finally {
@@ -415,24 +425,25 @@ object Curate {
   private def storeOf(outDir: String, dir: String) = dir.stripPrefix(outDir + "/")
 
   /** One store's part of a fold: the rewrite of `<outDir>/<store>`
-    * staged against its generation `base`, replacing `removed` with
-    * `added` (entries at their paths in the store).
+    * replacing `removed` with `added` (entries at their paths in the
+    * store).
     */
-  case class StoreFold(store: String, base: Long, removed: Seq[FileEntry],
-      added: Seq[FileEntry])
+  case class StoreFold(store: String, removed: Seq[FileEntry], added: Seq[FileEntry])
 
-  /** A fold-log version: fold `id` (its stage's name and the stamp it
-    * leaves on each store it rolls into) of `batch`, each store's part
-    * and the new summary.csv lines — none with `rewriteCorpus`, which
-    * rewrites corpus and summary from the rolled-forward state. [[run]]
-    * publishes a base version: every store at its built generation.
+  /** A fold-log version: fold `id` (its stage's name) of `batch` (""
+    * for a store compaction), each store's part and the new summary.csv
+    * lines — none with `rewriteCorpus`, which rewrites corpus and
+    * summary from the rolled-forward state. [[run]] publishes a base
+    * version with no store part.
     */
   case class FoldVersion(id: String, batch: String, stores: Seq[StoreFold],
       summary: Seq[String], rewriteCorpus: Boolean)
 
   /** Publish the staged `stores` as fold-log version `read` + 1 and roll
-    * it forward; when the log has moved past `read`, delete the stage
-    * and throw [[ConcurrentCommitException]], having changed no store.
+    * it forward. When the log has moved past `read`, or a store no
+    * longer lists a file the fold replaces (a compaction outside the log
+    * rewrote it), delete the stage and throw
+    * [[ConcurrentCommitException]], having changed no store.
     */
   private def commitFold(spark: SparkSession, outDir: String, read: Long, id: String,
       batch: String, stores: Seq[StagedRewrite.Pending],
@@ -441,46 +452,52 @@ object Curate {
     // published meanwhile may have swept this stage
     lazy val written = stores.map(StagedRewrite.entries(spark, _))
     lazy val fold = FoldVersion(id, batch, stores.zip(written).map { case (p, w) =>
-      StoreFold(storeOf(outDir, p.dir), p.base.generation.getOrElse(0L),
-        p.removed, w.map(_.entry))
+      StoreFold(storeOf(outDir, p.dir), p.removed, w.map(_.entry))
     }, summary.getOrElse(Nil), summary.isEmpty)
     val log = foldLog(outDir)
-    if (!(VersionLog.latest(log, FoldExt).contains(read) &&
-        VersionLog.publish(log, read + 1, FoldExt, bytesOf(fold)))) {
+    def abort(why: String) = {
       fullyDelete(stageOf(outDir, id))
-      throw new ConcurrentCommitException(s"concurrent fold on $outDir: the fold " +
-        s"log moved past version $read while this fold staged — re-run the batch",
+      throw new ConcurrentCommitException(s"concurrent fold on $outDir: $why " +
+        "while this fold staged — re-run the batch",
         VersionLog.latest(log, FoldExt).getOrElse(0L), read)
     }
+    stores.filter(_.removed.nonEmpty).foreach { p =>
+      val listed = ZoneMap.read(p.dir).files.map(e => ZoneMap.canonical(e.path)).toSet
+      if (!p.removed.forall(e => listed(ZoneMap.canonical(e.path))))
+        abort(s"${p.dir} was rewritten")
+    }
+    if (!(VersionLog.latest(log, FoldExt).contains(read) &&
+        VersionLog.publish(log, read + 1, FoldExt, bytesOf(fold))))
+      abort(s"the fold log moved past version $read")
     VersionLog.dropBelow(log, FoldExt, read)
     sweep(outDir, read + 1, id)
     StagedRewrite.testHookAtStep("published")
-    rollForward(spark, outDir, fold, written)
+    rollForward(spark, outDir, read + 1, fold, written)
   }
 
-  /** Roll published fold `f` forward: each store in turn, then
-    * summary.csv (or the full corpus rewrite), then its stage goes. A
-    * store is landed from the stage and CAS-committed with the fold's
-    * stamp on top of whatever its manifest now holds — a compaction
-    * that ran since the stage kept every row, so only the files this
-    * fold replaces must still be there — then its replaced files are
-    * deleted and its key index updated. A store that already carries
-    * the stamp is past its commit, and a fold whose stage is gone was
+  /** Roll fold `f`, published as fold-log version `v`, forward: each
+    * store in turn, then summary.csv (or the full corpus rewrite), then
+    * its stage goes. A store is landed from the stage and CAS-committed
+    * with the stamp `v` on top of whatever its manifest now holds — a
+    * compaction that ran since the stage kept every row, so only the
+    * files this fold replaces must still be there — then its replaced
+    * files are deleted and its key index updated. A store stamped `v` or
+    * later is past this commit, and a fold whose stage is gone was
     * finished by another writer, so re-running this after any crash
     * only completes what is left.
     */
-  private def rollForward(spark: SparkSession, outDir: String, f: FoldVersion,
+  private def rollForward(spark: SparkSession, outDir: String, v: Long, f: FoldVersion,
       written: Seq[Seq[StatsWriter.WrittenFile]]): Seq[String] = {
     val stage = stageOf(outDir, f.id)
     for ((s, w) <- f.stores.zip(written) if stage.exists) {
       val dir = s"$outDir/${s.store}"
       val gone = s.removed.map(e => ZoneMap.canonical(e.path)).toSet
       var m = ZoneMap.read(dir)
-      while (!m.fold.contains(f.id) && (s.removed.nonEmpty || s.added.nonEmpty)) {
+      while (!m.foldVersion.exists(_ >= v) && (s.removed.nonEmpty || s.added.nonEmpty)) {
         require(gone.subsetOf(m.files.map(e => ZoneMap.canonical(e.path)).toSet),
           s"$dir: files fold ${f.id} replaces were rewritten before it rolled forward: rebuild")
         m = try StagedRewrite.landed(dir, stageOf(outDir, f.id, s.store).toString, s.added) {
-          ZoneMap.writeCas(dir, m.copy(fold = Some(f.id),
+          ZoneMap.writeCas(dir, m.copy(foldVersion = Some(v),
             files = m.files.filterNot(e => gone(ZoneMap.canonical(e.path))) ++ s.added))
         } catch { case _: ConcurrentCommitException => ZoneMap.read(dir) }
       }
@@ -509,7 +526,7 @@ object Curate {
         "committed atomically: rebuild it with the full build"))
     val f = Serialization.read[FoldVersion](Files.readString(VersionLog.file(log, v, FoldExt)))
     if (stageOf(outDir, f.id).exists)
-      rollForward(spark, outDir, f, f.stores.map(_.added.map(StatsWriter.WrittenFile(_))))
+      rollForward(spark, outDir, v, f, f.stores.map(_.added.map(StatsWriter.WrittenFile(_))))
     sweep(outDir, v, f.id)
     v
   }

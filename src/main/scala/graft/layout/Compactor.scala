@@ -157,10 +157,17 @@ object Compactor {
       spark: SparkSession,
       dir: String,
       targetFileBytes: Long = DefaultTargetFileBytes): TableManifest = {
-    val manifest = ZoneMap.read(dir)
     // orphans from a crashed prior mutation are purged first (round-12
     // ADVICE), mirroring Upserter/KeyedDelta
-    StagedRewrite.reconcile(spark, dir, manifest)
+    StagedRewrite.reconcile(spark, dir, ZoneMap.read(dir))
+    StagedRewrite.commit(spark,
+      stage(spark, dir, targetFileBytes, StagedRewrite.stagingDir(dir, "compact")))
+  }
+
+  /** The same re-cluster staged into `staging`, uncommitted. */
+  def stage(spark: SparkSession, dir: String, targetFileBytes: Long,
+      staging: String): StagedRewrite.Pending = {
+    val manifest = ZoneMap.read(dir)
     // the manifest's files in manifest order, not a dir listing (whose
     // order follows the part names' uuids): the cut's input, and so the
     // order of rows that tie on the layout key, repeats
@@ -175,12 +182,11 @@ object Compactor {
       recordKeys = manifest.recordKeys.getOrElse(Nil),
       precombineCol = manifest.precombineCol,
       partitionBy = manifest.hivePartitions) // preserve hive partitioning
-    val (laid, staged) = LayoutWriter.stage(df,
-      StagedRewrite.stagingDir(dir, "compact"), spec,
+    val (laid, staged) = LayoutWriter.stage(df, staging, spec,
       manifest.statsCols.diff(manifest.layoutCols), KeyIndex.bloomSpecs(dir, manifest))
-    StagedRewrite.commit(spark, StagedRewrite.Pending(dir,
+    StagedRewrite.Pending(dir,
       manifest.copy(commitsSinceCluster = None, strOffsets = laid.strOffsets),
-      manifest.files, staged))
+      manifest.files, staged)
   }
 
   /** Files of ~`targetFileBytes` that `files`' recorded bytes fill. */

@@ -100,10 +100,10 @@ case class TableManifest(
     // sidecar entries, stamped on sidecar-backed headers: a header read
     // ([[ZoneMap.header]]) knows the table's size without the sidecar
     fileCount: Option[Int] = None,
-    // id of the curation fold (graft.cli.Curate) that last rolled
-    // forward into this table, carried by every later commit: finishing
-    // a fold skips a store that already carries its id
-    fold: Option[String] = None) {
+    // fold-log version of the curation fold (graft.cli.Curate) that last
+    // rolled forward into this table, carried by every later commit:
+    // finishing fold v skips a store stamped v or later
+    foldVersion: Option[Long] = None) {
 
   def hivePartitions: Seq[String] = partitionCols.getOrElse(Nil)
 

@@ -194,7 +194,11 @@ object EventStream {
     * already stores. The doc_id guard below merely skips a replay's jobs
     * when it is cheap to prove (batch max id <= state max id under
     * monotone doc_ids, the contract `addBatch` requires and the stream
-    * keeps: an arrival sequence number qualifies).
+    * keeps: an arrival sequence number qualifies). Each micro-batch
+    * first finishes a published fold a crash cut short
+    * ([[graft.cli.Curate.recover]]): its state/docs may already hold the
+    * replayed ids while summary.csv or the corpus still lag, and the
+    * guard would then skip the one fold whose entry completes them.
     */
   def curationSink(docs: DataFrame, outDir: String, minChars: Long = 100)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
@@ -208,12 +212,11 @@ object EventStream {
   private[graft] def foldStreamBatch(batch: DataFrame, outDir: String,
       minChars: Long = 100): Unit =
     if (!batch.isEmpty) {
+      graft.cli.Curate.recover(batch.sparkSession, outDir)
       // the state's max doc_id from its manifest's zones, with no job; a
       // zone max at or above 2^53 may be rounded, so it skips no batch
-      val stateDocs = s"$outDir/state/docs"
-      val stateMax = Option.when(graft.layout.ZoneMap.exists(stateDocs))(
-        graft.layout.ZoneMap.read(stateDocs).files
-          .flatMap(_.ranges.get("doc_id").flatMap(_.max))).toSeq.flatten.maxOption
+      val stateMax = graft.layout.ZoneMap.read(s"$outDir/state/docs").files
+        .flatMap(_.ranges.get("doc_id").flatMap(_.max)).maxOption
       val batchMax = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
       if (stateMax.forall(m => m >= (1L << 53) || batchMax.toDouble > m)) {
         val stage = java.nio.file.Paths.get(outDir, "stream_stage",

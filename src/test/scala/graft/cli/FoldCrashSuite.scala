@@ -22,15 +22,21 @@ class FoldCrashSuite extends SparkTestBase {
   private val sf = "/root/testdata/sf0.001"
   private val Stores = Seq("docs", "state/components", "state/postings", "state/docs")
 
+  private def quantiles(qs: Double*): Array[Long] =
+    graft.Tables.load(spark, sf, "documents").stat.approxQuantile("doc_id", qs.toArray, 0.0)
+      .map(_.toLong)
+
+  /** A batch dir of the documents with ids in (lo, hi]. */
+  private def batch(name: String, lo: Long, hi: Long): String = {
+    val d = tmpDir(name)
+    graft.Tables.load(spark, sf, "documents").filter(col("doc_id") > lo && col("doc_id") <= hi)
+      .write.parquet(s"$d/documents.parquet")
+    d
+  }
+
   /** base = ids up to the median, b1 = up to the 75th percentile, b2 = the rest. */
   private lazy val (base, b1, b2, want1, want2) = {
-    val docs = graft.Tables.load(spark, sf, "documents")
-    val q = docs.stat.approxQuantile("doc_id", Array(0.5, 0.75), 0.0).map(_.toLong)
-    def batch(name: String, lo: Long, hi: Long) = {
-      val d = tmpDir(name)
-      docs.filter(col("doc_id") > lo && col("doc_id") <= hi).write.parquet(s"$d/documents.parquet")
-      d
-    }
+    val q = quantiles(0.5, 0.75)
     val base = batch("fc_base", Long.MinValue, q(0))
     val b1 = batch("fc_b1", q(0), q(1))
     val b2 = batch("fc_b2", q(1), Long.MaxValue)
@@ -171,6 +177,77 @@ class FoldCrashSuite extends SparkTestBase {
     assert(spark.read.parquet(s"$out/state/docs").count() == post.stores("state/docs")._2)
     fold(out, b2)
     assert(snap(out).corpus == want2.corpus)
+  }
+
+  test("a compaction outside the fold log in the commit window aborts the fold, retryably") {
+    // the forced full relabel replaces every mapping file
+    val props = routes.toMap.apply("FullRelabel")
+    props.foreach { case (k, v) => sys.props(k) = v }
+    try {
+      val out = tmpDir("fc_window")
+      Curate.run(spark, base, out, 100L)
+      val pre = snap(out)
+      val log = Paths.get(out, "state", "_fold_log")
+      val v0 = VersionLog.latest(log, ".json").get
+      val e = withHook { s =>
+        if (s == "staged state/docs") Compactor.compact(spark, s"$out/state/components")
+      }(intercept[ConcurrentCommitException](fold(out, b1)))
+      assert(e.getMessage.contains("state/components was rewritten"), e.getMessage)
+      assert(VersionLog.latest(log, ".json").contains(v0))
+      // nothing visible moved but the compaction's own rewrite
+      val got = snap(out)
+      assert(got.corpus == pre.corpus && got.summary == pre.summary)
+      assert(got.stores.map { case (st, (_, rows)) => st -> rows } ==
+        pre.stores.map { case (st, (_, rows)) => st -> rows })
+      assert(stages(out).isEmpty)
+      fold(out, b1)
+      val rerun = snap(out)
+      assert(rerun.corpus == want1.corpus && rerun.summary == want1.summary)
+    } finally props.foreach { case (k, _) => sys.props.remove(k) }
+  }
+
+  test("store compactions commit through the fold log: a compaction and a fold never both publish") {
+    // base, then b1 in three folds: every append store holds four files
+    val q = quantiles(0.5, 7.0 / 12, 8.0 / 12, 0.75)
+    val template = tmpDir("fc_logc")
+    Curate.run(spark, base, template, 100L, forcePostings = true)
+    q.sliding(2).zipWithIndex.foreach { case (Array(lo, hi), i) =>
+      fold(template, batch(s"fc_b1_$i", lo, hi))
+    }
+    assert(ZoneMap.read(s"$template/state/docs").files.length == 4)
+    val log = Paths.get(template, "state", "_fold_log")
+    val v = VersionLog.latest(log, ".json").get
+    // a compaction staged against version v, due once the floor allows
+    def compact(out: String): Unit = {
+      sys.props("graft.curate.compactFloor") = "4"
+      try Curate.compactStores(spark, out, v,
+        Files.readAllLines(Paths.get(out, "summary.csv")).asScala.toSeq)
+      finally sys.props.remove("graft.curate.compactFloor")
+    }
+
+    // the fold publishes first: the compaction is dropped
+    val late = copyDir(template)
+    withHook(s => if (s == "published") compact(late))(fold(late, b2))
+    assert(VersionLog.latest(Paths.get(late, "state", "_fold_log"), ".json").contains(v + 1))
+    assert(ZoneMap.read(s"$late/state/docs").files.length == 5, "the compaction must not land")
+    val got = snap(late)
+    assert(got.corpus == want2.corpus && got.summary == want2.summary)
+    assert(stages(late).isEmpty)
+
+    // the compaction publishes first: the fold aborts, and its re-run
+    // converges on the compacted stores
+    val early = copyDir(template)
+    intercept[ConcurrentCommitException](withHook { s =>
+      if (s == "staged state/docs") compact(early)
+    }(fold(early, b2)))
+    assert(VersionLog.latest(Paths.get(early, "state", "_fold_log"), ".json").contains(v + 1))
+    assert(ZoneMap.read(s"$early/state/docs").files.length == 1)
+    val compacted = snap(early)
+    assert(compacted.corpus == want1.corpus && compacted.summary == want1.summary)
+    assert(stages(early).isEmpty)
+    fold(early, b2)
+    val rerun = snap(early)
+    assert(rerun.corpus == want2.corpus && rerun.summary == want2.summary)
   }
 
   test("a curation dir without a fold log is refused, the corpus untouched") {

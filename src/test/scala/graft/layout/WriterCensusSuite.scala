@@ -112,26 +112,29 @@ class WriterCensusSuite extends SparkTestBase {
     docs.filter(col("doc_id") > q).write.parquet(s"$b3/documents.parquet")
     val out = tmpDir("census_curate")
     val stores = Seq("state/docs", "state/components", "state/postings", "docs")
-    // the fold log's current version names every store, at a generation
-    // no newer than the store's manifest
-    def foldLog(): Unit = {
+    // the fold log's current version: the build's names no store and
+    // stamps none; a fold's names every store, and rolling it forward
+    // stamped each store it changed with that version
+    def foldLog(built: Boolean): Unit = {
       val log = java.nio.file.Paths.get(out, "state", "_fold_log")
-      val v = parse(java.nio.file.Files.readString(
-        VersionLog.file(log, VersionLog.latest(log, ".json").get, ".json")))
-      val named = (v \ "stores").children.map(st =>
-        (st \ "store").asInstanceOf[JString].s -> (st \ "base").asInstanceOf[JInt].num.toLong)
-      assert(named.map(_._1).toSet == stores.toSet, s"fold log names ${named.map(_._1)}")
-      named.foreach { case (st, base) =>
-        assert(base <= ZoneMap.headerGeneration(s"$out/$st").get,
-          s"$st: fold log base $base is newer than its manifest")
+      val v = VersionLog.latest(log, ".json").get
+      val named = (parse(java.nio.file.Files.readString(VersionLog.file(log, v, ".json"))) \ "stores")
+        .children.map(st => (st \ "store").asInstanceOf[JString].s ->
+          ((st \ "removed").children.nonEmpty || (st \ "added").children.nonEmpty))
+      if (built) assert(named.isEmpty, s"the build's version names ${named.map(_._1)}")
+      else assert(named.map(_._1).toSet == stores.toSet, s"fold log names ${named.map(_._1)}")
+      stores.foreach { st =>
+        val changed = named.toMap.getOrElse(st, false)
+        assert(ZoneMap.read(s"$out/$st").foldVersion.contains(v) == changed,
+          s"$st: stamp ${ZoneMap.read(s"$out/$st").foldVersion}, fold-log version $v")
       }
     }
     graft.cli.Curate.run(spark, b1, out, 100L, forcePostings = true)
     stores.foreach(s => census(s"$out/$s"))
-    foldLog()
+    foldLog(built = true)
     graft.cli.Curate.runAdd(spark, b2, out, 100L)
     stores.foreach(s => census(s"$out/$s"))
-    foldLog()
+    foldLog(built = false)
     // a forced whole-mapping relabel (the distributed star-round route
     // with no room for changed labels)
     val relabel = Seq("graft.curate.localBatchRowLimit", "graft.curate.edgeCollectLimit",
@@ -140,7 +143,7 @@ class WriterCensusSuite extends SparkTestBase {
     try graft.cli.Curate.runAdd(spark, b3, out, 100L)
     finally relabel.foreach(sys.props.remove)
     stores.foreach(s => census(s"$out/$s"))
-    foldLog()
+    foldLog(built = false)
 
     val idx = tmpDir("census_search")
     graft.operators.SearchIndex.build(docs.filter(col("doc_id") <= m),

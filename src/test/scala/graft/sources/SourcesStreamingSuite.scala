@@ -573,4 +573,40 @@ class SourcesStreamingSuite extends SparkTestBase {
       .filter(col("count") > 1).count()
     assert(dups == 0)
   }
+
+  for (packed <- Seq(false, true))
+    test(s"curation sink finishes a fold that crashed after state/docs rolled (packed=$packed)") {
+      val sf = "/root/testdata/sf0.001"
+      val docs = graft.Tables.load(spark, sf, "documents")
+      val m = docs.agg(expr("percentile_approx(doc_id, 0.5)")).collect()(0).getLong(0)
+      // a packed corpus rewrites corpus and summary after every store rolled
+      val budget = Option.when(packed)(512L)
+      val outFull = tmpDir("stream_rolled_full")
+      graft.cli.Curate.run(spark, sf, outFull, 100L, budget)
+      val b1 = tmpDir("stream_rolled_b1")
+      docs.filter(col("doc_id") <= m).write.parquet(s"$b1/documents.parquet")
+      val out = tmpDir("stream_rolled_out")
+      graft.cli.Curate.run(spark, b1, out, 100L, budget, forcePostings = true)
+
+      val batch = docs.filter(col("doc_id") > m)
+      // state/docs already holds the batch's ids, summary.csv (and a
+      // packed corpus) still the old ones: the doc_id guard alone would
+      // skip the redelivery
+      graft.layout.StagedRewrite.testHookAtStep = s =>
+        if (s == "rolled state/docs") throw new IllegalStateException("simulated crash")
+      try intercept[IllegalStateException](EventStream.foldStreamBatch(batch, out))
+      finally graft.layout.StagedRewrite.testHookAtStep = _ => ()
+      graft.runner.Materialize.releaseAll()
+      EventStream.foldStreamBatch(batch, out)
+      graft.runner.Materialize.releaseAll()
+      def corpus(dir: String) = spark.read.parquet(s"$dir/docs")
+        .select((Seq("doc_id", "lang", "split", "n_tok") ++ Option.when(packed)("seq_id"))
+          .map(col): _*)
+        .collect().map(_.toSeq.toVector).sortBy(_.head.toString.toLong).toSeq
+      def summary(dir: String) = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(dir, "summary.csv"))
+      assert(corpus(out) == corpus(outFull))
+      assert(summary(out) == summary(outFull))
+      assert(new java.io.File(s"$out/state/_fold_stage").list().isEmpty)
+    }
 }
