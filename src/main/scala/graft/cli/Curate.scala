@@ -7,7 +7,7 @@ import scala.util.chaining._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.layout.{ConcurrentCommitException, FileEntry, KeyIndex, KeyedDelta,
-  LayoutWriter, StagedRewrite, StatsWriter, VersionLog, ZoneMap}
+  LayoutWriter, StagedRewrite, VersionLog, ZoneMap}
 import graft.queries.IncrementalCuration
 import graft.table.SfcTable
 import org.apache.hadoop.fs.FileUtil.fullyDelete
@@ -355,7 +355,7 @@ object Curate {
             stageOf(outDir, id, storeOf(outDir, compDir)).toString,
             LayoutWriter.LayoutSpec("linear", Seq("doc_id"),
               numFiles = Some(stateStoreFiles(outDir)), recordKey = Some("doc_id")),
-            Nil, KeyIndex.bloomSpecs(compDir, base))
+            Nil, KeyIndex.bloomSpecs(base))
           val retired =
             if (packed.nonEmpty) None
             else Some(labels
@@ -426,9 +426,11 @@ object Curate {
 
   /** One store's part of a fold: the rewrite of `<outDir>/<store>`
     * replacing `removed` with `added` (entries at their paths in the
-    * store).
+    * store), and per key index the parts holding the added files' rows
+    * ([[KeyIndex.stageParts]]).
     */
-  case class StoreFold(store: String, removed: Seq[FileEntry], added: Seq[FileEntry])
+  case class StoreFold(store: String, removed: Seq[FileEntry], added: Seq[FileEntry],
+      parts: Map[String, Seq[String]] = Map.empty)
 
   /** A fold-log version: fold `id` (its stage's name) of `batch` (""
     * for a store compaction), each store's part and the new summary.csv
@@ -450,9 +452,9 @@ object Curate {
       summary: Option[Seq[String]]): Seq[String] = {
     // computed once the log is known not to have moved: a fold that
     // published meanwhile may have swept this stage
-    lazy val written = stores.map(StagedRewrite.entries(spark, _))
-    lazy val fold = FoldVersion(id, batch, stores.zip(written).map { case (p, w) =>
-      StoreFold(storeOf(outDir, p.dir), p.removed, w.map(_.entry))
+    lazy val fold = FoldVersion(id, batch, stores.map { p =>
+      val w = StagedRewrite.entries(spark, p)
+      StoreFold(storeOf(outDir, p.dir), p.removed, w.map(_.entry), KeyIndex.stageParts(spark, p, w))
     }, summary.getOrElse(Nil), summary.isEmpty)
     val log = foldLog(outDir)
     def abort(why: String) = {
@@ -472,7 +474,7 @@ object Curate {
     VersionLog.dropBelow(log, FoldExt, read)
     sweep(outDir, read + 1, id)
     StagedRewrite.testHookAtStep("published")
-    rollForward(spark, outDir, read + 1, fold, written)
+    rollForward(spark, outDir, read + 1, fold)
   }
 
   /** Roll fold `f`, published as fold-log version `v`, forward: each
@@ -480,29 +482,32 @@ object Curate {
     * its stage goes. A store is landed from the stage and CAS-committed
     * with the stamp `v` on top of whatever its manifest now holds — a
     * compaction that ran since the stage kept every row, so only the
-    * files this fold replaces must still be there — then its replaced
-    * files are deleted and its key index updated. A store stamped `v` or
-    * later is past this commit, and a fold whose stage is gone was
-    * finished by another writer, so re-running this after any crash
-    * only completes what is left.
+    * files this fold replaces must still be there — its key-index parts
+    * in the same version — then its replaced files are deleted. A store
+    * stamped `v` or later is past this commit, and a fold whose stage is
+    * gone was finished by another writer, so re-running this after any
+    * crash only completes what is left.
     */
-  private def rollForward(spark: SparkSession, outDir: String, v: Long, f: FoldVersion,
-      written: Seq[Seq[StatsWriter.WrittenFile]]): Seq[String] = {
+  private def rollForward(spark: SparkSession, outDir: String, v: Long,
+      f: FoldVersion): Seq[String] = {
     val stage = stageOf(outDir, f.id)
-    for ((s, w) <- f.stores.zip(written) if stage.exists) {
+    for (s <- f.stores if stage.exists) {
       val dir = s"$outDir/${s.store}"
       val gone = s.removed.map(e => ZoneMap.canonical(e.path)).toSet
       var m = ZoneMap.read(dir)
       while (!m.foldVersion.exists(_ >= v) && (s.removed.nonEmpty || s.added.nonEmpty)) {
         require(gone.subsetOf(m.files.map(e => ZoneMap.canonical(e.path)).toSet),
           s"$dir: files fold ${f.id} replaces were rewritten before it rolled forward: rebuild")
-        m = try StagedRewrite.landed(dir, stageOf(outDir, f.id, s.store).toString, s.added) {
-          ZoneMap.writeCas(dir, m.copy(foldVersion = Some(v),
-            files = m.files.filterNot(e => gone(ZoneMap.canonical(e.path))) ++ s.added))
+        m = try StagedRewrite.landed(dir, stageOf(outDir, f.id, s.store).toString,
+            s.added.map(_.path) ++ s.parts.values.flatten) {
+          ZoneMap.writeCas(dir, KeyIndex.withParts(m.copy(foldVersion = Some(v),
+            files = m.files.filterNot(e => gone(ZoneMap.canonical(e.path))) ++ s.added),
+            s.parts, s.removed.length))
         } catch { case _: ConcurrentCommitException => ZoneMap.read(dir) }
       }
       StagedRewrite.testHookAtStep(s"rolled ${s.store}")
-      StagedRewrite.finish(spark, dir, s.removed, w)
+      StagedRewrite.finish(spark, dir, s.removed)
+      KeyIndex.maintain(spark, dir, m)
       StagedRewrite.testHookAtStep(s"cleaned ${s.store}")
     }
     if (!stage.exists) return Files.readAllLines(Paths.get(outDir, "summary.csv")).asScala.toSeq
@@ -526,7 +531,7 @@ object Curate {
         "committed atomically: rebuild it with the full build"))
     val f = Serialization.read[FoldVersion](Files.readString(VersionLog.file(log, v, FoldExt)))
     if (stageOf(outDir, f.id).exists)
-      rollForward(spark, outDir, v, f, f.stores.map(_.added.map(StatsWriter.WrittenFile(_))))
+      rollForward(spark, outDir, v, f)
     sweep(outDir, v, f.id)
     v
   }

@@ -157,11 +157,27 @@ object Compactor {
       spark: SparkSession,
       dir: String,
       targetFileBytes: Long = DefaultTargetFileBytes): TableManifest = {
+    refuseCurationStore(dir)
     // orphans from a crashed prior mutation are purged first (round-12
     // ADVICE), mirroring Upserter/KeyedDelta
     StagedRewrite.reconcile(spark, dir, ZoneMap.read(dir))
     StagedRewrite.commit(spark,
       stage(spark, dir, targetFileBytes, StagedRewrite.stagingDir(dir, "compact")))
+  }
+
+  /** Refuse a store of a curation dir (one whose `state/_fold_log`
+    * exists): a fold published to that log may be about to replace the
+    * files a compaction would rewrite, and could then not roll forward.
+    * Its stores compact through the log (`graft.cli.Curate`'s store
+    * compaction).
+    */
+  private def refuseCurationStore(dir: String): Unit = {
+    val d = java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(dir).toUri.getPath)
+      .toAbsolutePath.normalize
+    require(!Seq(d.getParent, d.getParent.getParent).exists(a =>
+        a != null && java.nio.file.Files.exists(a.resolve("state").resolve("_fold_log"))),
+      s"$dir is a store of a curation dir: compact it through the fold log " +
+        "(Curate's store compaction, which every fold runs), not directly")
   }
 
   /** The same re-cluster staged into `staging`, uncommitted. */
@@ -183,7 +199,7 @@ object Compactor {
       precombineCol = manifest.precombineCol,
       partitionBy = manifest.hivePartitions) // preserve hive partitioning
     val (laid, staged) = LayoutWriter.stage(df, staging, spec,
-      manifest.statsCols.diff(manifest.layoutCols), KeyIndex.bloomSpecs(dir, manifest))
+      manifest.statsCols.diff(manifest.layoutCols), KeyIndex.bloomSpecs(manifest))
     StagedRewrite.Pending(dir,
       manifest.copy(commitsSinceCluster = None, strOffsets = laid.strOffsets),
       manifest.files, staged)
@@ -206,6 +222,7 @@ object Compactor {
       dir: String,
       preds: Seq[ZonePredicate],
       targetFileBytes: Long = DefaultTargetFileBytes): TableManifest = {
+    refuseCurationStore(dir)
     val manifest = ZoneMap.read(dir)
     // Crash inside a previous mutation (incl. this one, after the
     // commit's file moves but before its manifest swap) leaves orphan
@@ -221,6 +238,6 @@ object Compactor {
       manifest.bits, filesFor(affected, targetFileBytes)).rows
     StagedRewrite.commit(spark, StagedRewrite.Pending(dir, manifest, affected,
       StagedRewrite.stage(StagedRewrite.stagingDir(dir, "compactw"), arranged,
-        manifest.hivePartitions, manifest.statsCols, KeyIndex.bloomSpecs(dir, manifest))))
+        manifest.hivePartitions, manifest.statsCols, KeyIndex.bloomSpecs(manifest))))
   }
 }

@@ -100,7 +100,7 @@ object KeyedDelta {
     val staged = toWrite match {
       case Some(rows) =>
         StagedRewrite.stage(into, rows, manifest.hivePartitions,
-          manifest.statsCols, KeyIndex.bloomSpecs(dir, manifest), schema)
+          manifest.statsCols, KeyIndex.bloomSpecs(manifest), schema)
       case None => StagedRewrite.Staged(into, Nil, Nil, Nil)
     }
     StagedRewrite.Pending(dir, manifest, affected, staged)

@@ -63,8 +63,11 @@ object LayoutWriter {
       dir: String,
       spec: LayoutSpec,
       extraStatsCols: Seq[String] = Nil): TableManifest = {
+    // the write below replaces the dir, log included: the new version
+    // goes after the one it wipes, so no version name is reused
+    val wiped = ZoneMap.headerGeneration(dir)
     val (manifest, staged) = stage(df, dir, spec, extraStatsCols)
-    ZoneMap.write(dir, manifest.copy(files = StatsWriter.entries(df.sparkSession,
+    ZoneMap.write(dir, manifest.copy(generation = wiped, files = StatsWriter.entries(df.sparkSession,
       dir, staged.files, spec.partitionBy, manifest.statsCols).map(_.entry)))
   }
 

@@ -9,10 +9,11 @@ import java.nio.file.{Files, Paths}
   * upsert, keyed delta, scoped and whole-table compaction and index
   * append: the rewrite is [[stage]]d beside the table as a [[Pending]],
   * then [[commit]] moves it in and publishes `base` minus the replaced
-  * files plus the new ones through the manifest's check-and-swap, the
-  * one atomic metadata commit Delta, Hudi and Iceberg each use. A
-  * curation fold commits several pending rewrites at once through its
-  * own log and lands each with [[landed]] and [[finish]]. Works on
+  * files plus the new ones, with their key-index parts, through the
+  * manifest's check-and-swap, the one atomic metadata commit Delta, Hudi
+  * and Iceberg each use. A curation fold commits several pending
+  * rewrites at once through its own log and lands each with [[landed]]
+  * and [[finish]]. Works on
   * hive-partitioned tables: reads keep the partition columns, moves keep
   * each file's partition subdir (reference compacts and upserts
   * partitioned tables routinely: delta_write_layout.py:136-138,
@@ -95,31 +96,6 @@ object StagedRewrite {
     }, p.staged.partitionCols, p.staged.statsCols, p.staged.schema)
   }
 
-  /** Append `df` to the parquet dir `dest` as new part files (under
-    * `partitionBy` subdirs when given): written into a fresh hidden
-    * staging dir inside `dest`, then each part file moves in under its
-    * own uuid name. Writing straight into `dest` in append mode would
-    * rewrite its `_SUCCESS` marker and checksum in place, and replacing
-    * a non-empty file forces a flush on ext4. Readers skip the hidden
-    * staging dir; a crash mid-move leaves some of the parts moved.
-    */
-  def appendParts(df: DataFrame, dest: String, partitionBy: Seq[String] = Nil): Unit = {
-    val stage = new Path(dest, s".append_tmp-${java.util.UUID.randomUUID()}")
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*)).parquet(stage.toString)
-    val fs = stage.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    def move(from: Path, to: Path): Unit = fs.listStatus(from).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory) move(st.getPath, new Path(to, name))
-      else if (name.startsWith("part-")) {
-        fs.mkdirs(to)
-        fs.rename(st.getPath, new Path(to, name))
-      }
-    }
-    move(stage, new Path(dest))
-    fs.delete(stage, true)
-  }
-
   /** Staging dirs of live mutations, and part files an IN-FLIGHT commit
     * has moved into a table dir but not yet published: [[reconcile]]
     * must not purge them — a concurrent mutation on the same table runs
@@ -139,22 +115,29 @@ object StagedRewrite {
     */
   private[graft] var testHookBeforeCommit: () => Unit = () => ()
 
-  /** Test seam: called with each step of a curation fold's commit as it
-    * completes (`graft.cli.Curate`), so a suite can crash after it.
+  /** Test seam: called with each named step of a commit as it completes
+    * — [[publish]]'s "parts staged" and "CAS", [[commit]]'s "replaced
+    * data deleted", an index-only commit's "replaced parts deleted"
+    * ([[KeyIndex]]) and each step of a curation fold
+    * (`graft.cli.Curate`) — so a suite can crash after it.
     */
   private[graft] var testHookAtStep: String => Unit = _ => ()
 
   /** Commit `p` into its table:
-    *  1. link the staged files in, each under its partition subdir (part
-    *     names are uuid-unique, so they cannot collide with live files);
-    *  2. check-and-swap `base` minus `removed` plus the new entries
-    *     ([[ZoneMap.writeCas]]) — the manifest goes first, so a crash
-    *     leaves at worst orphans the next mutation's [[reconcile]]
-    *     purges, never a manifest naming a deleted file;
-    *  3. on a lost race, delete the files this commit linked in and
-    *     rethrow [[ConcurrentCommitException]];
-    *  4. [[finish]]: delete `removed`, drop cached listings and bring
-    *     every key-index sidecar up to date.
+    *  1. stage the key-index parts of the new files beside them
+    *     ([[KeyIndex.stageParts]]);
+    *  2. link the staged files and parts in, each under its partition
+    *     or shard subdir (names are uuid-unique, so they cannot collide
+    *     with live files);
+    *  3. check-and-swap `base` minus `removed` plus the new entries, the
+    *     new parts added to each index ([[ZoneMap.writeCas]]) — the
+    *     manifest goes first, so a crash leaves at worst orphans the next
+    *     mutation's [[reconcile]] purges, never a manifest naming a
+    *     deleted file, and data and index publish together;
+    *  4. on a lost race, delete what this commit linked in and rethrow
+    *     [[ConcurrentCommitException]];
+    *  5. [[finish]], then the amortized index upkeep
+    *     ([[KeyIndex.maintain]]).
     * Returns the committed (generation-stamped) manifest.
     *
     * `rebase` (upserts only): on a lost race against a commit that
@@ -169,9 +152,14 @@ object StagedRewrite {
     val written = entries(spark, p)
     val added = written.map(_.entry)
     val gone = p.removed.map(f => ZoneMap.canonical(f.path)).toSet
-    def next(m: TableManifest) =
-      m.copy(files = m.files.filterNot(f => gone(ZoneMap.canonical(f.path))) ++ added)
-    val committed = try landed(p.dir, p.staged.dir, added) {
+    var parts = Map.empty[String, Seq[String]]
+    def next(m: TableManifest) = KeyIndex.withParts(
+      m.copy(files = m.files.filterNot(f => gone(ZoneMap.canonical(f.path))) ++ added),
+      parts, p.removed.length)
+    val committed = publish(spark, p.dir, p.staged.dir) {
+      parts = KeyIndex.stageParts(spark, p, written)
+      added.map(_.path) ++ parts.values.flatten
+    } {
       testHookBeforeCommit()
       var from = p.base
       var attempt = 0
@@ -193,28 +181,50 @@ object StagedRewrite {
         }
       }
       done
-    } catch {
-      case e: ConcurrentCommitException =>
-        deleteFiles(spark, added)
-        spark.catalog.refreshByPath(p.dir)
-        throw e
-    } finally {
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(p.staged.dir))
-      inFlight.remove(new Path(p.staged.dir).toUri.getPath)
     }
-    finish(spark, p.dir, p.removed, written)
+    finish(spark, p.dir, p.removed)
+    testHookAtStep("replaced data deleted")
+    KeyIndex.maintain(spark, p.dir, committed)
     committed
   }
 
-  /** Link each file of `added` into `dir` from the same relative path
-    * under `stage`, then run `publish`, the links in flight meanwhile so
-    * a concurrent [[reconcile]] never purges them. A file already in
-    * place is kept, so landing again after a crash is a no-op.
+  /** One commit of `dir` from the fresh stage `stage`: `prepare` writes
+    * what the stage holds and names the paths its files take in the
+    * table, [[landed]] links them in and `cas` publishes the manifest
+    * version. On a lost race the links go before the exception
+    * propagates; the stage goes either way. Steps "parts staged" and
+    * "CAS".
+    */
+  private[layout] def publish(spark: SparkSession, dir: String, stage: String)(
+      prepare: => Seq[String])(cas: => TableManifest): TableManifest = {
+    var linked = Seq.empty[String]
+    try {
+      linked = prepare
+      testHookAtStep("parts staged")
+      val committed = landed(dir, stage, linked)(cas)
+      testHookAtStep("CAS")
+      committed
+    } catch {
+      case e: ConcurrentCommitException =>
+        deletePaths(spark, linked)
+        spark.catalog.refreshByPath(dir)
+        throw e
+    } finally {
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(stage))
+      inFlight.remove(new Path(stage).toUri.getPath)
+    }
+  }
+
+  /** Link each of `paths` (URIs in `dir`) into place from the same
+    * relative path under `stage`, then run `publish`, the links in
+    * flight meanwhile so a concurrent [[reconcile]] never purges them. A
+    * file already in place is kept, so landing again after a crash is a
+    * no-op.
     */
   private[graft] def landed[A](dir: String, stage: String,
-      added: Seq[FileEntry])(publish: => A): A = {
+      paths: Seq[String])(publish: => A): A = {
     val root = Paths.get(new Path(dir).toUri.getPath).toAbsolutePath.normalize
-    val dsts = added.map(e => Paths.get(new java.net.URI(e.path)))
+    val dsts = paths.map(p => Paths.get(new java.net.URI(p)))
     dsts.foreach(d => inFlight.add(d.toString))
     try {
       dsts.filterNot(Files.exists(_)).foreach { dst =>
@@ -225,29 +235,26 @@ object StagedRewrite {
     } finally dsts.foreach(d => inFlight.remove(d.toString))
   }
 
-  /** After a commit of `dir`: delete the files it replaced, drop cached
-    * listings (links bypass Spark's write-path invalidation) and bring
-    * every key-index sidecar up to date with the `written` files; a
-    * crash before that leaves them unindexed, which lookups treat as
-    * affected and [[KeyIndex.update]] blooms.
+  /** After a commit of `dir`: delete the files it replaced and drop
+    * cached listings (links bypass Spark's write-path invalidation).
     */
-  private[graft] def finish(spark: SparkSession, dir: String,
-      removed: Seq[FileEntry], written: Seq[StatsWriter.WrittenFile]): Unit = {
-    deleteFiles(spark, removed)
+  private[graft] def finish(spark: SparkSession, dir: String, removed: Seq[FileEntry]): Unit = {
+    deletePaths(spark, removed.map(_.path))
     spark.catalog.refreshByPath(dir)
-    KeyIndex.updateAll(spark, dir, removed.map(_.path), written)
   }
 
-  private def deleteFiles(spark: SparkSession, files: Seq[FileEntry]): Unit = files.foreach { f =>
-    val p = new Path(new java.net.URI(f.path))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
-  }
+  private[layout] def deletePaths(spark: SparkSession, paths: Seq[String]): Unit =
+    paths.foreach { f =>
+      val p = new Path(new java.net.URI(f))
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
+    }
 
   /** Reconcile the table dir against its manifest: delete part files the
-    * manifest does not reference (round-11 ADVICE). The manifest-first
-    * commit order means a crash can only leave ORPHANS — new part files
-    * moved in before the manifest rename, or superseded files whose
-    * post-commit delete never ran. Manifest-driven readers are already
+    * manifest does not reference (round-11 ADVICE), key-index parts and
+    * unions included. The manifest-first commit order means a crash can
+    * only leave ORPHANS — new files linked in before the manifest
+    * publish, or replaced files whose post-commit delete never ran.
+    * Manifest-driven readers are already
     * consistent; this makes dir-level readers (plain
     * spark.read.parquet(dir)) consistent too. Runs at mutation entry —
     * a healthy table pays one directory listing. A moved table is safe:
@@ -258,19 +265,21 @@ object StagedRewrite {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // URIs differ in form across producers (file:/ vs file:///) — compare
     // by filesystem path component
-    val referenced = manifest.files
-      .map(f => new java.net.URI(f.path).getPath).toSet
+    val referenced = (manifest.files.map(_.path) ++
+        manifest.indexes.values.flatMap(ix => ix.parts ++ ix.unions))
+      .map(p => new java.net.URI(p).getPath).toSet
     val candidates = scala.collection.mutable.ArrayBuffer.empty[Path]
     def walk(p: Path): Unit = fs.listStatus(p).foreach { s =>
+      val n = s.getPath.getName
       if (s.isDirectory) {
-        // hidden (_/. prefixed) dirs are metadata, not data — the
-        // key-index sidecar's part files must not be purged as orphans
-        val n = s.getPath.getName
-        if (!n.startsWith("_") && !n.startsWith(".")) walk(s.getPath)
+        // hidden (_/. prefixed) dirs are metadata, not data — but the
+        // key-index sidecars hold parts swept like data parts
+        if (n.startsWith(KeyIndex.DirName) || !n.startsWith("_") && !n.startsWith("."))
+          walk(s.getPath)
       }
       // in-flight files belong to a concurrent mutation that has not
       // committed yet — not crash debris
-      else if (s.getPath.getName.startsWith("part-") &&
+      else if ((n.startsWith("part-") || n.startsWith("unions-")) &&
           !referenced.contains(s.getPath.toUri.getPath) &&
           !inFlight.contains(s.getPath.toUri.getPath))
         candidates += s.getPath

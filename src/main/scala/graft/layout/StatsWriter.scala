@@ -49,7 +49,8 @@ object StatsWriter {
   case class Produced(status: FileStatus, stats: FileStats)
 
   /** A written file's manifest entry plus its blooms by sidecar name —
-    * what [[KeyIndex.update]] appends without reading the file.
+    * the key-index rows its commit stages without reading the file
+    * ([[KeyIndex.stageParts]]).
     */
   case class WrittenFile(entry: FileEntry, blooms: Map[String, Array[Byte]] = Map.empty)
 

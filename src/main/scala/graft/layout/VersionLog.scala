@@ -1,6 +1,6 @@
 package graft.layout
 
-import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path}
+import java.nio.file.{FileAlreadyExistsException, Files, Path}
 
 /** Write-once versioned metadata, the publish rule of Delta's
   * `_delta_log/N.json` and Iceberg's `vN.metadata.json`: version n of a
@@ -89,21 +89,4 @@ private[graft] object VersionLog {
   def dropBelow(log: Path, ext: String, keepFrom: Long): Unit =
     versions(log, ext).filter(_ < keepFrom)
       .foreach(v => Files.deleteIfExists(file(log, v, ext)))
-
-  /** The current version's bytes, None when `log` holds no version. A
-    * concurrent [[publishNext]] can delete the version between the
-    * listing and the read; the re-listing then names a newer one.
-    */
-  def readLatest(log: Path, ext: String): Option[Array[Byte]] = {
-    var attempt = 0
-    while (true) {
-      latest(log, ext) match {
-        case None => return None
-        case Some(v) =>
-          try return Some(Files.readAllBytes(file(log, v, ext)))
-          catch { case _: NoSuchFileException if attempt < 3 => attempt += 1 }
-      }
-    }
-    sys.error("unreachable")
-  }
 }

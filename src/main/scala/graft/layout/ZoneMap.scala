@@ -42,11 +42,19 @@ case class FileEntry(path: String, rows: Long, ranges: Map[String, ColRange],
     bytes: Option[Long] = None,
     // commit generation that created the file: None until
     // [[ZoneMap.write]] stamps it with the committing generation, and
-    // required on read. Lets the key-index sidecar prove "every file of
-    // gen <= indexedGen has a bloom row" entirely driver-side — no
-    // live-set broadcast, no duplicate-fragile count gate (round-14
-    // VERDICT #3/ADVICE).
+    // required on read. A key index's union blooms cover the files up to
+    // a generation ([[IndexEntry.unionsGen]]).
     gen: Option[Long] = None)
+
+/** One key-index sidecar as the manifest version that lists it sees it
+  * ([[KeyIndex]]): its key columns, its immutable shard part files
+  * (`<sidecar>/s=<n>/part-<uuid>`, one bloom row per data file the
+  * version lists, rows of since-replaced files counted as `stale`), and
+  * its union-bloom file with the generation whose files it covers.
+  * Paths are absolute and rebased with the entries on a moved table.
+  */
+case class IndexEntry(keys: Seq[String], parts: Seq[String], stale: Long = 0L,
+    unions: Option[String] = None, unionsGen: Long = 0L)
 
 case class TableManifest(
     layout: String,
@@ -103,9 +111,15 @@ case class TableManifest(
     // fold-log version of the curation fold (graft.cli.Curate) that last
     // rolled forward into this table, carried by every later commit:
     // finishing fold v skips a store stamped v or later
-    foldVersion: Option[Long] = None) {
+    foldVersion: Option[Long] = None,
+    // the key-index sidecars, by sidecar name ([[KeyIndex]]): published
+    // in the same version as the files they cover; a table whose
+    // manifest lists none has no index
+    keyIndexes: Option[Map[String, IndexEntry]] = None) {
 
   def hivePartitions: Seq[String] = partitionCols.getOrElse(Nil)
+
+  def indexes: Map[String, IndexEntry] = keyIndexes.getOrElse(Map.empty)
 
   /** The record key as a column tuple: `recordKeys` when composite,
     * else the legacy single `recordKey`. Empty = unkeyed table.
@@ -341,15 +355,14 @@ object ZoneMap {
   /** Read cache: (canonical dir, header version) → parsed manifest.
     * Every planning-time prune re-reads the manifest; at sidecar scale
     * that is seconds of parse per QUERY without this. A version file is
-    * never rewritten, so the listing that names the current version is
-    * the whole validation: a commit in any JVM lists as a new version.
-    * (Plain [[write]] may replace a version at or above its own
-    * generation; it drops this JVM's entry, and only fresh-table flows
-    * use it.) Entries are immutable case classes, shared safely. Bounded
-    * two ways (r18 ADVICE #3): at most [[ReadCacheMax]] manifests AND at
-    * most [[cacheEntryBudget]] total retained FileEntry rows (~2 KB each
-    * at manifest-scale shapes), with oldest-insertion eviction; a single
-    * manifest above the budget is never cached at all.
+    * never rewritten and no version name is reused, so the listing that
+    * names the current version is the whole validation: a commit in any
+    * JVM lists as a new version. Entries are immutable case classes,
+    * shared safely. Bounded two ways (r18 ADVICE #3): at most
+    * [[ReadCacheMax]] manifests AND at most [[cacheEntryBudget]] total
+    * retained FileEntry rows (~2 KB each at manifest-scale shapes), with
+    * oldest-insertion eviction; a single manifest above the budget is
+    * never cached at all.
     */
   private val ReadCacheMax = 64
   private def cacheEntryBudget: Long =
@@ -382,11 +395,6 @@ object ZoneMap {
       readCache.put(key, CacheVal(version, m))
       cachedEntries += n
     }
-  }
-
-  private def cacheInvalidate(key: String): Unit = readCache.synchronized {
-    val prev = readCache.remove(key)
-    if (prev != null) cachedEntries -= prev.m.files.length
   }
 
   /** Test/bench hook: drop every cached manifest. */
@@ -574,16 +582,25 @@ object ZoneMap {
     */
   def writeCas(dir: String, m: TableManifest): TableManifest = commit(dir, m, cas = true)
 
-  /** Commit a manifest: stamps the next generation (`m`'s + 1; the
-    * in-memory `m` carries the read generation, so no disk re-read),
-    * marks gen-less file entries as created by THIS commit, then
-    * publishes it as that generation's header. Returns the stamped
-    * manifest — mutators should propagate it, not `m`. Last writer wins:
-    * log versions at or above the new generation are replaced (a
-    * re-layout legitimately replaces whatever generation is there).
+  /** Commit a manifest unconditionally, last writer wins: publishes it
+    * as the generation after both the log's current one and the one `m`
+    * was read at (a re-layout passes the generation its overwrite wiped,
+    * [[LayoutWriter.write]]), so no version name is ever reused, and
+    * marks gen-less file entries as created by THIS commit. Returns the
+    * stamped manifest — mutators should propagate it, not `m`.
     */
-  def write(dir: String, m: TableManifest): TableManifest = commit(dir, m, cas = false)
+  def write(dir: String, m: TableManifest): TableManifest = {
+    var published: TableManifest = null
+    while (published == null)
+      try published = commit(dir, m.copy(generation = Some(math.max(
+        m.generation.getOrElse(0L), headerGeneration(dir).getOrElse(0L)))), cas = false)
+      catch { case _: ConcurrentCommitException => () }
+    published
+  }
 
+  /** Publish `m` as the generation after the one it carries; `cas` also
+    * refuses it unless that is still the log's current generation.
+    */
   private def commit(dir: String, m: TableManifest, cas: Boolean): TableManifest = {
     val log = logDir(dir)
     val expected = m.generation.getOrElse(0L)
@@ -641,24 +658,16 @@ object ZoneMap {
     // goes first relative to the data files, so mutation paths can
     // order "commit manifest, then delete superseded part files" safely
     val published =
-      if (cas) {
-        headerGeneration(dir).getOrElse(0L) == expected &&
-          VersionLog.publish(log, nextGen, VersionExt, bytes) && {
-            // the link can land on a name GC already freed only if other
-            // writers committed nextGen, nextGen+1 and nextGen+2 between
-            // the listing and the link: that version was never current —
-            // withdraw it
-            val superseded = headerGeneration(dir).exists(_ >= nextGen + 2)
-            if (superseded) Files.deleteIfExists(VersionLog.file(log, nextGen, VersionExt))
-            !superseded
-          }
-      } else {
-        VersionLog.versions(log, VersionExt).filter(_ >= nextGen)
-          .foreach(v => Files.deleteIfExists(VersionLog.file(log, v, VersionExt)))
-        VersionLog.publish(log, nextGen, VersionExt, bytes)
-      }
-    // a plain write may have replaced a version this JVM cached
-    cacheInvalidate(canonical(dir))
+      (!cas || headerGeneration(dir).getOrElse(0L) == expected) &&
+        VersionLog.publish(log, nextGen, VersionExt, bytes) && {
+          // the link can land on a name GC already freed only if other
+          // writers committed nextGen, nextGen+1 and nextGen+2 between
+          // the listing and the link: that version was never current —
+          // withdraw it
+          val superseded = headerGeneration(dir).exists(_ >= nextGen + 2)
+          if (superseded) Files.deleteIfExists(VersionLog.file(log, nextGen, VersionExt))
+          !superseded
+        }
     if (!published) {
       sidecar.foreach(r => Files.deleteIfExists(Paths.get(dir, r)))
       throw conflict(headerGeneration(dir).getOrElse(0L))
@@ -755,12 +764,10 @@ object ZoneMap {
     result
   }
 
-  /** If the table dir was moved/copied: rebase entry paths onto the dir
-    * actually being read so scans/prunes/mutations all see the files
-    * HERE (in memory only — the next commit persists it). Key-index
-    * sidecars self-heal separately: their meta carries the same root
-    * stamp and a mismatch makes lookups fail-safe to "no index" until
-    * the next mutation rebuilds (KeyIndex.update).
+  /** If the table dir was moved/copied: rebase entry and key-index part
+    * paths onto the dir actually being read so scans/prunes/mutations
+    * all see the files HERE (in memory only — the next commit persists
+    * it).
     */
   private def rebase(m: TableManifest, dir: String): TableManifest =
     m.root match {
@@ -768,14 +775,20 @@ object ZoneMap {
         val here = canonical(dir)
         System.err.println(
           s"[graft] ZoneMap: manifest written at $r read from $here — rebasing")
-        m.copy(root = Some(here), files = m.files.map(rebaseEntry(_, r, here)))
+        m.copy(root = Some(here), files = m.files.map(rebaseEntry(_, r, here)),
+          keyIndexes = m.keyIndexes.map(_.map { case (n, ix) =>
+            n -> ix.copy(parts = ix.parts.map(rebasePath(_, r, here)),
+              unions = ix.unions.map(rebasePath(_, r, here)))
+          }))
       case _ => m
     }
 
-  private def rebaseEntry(f: FileEntry, from: String, to: String): FileEntry = {
-    val c = canonical(f.path)
-    if (c == from || c.startsWith(from + "/")) f.copy(path = to + c.stripPrefix(from))
-    else f
+  private def rebaseEntry(f: FileEntry, from: String, to: String): FileEntry =
+    f.copy(path = rebasePath(f.path, from, to))
+
+  private def rebasePath(p: String, from: String, to: String): String = {
+    val c = canonical(p)
+    if (c == from || c.startsWith(from + "/")) to + c.stripPrefix(from) else p
   }
 
   /** Sidecar byte size above which [[pruneRead]] STREAMS instead of

@@ -72,9 +72,24 @@ object SearchIndex {
       // whole postings set - the commit fails loudly instead
       graft.layout.StagedRewrite.commit(spark,
         graft.layout.StagedRewrite.Pending(pdir, before, Nil, staged))
-      graft.layout.StagedRewrite.appendParts(
-        InvertedIndex.docLengths(batch, idCol, textCol), s"$dir/doclen")
+      appendParts(InvertedIndex.docLengths(batch, idCol, textCol), s"$dir/doclen")
     }
+  }
+
+  /** Append `df` to the parquet dir `dest` as new part files: written
+    * into a fresh hidden staging dir inside `dest`, then each part file
+    * moves in under its own uuid name. Writing straight into `dest` in
+    * append mode would rewrite its `_SUCCESS` marker and checksum in
+    * place, and replacing a non-empty file forces a flush on ext4.
+    * Readers skip the hidden staging dir.
+    */
+  private def appendParts(df: DataFrame, dest: String): Unit = {
+    val stage = new org.apache.hadoop.fs.Path(dest, s".append_tmp-${java.util.UUID.randomUUID()}")
+    df.write.mode("overwrite").parquet(stage.toString)
+    val fs = stage.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    fs.listStatus(stage).map(_.getPath).filter(_.getName.startsWith("part-"))
+      .foreach(f => fs.rename(f, new org.apache.hadoop.fs.Path(dest, f.getName)))
+    fs.delete(stage, true)
   }
 
   /** Re-sort the postings into one global term order (the maintenance

@@ -230,7 +230,7 @@ object Upserter {
     // the commit rebases onto the fresh manifest, which carries the
     // other writer's files forward; overlapping rewrites abort.
     val staged = StagedRewrite.stage(StagedRewrite.stagingDir(dir, "upsert"), arranged,
-      manifest.hivePartitions, manifest.statsCols, KeyIndex.bloomSpecs(dir, manifest))
+      manifest.hivePartitions, manifest.statsCols, KeyIndex.bloomSpecs(manifest))
     def counted(m: TableManifest) =
       m.copy(commitsSinceCluster = Some(m.commitsSinceCluster.getOrElse(0) + 1))
     val updated = StagedRewrite.commit(spark,

@@ -319,6 +319,32 @@ class CurateCliSuite extends SparkTestBase {
       .select("doc_id", "lang", "split", "n_tok")
       .collect().map(_.toSeq.toVector).sortBy(_.head.toString.toLong).toSeq
     val want = corpus(outFull)
+    // the local route's changed-label cap fires only when a fold changes
+    // stored labels, which a batch of higher ids does only by bridging
+    // two stored components: each W_i holds the words of A_i and of B_i
+    // (Jaccard ~0.7 with each), while A_i and B_i share too few (~0.4)
+    // to be near-dups, so folding W_i onto a build holding A_i and B_i
+    // relabels B_i
+    val top = docs.agg(max(col("doc_id"))).head().getLong(0)
+    def bridge(rows: Seq[(Long, Int, Int, Int)]) = {
+      val spark2 = spark
+      import spark2.implicits._
+      rows.map { case (id, i, from, to) =>
+        val text = (from to to).map(j => s"bridge${i}w$j").mkString(" ")
+        (id, text, "en", "bridge", text.length.toLong)
+      }.toDF("doc_id", "text", "lang", "source", "n_chars")
+    }
+    val ab = bridge((0 until 5).flatMap(i =>
+      Seq((top + 1 + 2 * i, i, 1, 36), (top + 2 + 2 * i, i, 15, 50))))
+    val w = bridge((0 until 5).map(i => (top + 11 + i, i, 1, 50)))
+    val bAB = tmpDir("curate_fmab"); val bW = tmpDir("curate_fmw")
+    val bAll = tmpDir("curate_fmbridged")
+    docs.unionByName(ab).write.parquet(s"$bAB/documents.parquet")
+    w.write.parquet(s"$bW/documents.parquet")
+    docs.unionByName(ab).unionByName(w).write.parquet(s"$bAll/documents.parquet")
+    val outBridged = tmpDir("curate_fmfull_bridged")
+    Curate.run(spark, bAll, outBridged, 100L)
+    val wantBridged = corpus(outBridged)
 
     val paths = Seq(
       "distributed+localCC" -> Seq("graft.curate.localBatchRowLimit" -> "0"),
@@ -334,11 +360,25 @@ class CurateCliSuite extends SparkTestBase {
       props.foreach { case (k, v) => sys.props(k) = v }
       try {
         val outInc = tmpDir(s"curate_fm_${name}_$postings")
-        Curate.run(spark, b1, outInc, 100L, forcePostings = postings)
+        val (built, folded, expected) =
+          if (name == "fullRelabel+local") (bAB, bW, wantBridged) else (b1, b2, want)
+        Curate.run(spark, built, outInc, 100L, forcePostings = postings)
         assert(graft.layout.ZoneMap.exists(s"$outInc/state/postings") == postings)
-        Curate.runAdd(spark, b2, outInc, 100L)
-        assert(corpus(outInc) == want,
+        val mapping = graft.layout.ZoneMap.read(s"$outInc/state/components").files.length
+        Curate.runAdd(spark, folded, outInc, 100L)
+        assert(corpus(outInc) == expected,
           s"fold != rebuild via path $name (postings=$postings)")
+        if (name.startsWith("fullRelabel")) {
+          // the route really ran: its fold-log version replaces every
+          // mapping file
+          val log = java.nio.file.Paths.get(outInc, "state", "_fold_log")
+          val version = org.json4s.jackson.JsonMethods.parse(java.nio.file.Files.readString(
+            graft.layout.VersionLog.file(log, graft.layout.VersionLog.latest(log, ".json").get,
+              ".json")))
+          val comps = (version \ "stores").children
+            .find(st => (st \ "store") == org.json4s.JString("state/components")).get
+          assert((comps \ "removed").children.length == mapping, s"$name (postings=$postings)")
+        }
       } finally props.foreach { case (k, _) => sys.props.remove(k) }
     }
   }
@@ -369,8 +409,8 @@ class CurateCliSuite extends SparkTestBase {
       Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
     }
     rm(new java.io.File(s"$outOld/state/docs", graft.layout.ZoneMap.LogDir))
-    graft.layout.KeyIndex.sidecarNames(s"$outOld/state/docs")
-      .foreach(n => rm(new java.io.File(s"$outOld/state/docs/$n")))
+    new java.io.File(s"$outOld/state/docs").listFiles
+      .filter(_.getName.startsWith(graft.layout.KeyIndex.DirName)).foreach(rm)
     assert(!graft.layout.ZoneMap.exists(s"$outOld/state/docs"))
     def corpus(dir: String) = spark.read.parquet(s"$dir/docs")
       .select("doc_id", "lang", "split", "n_tok")

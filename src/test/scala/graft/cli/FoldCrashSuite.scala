@@ -3,7 +3,8 @@ package graft.cli
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import graft.SparkTestBase
-import graft.layout.{Compactor, ConcurrentCommitException, StagedRewrite, VersionLog, ZoneMap}
+import graft.layout.{Compactor, ConcurrentCommitException, KeyIndex, StagedRewrite, VersionLog,
+  ZoneMap}
 import org.apache.spark.sql.functions._
 import org.json4s.JString
 import org.json4s.jackson.JsonMethods.parse
@@ -85,6 +86,27 @@ class FoldCrashSuite extends SparkTestBase {
     graft.runner.Materialize.releaseAll()
   }
 
+  /** state/docs' `__h` index as its manifest lists it: every listed part
+    * exists, and a lookup of each probed hash (the lowest, middle and
+    * highest doc_id's) returns every file that holds it.
+    */
+  private def indexCovers(out: String, when: String): Unit = {
+    val d = s"$out/state/docs"
+    val m = ZoneMap.read(d)
+    val ix = m.indexes(KeyIndex.indexName(Seq("__h")))
+    assert((ix.parts ++ ix.unions).forall(p => new java.io.File(new java.net.URI(p)).exists),
+      s"$when: a listed part is missing")
+    val held = StagedRewrite.readFiles(spark, d, m.files.map(_.path), partitioned = false)
+      .filter(col("__h").isNotNull)
+      .select(col("doc_id"), xxhash64(col("__h")), input_file_name()).collect()
+      .sortBy(_.getLong(0))
+    for (r <- Seq(held.head, held(held.length / 2), held.last)) {
+      val truth = held.filter(_.getLong(1) == r.getLong(1)).map(x => KeyIndex.norm(x.getString(2))).toSet
+      val got = KeyIndex.affectedPaths(spark, d, Seq(r.getLong(1)), m, Seq("__h")).get
+      assert(truth.subsetOf(got), s"$when: the __h index misses ${truth -- got}")
+    }
+  }
+
   private def stages(out: String): Seq[String] =
     Option(new java.io.File(s"$out/state/_fold_stage").list()).toSeq.flatten
 
@@ -132,8 +154,10 @@ class FoldCrashSuite extends SparkTestBase {
           graft.runner.Materialize.releaseAll()
           val published = steps.indexOf(step) >= steps.indexOf("published")
           if (!published) assert(snap(out) == pre, s"after $step, before recovery")
+          indexCovers(out, s"after $step, before recovery")
           Curate.recover(spark, out)
           assert(snap(out) == (if (published) post else pre), s"after $step")
+          indexCovers(out, s"after $step")
           // a published fold's stage goes with its roll-forward; an
           // unpublished one's once the log moves past its version
           assert(stages(out).length == (if (published) 0 else 1), s"after $step")
@@ -158,25 +182,36 @@ class FoldCrashSuite extends SparkTestBase {
     }
 
   test("a compaction between the fold-log publish and the roll-forward loses no row") {
-    val template = tmpDir("fc_compact")
-    Curate.run(spark, base, template, 100L)
-    val clean = copyDir(template)
-    fold(clean, b1)
-    val post = snap(clean)
-    val out = copyDir(template)
-    intercept[IllegalStateException](withHook { s =>
-      if (s == "published") throw new IllegalStateException("simulated crash")
-    }(fold(out, b1)))
-    graft.runner.Materialize.releaseAll()
-    val compacted = Compactor.compact(spark, s"$out/state/docs")
-    Curate.recover(spark, out)
-    val got = snap(out)
-    assert(got.corpus == post.corpus && got.summary == post.summary)
-    assert(got.stores("state/docs") == ((compacted.generation.map(_ + 1),
-      post.stores("state/docs")._2)), "the fold's rows must land on the compacted store")
-    assert(spark.read.parquet(s"$out/state/docs").count() == post.stores("state/docs")._2)
-    fold(out, b2)
-    assert(snap(out).corpus == want2.corpus)
+    // the forced full relabel replaces every mapping file
+    val props = routes.toMap.apply("FullRelabel")
+    props.foreach { case (k, v) => sys.props(k) = v }
+    try {
+      val template = tmpDir("fc_compact")
+      Curate.run(spark, base, template, 100L)
+      val clean = copyDir(template)
+      fold(clean, b1)
+      val post = snap(clean)
+      val out = copyDir(template)
+      intercept[IllegalStateException](withHook { s =>
+        if (s == "published") throw new IllegalStateException("simulated crash")
+      }(fold(out, b1)))
+      graft.runner.Materialize.releaseAll()
+      // a compaction from outside the fold log is refused before it
+      // writes anything: it could rewrite the files the published fold
+      // replaces, which then could never roll forward
+      val crashed = snap(out)
+      for (store <- Stores) {
+        val e = intercept[IllegalArgumentException](Compactor.compact(spark, s"$out/$store"))
+        assert(e.getMessage.contains("through the fold log"), e.getMessage)
+        intercept[IllegalArgumentException](Compactor.compactWhere(spark, s"$out/$store", Nil))
+      }
+      assert(snap(out) == crashed)
+      Curate.recover(spark, out)
+      assert(snap(out) == post)
+      fold(out, b2)
+      val got = snap(out)
+      assert(got.corpus == want2.corpus && got.summary == want2.summary)
+    } finally props.foreach { case (k, _) => sys.props.remove(k) }
   }
 
   test("a compaction outside the fold log in the commit window aborts the fold, retryably") {
@@ -189,8 +224,12 @@ class FoldCrashSuite extends SparkTestBase {
       val pre = snap(out)
       val log = Paths.get(out, "state", "_fold_log")
       val v0 = VersionLog.latest(log, ".json").get
+      // a compaction committed straight through the commit path (the
+      // compaction entry points refuse a curation store)
+      val comps = s"$out/state/components"
       val e = withHook { s =>
-        if (s == "staged state/docs") Compactor.compact(spark, s"$out/state/components")
+        if (s == "staged state/docs") StagedRewrite.commit(spark, Compactor.stage(spark, comps,
+          Compactor.DefaultTargetFileBytes, StagedRewrite.stagingDir(comps, "compact")))
       }(intercept[ConcurrentCommitException](fold(out, b1)))
       assert(e.getMessage.contains("state/components was rewritten"), e.getMessage)
       assert(VersionLog.latest(log, ".json").contains(v0))

@@ -74,85 +74,56 @@ class KeyIndexSuite extends SparkTestBase {
   private def hashOf(k: Long): Long =
     spark.range(1).select(xxhash64(lit(k))).head().getLong(0)
 
-  test("missing index entries are fail-safe affected; reconcile spares the sidecar") {
-    val dir = tmpDir("graft_keyidx_fs")
-    writeOrthogonal(dir)
-    KeyIndex.build(spark, dir)
-    // simulate the REAL crash window: a mutation commits a new file +
-    // manifest (generation bump) and dies before KeyIndex.update — the
-    // new file has no bloom row and its gen exceeds the sidecar's
-    // indexedGen, so pure driver-side generation math must flag it
-    val manifest = ZoneMap.read(dir)
-    val src = new java.io.File(new java.net.URI(manifest.files.head.path))
-    val crashed = new java.io.File(src.getParentFile, "part-crashed.parquet")
-    java.nio.file.Files.copy(src.toPath, crashed.toPath)
-    val committed = ZoneMap.write(dir, manifest.copy(files =
-      manifest.files :+ manifest.files.head.copy(
-        path = crashed.toURI.toString, gen = None)))
-    val victim = KeyIndex.norm(crashed.toURI.toString)
-    val h = hashOf(987654321L) // a key in no file: blooms all negative
-    val paths = KeyIndex.affectedPaths(spark, dir, Seq(h), committed).get
-    assert(paths.contains(victim), "unindexed committed file must be affected")
-    assert(paths.size == 1,
-      s"indexed files with negative blooms must be pruned: $paths")
-
-    // reconcile must not purge the sidecar's part files
-    StagedRewrite.reconcile(spark, dir, ZoneMap.read(dir))
-    assert(KeyIndex.exists(dir))
-    assert(KeyIndex.affectedPaths(spark, dir, Seq(h), committed).get
-      .contains(victim))
-
-    // the next maintenance pass SELF-HEALS: even with nothing added,
-    // update() blooms the crash-window file and advances indexedGen
-    KeyIndex.update(spark, dir, Nil, Nil)
-    val healed = KeyIndex.affectedPaths(spark, dir, Seq(h), ZoneMap.read(dir)).get
-    assert(!healed.contains(victim),
-      s"after update() the healed file's bloom must prune it: $healed")
-  }
-
   test("lookup broadcasts O(batch), not the live-path set") {
     val dir = tmpDir("graft_keyidx_bc")
     writeOrthogonal(dir)
     KeyIndex.build(spark, dir)
     val manifest = ZoneMap.read(dir)
     val sc = spark.sparkContext
-    // drain pending cleanup, then measure broadcast blocks created by
-    // ONE lookup: only the batch-hash array (+ per-stage task binaries),
-    // never the O(table) path-string set the v2 protocol shipped
-    // inflate the manifest to production file counts with fake already-
-    // indexed entries (gen 0 <= indexedGen): the v2 protocol broadcast
-    // every live path per lookup (~20 MB for these 200k paths); v3 does
-    // driver-side set math over them and ships only the batch hashes
+    // inflate the manifest to production file counts with fake entries:
+    // the v2 protocol broadcast every live path per lookup (~20 MB for
+    // these 200k paths); the lookup does driver-side set math over them
+    // and ships only the batch hashes
     val fake = (1 to 200000).map(i => manifest.files.head.copy(
       path = s"file:///graft/fake/part-${i}%08d-0000.parquet",
       gen = Some(0L)))
     val bigManifest = manifest.copy(files = manifest.files ++ fake)
     val hashes = (1L to 100L).map(hashOf)
-    def measure(): Long = {
-      System.gc()
-      org.apache.spark.graftbridge.SparkBridge.drainListenerBus(sc)
-      val before = org.apache.spark.graftbridge.SparkBridge
-        .broadcastBlocks(sc).keySet
-      KeyIndex.affectedPaths(spark, dir, hashes, bigManifest)
-      val after = org.apache.spark.graftbridge.SparkBridge.broadcastBlocks(sc)
-      after.view.filterKeys(!before.contains(_)).values.sum
+    // the bytes of the broadcast pieces the lookup itself puts: its
+    // batch-hash array and its job's task binary, counted from the
+    // block-update events between the listener's registration and the
+    // end of the lookup's own job group's job (events, not a look at
+    // the block manager, so neither another suite's blocks nor a
+    // cleaner run in between changes the count)
+    val group = s"keyidx-bc-${java.util.UUID.randomUUID()}"
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      private val jobs = scala.collection.mutable.Set.empty[Int]
+      @volatile var open = true
+      val bytes = new java.util.concurrent.atomic.AtomicLong
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs += e.jobId
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (jobs(e.jobId)) open = false
+      override def onBlockUpdated(e: org.apache.spark.scheduler.SparkListenerBlockUpdated): Unit = {
+        val b = e.blockUpdatedInfo
+        if (open && b.blockId.isBroadcast && b.blockId.name.contains("_piece"))
+          bytes.addAndGet(b.memSize + b.diskSize)
+      }
     }
-    // sbt runs suites CONCURRENTLY in this JVM over the one shared
-    // SparkContext, so a foreign suite's job can land its own broadcast
-    // inside the measured window (suspected r19 KeyIndexSuite flake:
-    // 331/332 under full-suite load, 13/13 alone). Retry up to 3 times —
-    // a genuine O(table) regression ships the ~20 MB live-path set on
-    // EVERY attempt, so retrying cannot mask it.
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "one KeyIndex lookup", interruptOnCancel = false)
+      try KeyIndex.affectedPaths(spark, dir, hashes, bigManifest)
+      finally sc.clearJobGroup()
+      org.apache.spark.graftbridge.SparkBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
     // 100 hash longs + the per-job task binary (~0.5 MB, constant in
     // table size): far under the ~20 MB the 200k-path live set measures
-    val attempts = scala.collection.mutable.ArrayBuffer[Long]()
-    var ok = false
-    while (!ok && attempts.length < 3) {
-      attempts += measure()
-      ok = attempts.last > 0 && attempts.last < 2 * 1024 * 1024
-    }
-    assert(ok, "lookup broadcast must be O(batch) and nonzero, not " +
-      s"O(table): attempts ${attempts.mkString(", ")} bytes")
+    val shipped = listener.bytes.get
+    assert(!listener.open, "the lookup's job must have ended inside the window")
+    assert(shipped > 0 && shipped < 2 * 1024 * 1024,
+      s"lookup broadcast must be O(batch) and nonzero, not O(table): $shipped bytes")
   }
 
   test("a lookup reads the sidecar with its fixed schema: exactly one job") {
@@ -178,43 +149,44 @@ class KeyIndexSuite extends SparkTestBase {
   }
 
   test("maintenance is append-only; stale rows reclaimed by amortized GC") {
+    val spark2 = spark
+    import spark2.implicits._
     val dir = tmpDir("graft_keyidx_shard")
     writeOrthogonal(dir)
     KeyIndex.build(spark, dir)
-    val manifest = ZoneMap.read(dir)
-    // a removal rewrites NOTHING on the mutation path (stale rows are
-    // invisible to lookups via the live-manifest intersection) — the
-    // Hudi write-once-bloom asymptotic
-    val stats = KeyIndex.update(spark, dir, manifest.files.take(2).map(_.path), Nil)
-    assert(stats.shardsRewritten == 0 && stats.bytesRewritten == 0L && !stats.gc,
-      s"removal must not rewrite the sidecar: $stats")
-    // a pure append rewrites nothing either: re-adding a live file with
-    // its recorded bloom appends one (duplicate) row and touches no shard
-    def sidecarRows(): Long = spark.read.parquet(KeyIndex.path(dir).toString).count()
-    val rows0 = sidecarRows()
-    assert(rows0 == manifest.files.length.toLong,
-      s"precondition: one sidecar row per live file, got $rows0")
-    val readdDf = StagedRewrite.readFiles(spark, dir,
-      manifest.files.drop(2).take(1).map(_.path), partitioned = false)
-    val readd = StatsReference.collectStatsDf(readdDf, manifest.statsCols).map { e =>
-      val hashes = readdDf.select(KeyIndex.keyHashCol(Seq("k"))).collect().map(_.getLong(0))
-      StatsWriter.WrittenFile(e,
-        Map(KeyIndex.DirName -> KeyIndex.bloomOf(hashes.iterator, e.rows)))
-    }
-    val stats2 = KeyIndex.update(spark, dir, Nil, readd)
-    assert(stats2.shardsRewritten == 0 && stats2.bytesRewritten == 0L,
-      s"append-only update must rewrite nothing: $stats2")
-    assert(sidecarRows() == rows0 + 1,
-      s"the recorded bloom must be appended as one row: ${sidecarRows()} vs $rows0")
-    // stale accumulation beyond max(64, files/2) triggers the GC sweep
-    val fakeRemovals = (1 to 70).map(i => s"file:/nonexistent/part-$i.parquet")
-    val stats3 = KeyIndex.update(spark, dir, fakeRemovals, Nil)
-    assert(stats3.gc && stats3.shardsRewritten > 0,
-      s"stale overflow must trigger GC: $stats3")
-    // GC kept only live-manifest rows, dropping the re-added duplicate
-    val rows = sidecarRows()
-    assert(rows == ZoneMap.read(dir).files.length.toLong,
-      s"GC must keep exactly the live rows, got $rows")
+    def index() = ZoneMap.read(dir).indexes(KeyIndex.DirName)
+    def sidecarRows(): Long = spark.read.parquet(index().parts: _*).count()
+    val built = index()
+    assert(sidecarRows() == ZoneMap.read(dir).files.length.toLong,
+      "precondition: one sidecar row per live file")
+    // a mutation rewrites NO part: it lists the built parts unchanged,
+    // adds parts for its new files, and counts its replaced files' rows
+    // stale (lookups drop them by the live-manifest intersection)
+    val stamps = built.parts.map(p => p -> new java.io.File(new java.net.URI(p)).lastModified)
+    val m1 = Upserter.upsert(spark, dir,
+      Seq((3L, 0.0, 0.0, "u3", 2L)).toDF("k", "a", "b", "payload", "version"),
+      autoRecluster = false)
+    val after = index()
+    assert(after.parts.take(built.parts.length) == built.parts)
+    assert(stamps.forall { case (p, t) => new java.io.File(new java.net.URI(p)).lastModified == t })
+    assert(after.parts.length > built.parts.length && after.stale > 0,
+      s"the upsert must append parts and count stale rows: $after")
+    assert(sidecarRows() == m1.files.length + after.stale,
+      "one row per live file plus one per replaced file")
+    // stale rows beyond max(64, files/2) make the next commit's upkeep
+    // reclaim them: a version with an inflated stale count stands in for
+    // 64 replaced files
+    val m = ZoneMap.read(dir)
+    ZoneMap.writeCas(dir, m.copy(keyIndexes = Some(Map(KeyIndex.DirName -> after.copy(stale = 70L)))))
+    Upserter.upsert(spark, dir,
+      Seq((5L, 0.0, 0.0, "u5", 2L)).toDF("k", "a", "b", "payload", "version"),
+      autoRecluster = false)
+    val gced = index()
+    assert(gced.stale == 0L && gced.parts.length <= KeyIndex.Shards, s"GC must have run: $gced")
+    assert(after.parts.forall(p => !new java.io.File(new java.net.URI(p)).exists),
+      "GC deletes the parts it replaced")
+    assert(sidecarRows() == ZoneMap.read(dir).files.length.toLong,
+      "GC keeps exactly the live rows")
   }
 
   test("string (UUID-style) record key: bloom scoping where zones keep all") {
@@ -364,7 +336,7 @@ class KeyIndexSuite extends SparkTestBase {
     val secName = KeyIndex.indexName(Seq("h"))
     assert(KeyIndex.exists(dir, secName))
     assert(!KeyIndex.exists(dir)) // no primary was built
-    assert(KeyIndex.indexColsOf(dir, secName).contains(Seq("h")))
+    assert(ZoneMap.read(dir).indexes.get(secName).map(_.keys).contains(Seq("h")))
 
     val manifest = ZoneMap.read(dir)
     def hashesOf(vals: Seq[String]): Seq[Long] =
@@ -428,32 +400,6 @@ class KeyIndexSuite extends SparkTestBase {
     assert(miss.size <= 2, s"absent payload matched ${miss.size} files")
   }
 
-  test("a shard dir lost between gc's delete and rename leaves its files affected") {
-    val spark2 = spark
-    import spark2.implicits._
-    val dir = tmpDir("graft_keyidx_lostshard")
-    LayoutWriter.write((1 to 8000).map(k => (k.toLong, s"v$k")).toDF("k", "payload"),
-      dir, LayoutSpec("linear", Seq("k"), numFiles = Some(8), recordKey = Some("k")))
-    KeyIndex.build(spark, dir)
-    val m = ZoneMap.read(dir)
-    assert(m.files.length == 8)
-    val first = m.files.head
-    val victim = KeyIndex.norm(first.path)
-    // gc's crash state: the shard's old dir deleted, the rewrite not yet
-    // renamed into its place
-    val shard = KeyIndex.path(dir).resolve(s"s=${KeyIndex.shardOf(victim)}").toFile
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
-    }
-    assert(shard.isDirectory)
-    rm(shard)
-    val key = StagedRewrite.readFiles(spark, dir, Seq(first.path), partitioned = false)
-      .agg(min($"k")).as[Long].head()
-    val paths = KeyIndex.affectedPaths(spark, dir, Seq(hashOf(key)), m).get
-    assert(paths.contains(victim),
-      s"a file whose shard is missing must be affected by its own key: $paths")
-  }
-
   test("legacy (generation-less) manifest: refused on read") {
     val dir = tmpDir("graft_keyidx_gen0")
     writeOrthogonal(dir)
@@ -473,10 +419,10 @@ class KeyIndexSuite extends SparkTestBase {
     ZoneMap.clearReadCache()
     val ex = intercept[IllegalStateException](ZoneMap.read(dir))
     assert(ex.getMessage.contains("rebuild the table"), ex.getMessage)
-    // a build reads the manifest first: no sidecar can record an
-    // indexedGen against the unstamped files
+    // a build reads the manifest first: it writes no sidecar for the
+    // unstamped files
     intercept[IllegalStateException](KeyIndex.build(spark, dir))
-    assert(!KeyIndex.exists(dir))
+    assert(!java.nio.file.Files.exists(KeyIndex.path(dir)))
   }
 
   test("per-shard union blooms: a scattered small batch reads fewer shard dirs, " +
@@ -503,30 +449,17 @@ class KeyIndexSuite extends SparkTestBase {
       .map(KeyIndex.norm).toSet
     assert(truth.subsetOf(skipped),
       s"union skipping dropped truly-affected files: ${truth -- skipped}")
-    // files newer than the unions stamp are uncovered: their shard is
-    // read unconditionally (driver-side generation math), so a key that
-    // exists ONLY in a post-union file still resolves — while the
+    // files newer than the unions' generation are uncovered: their shard
+    // is read unconditionally (driver-side generation math), so a key
+    // that exists ONLY in a post-union file still resolves — while the
     // union-negative covered shards stay skipped
-    val fresh = Seq((777777L, 1.0, 2.0, "fresh", 1L))
-      .toDF("k", "a", "b", "payload", "version")
-    val stage = tmpDir("graft_keyidx_unionstage")
-    fresh.coalesce(1).write.mode("overwrite").parquet(stage)
-    val part = new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    val dest = new java.io.File(
-      new java.io.File(new java.net.URI(manifest.files.head.path)).getParentFile,
-      "part-fresh777.parquet")
-    java.nio.file.Files.copy(part.toPath, dest.toPath)
-    val entries = StatsReference.collectStatsDf(
-      spark.read.parquet(dest.toString), manifest.statsCols)
-    ZoneMap.write(dir, ZoneMap.read(dir).copy(
-      files = ZoneMap.read(dir).files ++ entries))
-    // appends the row (a bloom-less add is bloomed by scan), no refresh
-    KeyIndex.update(spark, dir, Nil, entries.map(StatsWriter.WrittenFile(_)))
+    KeyedDelta(spark, dir, Nil, Some(Seq((777777L, 1.0, 2.0, "fresh", 1L))
+      .toDF("k", "a", "b", "payload", "version")))
     val m2 = ZoneMap.read(dir)
+    val dest = m2.files.maxBy(_.gen.get)
     val freshHit = KeyIndex.affectedPaths(spark, dir,
       Seq(hashOf(777777L)), m2).get
-    assert(freshHit.contains(KeyIndex.norm(dest.toURI.toString)),
+    assert(freshHit.contains(KeyIndex.norm(dest.path)),
       s"post-union file must be found: $freshHit")
     assert(KeyIndex.lastShardsRead <= 3,
       s"covered union-negative shards must stay skipped " +
@@ -534,8 +467,8 @@ class KeyIndexSuite extends SparkTestBase {
 
     // without the unions file the lookup reads every shard and can only
     // ADD per-file-bloom false positives
-    val unions = KeyIndex.path(dir).resolve(KeyIndex.UnionsLog).toFile
-    unions.listFiles().foreach(_.delete()); unions.delete()
+    ZoneMap.read(dir).indexes(KeyIndex.DirName).unions
+      .foreach(u => java.nio.file.Files.delete(java.nio.file.Paths.get(new java.net.URI(u))))
     val full = KeyIndex.affectedPaths(spark, dir, hashes, manifest).get
     assert(KeyIndex.lastShardsRead >= shardsSkipped)
     assert(skipped.subsetOf(full),

@@ -49,7 +49,7 @@ class RelocationSuite extends SparkTestBase {
     assert(spark.read.parquet(dst).count() == 30000)
   }
 
-  test("moved keyed table: sidecar fail-safes, upsert stays correct and rebuilds it") {
+  test("moved keyed table: the key index moves with the manifest, upsert stays correct") {
     val spark2 = spark
     import spark2.implicits._
     val base = tmpDir("reloc_b")
@@ -65,13 +65,18 @@ class RelocationSuite extends SparkTestBase {
     KeyIndex.build(spark, src)
     move(src, dst)
 
-    // relocated sidecar must NOT claim scoping it cannot deliver
+    // the index's parts are rebased with the manifest and its rows hold
+    // table-relative paths: a key resolves to the moved file holding it
     val m = ZoneMap.read(dst)
-    assert(KeyIndex.affectedPaths(spark, dst,
-      Seq(1L, 2L, 3L), m, Nil).isEmpty, "relocated sidecar must fail-safe to None")
+    assert(m.indexes(KeyIndex.DirName).parts.forall(_.startsWith(ZoneMap.canonical(dst) + "/")))
+    def hashOf(k: Long) = spark.range(1).select(xxhash64(lit(k))).head().getLong(0)
+    val holder = spark.read.parquet(dst).filter($"k" === 42L)
+      .select(input_file_name()).as[String].head()
+    assert(KeyIndex.affectedPaths(spark, dst, Seq(hashOf(42L)), m, Nil).get
+      .contains(KeyIndex.norm(holder)), "a moved table's index must still find the key")
 
-    // a keyed upsert is still CORRECT (falls back to zone scoping) and
-    // rebuilds the sidecar in place for the new location
+    // a keyed upsert is CORRECT and stays bloom-scoped
+    val before = m.files.map(_.path).toSet
     val batch = Seq((42L, 0.0, "upd42", 2L), (99999L, 0.0, "new", 1L))
       .toDF("k", "a", "payload", "version")
     graft.table.Upserter.upsert(spark, dst, batch, autoRecluster = false)
@@ -79,10 +84,11 @@ class RelocationSuite extends SparkTestBase {
     assert(got.count() == 20001)
     assert(got.filter($"k" === 42L).select("payload").as[String].head() == "upd42")
     assert(got.filter($"k" === 42L).count() == 1, "no duplicate for the updated key")
-    // self-healed: the rebuilt sidecar scopes lookups again from dst
     val m2 = ZoneMap.read(dst)
-    val paths = KeyIndex.affectedPaths(spark, dst, Seq(0L), m2, Nil)
-    assert(paths.isDefined, "sidecar must be rebuilt rooted at the new dir")
+    assert(before.size - m2.files.map(_.path).toSet.intersect(before).size <= 2,
+      "the moved index must keep scoping the rewrite")
+    assert(m2.indexes(KeyIndex.DirName).parts.forall(p =>
+      new java.io.File(new java.net.URI(p)).exists))
   }
 
   test("legacy root-less manifest moved: the read refuses, the data stays") {

@@ -99,10 +99,31 @@ class WriteOnceSuite extends SparkTestBase {
 
   test("key-index maintenance publishes write-once: update and gc") {
     val t = keyedTable("graft_wo_keyindex")
-    assertWriteOnce(tableRoots(t))(KeyIndex.update(spark, t, Nil, Nil))
+    // the index update rides a mutation's commit; a build and gc commit
+    // fresh parts and delete the replaced ones
+    assertWriteOnce(tableRoots(t))(KeyedDelta(spark, t, Seq(7L), Some(batch(20000L -> "new"))))
+    assertWriteOnce(tableRoots(t))(KeyIndex.build(spark, t))
     assertWriteOnce(tableRoots(t))(KeyIndex.gc(spark, t, ZoneMap.read(t)))
-    // a second gc swaps shard dirs the first one wrote
+    // a second gc replaces the parts the first one wrote
     assertWriteOnce(tableRoots(t))(KeyIndex.gc(spark, t, ZoneMap.read(t)))
+  }
+
+  test("ZoneMap.write over an existing table publishes a new version name") {
+    val t = keyedTable("graft_wo_plain")
+    val cached = ZoneMap.read(t) // this JVM caches the current version
+    val g = cached.generation.get
+    val old = ZoneMap.logDir(t).resolve(VersionLog.fileName(g, ".json"))
+    val bytes = java.nio.file.Files.readAllBytes(old)
+    // a plain write from the version before the current one: it must
+    // neither rewrite nor replace version g
+    assertWriteOnce(tableRoots(t)) {
+      ZoneMap.write(t, cached.copy(generation = Some(g - 1), files = cached.files.take(3)))
+    }
+    assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(old), bytes))
+    assert(ZoneMap.headerGeneration(t).contains(g + 1))
+    // a reader holding version g in its cache lists g + 1, a name it has
+    // never cached, and reads the new content
+    assert(ZoneMap.read(t).files == cached.files.take(3))
   }
 
   test("SearchIndex.add publishes write-once, doclen included") {

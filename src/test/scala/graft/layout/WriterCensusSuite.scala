@@ -41,12 +41,13 @@ class WriterCensusSuite extends SparkTestBase {
           s"$v: entry without a positive bytes: $e")
       }
     }
-    KeyIndex.sidecarNames(dir).foreach { n =>
-      val metas = files(KeyIndex.path(dir, n).resolve("_meta"))
-      assert(metas.nonEmpty, s"$dir/$n has no meta")
-      metas.foreach(m => assert(
-        (parse(java.nio.file.Files.readString(m)) \ "root").isInstanceOf[JString],
-        s"$m has no root"))
+    // every index the current version lists: its parts and unions exist
+    // in the table's own sidecar dir
+    ZoneMap.read(dir).indexes.foreach { case (n, ix) =>
+      (ix.parts ++ ix.unions).foreach { p =>
+        assert(p.startsWith(s"${ZoneMap.canonical(dir)}/$n/"), s"$dir/$n lists $p")
+        assert(new java.io.File(new java.net.URI(p)).exists, s"$dir/$n: $p is missing")
+      }
     }
   }
 

@@ -49,8 +49,9 @@ class ConcurrentCommitSuite extends SparkTestBase {
       ZoneMap.writeCas(dir, m1) // still claims gen 1, disk is at 2
     }
     assert(e.onDisk == 2L && e.expected == 1L)
-    // plain write stays last-writer-wins for fresh-table flows
-    assert(ZoneMap.write(dir, m1).generation.contains(2L))
+    // plain write stays last-writer-wins for fresh-table flows, as the
+    // version after the log's current one: no version name is reused
+    assert(ZoneMap.write(dir, m1).generation.contains(3L))
   }
 
   test("interleaved upserts on DISJOINT key ranges: both land via rebase") {
