@@ -239,9 +239,10 @@ object KeyIndex {
 
   /** One bloom row per file of `files` (paths relative to `dir`, with
     * their row counts), the data read fresh from under `dir` — the full
-    * build, and files whose write recorded no bloom. Rows with a NULL in
-    * any key column are not indexed; the probe side skips them
-    * identically, so both sides stay consistent.
+    * build, and files whose write recorded no bloom — each shard's rows
+    * in one partition. Rows with a NULL in any key column are not
+    * indexed; the probe side skips them identically, so both sides stay
+    * consistent.
     */
   private def bloomRows(spark: SparkSession, dir: String, keys: Seq[String],
       files: Seq[(String, Long)], partitioned: Boolean): DataFrame = {
@@ -252,9 +253,19 @@ object KeyIndex {
       .filter(keys.map(col(_).isNotNull).reduce(_ && _))
       .select(input_file_name().as("path"), keyHashCol(keys).as("__k"))
       .as[(String, Long)]
-      .groupByKey(t => relTo(root)(t._1))
-      .mapGroups { (p, it) =>
-        (p, rows(p), bloomOf(it.map(_._2), rows(p)), shardOf(p))
+      .map { case (p, k) => val r = relTo(root)(p); (r, k, shardOf(r)) }
+      // one shuffle: by shard, each file's hashes contiguous
+      .repartition(Shards, col("_3")).sortWithinPartitions(col("_1"))
+      .mapPartitions { it =>
+        val in = it.buffered
+        Iterator.continually(in).takeWhile(_.hasNext).map { _ =>
+          val (p, _, s) = in.head
+          val hashes = new Iterator[Long] {
+            def hasNext: Boolean = in.hasNext && in.head._1 == p
+            def next(): Long = in.next()._2
+          }
+          (p, rows(p), bloomOf(hashes, rows(p)), s)
+        }
       }
       .toDF("path", "rows", "bloom", "s")
   }
@@ -313,7 +324,7 @@ object KeyIndex {
         writeParts(p.dir, p.staged.dir, name,
           if (unbloomed.isEmpty) recorded.coalesce(1)
           else recorded.unionByName(bloomRows(spark, p.staged.dir, ix.keys, unbloomed,
-            p.base.hivePartitions.nonEmpty)).repartition(col("s")))
+            p.base.hivePartitions.nonEmpty)))
       })
     }
   }
@@ -370,7 +381,7 @@ object KeyIndex {
     val cap = unionCapacityFor(m.totalRows)
     replace(spark, dir, m) { stage =>
       val parts = if (files.isEmpty) Nil else writeParts(dir, stage, name,
-        bloomRows(spark, dir, keys, files, m.hivePartitions.nonEmpty).repartition(col("s")))
+        bloomRows(spark, dir, keys, files, m.hivePartitions.nonEmpty))
       // fresh per-shard unions from the same files (a second column-pruned
       // scan of the key columns only). Beyond the capacity cap a union is
       // saturated (always-positive) — pure per-lookup read overhead with

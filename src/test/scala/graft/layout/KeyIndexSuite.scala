@@ -296,6 +296,19 @@ class KeyIndexSuite extends SparkTestBase {
     assert(got.count() == 8000)
     assert(got.filter($"k" === 7L).select("payload").as[String].head() == "upd7")
     assert(got.filter($"k" === 7L).select("part").as[String].head() == "p1")
+    // an index over the partition column: the write records no bloom for
+    // it (the value lives in the dir name), so the commit blooms the
+    // new files by scan
+    KeyIndex.build(spark, dir, Seq("part"))
+    Upserter.upsert(spark, dir,
+      Seq((8L, 0.0, "p2", "upd8", 2L)).toDF("k", "a", "part", "payload", "version"),
+      autoRecluster = false)
+    val m2 = ZoneMap.read(dir)
+    val h = Seq("p2").toDF("part").select(xxhash64(col("part"))).as[Long].head()
+    val truth = spark.read.parquet(dir).filter($"part" === "p2")
+      .select(input_file_name()).distinct().as[String].collect().map(KeyIndex.norm).toSet
+    val hit = KeyIndex.affectedPaths(spark, dir, Seq(h), m2, Seq("part")).get
+    assert(truth.nonEmpty && truth.subsetOf(hit), s"scan-bloomed files missed: ${truth -- hit}")
   }
 
   test("whole-table compact rebuilds an index it found (auto-recluster keeps scoping)") {
