@@ -13,11 +13,10 @@ import java.nio.file.{Files, Paths}
   * manifest's check-and-swap, the one atomic metadata commit Delta, Hudi
   * and Iceberg each use. A curation fold commits several pending
   * rewrites at once through its own log and lands each with [[landed]]
-  * and [[finish]]. Works on
-  * hive-partitioned tables: reads keep the partition columns, moves keep
-  * each file's partition subdir (reference compacts and upserts
-  * partitioned tables routinely: delta_write_layout.py:136-138,
-  * hudi_upsert.py:217-228).
+  * and [[finish]]. Works on hive-partitioned tables: reads keep the
+  * partition columns, moves keep each file's partition subdir
+  * (reference compacts and upserts partitioned tables routinely:
+  * delta_write_layout.py:136-138, hudi_upsert.py:217-228).
   */
 object StagedRewrite {
 
